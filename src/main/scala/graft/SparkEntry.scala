@@ -16,20 +16,36 @@ import graft.operators.{Dedup, Graphs, Ivm, Joins, Multimodal, PrefixScan, Query
  */
 object SparkEntry {
 
-  /** Input-table schemas, memoized per path: the testdata files are
-   * immutable for a session's lifetime, so re-reading footers to
-   * re-infer the same schema on every query build (3 bench passes x
-   * 184 queries x 1-4 tables) is pure planning overhead. METADATA
-   * only — rows always come from the parquet scan; this is the same
-   * caching a catalog table gets for free. */
-  private val tableSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  /** Input-table schemas, memoized: re-reading footers to re-infer the
+   * same schema on every query build (3 bench passes x 184 queries x
+   * 1-4 tables) is pure planning overhead. METADATA only — rows always
+   * come from the parquet scan; this is the same caching a catalog
+   * table gets for free. The key is everything the inferred schema
+   * depends on: the path, its modification time (a file rewritten in
+   * place infers afresh) and the session's
+   * `spark.sql.legacy.parquet.nanosAsLong` (TIMESTAMP(NANOS) columns
+   * infer as long only under it), so sessions with different settings
+   * in one JVM never share an entry. */
+  private val tableSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, String), org.apache.spark.sql.types.StructType]()
+
+  /** Drop every memoized schema. */
+  private[graft] def clearTableSchemas(): Unit = tableSchemas.clear()
+
+  /** The schema of the parquet input at `path`, memoized. */
+  private[graft] def tableSchema(s: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val nanos = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    tableSchemas.computeIfAbsent((path, mtime, nanos),
+      _ => s.read.parquet(path).schema)
+  }
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = tableSchemas.computeIfAbsent(path,
-      p => s.read.parquet(p).schema)
-    s.read.schema(schema).parquet(path)
+    s.read.schema(tableSchema(s, path)).parquet(path)
   }
 
   /** `events.ts` has shipped as BOTH parquet TIMESTAMP(NANOS) (early

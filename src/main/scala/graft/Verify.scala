@@ -20,7 +20,7 @@ object Verify {
         Some(names)
       } else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -32,7 +32,7 @@ object Verify {
       // events.parquet is TIMESTAMP(NANOS); declared here so the
       // events() helper's conf dependency is visible at session build
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.tools.LocalIo.ownScratch(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // drop local-FS CRC sidecars (doubled file creates on every store
     // commit; production FS targets have no client CRC) — see LocalIo

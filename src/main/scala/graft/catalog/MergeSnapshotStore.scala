@@ -214,7 +214,24 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                               // RESURRECT dropped data — the add
                               // refuses while any carry era survives; a
                               // whole-table rewrite resets the list
-                              retired: Seq[String] = Nil)
+                              retired: Seq[String] = Nil) {
+    // rel -> bucket lookups, built once per (cached, write-once)
+    // manifest on first use: a bucket dir's files resolve through
+    // their parent dir, carried files through their own line
+    private lazy val bucketOfDir: Map[String, Int] =
+      buckets.iterator.map(_.swap).toMap
+    private lazy val bucketOfCarry: Map[String, Int] =
+      carries.iterator.flatMap { case (b, rels) => rels.map(_ -> b) }.toMap
+
+    /** The bucket a table-relative file path belongs to — its bucket
+     * dir's, or its carry line's. None for a path outside both
+     * (callers treat that as the error it is, or keep the file). */
+    def bucketOf(rel: String): Option[Int] = {
+      val i = rel.lastIndexOf('/')
+      (if (i < 0) None else bucketOfDir.get(rel.substring(0, i)))
+        .orElse(bucketOfCarry.get(rel))
+    }
+  }
 
   private def manifestVersions(location: String): Seq[Int] = {
     val p = new Path(location)
@@ -502,18 +519,24 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * PK point lookup: the rows of `keys` (any frame exposing the table's
    * PK column(s) — composite keys look up on the full tuple; values are
    * cast to the committed PK types, so a caller's
-   * literal ints match a bigint table) from the latest snapshot, read by
-   * scanning ONLY the keys' hash buckets. At 100 TB with 4096 buckets a
-   * one-key lookup plans a scan over 1/4096th of the table's files — the
-   * index-free point-read a keyed store owes its callers, where a naive
-   * `read().filter(pk === x)` would LIST and stat-check every file of
-   * the table. Driver-sized key sets (the point-lookup contract) become
-   * an `isin` predicate PUSHED into the parquet scan, so row-group
-   * min/max stats skip most of the surviving buckets too; a key set too
-   * large to inline falls back to a broadcast semi-join over the same
-   * pruned scan. A non-empty `ranges` additionally skips files WITHIN
-   * the keys' buckets whose manifest stats miss the ranges (the
-   * [[readRange]] discipline) and applies the exact range predicate.
+   * literal ints match a bigint table) from the latest (or pinned)
+   * snapshot, read by scanning ONLY the keys' hash buckets. At 100 TB
+   * with 4096 buckets a one-key lookup plans a scan over 1/4096th of
+   * the table's files — the index-free point-read a keyed store owes
+   * its callers. Driver-sized key sets (the point-lookup contract)
+   * become one `pk IN (…)` predicate (an OR of per-tuple conjunctions
+   * for composite keys) over the skipping scan: the walk's bucket arm
+   * hashes the literals to their buckets in the driver and keeps only
+   * those buckets' files, and the predicate is PUSHED into the parquet
+   * scan, so row-group min/max stats skip most of the surviving
+   * buckets too. A key frame already on the driver (its optimized
+   * plan is a local relation) is read and deduplicated there, so
+   * planning such a lookup runs no Spark job; other frames pay one
+   * bounded distinct collect. A key set too large to inline falls back
+   * to a semi-join over a scan of the keys' buckets. A non-empty
+   * `ranges` additionally skips files whose manifest stats miss the
+   * ranges (the [[readRange]] discipline) and applies the exact range
+   * predicate.
    */
   def pointLookup(db: String, table: String, keys: DataFrame,
                   ranges: Map[String, (Double, Double)] = Map.empty,
@@ -528,12 +551,19 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         s"this table resolves to nBuckets=${nBucketsOf(meta)}")
     val pkTypes = pks.map(k => m.schema(k).dataType)
     val typedKeys = keys.select(pks.zip(pkTypes).map { case (k, t) =>
-      col(k).cast(t).as(k) }: _*).na.drop().distinct()
+      col(k).cast(t).as(k) }: _*).na.drop()
     // loop control: the keys themselves, fetched only up to the inline
     // bound — a caller passing a whole table's worth of "point" keys
     // cannot OOM the driver, it just loses the pushdown form
-    val inline = typedKeys.limit(MergeSnapshotStore.MaxInlineKeys + 1)
-      .collect().toSeq
+    val inline = typedKeys.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        typedKeys.collect().toSeq.distinct // already driver-resident
+      case _ =>
+        typedKeys.distinct().limit(MergeSnapshotStore.MaxInlineKeys + 1)
+          .collect().toSeq
+    }
+    val keepRanged = rangesMayMatch(m, ranges) _
+    val rangePred = if (ranges.isEmpty) None else Some(rangesPredicate(m, ranges))
     val inlined: Option[DataFrame] =
       if (inline.length > MergeSnapshotStore.MaxInlineKeys) None
       else
@@ -545,21 +575,13 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         try {
           val keyLits: Seq[Seq[Column]] = inline.map(r =>
             pks.indices.map(i => lit(r.get(i)).cast(pkTypes(i))))
-          // bucket ids via one tiny local job: Spark's hash() IS the
-          // bucket function, so evaluate it over the literal keys (no
-          // data scan)
-          val ids = spark.range(1).select(
-              array(keyLits.map(ls => bucketOf(meta, ls)): _*))
-            .head().getSeq[Int](0).toSet
-          // single-column keys push down as one parquet In filter;
-          // composite keys as an OR of per-key conjunctions (parquet
-          // accepts Or-of-And trees, so row-group stats still skip)
-          val pred =
-            if (pks.size == 1) col(pks.head).isInCollection(inline.map(_.get(0)))
+          val keyPred =
+            if (pks.size == 1) col(pks.head).isin(keyLits.map(_.head): _*)
             else keyLits.map(ls =>
               pks.zip(ls).map { case (k, l) => col(k) === l }
                 .reduce(_ && _)).reduce(_ || _)
-          Some(loadRanged(meta, m, Some(ids), ranges).filter(pred))
+          Some(skippingWhere(meta, m, rangePred.fold(keyPred)(keyPred && _),
+            keepRanged))
         } catch { case scala.util.control.NonFatal(_) => None }
     inlined.getOrElse {
       // bucket ids of the lookup keys (<= nBuckets values)
@@ -568,7 +590,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       // UNHINTED semi-join: the inline cap exists so an over-large key
       // frame cannot land on the driver — a forced broadcast here would
       // collect it anyway. AQE broadcasts when the measured size allows.
-      loadRanged(meta, m, Some(touched), ranges)
+      skippingWhere(meta, m, rangePred.getOrElse(lit(true)),
+        rel => m.bucketOf(rel).forall(touched) && keepRanged(rel))
         .join(typedKeys, pks, "left_semi")
     }
   }
@@ -643,7 +666,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                            df: DataFrame): DataFrame =
     if (m.deletes.isEmpty) df
     else {
-      import org.apache.spark.sql.functions.{broadcast, coalesce, input_file_name, regexp_extract_all, try_element_at}
+      import org.apache.spark.sql.functions.{broadcast, coalesce, regexp_extract_all, try_element_at}
       val (eqDels, posDels) =
         m.deletes.partition(_.kind == MergeSnapshotStore.EqDeleteKind)
       // ---- scan-stage address capture (both kinds, before any join)
@@ -654,11 +677,15 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       // dir: nothing below it can contain '/', while a table LOCATION
       // that itself contains a "data/c<digits>-" segment would fool a
       // first-match parse into one constant commit number — silently
-      // breaking the sequence rule in both directions
+      // breaking the sequence rule in both directions. The path comes
+      // from the scan's `_metadata` column, not input_file_name(): a
+      // nondeterministic projection would stop Catalyst pushing a
+      // filter above the mask down into the scan, and with it every
+      // file the skipping walk could have pruned
       val withFv =
         if (eqDels.isEmpty) df
         else df.withColumn("__fv",
-          try_element_at(regexp_extract_all(input_file_name(),
+          try_element_at(regexp_extract_all(col("_metadata.file_path"),
             lit("data/c(\\d+)-"), lit(1)), lit(-1)).cast("int"))
       // a find scan passes a frame already carrying row addresses (it
       // needs them for its own sidecar); every other funnel derives
@@ -766,8 +793,9 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                 version: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readRange needs at least one column range")
     val meta = catalog0(db, table)
-    loadRanged(meta, readManifest(meta.location, resolveVersion(meta, version)),
-      None, ranges)
+    val m = readManifest(meta.location, resolveVersion(meta, version))
+    loadFiles(meta, m, listDataFiles(meta, m, None).filter(rangesMayMatch(m, ranges)),
+      rangesPredicate(m, ranges))
   }
 
   /** The manifest version a read should resolve: the caller's explicit
@@ -816,56 +844,45 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     fromDirs ++ fromCarries
   }
 
-  /** The bucket a table-relative file path belongs to — its bucket
-   * dir's prefix, or its carry line. None for a path outside both
-   * (callers treat that as the error it is). */
-  private def bucketOfFile(m: Manifest, rel: String): Option[Int] =
-    m.buckets.collectFirst { case (b, dir) if rel.startsWith(s"$dir/") => b }
-      .orElse(m.carries.collectFirst { case (b, rels) if rels.contains(rel) => b })
-
   private def listDataFiles(meta: TableMeta, m: Manifest,
                             only: Option[Set[Int]]): Seq[String] =
     listDataFileStatuses(meta, m, only).map(_._1)
 
-  /** [[load]] restricted to the files whose stats overlap `ranges`, with
-   * the exact range predicate applied on top (so callers get exact
-   * results, not the pruning superset). */
-  private def loadRanged(meta: TableMeta, m: Manifest, only: Option[Set[Int]],
-                         ranges: Map[String, (Double, Double)]): DataFrame = {
-    if (ranges.isEmpty) load(meta, m, only)
-    else {
-      val files = listDataFiles(meta, m, only)
-      val keep = files.filter { rel =>
-        m.stats.get(rel) match {
-          case None => true // no stats: conservative keep
-          case Some(ss) => ranges.forall { case (c, (lo, hi)) =>
-            val key = MergeSnapshotStore.statKeyOf(m.schema, c)
-            ss.find(_.column == key).forall(s => s.mx >= lo && s.mn <= hi)
-          }
-        }
+  /** Does file `rel`'s manifest stats overlap EVERY `[lo, hi]` of
+   * `ranges` (double space)? A file or column without stats is kept. */
+  private def rangesMayMatch(m: Manifest, ranges: Map[String, (Double, Double)])
+                            (rel: String): Boolean =
+    m.stats.get(rel) match {
+      case None => true // no stats: conservative keep
+      case Some(ss) => ranges.forall { case (c, (lo, hi)) =>
+        val key = MergeSnapshotStore.statKeyOf(m.schema, c)
+        ss.find(_.column == key).forall(s => s.mx >= lo && s.mn <= hi)
       }
-      // the exact predicate re-types the epoch-based double bounds into
-      // the column's own literal space (a date/timestamp literal keeps
-      // the comparison PUSHED into the parquet scan, where a promoted
-      // `unix_date(col) >= x` function-of-column form would not); dates
-      // are integral, so the bound tightens to [ceil(lo), floor(hi)]
-      val pred = ranges.map { case (c, (lo, hi)) =>
-        m.schema(c).dataType match {
-          case DateType =>
-            val (dlo, dhi) = (math.ceil(lo).toLong, math.floor(hi).toLong)
-            col(c) >= lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(dlo))) &&
-              col(c) <= lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(dhi)))
-          case TimestampType =>
-            def ts(micros: Long) = java.time.Instant.ofEpochSecond(
-              Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
-            col(c) >= lit(ts(math.ceil(lo).toLong)) &&
-              col(c) <= lit(ts(math.floor(hi).toLong))
-          case _ => col(c) >= lit(lo) && col(c) <= lit(hi)
-        }
-      }.reduce(_ && _)
-      loadFiles(meta, m, keep, pred)
     }
-  }
+
+  /** The exact predicate of `ranges` (non-empty), so callers get exact
+   * results, not the pruning superset. */
+  private def rangesPredicate(m: Manifest,
+                              ranges: Map[String, (Double, Double)]): Column =
+    // the exact predicate re-types the epoch-based double bounds into
+    // the column's own literal space (a date/timestamp literal keeps
+    // the comparison PUSHED into the parquet scan, where a promoted
+    // `unix_date(col) >= x` function-of-column form would not); dates
+    // are integral, so the bound tightens to [ceil(lo), floor(hi)]
+    ranges.map { case (c, (lo, hi)) =>
+      m.schema(c).dataType match {
+        case DateType =>
+          val (dlo, dhi) = (math.ceil(lo).toLong, math.floor(hi).toLong)
+          col(c) >= lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(dlo))) &&
+            col(c) <= lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(dhi)))
+        case TimestampType =>
+          def ts(micros: Long) = java.time.Instant.ofEpochSecond(
+            Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
+          col(c) >= lit(ts(math.ceil(lo).toLong)) &&
+            col(c) <= lit(ts(math.floor(hi).toLong))
+        case _ => col(c) >= lit(lo) && col(c) <= lit(hi)
+      }
+    }.reduce(_ && _)
 
   /** The pruned-file read funnel. `tagCol` (the DML find phase) adds
    * input_file_name() ON THE RAW SCAN, before [[applyDeletes]] joins a
@@ -986,7 +1003,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       col(column).startsWith(prefix))
   }
 
-  /** String twin of [[loadRanged]]: `hi = None` means unbounded above
+  /** String twin of [[readRange]]'s selection: `hi = None` means unbounded above
    * (a prefix whose every code point is MAX). A file's upper bound of
    * None likewise never prunes. */
   private def loadStringRanged(meta: TableMeta, m: Manifest,
@@ -1018,10 +1035,15 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * AND/OR over `=`, `<`, `<=`, `>`, `>=`, `IN`, `startswith` between a
    * stats-carrying column and a literal — numeric/date/timestamp
    * min-max bounds, truncated string bounds, and value-set lines all
-   * participate. NOT pushes down as well: De Morgan over AND/OR,
+   * participate. On a keyed table, equality/IN on the whole primary key
+   * also prunes by BUCKET: the literals hash to their
+   * `pmod(hash(pk), nBuckets)` buckets in the driver and only those
+   * buckets' files are kept ([[keyBuckets]]) — the one pruning
+   * hash-bucketed key columns admit, since every bucket's key min/max
+   * spans the whole key range. NOT pushes down as well: De Morgan over AND/OR,
    * comparisons flip to their TRUE-wise complements, and negated
    * equality/IN/prefix prune only where the stats PROVE every non-null
-   * row matches (see [[fileMayMatch]]'s mayNot). IS NOT NULL prunes a
+   * row matches (see [[statsMayMatch]]'s mayNot). IS NOT NULL prunes a
    * file whose EMPTY value-set line proves the column all-null. EVERY
    * remaining node (IS NULL, col-to-col, functions of columns, UDFs…)
    * is conservatively satisfiable, and the exact predicate applies on
@@ -1064,7 +1086,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   private def prunedFilesOf(meta: TableMeta, m: Manifest,
                             predicate: Column): Seq[String] = {
     val e = resolvePredicate(m, predicate)
-    listDataFiles(meta, m, None).filter(rel => fileMayMatch(e, m, rel))
+    listDataFiles(meta, m, None).filter(fileMayMatch(e, meta, m))
   }
 
   /**
@@ -1112,8 +1134,6 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   private[graft] def skippingScan(db: String, table: String,
                                   version: Option[Int] = None)
       : Option[(DataFrame, StoreFileIndex)] = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val meta = catalog0(db, table)
     if (meta.format != "parquet") None
     else {
@@ -1121,24 +1141,49 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       // statuses (size + mtime) off the SHARED bucket enumeration —
       // sizes feed sizeInBytes so SQL joins auto-broadcast small store
       // tables
-      val files = listDataFileStatuses(meta, m, None)
-      // the relation reads the files' PHYSICAL spelling; pushed-down
-      // predicates arrive at the index with physical attribute names,
-      // which is exactly how the stats lines are keyed
-      val phys = MergeSnapshotStore.physicalSchema(m.schema)
-      val index = new StoreFileIndex(meta.location, phys, files,
-        (e, rel) => fileMayMatch(e, m, rel))
-      val relation = HadoopFsRelation(index, new StructType(), phys,
-        None, new ParquetFileFormat(), Map.empty)(spark)
-      // merge-on-read sidecars mask on top of the skipping scan too —
-      // the anti-join sits above the relation, so file pruning still
-      // runs below it and SQL readers see the logical snapshot; the
-      // logical aliasing sits above BOTH, and Catalyst rewrites pushed
-      // filters through it down to the physical scan
-      Some((toLogical(
-        applyDeletes(meta, m, spark.baseRelationToDataFrame(relation)),
-        m.schema), index))
+      Some(skippingFrame(meta, m, listDataFileStatuses(meta, m, None)))
     }
+  }
+
+  /** The skipping scan over `files` of manifest `m` (a parquet table):
+   * a [[StoreFileIndex]] relation judged by [[fileMayMatch]], with the
+   * merge-on-read masking and the logical aliasing on top. */
+  private def skippingFrame(meta: TableMeta, m: Manifest,
+                            files: Seq[(String, FileStatus)])
+      : (DataFrame, StoreFileIndex) = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    // the relation reads the files' PHYSICAL spelling; pushed-down
+    // predicates arrive at the index with physical attribute names,
+    // which is exactly how the stats lines are keyed
+    val phys = MergeSnapshotStore.physicalSchema(m.schema)
+    val index = new StoreFileIndex(meta.location, phys, files,
+      e => fileMayMatch(e, meta, m))
+    val relation = HadoopFsRelation(index, new StructType(), phys,
+      None, new ParquetFileFormat(), Map.empty)(spark)
+    // merge-on-read sidecars mask on top of the skipping scan too —
+    // the anti-join sits above the relation, so file pruning still
+    // runs below it and SQL readers see the logical snapshot; the
+    // logical aliasing sits above BOTH, and Catalyst rewrites pushed
+    // filters through it down to the physical scan
+    (toLogical(
+      applyDeletes(meta, m, spark.baseRelationToDataFrame(relation)),
+      m.schema), index)
+  }
+
+  /** The skipping scan of `m` filtered by `predicate`, its index
+   * narrowed up front to the files the [[fileMayMatch]] walk (and
+   * `keep`) admit — so `inputFiles` and `sizeInBytes` describe the
+   * pruned read, not the snapshot — while the pushed predicate still
+   * reaches the index at planning. Non-parquet tables read the same
+   * file list through [[loadFiles]]. */
+  private def skippingWhere(meta: TableMeta, m: Manifest, predicate: Column,
+                            keep: String => Boolean): DataFrame = {
+    val may = fileMayMatch(resolvePredicate(m, predicate), meta, m)
+    val files = listDataFileStatuses(meta, m, None)
+      .filter { case (rel, _) => keep(rel) && may(rel) }
+    if (meta.format != "parquet") loadFiles(meta, m, files.map(_._1), predicate)
+    else skippingFrame(meta, m, files)._1.filter(predicate)
   }
 
   /** `predicate` resolved and type-coerced by Spark's OWN analyzer
@@ -1178,9 +1223,14 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         "— the pruning fold, the find scan and the rewrite evaluate at " +
         "different instants; bind the time to a literal " +
         "(lit(Instant.now())) before calling")
+    // A cast to the type its child already has goes too (the
+    // SimplifyCasts move): IN coercion casts every child to the common
+    // type, the column included, and the walk must see the bare column
     val folded = cond.transformUp {
       case e if e.foldable && !e.isInstanceOf[Literal] =>
         Literal.create(e.eval(null), e.dataType)
+      case c: org.apache.spark.sql.catalyst.expressions.Cast
+          if c.child.dataType == c.dataType => c.child
     }
     // pruning judges stats lines, which are keyed by PHYSICAL column
     // names — rewrite the analyzed attributes to the files' spelling
@@ -1198,12 +1248,127 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     }
   }
 
-  /** Can file `rel` hold a row where `e` is TRUE, judged from its
-   * manifest stats alone? `true` means "cannot rule it out" — every
-   * unrecognized shape, type pairing, or missing stats line lands
-   * there, so the answer is a sound superset of the matching files. */
+  /** Can a file of `m` hold a row where `e` is TRUE, judged from the
+   * manifest alone? Two arms: the BUCKET arm ([[keyBuckets]]) drops
+   * files outside the buckets `e`'s primary-key literals hash to, the
+   * STATS arm ([[statsMayMatch]]) drops files whose bounds or value
+   * sets rule `e` out. `true` means "cannot rule it out" — every
+   * unrecognized shape, type pairing, missing stats line or bucketless
+   * file lands there, so the kept files are a sound superset of the
+   * matching ones. The judge is built once per predicate: the key
+   * literals hash once, each file then pays a map lookup plus the
+   * stats walk. */
   private def fileMayMatch(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                           m: Manifest, rel: String): Boolean = {
+                           meta: TableMeta, m: Manifest): String => Boolean = {
+    val inBuckets = keyBuckets(e, meta, m)
+    rel => inBuckets.forall(bs => m.bucketOf(rel).forall(bs.contains)) &&
+      statsMayMatch(e, m, rel)
+  }
+
+  /** The bucket arm: the buckets that can hold a row where `e` is TRUE,
+   * from the primary-key literals `e` pins; None when it pins no whole
+   * key (any bucket may match). Rows are placed by
+   * `pmod(hash(pk…), nBuckets)` ([[bucketOf]]), so a row with `pk = v`
+   * lives only in that function's bucket for `v`: the arm evaluates
+   * the same function on the literals in the driver (Catalyst `eval`,
+   * no Spark job) under the manifest's own bucket count — the
+   * partition-transform pruning Iceberg applies to its `bucket`
+   * transform. One conjunction must pin every PK column (`=`,
+   * non-null `<=>`, IN, InSet; IN lists on several columns cross); OR
+   * unions its sides' sets only when both sides pin, AND intersects.
+   * Conservative everywhere else: a literal not typed exactly as the
+   * committed PK column (the hash is type-sensitive — int 7 and
+   * bigint 7 hash apart), a PK type whose equality is not hash
+   * equality (floating point, decimals, collated strings), NOT, and
+   * PK-less tables. */
+  private def keyBuckets(e: org.apache.spark.sql.catalyst.expressions.Expression,
+                         meta: TableMeta, m: Manifest): Option[Set[Int]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    // the key columns as the walk spells them (physical names, the
+    // stats-line key space) with their committed types, in the
+    // registered order the bucket function hashes them in
+    val keyCols = meta.primaryKey.map { k =>
+      val phys = MergeSnapshotStore.pkPhysicalOf(meta, k)
+      m.schema.fields
+        .find(f => MergeSnapshotStore.physicalOf(f).equalsIgnoreCase(phys))
+        .map(f => MergeSnapshotStore.physicalOf(f) -> f.dataType)
+    }
+    if (keyCols.isEmpty || !keyCols.forall(
+        _.exists(c => MergeSnapshotStore.bucketPrunable(c._2)))) return None
+    val keys = keyCols.flatten
+    val slot = keys.map(_._1).zipWithIndex.toMap
+    def keySlot(x: Expression, ldt: DataType): Option[Int] = x match {
+      case a: AttributeReference =>
+        slot.get(a.name).filter(i => keys(i)._2 == ldt && a.dataType == ldt)
+      case _ => None
+    }
+    // the non-null values one conjunct pins a key column to (a NULL
+    // never compares equal, so `pk = NULL` pins to nothing)
+    def pin(x: Expression): Option[(Int, Set[Any])] = (x match {
+      case EqualTo(a, Literal(v, dt)) => keySlot(a, dt).map(_ -> Set(v))
+      case EqualTo(Literal(v, dt), a) => keySlot(a, dt).map(_ -> Set(v))
+      case EqualNullSafe(a, Literal(v, dt)) if v != null =>
+        keySlot(a, dt).map(_ -> Set(v))
+      case EqualNullSafe(Literal(v, dt), a) if v != null =>
+        keySlot(a, dt).map(_ -> Set(v))
+      case In(a, vs) if vs.forall {
+          case Literal(_, dt) => dt == a.dataType
+          case _ => false
+        } =>
+        keySlot(a, a.dataType)
+          .map(_ -> vs.map(_.asInstanceOf[Literal].value).toSet[Any])
+      case InSet(a, hset) => keySlot(a, a.dataType).map(_ -> hset)
+      case _ => None
+    }).map { case (i, vs) => i -> vs.filter(_ != null) }
+    val bucketFn = MergeSnapshotStore.bucketExpr(keys.zipWithIndex.map {
+      case ((_, dt), i) => BoundReference(i, dt, nullable = false)
+    }, m.nBuckets)
+    def hashAll(vals: Seq[Set[Any]]): Option[Set[Int]] =
+      // IN lists on several key columns cross; a product past the
+      // inline-key bound is not enumerated and the arm stays out
+      if (vals.size > 1 && vals.map(_.size.toDouble).product >
+          MergeSnapshotStore.MaxInlineKeys) None
+      else Some(vals.foldLeft(Iterator.single(Vector.empty[Any])) {
+        (acc, vs) => acc.flatMap(t => vs.iterator.map(t :+ _))
+      }.map(t => bucketFn.eval(InternalRow.fromSeq(t)).asInstanceOf[Int]).toSet)
+    // flattened iteratively: a composite lookup's OR of key tuples is
+    // as deep as the key list is long
+    def flatten(x: Expression, split: PartialFunction[Expression,
+        (Expression, Expression)]): Seq[Expression] = {
+      val out = Seq.newBuilder[Expression]
+      var stack = List(x)
+      while (stack.nonEmpty) {
+        val h = stack.head
+        stack = stack.tail
+        split.lift(h) match {
+          case Some((l, r)) => stack = l :: r :: stack
+          case None => out += h
+        }
+      }
+      out.result()
+    }
+    def conj(x: Expression): Option[Set[Int]] = {
+      val cs = flatten(x, { case And(l, r) => (l, r) })
+      val pins = cs.flatMap(pin).groupBy(_._1)
+        .map { case (i, ps) => i -> ps.map(_._2).reduce(_ intersect _) }
+      val pinned =
+        if (pins.size == keys.size) hashAll(keys.indices.map(pins)) else None
+      (pinned.toSeq ++ cs.collect { case o: Or => walk(o) }.flatten)
+        .reduceOption(_ intersect _)
+    }
+    def walk(x: Expression): Option[Set[Int]] =
+      flatten(x, { case Or(l, r) => (l, r) })
+        .foldLeft(Option(Set.empty[Int])) { (acc, d) =>
+          acc.flatMap(a => conj(d).map(a ++ _))
+        }
+    walk(e)
+  }
+
+  /** The stats arm of [[fileMayMatch]]: can file `rel` hold a row where
+   * `e` is TRUE, judged from its manifest stats alone? */
+  private def statsMayMatch(e: org.apache.spark.sql.catalyst.expressions.Expression,
+                            m: Manifest, rel: String): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
     import MergeSnapshotStore.{litCanonical, litDouble, strCmp}
     val num = m.stats.getOrElse(rel, Nil).map(s => s.column -> s).toMap
@@ -1969,7 +2134,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                                predicate: Column): Long = {
     val pks = meta.primaryKey
     val files = listDataFiles(meta, current, None)
-    val cand = files.filter(rel => fileMayMatch(e, current, rel))
+    val cand = files.filter(fileMayMatch(e, meta, current))
     if (cand.isEmpty) return 0L
     // one job: the matched keys land as the sidecar (tmp + rename, the
     // data-commit discipline); count and touched buckets read back off
@@ -2023,7 +2188,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         "data files (row addresses come from the reader's " +
         "_metadata.row_index) — use CopyOnWrite for other formats")
     val files = listDataFiles(meta, current, None)
-    val cand = files.filter(rel => fileMayMatch(e, current, rel))
+    val cand = files.filter(fileMayMatch(e, meta, current))
     if (cand.isEmpty) return 0L
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val rel = f"data/d${readVer + 1}%06d-$nonce/k"
@@ -2060,7 +2225,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         "an unmaskable address")
     val refFiles = addrs.select("__file").distinct()
       .collect().map(_.getString(0)).toSet // <= candidate file count
-    val refBuckets = refFiles.flatMap(bucketOfFile(current, _))
+    val refBuckets = refFiles.flatMap(current.bucketOf(_))
     publishMorSidecar(meta, readVer, current, e, rel, matched, refBuckets,
       MergeSnapshotStore.PosDeleteKind, "merge-on-read position delete")
   }
@@ -2140,7 +2305,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     }).toSet
     if (changed.nonEmpty) {
       val hit = listDataFiles(meta, winner, Some(changed))
-        .find(rel => fileMayMatch(e, winner, rel))
+        .find(fileMayMatch(e, meta, winner))
       hit.foreach { rel =>
         throw new java.util.ConcurrentModificationException(
           s"concurrent commit to ${meta.qualified} wrote file $rel that " +
@@ -2160,7 +2325,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                              e: org.apache.spark.sql.catalyst.expressions.Expression,
                              predicate: Column): Option[(Seq[Int], Long)] = {
     val files = listDataFiles(meta, current, None)
-    val cand = files.filter(rel => fileMayMatch(e, current, rel))
+    val cand = files.filter(fileMayMatch(e, meta, current))
     if (cand.isEmpty) return None
     // the tagged funnel counts each physical file's LOGICAL rows (the
     // tag is captured on the raw scan, before the MoR anti-join)
@@ -2391,7 +2556,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     val allBuckets = (m.buckets.keySet ++ m.carries.keySet).toSeq.sorted
     allBuckets.map { b =>
       val idx = files.zipWithIndex.collect {
-        case (f, i) if bucketOfFile(m, f).contains(b) => i
+        case (f, i) if m.bucketOf(f).contains(b) => i
       }
       val frac = if (idx.isEmpty) 0.0 else idx.map(fr).sum / idx.size
       MergeSnapshotStore.BucketHealth(b, idx.size,
@@ -3511,7 +3676,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       new java.util.ArrayList()
     listDataFileStatuses(meta, m, None).foreach { case (rel, st) =>
       rows.add(org.apache.spark.sql.Row(
-        bucketOfFile(m, rel).map(Integer.valueOf).orNull,
+        m.bucketOf(rel).map(Integer.valueOf).orNull,
         rel,
         st.getLen,
         m.rows.get(rel).map(java.lang.Long.valueOf).orNull,
@@ -5502,6 +5667,30 @@ object MergeSnapshotStore {
    * well within parquet filter evaluation comfort; far past it the set
    * isn't a point lookup anymore). */
   val MaxInlineKeys: Int = 10000
+
+  /** The bucket function as a Catalyst expression over `keys`: the same
+   * `pmod(hash(keys…), n)` (Murmur3, seed 42) the store's `bucketOf`
+   * builds as a Column, for evaluation on the driver. */
+  private[catalog] def bucketExpr(
+      keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      n: Int): org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
+    Pmod(new Murmur3Hash(keys), Literal(n))
+  }
+
+  /** PK types whose SQL equality is exactly equality of the hashed
+   * value, so `pk = v` can only match rows in `v`'s bucket. Floating
+   * point (NaN, ±0), decimals (the hash reads the value's own scale)
+   * and collated strings fall outside and never bucket-prune. */
+  private[catalog] def bucketPrunable(dt: DataType): Boolean = {
+    import org.apache.spark.sql.types.{BooleanType, TimestampNTZType}
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType |
+           DateType | TimestampType | TimestampNTZType => true
+      case StringType => true // the default UTF8_BINARY collation only
+      case _ => false
+    }
+  }
 
   /** Table property disabling per-file stats measurement at commit
    * (`"false"` skips it) — for tables whose reads never range-filter. */

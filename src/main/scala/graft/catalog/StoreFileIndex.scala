@@ -2,17 +2,21 @@ package graft.catalog
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
 /**
  * The SQL surface's door into the store's data skipping: a
  * [[FileIndex]] over ONE committed manifest version whose
- * `listFiles` prunes with the store's own stats walk
- * ([[MergeSnapshotStore]] `fileMayMatch` — footer min/max bounds,
- * truncated string bounds, value sets) before Spark opens a single
- * parquet footer.
+ * `listFiles` prunes with the store's own walk
+ * ([[MergeSnapshotStore]] `fileMayMatch`) before Spark opens a single
+ * parquet footer. The walk has two arms: the bucket arm hashes
+ * primary-key literals (`pk = v`, `pk <=> v`, `pk IN (…)`, and
+ * composite keys pinned by one conjunction) to their
+ * `pmod(hash(pk), nBuckets)` buckets in the driver and keeps only
+ * those buckets' files; the stats arm judges footer min/max bounds,
+ * truncated string bounds and value sets.
  *
  * This is the architecture Delta Lake uses on Spark (TahoeFileIndex →
  * HadoopFsRelation), chosen over a DataSource V2 `TableProvider`
@@ -46,7 +50,7 @@ private[graft] final class StoreFileIndex(
     location: String,
     dataSchema: StructType,
     files: Seq[(String, FileStatus)],
-    mayMatch: (Expression, String) => Boolean)
+    mayMatch: Expression => String => Boolean)
   extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(new Path(location))
@@ -62,14 +66,17 @@ private[graft] final class StoreFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // a file survives only if EVERY pushed conjunct may hold a TRUE row
-    // in it (the conjunction of per-filter verdicts IS the verdict on
-    // the AND — the same three-valued logic fileMayMatch's And arm runs)
-    val kept =
-      if (dataFilters.isEmpty) files
-      else files.filter { case (rel, _) =>
-        dataFilters.forall(f => mayMatch(f, rel))
-      }
+    // Spark hands the pushed predicate over split into conjuncts; the
+    // walk judges their AND in one pass, so a composite key pinned
+    // across separate conjuncts (`a = 1 AND b = 'x'`) still maps to its
+    // bucket — for the stats arm the verdict equals the per-conjunct
+    // one (a file may match an AND only if it may match each side)
+    val kept = dataFilters.reduceOption(And) match {
+      case None => files
+      case Some(f) =>
+        val may = mayMatch(f)
+        files.filter { case (rel, _) => may(rel) }
+    }
     lastKept = kept.map(_._1)
     Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
   }

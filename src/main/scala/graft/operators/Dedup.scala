@@ -1257,10 +1257,17 @@ object Dedup {
     val idType = edges.schema("src").dataType
     val integralIds = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    if (integralIds && unionFindEdgeLimit > 0 &&
-        edges.count() <= unionFindEdgeLimit) {
-      val arr = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect()
+    val small =
+      if (integralIds && unionFindEdgeLimit > 0 &&
+          edges.count() <= unionFindEdgeLimit)
+        Some(edges.select(col("src").cast("long"), col("dst").cast("long"))
+          .collect())
+      else None
+    // a null pair id cannot be unboxed into the union-find; the loop
+    // below gives it its join/groupBy meaning (null joins nothing), so
+    // such a graph takes the loop
+    if (small.exists(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))) {
+      val arr = small.get
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x

@@ -34,8 +34,9 @@ final class CuratedApplier(store: SnapshotStore,
  */
 final class QueryRunner(store: SnapshotStore) {
   /** On a MergeSnapshotStore the scan is the SKIPPING read: the parsed
-   * `where` prunes files through the manifest stats (same walk as the
-   * typed readWhere) before any footer opens. `asOfVersion` pins the
+   * `where` prunes files through the manifest stats and, for equality
+   * or IN on the whole primary key, to the keys' hash buckets (same
+   * walk as the typed readWhere) before any footer opens. `asOfVersion` pins the
    * read to a committed-and-retained version — AS-OF queries prune
    * through the pinned manifest exactly as HEAD queries do. */
   def run(db: String, table: String, fields: Seq[String],

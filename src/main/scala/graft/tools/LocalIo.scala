@@ -38,20 +38,55 @@ object LocalIo {
    * `java.io.tmpdir` points at RAM-backed /dev/shm/spark-graft and
    * nothing cleaned it — fixture store temp dirs from finished runs
    * accumulate until they squeeze real memory and distort later
-   * benches). Age-gated so concurrent JVMs' LIVE scratch (always
-   * recent — fixtures live for one query) is never touched; called
-   * from the driver-contract mains' bootstrap. Never deletes when the
-   * scratch redirect is off (tmpdir is then a shared system /tmp). */
-  def sweepScratch(maxAgeMillis: Long = 2 * 60 * 60 * 1000L): Unit = {
+   * benches). Age-gated, and an entry OWNED by a live process is never
+   * touched whatever its age: a JVM's Spark dirs are created once at
+   * start (deep writes do not refresh their top-level mtime), so a run
+   * older than the gate would otherwise lose its live shuffle and
+   * block storage. Ownership is the `pid-<pid>` name [[ownScratch]]
+   * gives a main's Spark local dir. Called from the driver-contract
+   * mains' bootstrap. Never deletes when the scratch redirect is off
+   * (tmpdir is then a shared system /tmp). */
+  def sweepScratch(maxAgeMillis: Long = 2 * 60 * 60 * 1000L): Unit =
+    tmpfsScratch().foreach(sweep(_, System.currentTimeMillis() - maxAgeMillis))
+
+  /** The tmpfs scratch dir, when the redirect is on (tmpdir under
+   * /dev/shm). */
+  private def tmpfsScratch(): Option[java.io.File] = {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir", ""))
-    if (tmp.getPath.startsWith("/dev/shm/") && tmp.isDirectory) {
-      val cutoff = System.currentTimeMillis() - maxAgeMillis
-      val kids = tmp.listFiles()
-      if (kids != null) kids.iterator
-        .filter(_.lastModified() < cutoff)
-        .foreach(deleteRecursively)
-    }
+    if (tmp.getPath.startsWith("/dev/shm/") && tmp.isDirectory) Some(tmp) else None
   }
+
+  /** Delete the entries of `dir` last modified before `cutoff`, except
+   * those a live process owns. */
+  private[graft] def sweep(dir: java.io.File, cutoff: Long): Unit = {
+    val kids = dir.listFiles()
+    if (kids != null) kids.iterator
+      .filter(k => k.lastModified() < cutoff && !ownedByLiveProcess(k.getName))
+      .foreach(deleteRecursively)
+  }
+
+  private val OwnedRe = "^pid-(\\d+)$".r
+
+  private def ownedByLiveProcess(name: String): Boolean = name match {
+    case OwnedRe(pid) =>
+      scala.util.Try(java.lang.ProcessHandle.of(pid.toLong).isPresent)
+        .getOrElse(true) // an unparseable pid is kept, not guessed dead
+    case _ => false
+  }
+
+  /** This process's own scratch dir, `<tmpdir>/pid-<pid>`, created on
+   * demand; None when the scratch redirect is off. */
+  private[graft] def ownedScratch(): Option[String] =
+    tmpfsScratch()
+      .map(new java.io.File(_, s"pid-${java.lang.ProcessHandle.current().pid()}"))
+      .filter { d => d.mkdirs(); d.isDirectory }
+      .map(_.getAbsolutePath)
+
+  /** `b` with Spark's local dir under [[ownedScratch]], so
+   * [[sweepScratch]] in a concurrent JVM can tell this run's live Spark
+   * dirs from stale ones; `b` unchanged when the redirect is off. */
+  def ownScratch(b: SparkSession.Builder): SparkSession.Builder =
+    ownedScratch().fold(b)(d => b.config("spark.local.dir", d))
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath)) {

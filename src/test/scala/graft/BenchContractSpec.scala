@@ -51,6 +51,28 @@ class BenchContractSpec extends AnyFunSuite with SparkFixture {
     assert(json.contains(""""value":1.000"""))
   }
 
+  test("the contract line records the core count and the applied conf overrides") {
+    val res = Seq(("q01_x", 1.0, None))
+    val conf = Seq("spark.sql.shuffle.partitions" -> "8", "odd\"key" -> "v")
+    val json = Bench.toJson(res, "/x", cpus = Some(4), conf = conf)
+    // the contract keys stay where the driver reads them
+    assert(json.startsWith("""{"metric":"total","value":1.000,"unit":"sec","""))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("metric").asText == "total" && tree.get("value").asDouble == 1.0)
+    assert(tree.get("queries").get("q01").asDouble == 1.0)
+    assert(tree.get("cpus").asInt == 4)
+    assert(tree.get("conf").get("spark.sql.shuffle.partitions").asText == "8")
+    assert(tree.get("conf").get("odd\"key").asText == "v")
+    // no override applied: the key is still there, empty
+    val plain = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Bench.toJson(res, "/x", cpus = Some(4)))
+    assert(plain.get("conf").size == 0 && plain.get("cpus").asInt == 4)
+    val detail = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Bench.toDetailJson(res, "/x", 1, cpus = Some(4), conf = conf))
+    assert(detail.get("cpus").asInt == 4 &&
+      detail.get("conf").get("spark.sql.shuffle.partitions").asText == "8")
+  }
+
   test("a query that only fails on a later run is still reported failed") {
     var calls = 0
     val flaky: Map[String, (SparkSession, String) => DataFrame] = Map(

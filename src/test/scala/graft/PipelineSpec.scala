@@ -890,6 +890,22 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(fast == straddled)
   }
 
+  test("clusters: a null pair id takes the distributed loop instead of failing the fast path") {
+    import spark.implicits._
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 3L), (7L, null), (null, 9L), (10L, 11L))
+      .toDF("doc_a", "doc_b")
+    def labels(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val fast = labels(Dedup.clusters(pairs, "doc_a", "doc_b"))
+    val loop = labels(Dedup.clusters(pairs, "doc_a", "doc_b",
+      unionFindEdgeLimit = 0L))
+    assert(fast == loop)
+    val byDoc = Dedup.clusters(pairs, "doc_a", "doc_b").collect()
+      .filter(!_.isNullAt(0)).map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(byDoc(1L) == 1L && byDoc(3L) == 1L && byDoc(11L) == 10L)
+  }
+
   test("clusters throws rather than returning torn components at maxIters") {
     import spark.implicits._
     // a 64-node path: with pointer jumping reach roughly doubles per
