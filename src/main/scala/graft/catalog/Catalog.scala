@@ -123,6 +123,23 @@ class SnapshotStore(spark: SparkSession, val catalog: Catalog, keepVersions: Int
     }
   }
 
+  /** Runs `body` with the thread's Spark jobs labelled by one PHASE of
+   * the enclosing store operation: the head `store: <op> <db.table>`
+   * that [[jobLabel]] set stays first and the phase follows it
+   * (`store: merge db.t write`), so trace readers that key on the op
+   * keep working. The operation's label comes back after `body`; a
+   * nested phase replaces the outer one for its own extent. Outside a
+   * store label `body` runs as it is. */
+  protected[graft] def jobPhase[T](phase: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val cur = sc.getLocalProperty("spark.job.description")
+    if (cur == null || !cur.startsWith("store: ")) body
+    else {
+      sc.setJobDescription(cur.split(' ').take(3).mkString(" ") + " " + phase)
+      try body finally sc.setJobDescription(cur)
+    }
+  }
+
   private def versions(location: String): Seq[Int] = {
     val p = new Path(location)
     val f = fs(p)
@@ -224,10 +241,13 @@ class SnapshotStore(spark: SparkSession, val catalog: Catalog, keepVersions: Int
       .save(meta.location)
   }
 
-  /** Read a non-versioned (landing-zone) table. */
+  /** Read a non-versioned (landing-zone) table. The schema the ingest
+   * registered is handed to the reader, so planning the read runs no
+   * schema-inference job over the files' footers. */
   def readFlat(db: String, table: String): DataFrame = {
     val meta = catalog(db, table)
-    spark.read.format(meta.format).load(meta.location)
+    val reader = spark.read.format(meta.format)
+    meta.schema.fold(reader)(reader.schema).load(meta.location)
   }
 
   /** JSON write to a raw path (reference dev event-log generation,

@@ -187,7 +187,7 @@ object Layout {
       // BIJECTIVELY onto the partition space: `repartition(n, col)` and
       // `functions.hash` share Murmur3(seed 42), making the routing
       // exact, still one shuffle, no sampling.
-      val tokens = array(bijectiveTokens(df.sparkSession, files).map(lit): _*)
+      val tokens = array(bijectiveTokens(files).map(lit): _*)
       df.withColumn("__z", z)
         .withColumn("__t",
           element_at(tokens, sliceOf("__z", d, bits, files) + 1))
@@ -403,26 +403,23 @@ object Layout {
   }
 
   /** tokenCache(parts)(p) = a long whose Murmur3(seed 42) hash pmods to
-   * partition `p` of `parts` — probed once per distinct `parts` with
-   * tiny driver-local jobs (a few thousand hashed longs, no data scan)
-   * and cached for the session lifetime (the map is keyed by the pure
-   * integer `parts`, so it is JVM-global and session-safe). */
+   * partition `p` of `parts` — the hash `repartition(parts, col)` routes
+   * a long column by. Probed once per distinct `parts` on the driver
+   * with the same Murmur3 routine Spark's `hash` evaluates for a long
+   * (no Spark job), and cached for the JVM's lifetime (the map is keyed
+   * by the pure integer `parts`, so it is session-safe). */
   private val tokenCache = new ConcurrentHashMap[Int, Array[Long]]()
 
-  private[graft] def bijectiveTokens(spark: SparkSession, parts: Int): Array[Long] =
+  private[graft] def bijectiveTokens(parts: Int): Array[Long] =
     tokenCache.computeIfAbsent(parts, { _ =>
       val found = Array.fill[Long](parts)(-1L)
       var remaining = parts
-      var lo = 0L
+      var id = 0L
       while (remaining > 0) {
-        val batch = spark.range(lo, lo + parts * 64L, 1, 1)
-          .select(col("id"), pmod(hash(col("id")), lit(parts)).as("p"))
-          .collect() // loop control: O(parts) candidate tokens, no data scan
-        batch.foreach { r =>
-          val p = r.getInt(1)
-          if (found(p) < 0) { found(p) = r.getLong(0); remaining -= 1 }
-        }
-        lo += parts * 64L
+        val p = java.lang.Math.floorMod(
+          org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(id, 42), parts)
+        if (found(p) < 0) { found(p) = id; remaining -= 1 }
+        id += 1
       }
       found
     })

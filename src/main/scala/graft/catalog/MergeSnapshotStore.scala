@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.immutable.SortedMap
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{array, coalesce, col, concat, countDistinct, element_at, expr, hash, input_file_name, isnan, lit, max, min, pmod, raise_error, struct, to_json, when}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
 
@@ -492,6 +492,16 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   override def readVersion(meta: TableMeta, version: Int): DataFrame =
     load(meta, readManifest(meta.location, version), None)
 
+  /** The latest committed schema under its logical column names, read
+   * from the manifest — what a caller that only needs the table's
+   * shape asks for, without planning a scan. */
+  def committedSchema(db: String, table: String): StructType = {
+    val meta = catalog0(db, table)
+    val vs = manifestVersions(meta.location)
+    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
+    MergeSnapshotStore.plainLogical(readManifest(meta.location, vs.last).schema)
+  }
+
   /** [[readVersion]] under the pinned-read contract: the version must
    * be committed AND retained ([[resolveVersion]]'s loud message), so a
    * serving pin past the vacuum horizon fails with the
@@ -573,13 +583,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         // round-trips values through literals) instead of failing a
         // lookup the fallback would have answered
         try {
-          val keyLits: Seq[Seq[Column]] = inline.map(r =>
-            pks.indices.map(i => lit(r.get(i)).cast(pkTypes(i))))
-          val keyPred =
-            if (pks.size == 1) col(pks.head).isin(keyLits.map(_.head): _*)
-            else keyLits.map(ls =>
-              pks.zip(ls).map { case (k, l) => col(k) === l }
-                .reduce(_ && _)).reduce(_ || _)
+          val keyPred = MergeSnapshotStore.keyIn(pks, pkTypes, inline)
           Some(skippingWhere(meta, m, rangePred.fold(keyPred)(keyPred && _),
             keepRanged))
         } catch { case scala.util.control.NonFatal(_) => None }
@@ -1670,7 +1674,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       }
       val next = cur.lastOption.getOrElse(-1) + 1
       if (publishManifest(meta.location, next, m)) {
-        vacuum(meta, cur); clearTombstones(meta, written); done = true
+        jobPhase("vacuum") { vacuum(meta, cur); clearTombstones(meta, written) }
+        done = true
       }
       else {
         attempt += 1
@@ -1707,6 +1712,14 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * files are carried into the new version by reference — never re-read,
    * never rewritten. Returns the touched bucket ids.
    *
+   * Jobs: a `changedKeys` frame whose optimized plan is a local relation
+   * is hashed to its buckets on the driver (no job); any other frame
+   * costs one scan job without a shuffle. Then the write (see
+   * [[writeData]]: one shuffle to min(nBuckets, cores) tasks, one file
+   * per touched bucket) and whatever jobs `rewrite` runs. Each job is
+   * labelled `store: merge <db.table> <phase>`, the phase one of scan,
+   * decide (inside `rewrite`), write, stats, publish and vacuum.
+   *
    * Under concurrent writers the commit is optimistic: losing the
    * version CAS to a writer whose commit left every bucket THIS merge
    * touched untouched (and the schema unchanged) rebases — the written
@@ -1738,8 +1751,20 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
         "store/table with the committed bucket count (or overwrite() to " +
         "re-bucket)")
-    val touched = changedKeys.select(bucketOf(meta, pks.map(col)).as("__b")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted // loop control; <= nBuckets values
+    // loop control; <= nBuckets values. A key frame already on the
+    // driver (a local relation, which the bucket projection folds into)
+    // is hashed there with no job; any other frame pays one scan that
+    // reduces each task's bucket ids to a set, with no shuffle
+    val ids = changedKeys.select(bucketOf(meta, pks.map(col)).as("__b"))
+    val touched = (ids.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        ids.collect().map(_.getInt(0))
+      case _ => jobPhase("scan") {
+        ids.as[Int](org.apache.spark.sql.Encoders.scalaInt)
+          .mapPartitions((it: Iterator[Int]) => it.toSet.iterator)(
+            org.apache.spark.sql.Encoders.scalaInt).collect()
+      }
+    }).distinct.toSeq.sorted
     if (touched.isEmpty) return Nil
     commitScoped(meta, vs.last, current, touched, pks)(rewrite)
     touched
@@ -1818,11 +1843,9 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   private[graft] def alignToCommittedSchema(db: String, table: String,
       rows: DataFrame, op: String): DataFrame = {
     val meta = catalog0(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
+    require(manifestVersions(meta.location).nonEmpty,
       s"bootstrap ${meta.qualified} with overwrite() before $op")
-    val schema = MergeSnapshotStore.plainLogical(
-      readManifest(meta.location, vs.last).schema)
+    val schema = committedSchema(db, table)
     val have = rows.columns.map(_.toLowerCase).toSet
     val known = schema.fieldNames.map(_.toLowerCase).toSet
     val extra = have -- known
@@ -1856,7 +1879,9 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                            enforceChecks: Boolean = true)
                           (rewrite: DataFrame => DataFrame): Unit = {
     val old = load(meta, current, Some(touched.toSet))
-    val out = rewrite(old)
+    // a rewrite may run jobs of its own while it builds the replacement
+    // (the inline CDC merge reads its stale-event guard here)
+    val out = jobPhase("decide")(rewrite(old))
     // scoped-merge schema EVOLUTION contract (spec-pinned): a rewrite
     // may ADD columns — an evolving CDC feed's natural shape; the
     // widened schema lands in the manifest, carried old-schema files
@@ -1902,7 +1927,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       current.retired.toSet, dropBucketCol(out.schema))
     val (written, newStats, newStrStats, newSetStats, newRows) =
       writeData(meta, readVer + 1, out, pks, cluster, enforceChecks,
-        pubSchema)
+        pubSchema, touched)
     val stray = written.keySet.diff(touched.toSet)
     require(stray.isEmpty,
       s"merge rewrote buckets $stray outside the changed-key set $touched — " +
@@ -1966,8 +1991,10 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
             rows = base.rows.filter { case (fp, _) => keeps(fp) } ++
               newRows,
             retired = base.retired))) {
-        vacuum(meta, manifestVersions(meta.location).filter(_ <= baseVer))
-        clearTombstones(meta, written)
+        jobPhase("vacuum") {
+          vacuum(meta, manifestVersions(meta.location).filter(_ <= baseVer))
+          clearTombstones(meta, written)
+        }
         committed = true
       } else {
         // lost the CAS: adjudicate at bucket granularity against the
@@ -2007,7 +2034,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
               s"${moved.mkString(",")} this merge also touched (base " +
               s"version ${readVer}, now $latest) — rerun the merge against " +
               "the new snapshot")
-        rebaseGuard(winner)
+        jobPhase("publish")(rebaseGuard(winner))
         attempt += 1
         if (attempt >= MergeSnapshotStore.MaxCommitAttempts)
           throw new java.util.ConcurrentModificationException(
@@ -4605,8 +4632,15 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * per-file column stats measured from the written files. One shuffle
    * proportional to the committed rows keeps files at one-per-bucket
    * (the optimized-write pattern); the table itself never reshuffles.
-   * PK-less tables land in one logical bucket but KEEP `df`'s own
-   * partitioning, so executors still write their files in parallel.
+   * The shuffle routes whole buckets to min(nBuckets, cores) write
+   * tasks, not one task per bucket: `buckets` (the ids the write may
+   * produce; empty = all of them) are dealt round-robin in id order
+   * through [[Layout.bijectiveTokens]], so a scoped merge's touched
+   * buckets spread evenly however few or clustered they are, and each
+   * bucket still lands in exactly one task, whose sort by `__b` writes
+   * it as one file. PK-less tables land in one logical bucket but KEEP
+   * `df`'s own partitioning, so executors still write their files in
+   * parallel.
    *
    * Stats are the Delta/Iceberg stats-in-manifest story: every NUMERIC
    * column's min/max per written file, lifted from the PARQUET FOOTERS
@@ -4638,7 +4672,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                         pk: Seq[String],
                         cluster: Option[(Seq[(String, (Double, Double))], Int, Int)] = None,
                         enforceChecks: Boolean = true,
-                        publishSchema: StructType = new StructType())
+                        publishSchema: StructType = new StructType(),
+                        buckets: Seq[Int] = Nil)
       : (SortedMap[Int, String], Map[String, Seq[ColStat]],
          Map[String, Seq[StrStat]], Map[String, Seq[SetStat]],
          Map[String, Long]) = {
@@ -4759,7 +4794,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         val z = Layout.zValue(dims.map { case (c, r) =>
           (promoted(col(c), checked.schema(c).dataType), r) }, bits)
         val parts = nBucketsOf(meta) * fpb
-        val tokens = array(Layout.bijectiveTokens(spark, parts).map(lit): _*)
+        val tokens = array(Layout.bijectiveTokens(parts).map(lit): _*)
         checked.withColumn("__b", bucketOf(meta, ks.map(col)))
           .withColumn("__z", z)
           .withColumn("__t", element_at(tokens,
@@ -4769,8 +4804,20 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
           .sortWithinPartitions(col("__b"), col("__z"))
           .drop("__z", "__t")
       case (ks, _) if ks.nonEmpty =>
+        val n = nBucketsOf(meta)
+        val tasks = math.min(n, spark.sparkContext.defaultParallelism).max(1)
+        val tokens = Layout.bijectiveTokens(tasks)
+        val rank = (if (buckets.isEmpty) 0 until n else buckets.sorted)
+          .zipWithIndex.toMap
+        // bucket id -> its task's token; an id outside `buckets` (a
+        // stray row the caller's check refuses after the write) still
+        // routes to some task, so the write itself never fails on it
+        val tokenOf = array((0 until n).map(b =>
+          lit(tokens(rank.getOrElse(b, b) % tasks))): _*)
         checked.withColumn("__b", bucketOf(meta, ks.map(col)))
-          .repartition(nBucketsOf(meta), col("__b"))
+          .withColumn("__t", element_at(tokenOf, col("__b") + 1))
+          .repartition(tasks, col("__t"))
+          .drop("__t")
       case _ => checked.withColumn("__b", lit(0))
     }
     // NOTE (r22, measured and rejected): re-hosting this write in an
@@ -4789,7 +4836,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         .option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
     }
-    writer.partitionBy("__b").save(tmpDir.toString)
+    jobPhase("write")(writer.partitionBy("__b").save(tmpDir.toString))
     if (!f.rename(tmpDir, dataDir))
       throw new IllegalStateException(s"data commit rename failed: $tmpDir -> $dataDir")
     val BucketDir = "^__b=(\\d+)$".r
@@ -4858,7 +4905,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
             val loc = meta.location
             val cols = statCols
             val scols = strCols
-            spark.sparkContext
+            jobPhase("stats")(spark.sparkContext
               .parallelize(rels, math.max(1, rels.size / 64))
               .mapPartitions { it =>
                 val c = new org.apache.hadoop.conf.Configuration(false)
@@ -4868,7 +4915,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                     new Path(s"$loc/$rel"), cols, scols)
                   (rel, nb, sb, n)
                 }
-              }.collect().toSeq // manifest-sized: one entry per file
+              }.collect().toSeq) // manifest-sized: one entry per file
           }
         (bounds.collect { case (rel, ss, _, _) if ss.nonEmpty =>
           rel -> ss.map { case (c, mn, mx) => ColStat(c, mn, mx) }
@@ -4901,8 +4948,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         // manifest-sized collect: one row per written FILE. Spark's
         // string min/max order is UTF8String byte order — the manifest's
         // bound order, so truncation applies directly.
-        val rows = written.groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*).collect()
+        val rows = jobPhase("stats")(written.groupBy(input_file_name().as("__f"))
+          .agg(aggs.head, aggs.tail: _*).collect())
         val strOff = 1 + 2 * statCols.size
         val pairs = rows.flatMap { r =>
           val p = r.getString(0)
@@ -4948,8 +4995,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
           org.apache.spark.sql.Encoders.STRING)
         val written = spark.read.format(meta.format).load(dataDir.toString)
         val aggs = setCols.map(c => capSet(col(c).cast("string")))
-        val rows = written.groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*).collect()
+        val rows = jobPhase("stats")(written.groupBy(input_file_name().as("__f"))
+          .agg(aggs.head, aggs.tail: _*).collect())
         rows.flatMap { r =>
           val p = r.getString(0)
           val cut = p.lastIndexOf("/data/c")
@@ -5167,7 +5214,11 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     lazy val borrowed: Set[String] = {
       val out = Set.newBuilder[String]
       val prefix = s"${meta.location}/"
-      val holds = holdsOf(meta)
+      // the LIVE entry's holds: `meta` was read when the commit began,
+      // and a clone that registered its hold while this commit wrote
+      // (then published and verified against a still-retained
+      // manifest) is visible only there
+      val holds = holdsOf(catalog.get(meta.db, meta.name).getOrElse(meta))
       val releasable = Seq.newBuilder[String]
       holds.foreach { loc =>
         val vs2 = manifestVersions(loc)
@@ -5678,11 +5729,34 @@ object MergeSnapshotStore {
     Pmod(new Murmur3Hash(keys), Literal(n))
   }
 
+  /** `pks` IN `keys` as one predicate: `pk IN (…)` for a single key
+   * column, an OR of per-tuple conjunctions for composite keys. Each
+   * literal is cast to the key column's type. A tuple with a NULL part
+   * is left out (it can equal no row), and no tuples at all give
+   * FALSE, so the predicate is never NULL on a row whose key has no
+   * NULL part. The OR is built as a balanced tree: a left-deep chain of
+   * thousands of tuples would overflow the stack of Catalyst's
+   * recursive tree walks. Throws when a value cannot become a literal. */
+  private[graft] def keyIn(pks: Seq[String], types: Seq[DataType],
+                           keys: Seq[Row]): Column = {
+    val lits = keys.filterNot(r => pks.indices.exists(r.isNullAt))
+      .map(r => pks.indices.map(i => lit(r.get(i)).cast(types(i))))
+    def anyOf(cs: Seq[Column]): Column =
+      if (cs.size == 1) cs.head
+      else { val (a, b) = cs.splitAt(cs.size / 2); anyOf(a) || anyOf(b) }
+    if (lits.isEmpty) lit(false)
+    else if (pks.size == 1) col(pks.head).isin(lits.map(_.head): _*)
+    else anyOf(lits.map(ls => pks.zip(ls).map { case (k, l) => col(k) === l }
+      .reduce(_ && _)).toIndexedSeq)
+  }
+
   /** PK types whose SQL equality is exactly equality of the hashed
    * value, so `pk = v` can only match rows in `v`'s bucket. Floating
    * point (NaN, ±0), decimals (the hash reads the value's own scale)
-   * and collated strings fall outside and never bucket-prune. */
-  private[catalog] def bucketPrunable(dt: DataType): Boolean = {
+   * and collated strings fall outside and never bucket-prune. The
+   * driver-side equality of their collected values is SQL equality
+   * too, which the inline CDC merge relies on. */
+  private[graft] def bucketPrunable(dt: DataType): Boolean = {
     import org.apache.spark.sql.types.{BooleanType, TimestampNTZType}
     dt match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType |

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType, TimestampType}
@@ -78,8 +79,51 @@ object GgLogsToParquet {
   def run(spark: SparkSession, store: SnapshotStore, rawPath: String,
           db: String, table: String, schema: Option[StructType] = None): Unit = {
     val landed = ingest(readRaw(spark, rawPath, schema))
-    store.appendPartitioned(db, table, landed)
     val meta = store.catalog(db, table)
-    store.catalog.register(meta.copy(schema = Some(landed.schema)))
+    val fresh = holdsNoData(spark, meta.location)
+    store.appendPartitioned(db, table, landed)
+    store.catalog.register(meta.copy(schema = landedSchema(meta.schema, landed.schema, fresh)))
+  }
+
+  /** The schema to register after one more append to a landing table,
+   * such that it covers every file the table holds (readers scan with
+   * it): the append's own schema when the table held no data before;
+   * otherwise the field-by-name union (nested image structs included)
+   * of what was registered and what this append wrote — an insert-only
+   * batch must not hide an earlier batch's `before` images. An unknown
+   * prior schema, or a type conflict between the two, yields `None`:
+   * readers then infer the schema from the files. */
+  def landedSchema(prior: Option[StructType], landed: StructType,
+                   fresh: Boolean): Option[StructType] =
+    if (fresh) Some(landed) else prior.flatMap(unionSchema(_, landed))
+
+  /** True when `location` does not exist or holds only hidden entries
+   * (`_`/`.`-prefixed markers), i.e. no landed data. */
+  def holdsNoData(spark: SparkSession, location: String): Boolean = {
+    val p = new Path(location)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    !fs.exists(p) || fs.listStatus(p).forall { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+  }
+
+  private def unionSchema(a: StructType, b: StructType): Option[StructType] = {
+    val bByName = b.fields.map(f => f.name.toLowerCase -> f).toMap
+    val merged = a.fields.toSeq.map { fa =>
+      bByName.get(fa.name.toLowerCase) match {
+        case None => Some(fa.copy(nullable = true))
+        case Some(fb) => ((fa.dataType, fb.dataType) match {
+          case (sa: StructType, sb: StructType) => unionSchema(sa, sb)
+          case (ta, tb) if ta == tb => Some(ta)
+          case _ => None
+        }).map(dt => fa.copy(dataType = dt, nullable = fa.nullable || fb.nullable))
+      }
+    }
+    val aNames = a.fieldNames.map(_.toLowerCase).toSet
+    val added = b.fields.toSeq.filterNot(f => aNames(f.name.toLowerCase))
+      .map(f => Some(f.copy(nullable = true)))
+    val all = merged ++ added
+    if (all.forall(_.isDefined)) Some(StructType(all.map(_.get))) else None
   }
 }

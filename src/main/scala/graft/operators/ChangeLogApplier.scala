@@ -26,10 +26,14 @@ import graft.model.CdcModel._
  *
  *  - `mapEvents` is pure column expressions (whole-stage codegen, column
  *    pruning into the parquet scan of the event log).
- *  - `applyLastWins` is the fast path for the reference's shipped semantics
- *    (chain check disabled at :384 makes the fold last-event-wins): one
- *    window shuffle on the PK + one anti-join whose build side is the tiny
- *    distinct-key set (AQE broadcasts it). No driver data movement.
+ *  - Last-wins is the fast path for the reference's shipped semantics
+ *    (chain check disabled at :384 makes the fold last-event-wins). A
+ *    batch of up to `MergeSnapshotStore.MaxInlineKeys` keys is decided
+ *    once on the driver ([[mergeLastWins]]): one window job picks each
+ *    key's last event, one key-filtered read of the target guards stale
+ *    events, and the commit rewrites the touched buckets from a local
+ *    relation of upserts. Larger batches run `applyLastWins` as a
+ *    distributed plan.
  *  - `applyFold` is the exact sequential-fold operator for chain-verified
  *    mode (reference dev/_read_delta_table.py:343-369: apply only when
  *    `previous_hash == admin_hash`, D-then-I resurrects as U): a single
@@ -39,8 +43,8 @@ import graft.model.CdcModel._
  *    AQE (keys are unique in the target side).
  *
  * Replaced plan shape: the reference's 4 joins + window + global sort +
- * driver collect collapse to one shuffle (fold) or one window + anti-join
- * (fast path).
+ * driver collect collapse to one shuffle (fold) or one window collect
+ * plus a key-filtered read (fast path).
  */
 object ChangeLogApplier {
 
@@ -123,23 +127,13 @@ object ChangeLogApplier {
    * src/apply_change_log_to_delta.py:141-150). */
   def applyLastWins(target: DataFrame, mapped: DataFrame, pks: Seq[String]): DataFrame = {
     require(pks.nonEmpty, "applyLastWins needs at least one key column")
-    val w = Window.partitionBy(pks.map(col): _*).orderBy(col(AdminGgPos).desc)
-    val latest = mapped
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val latest = lastPerKey(mapped, pks)
     // STALE-EVENT GUARD: under micro-batched (streaming) application a
     // later batch can carry an OLDER pos than what the target already
     // absorbed (file-listing order is not log order); such events must
     // not regress the row. Zero-padded pos strings give a total order.
     // A target without the admin pos column has no baseline — no guard
     // (same tolerance as the fold path).
-    // Semi-filter the target FIRST: the big side never shuffles — the
-    // semi join's build side is the tiny changed-key set (AQE broadcasts
-    // it), and the surviving (pk, pos) frame is at most one row per
-    // changed key, so the subsequent left join is small x small. Joining
-    // `latest` straight against target.select(pk, pos) would instead
-    // shuffle the full table's 2-column projection every micro-batch.
     val guarded =
       if (!target.columns.exists(_.equalsIgnoreCase(AdminGgPos))) latest
       else {
@@ -155,11 +149,121 @@ object ChangeLogApplier {
     val upserts = guarded
       .filter(col(EventType) =!= "D")
       .select(target.columns.map(col).toSeq: _*)
-    // anti-join build side = distinct surviving event keys (small vs the
-    // target) -> AQE broadcasts it; the big target side does not shuffle.
+    // Plan cost: nothing here is shared. `guarded` reads `latest` twice
+    // (the semi join's key side and the left join) and is itself read
+    // twice (the anti join's key side and the upserts), so the plan
+    // scans and shuffles the batch's events four times. The anti join
+    // plans as a sort-merge join, so the whole target is shuffled before
+    // AQE can learn that the key side is small. Batches that fit the
+    // driver therefore take [[mergeLastWins]]'s decided path; this plan
+    // stays as the distributed fallback and as the reference the decided
+    // path is tested against.
     target.join(guarded.select(pks.map(col): _*), pks, "left_anti")
       .unionByName(upserts)
   }
+
+  /** The last event per key in `pos` order — the change set both
+   * last-wins paths decide by. */
+  private def lastPerKey(mapped: DataFrame, pks: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(pks.map(col): _*).orderBy(col(AdminGgPos).desc)
+    mapped
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+  }
+
+  /**
+   * Last-wins merge of one table's mapped events into a
+   * [[MergeSnapshotStore]] table, the same result as
+   * `mergeScoped(keys)(applyLastWins(_, mapped, pks))` with the change
+   * set decided once on the driver:
+   *
+   *  1. decide — one window job collects each key's last event, up to
+   *     `MergeSnapshotStore.MaxInlineKeys` keys;
+   *  2. touched buckets — hashed on the driver from those keys (a local
+   *     key frame), no job;
+   *  3. guard — one `pk IN (keys)` read of `(pk, admin_gg_pos)` from the
+   *     rows the commit itself loaded (never a separate head read, so
+   *     the commit's optimistic rebase/refuse adjudication covers it)
+   *     drops events at or below the position the row already holds;
+   *  4. rewrite — the touched buckets' rows minus the surviving keys,
+   *     plus the surviving upserts as a local relation.
+   *
+   * A batch with more keys, or a key type whose collected values do not
+   * compare like SQL values (floating point, decimal, binary…), runs
+   * `applyLastWins` inside the commit instead.
+   */
+  private[graft] def mergeLastWins(ms: MergeSnapshotStore, db: String, tbl: String,
+                                   mapped: DataFrame, pks: Seq[String]): Seq[Int] = {
+    val schema = mapped.schema
+    val inlineKeys =
+      pks.forall(k => MergeSnapshotStore.bucketPrunable(fieldOf(schema, k).dataType))
+    val decided =
+      if (!inlineKeys) None
+      else {
+        val rows = ms.jobLabel(s"store: merge $db.$tbl")(ms.jobPhase("decide")(
+          lastPerKey(mapped, pks).limit(MergeSnapshotStore.MaxInlineKeys + 1).collect()))
+        if (rows.length > MergeSnapshotStore.MaxInlineKeys) None else Some(rows)
+      }
+    decided match {
+      case None =>
+        ms.mergeScoped(db, tbl, mapped.select(pks.map(col): _*)) { old =>
+          applyLastWins(old, mapped, pks)
+        }
+      case Some(rows) =>
+        val keys = mapped.sparkSession
+          .createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .select(pks.map(col): _*)
+        ms.mergeScoped(db, tbl, keys) { old =>
+          ms.jobPhase("guard")(applyDecided(old, rows.toSeq, schema, pks))
+        }
+    }
+  }
+
+  /** Steps 3 and 4 of [[mergeLastWins]]: `decided` holds one event per
+   * key (rows of `schema`, the mapped-event schema). */
+  private def applyDecided(old: DataFrame, decided: Seq[Row], schema: StructType,
+                           pks: Seq[String]): DataFrame = {
+    def at(name: String): Int = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+    val keyAt = pks.map(at)
+    def keyOf(r: Row): Row = Row.fromSeq(keyAt.map(r.get))
+    val keyTypes = pks.map(k => fieldOf(old.schema, k).dataType)
+    val posAt = at(AdminGgPos)
+    val posType = schema(posAt).dataType
+    // same guard as applyLastWins: an event survives when the row has no
+    // applied position (absent row, NULL pos, NULL key part, or a target
+    // without the column) or its position is strictly greater
+    val guarded = old.columns.find(_.equalsIgnoreCase(AdminGgPos)) match {
+      case None => decided
+      case Some(pos) =>
+        val applied = old.filter(MergeSnapshotStore.keyIn(pks, keyTypes, decided.map(keyOf)))
+          .select(pks.map(col) :+ col(pos): _*).collect()
+          .groupBy(r => Row.fromSeq(pks.indices.map(r.get)))
+          .map { case (k, rs) => k -> rs.map(_.get(pks.size)) }
+        def newer(e: Any, a: Any): Boolean = {
+          import org.apache.spark.sql.catalyst.expressions.{GreaterThan, Literal}
+          GreaterThan(Literal.create(e, posType), Literal.create(a, posType)).eval() == true
+        }
+        decided.filter(r => applied.get(keyOf(r)).forall(_.forall(a =>
+          a == null || newer(r.get(posAt), a))))
+    }
+    val etAt = at(EventType)
+    val outAt = old.columns.toSeq.map(at)
+    val upserts = guarded
+      .filter(r => !r.isNullAt(etAt) && r.get(etAt) != "D")
+      .map(r => Row.fromSeq(outAt.map(r.get)))
+    val upSchema = StructType(old.columns.toSeq.zip(outAt).map { case (c, i) =>
+      schema(i).copy(name = c) })
+    val changed = MergeSnapshotStore.keyIn(pks, keyTypes, guarded.map(keyOf))
+    old.filter(!coalesce(changed, lit(false)))
+      .unionByName(old.sparkSession.createDataFrame(
+        java.util.Arrays.asList(upserts: _*), upSchema))
+  }
+
+  private def fieldOf(schema: StructType, name: String): StructField =
+    schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no column $name in ${schema.fieldNames.mkString(", ")}"))
 
   /**
    * Exact sequential CDC fold as a typed co-group (one shuffle on the PK).
@@ -294,7 +398,9 @@ object ChangeLogApplier {
    * the jobs in parallel) — the reference serializes them in a Python for
    * loop (:551). Returns the processed target-table names (the reference
    * fires its Kinesis-notify stub per table here, :659-660 — kept as a
-   * caller-supplied hook).
+   * caller-supplied hook). On a [[MergeSnapshotStore]] a last-wins table
+   * commits through [[mergeLastWins]] and a chain-verified one through
+   * `applyFold` inside `mergeScoped`.
    */
   def run(spark: SparkSession, store: SnapshotStore, db: String,
           eventLog: DataFrame, chainVerified: Boolean = false,
@@ -310,8 +416,11 @@ object ChangeLogApplier {
     val cached =
       if (prunable) eventLog
       else eventLog.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tables = cached.select(col("table")).distinct()
-      .as[String](Encoders.STRING).collect().toSeq // loop control only
+    // loop control only; a bare table-partitioned landing read already
+    // lists its `table` values, so only other frames pay a distinct job
+    val tables = partitionTables(eventLog).getOrElse(
+      cached.select(col("table")).distinct()
+        .as[String](Encoders.STRING).collect().toSeq)
     // two source names can resolve to ONE target (A.T and B.T both ->
     // t); group them so each target snapshot has exactly one concurrent
     // writer — parallel futures racing on one version directory would
@@ -331,11 +440,12 @@ object ChangeLogApplier {
               // buckets the batch touches; untouched buckets carry into
               // the new version by manifest reference. Commit cost is
               // proportional to the change set, not the table.
-              val mapped = mapEvents(events, ms.read(db, tbl).schema)
-              ms.mergeScoped(db, tbl, mapped.select(pk.map(col): _*)) { old =>
-                if (chainVerified) applyFold(old, mapped, pk, chainVerified = true)
-                else applyLastWins(old, mapped, pk)
-              }
+              val mapped = mapEvents(events, ms.committedSchema(db, tbl))
+              if (chainVerified)
+                ms.mergeScoped(db, tbl, mapped.select(pk.map(col): _*)) { old =>
+                  applyFold(old, mapped, pk, chainVerified = true)
+                }
+              else mergeLastWins(ms, db, tbl, mapped, pk)
             case _ =>
               val target = store.read(db, tbl)
               store.overwrite(db, tbl, applyTable(target, events, pk, chainVerified))
@@ -348,6 +458,29 @@ object ChangeLogApplier {
     } finally {
       pool.shutdown()
       if (!prunable) cached.unpersist(blocking = false)
+    }
+  }
+
+  /** The `table` values of a frame that is exactly a file relation
+   * partitioned by a string `table` column, read from the relation's
+   * partition listing (no job); `None` for any other frame. */
+  private[graft] def partitionTables(df: DataFrame): Option[Seq[String]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case index: PartitioningAwareFileIndex =>
+            val spec = index.partitionSpec()
+            val i = spec.partitionColumns.fieldNames.indexWhere(_.equalsIgnoreCase("table"))
+            if (i < 0 || spec.partitionColumns(i).dataType != StringType) None
+            else Some(spec.partitions.map { p =>
+              if (p.values.isNullAt(i)) null else p.values.getUTF8String(i).toString
+            }.distinct)
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
     }
   }
 

@@ -172,7 +172,7 @@ object PrefixScan {
     require(shards.length <= 4096,
       s"${shards.length} shards — raise the budget or export in directory-range batches")
     val n = shards.length
-    val toks = graft.catalog.Layout.bijectiveTokens(spark, n)
+    val toks = graft.catalog.Layout.bijectiveTokens(n)
     val route = map_from_arrays(
       array(shards.map(lit(_)): _*),
       array(shards.indices.map(i => lit(toks(i))): _*))

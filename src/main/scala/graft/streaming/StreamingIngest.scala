@@ -92,8 +92,10 @@ object StreamingIngest {
         val fs = dir.getFileSystem(
           batch.sparkSession.sparkContext.hadoopConfiguration)
         if (batchId > lastLandedBatch(fs, dir)) {
+          val fresh = GgLogsToParquet.holdsNoData(batch.sparkSession, meta.location)
           store.appendPartitioned(db, table, batch)
-          store.catalog.register(meta.copy(schema = Some(batch.schema)))
+          store.catalog.register(meta.copy(schema =
+            GgLogsToParquet.landedSchema(meta.schema, batch.schema, fresh)))
           writeLandedMarker(fs, dir, batchId)
         }
         ()

@@ -1,0 +1,190 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.util.Random
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
+import graft.ingest.GgLogsToParquet
+import graft.model.CdcModel
+import graft.operators.ChangeLogApplier
+
+/**
+ * What one CDC batch costs and leaves behind on the merge store: the
+ * Spark jobs of a trickle-shaped `ChangeLogApplier.run` (two targets, a
+ * landing table partitioned by `table`), the one-file-per-bucket layout
+ * and write-task count of scoped merges and overwrites, and a batch
+ * re-run after a crash between its two tables' commits.
+ */
+class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
+  private val Db = "jb"
+  private val payload = StructType(Seq(
+    StructField("ID", IntegerType), StructField("NAME", StringType),
+    StructField("BID", IntegerType), StructField("OID", IntegerType),
+    StructField("STATUS", StringType)))
+  private val evSchema = StructType(Seq(
+    StructField("table", StringType), StructField("op_type", StringType),
+    StructField("op_ts", StringType), StructField("pos", StringType),
+    StructField("before", payload), StructField("after", payload)))
+  private val offSchema = StructType(Seq(
+    StructField("id", IntegerType), StructField("name", StringType)) ++
+    CdcModel.adminFields)
+  private val bookSchema = StructType(Seq(
+    StructField("bid", IntegerType), StructField("oid", IntegerType),
+    StructField("status", StringType)) ++ CdcModel.adminFields)
+
+  /** A store with both targets bootstrapped (400 offenders, 300 bookings). */
+  private def mkStore(nBuckets: Int = 32): (MergeSnapshotStore, String) = {
+    val dir = Files.createTempDirectory("graft-jobbudget").toString
+    val cat = new InMemoryCatalog
+    val store = new MergeSnapshotStore(spark, cat, nBuckets = nBuckets)
+    cat.register(TableMeta(Db, "offenders", s"$dir/offenders", primaryKey = Seq("id")))
+    cat.register(TableMeta(Db, "bookings", s"$dir/bookings", primaryKey = Seq("bid")))
+    def rows(n: Int)(f: Int => Row) =
+      spark.sparkContext.parallelize((1 to n).map(f), 2)
+    val pos0 = "0" * 20
+    store.overwrite(Db, "offenders", spark.createDataFrame(rows(400)(i =>
+      Row(i, s"o$i", 0, pos0, null, null)), offSchema))
+    store.overwrite(Db, "bookings", spark.createDataFrame(rows(300)(i =>
+      Row(i, i % 50, "open", 0, pos0, null, null)), bookSchema))
+    (store, dir)
+  }
+
+  /** Lands one seeded batch (mostly U, some I and D, repeated keys) of
+   * `n` events per table as raw GG JSON, ingests it into a fresh landing
+   * table, and returns the landing read the applier takes. */
+  private def landBatch(store: MergeSnapshotStore, dir: String, batch: Int,
+                        n: Int = 60): DataFrame = {
+    val rnd = new Random(batch)
+    var pos = batch * 10000
+    def ev(table: String, op: String, img: Row): Row = {
+      pos += 1
+      Row(table, op, "2022-09-26 14:57:13.817732", f"$pos%020d",
+        if (op == "I") null else img, if (op == "D") null else img)
+    }
+    def op(): String = rnd.nextInt(20) match {
+      case 0 => "I"
+      case 1 => "D"
+      case _ => "U"
+    }
+    val evs = (1 to n).map { _ =>
+      val id = 1 + rnd.nextInt(420)
+      ev("OMS_OWNER.OFFENDERS", op(), Row(id, s"n$batch-$pos", null, null, null))
+    } ++ (1 to n).map { _ =>
+      val bid = 1 + rnd.nextInt(320)
+      ev("OMS_OWNER.BOOKINGS", op(), Row(null, null, bid, bid % 50, s"s$pos"))
+    }
+    val raw = s"$dir/raw/b$batch"
+    spark.createDataFrame(spark.sparkContext.parallelize(evs, 2), evSchema)
+      .write.json(raw)
+    store.catalog.register(TableMeta(Db, "raw_events", s"$dir/landing/b$batch",
+      partitionBy = GgLogsToParquet.PartitionBy))
+    GgLogsToParquet.run(spark, store, raw, Db, "raw_events")
+    store.readFlat(Db, "raw_events")
+  }
+
+  private def canon(df: DataFrame): Seq[String] =
+    df.drop(CdcModel.AdminEventTs).collect().map(_.toString).toSeq.sorted
+
+  /** Data files under each bucket dir of the latest version. */
+  private def filesPerBucket(store: MergeSnapshotStore, t: String): Map[Int, Int] = {
+    val loc = store.catalog(Db, t).location
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    store.manifestEntries(Db, t, store.latestVersion(Db, t)).map { case (b, rel) =>
+      b -> fs.listStatus(new Path(s"$loc/$rel"))
+        .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    }
+  }
+
+  test("a trickle batch over two targets runs at most 10 jobs, each a labelled store phase") {
+    val (store, dir) = mkStore()
+    // the first batch warms the session (caches, codegen); the second is measured
+    ChangeLogApplier.run(spark, store, Db, landBatch(store, dir, 1))
+    val landing = landBatch(store, dir, 2)
+    val (applied, jobs) = JobRecorder.during(spark) {
+      ChangeLogApplier.run(spark, store, Db, store.readFlat(Db, "raw_events"))
+    }
+    assert(applied.toSet == Set("offenders", "bookings"))
+    val descs = jobs.map(_.desc)
+    assert(jobs.size <= 10, s"${jobs.size} jobs: ${descs.mkString("; ")}")
+    // the table list comes from the partition listing and readFlat from
+    // the registered schema: neither runs an (unlabelled) job
+    assert(descs.forall(_.startsWith("store: merge ")),
+      s"unlabelled jobs: ${descs.mkString("; ")}")
+    // every job names its phase after the store head
+    val phases = descs.map(_.split(' ').drop(3).mkString(" "))
+    assert(phases.forall(Set("decide", "guard", "write", "stats")),
+      s"phases: ${phases.mkString("; ")}")
+    // the decided key frame is local: no touched-bucket scan job
+    assert(!phases.contains("scan"))
+    // and the batch committed what a reference apply commits
+    Seq("offenders" -> "id", "bookings" -> "bid").foreach { case (t, pk) =>
+      val before = store.readVersion(store.catalog(Db, t), store.latestVersion(Db, t) - 1)
+      val src = if (t == "offenders") "OMS_OWNER.OFFENDERS" else "OMS_OWNER.BOOKINGS"
+      val want = ChangeLogApplier.applyTable(before,
+        landing.filter(col("table") === src), pk)
+      assert(canon(store.read(Db, t)) == canon(want), t)
+    }
+  }
+
+  test("scoped merges and overwrites write one file per bucket from min(nBuckets, cores) tasks") {
+    val cores = spark.sparkContext.defaultParallelism
+    Seq(32, 2).foreach { nBuckets =>
+      val tasks = math.min(nBuckets, cores)
+      val (store, dir) = mkStore(nBuckets)
+      assert(filesPerBucket(store, "offenders").values.forall(_ == 1))
+      val (_, jobs) = JobRecorder.during(spark) {
+        ChangeLogApplier.run(spark, store, Db, landBatch(store, dir, 3))
+      }
+      Seq("offenders", "bookings").foreach { t =>
+        val counts = filesPerBucket(store, t)
+        assert(counts.size == nBuckets && counts.values.forall(_ == 1),
+          s"$t with $nBuckets buckets: $counts")
+        // the write job is the last one labelled write; its final stage
+        // is the write stage (earlier ones are AQE shuffle-map jobs)
+        val writes = jobs.filter(_.desc == s"store: merge $Db.$t write")
+        assert(writes.nonEmpty && writes.last.finalTasks == tasks,
+          s"$t write jobs: $writes")
+      }
+      val (_, ow) = JobRecorder.during(spark) {
+        store.overwrite(Db, "offenders", store.read(Db, "offenders"))
+      }
+      val counts = filesPerBucket(store, "offenders")
+      assert(counts.size == nBuckets && counts.values.forall(_ == 1), counts)
+      val writes = ow.filter(_.desc == s"store: overwrite $Db.offenders write")
+      assert(writes.nonEmpty && writes.last.finalTasks == tasks, ow)
+    }
+  }
+
+  test("a batch that fails after its first table committed re-runs to the clean result") {
+    val (store, dir) = mkStore()
+    val (clean, _) = mkStore()
+    val landing = landBatch(store, dir, 4)
+    ChangeLogApplier.run(spark, clean, Db, landing, parallelism = 1)
+    val v0 = Seq("offenders", "bookings").map(t => store.latestVersion(Db, t))
+    // the first table's merge publishes; the second one's crashes before
+    // its publish (parallelism 1 runs the tables one after the other)
+    store.beforePublish = () => {
+      store.beforePublish = () => throw new IllegalStateException("crash before publish")
+    }
+    val err = intercept[IllegalStateException] {
+      ChangeLogApplier.run(spark, store, Db, landing, parallelism = 1)
+    }
+    assert(err.getMessage.contains("crash before publish"))
+    val moved = Seq("offenders", "bookings").zip(v0).count { case (t, v) =>
+      store.latestVersion(Db, t) > v }
+    assert(moved == 1, "exactly one table committed before the crash")
+    // the whole batch again: the committed table's events are all at or
+    // below the positions it now holds, so the stale guard skips them
+    ChangeLogApplier.run(spark, store, Db, landing, parallelism = 1)
+    Seq("offenders", "bookings").foreach { t =>
+      assert(canon(store.read(Db, t)) == canon(clean.read(Db, t)), t)
+    }
+  }
+}

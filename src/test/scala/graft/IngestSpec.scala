@@ -72,6 +72,39 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
     assert(store.readFlat("idb", "landing").count() == inserts.count())
   }
 
+  test("landing appends register the union of their schemas; readFlat reads with it") {
+    import java.nio.file.Files
+    import graft.catalog.{InMemoryCatalog, SnapshotStore, TableMeta}
+    val cat = new InMemoryCatalog
+    val store = new SnapshotStore(spark, cat)
+    val dir = Files.createTempDirectory("graft-landing-union").toString
+    cat.register(TableMeta("idb", "union", s"$dir/landing", partitionBy = PartitionBy))
+    def land(name: String, json: Seq[String]): Unit = {
+      Files.createDirectories(java.nio.file.Paths.get(s"$dir/$name"))
+      Files.write(java.nio.file.Paths.get(s"$dir/$name/part.json"),
+        json.mkString("\n").getBytes("UTF-8"))
+      graft.ingest.GgLogsToParquet.run(spark, store, s"$dir/$name", "idb", "union")
+    }
+    val ts = "2022-09-26 14:57:13.817732"
+    // a delete batch (before images only), then an insert-only batch
+    land("d", Seq(s"""{"table":"S.T","op_type":"D","op_ts":"$ts","pos":"1","before":{"ID":1}}"""))
+    land("i", Seq(s"""{"table":"S.T","op_type":"I","op_ts":"$ts","pos":"2","after":{"ID":2,"NAME":"n"}}"""))
+    val registered = cat("idb", "union").schema.get
+    assert(Set("before", "after", "before_hash", "after_hash")
+      .subsetOf(registered.fieldNames.toSet), registered)
+    val back = store.readFlat("idb", "union")
+    assert(back.schema.fieldNames.toSet == registered.fieldNames.toSet)
+    assert(back.filter(col("op_type") === "D").select("before.ID").head().getLong(0) == 1L)
+    assert(back.filter(col("op_type") === "I").select("after.NAME").head().getString(0) == "n")
+    // a batch whose image field changes type cannot be unioned: the
+    // registration drops the schema and readers infer it again
+    land("x", Seq(s"""{"table":"S.T","op_type":"I","op_ts":"$ts","pos":"3","after":{"ID":"x"}}"""))
+    assert(cat("idb", "union").schema.isEmpty)
+    // and an unknown schema stays unknown over data already landed
+    land("y", Seq(s"""{"table":"S.T","op_type":"I","op_ts":"$ts","pos":"4","after":{"ID":4}}"""))
+    assert(cat("idb", "union").schema.isEmpty)
+  }
+
   test("table-partitioned landing: a per-table filter scans only that table's files") {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.FileSourceScanExec
