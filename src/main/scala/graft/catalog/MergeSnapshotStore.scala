@@ -6,7 +6,7 @@ import scala.collection.immutable.SortedMap
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{array, coalesce, col, concat, countDistinct, element_at, expr, hash, input_file_name, isnan, lit, max, min, pmod, raise_error, struct, to_json, when}
+import org.apache.spark.sql.functions.{array, coalesce, col, concat, countDistinct, element_at, expr, hash, input_file_name, lit, pmod, raise_error, struct, to_json, when}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType, TimestampType}
 
 /**
@@ -544,9 +544,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * planning such a lookup runs no Spark job; other frames pay one
    * bounded distinct collect. A key set too large to inline falls back
    * to a semi-join over a scan of the keys' buckets. A non-empty
-   * `ranges` additionally skips files whose manifest stats miss the
-   * ranges (the [[readRange]] discipline) and applies the exact range
-   * predicate.
+   * `ranges` conjoins [[readRange]]'s exact predicate, which the same
+   * walk judges.
    */
   def pointLookup(db: String, table: String, keys: DataFrame,
                   ranges: Map[String, (Double, Double)] = Map.empty,
@@ -572,7 +571,6 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         typedKeys.distinct().limit(MergeSnapshotStore.MaxInlineKeys + 1)
           .collect().toSeq
     }
-    val keepRanged = rangesMayMatch(m, ranges) _
     val rangePred = if (ranges.isEmpty) None else Some(rangesPredicate(m, ranges))
     val inlined: Option[DataFrame] =
       if (inline.length > MergeSnapshotStore.MaxInlineKeys) None
@@ -584,8 +582,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         // lookup the fallback would have answered
         try {
           val keyPred = MergeSnapshotStore.keyIn(pks, pkTypes, inline)
-          Some(skippingWhere(meta, m, rangePred.fold(keyPred)(keyPred && _),
-            keepRanged))
+          Some(skippingWhere(meta, m, rangePred.fold(keyPred)(keyPred && _)))
         } catch { case scala.util.control.NonFatal(_) => None }
     inlined.getOrElse {
       // bucket ids of the lookup keys (<= nBuckets values)
@@ -595,7 +592,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       // frame cannot land on the driver — a forced broadcast here would
       // collect it anyway. AQE broadcasts when the measured size allows.
       skippingWhere(meta, m, rangePred.getOrElse(lit(true)),
-        rel => m.bucketOf(rel).forall(touched) && keepRanged(rel))
+        rel => m.bucketOf(rel).forall(touched))
         .join(typedKeys, pks, "left_semi")
     }
   }
@@ -640,9 +637,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       // above the delete masking — PK names never rename (refused), so
       // the anti-joins bind identically on either side
       toLogical(applyDeletes(meta, m,
-        spark.read.format(meta.format)
-          .schema(MergeSnapshotStore.physicalSchema(m.schema))
-          .load(paths: _*)), m.schema)
+        spark.read.schema(MergeSnapshotStore.physicalSchema(m.schema))
+          .parquet(paths: _*)), m.schema)
   }
 
   /** The merge-on-read delete view — the read-time half of
@@ -771,15 +767,13 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       .withColumn(MergeSnapshotStore.PosPosCol, col("_metadata.row_index"))
 
   /**
-   * Data skipping over a committed snapshot: scan only the files whose
-   * manifest stats overlap EVERY requested `[lo, hi]` range (inclusive,
-   * double space — the [[graft.catalog.Layout.readPruned]] contract),
-   * then apply the exact predicate, so the result equals a full-scan
+   * Data skipping over a committed snapshot: the exact predicate of
+   * EVERY requested `[lo, hi]` range (inclusive, double space — the
+   * [[graft.catalog.Layout.readPruned]] contract) read through the
+   * skipping walk ([[readWhere]]), so the result equals a full-scan
    * filter while whole files are dropped before any parquet footer is
-   * read. A file lacking stats for a requested column is kept
-   * (conservative — all-NULL columns, pre-stats manifests); a range on
-   * a column the layout does not correlate with prunes little but still
-   * filters exactly.
+   * read. A range on a column the layout does not correlate with
+   * prunes little but still filters exactly.
    *
    * What actually prunes at 100 TB: PK-hash bucketing randomizes most
    * columns across buckets, so on a PK table this prunes when the
@@ -798,8 +792,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     require(ranges.nonEmpty, "readRange needs at least one column range")
     val meta = catalog0(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    loadFiles(meta, m, listDataFiles(meta, m, None).filter(rangesMayMatch(m, ranges)),
-      rangesPredicate(m, ranges))
+    skippingWhere(meta, m, rangesPredicate(m, ranges))
   }
 
   /** The manifest version a read should resolve: the caller's explicit
@@ -852,47 +845,46 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                             only: Option[Set[Int]]): Seq[String] =
     listDataFileStatuses(meta, m, only).map(_._1)
 
-  /** Does file `rel`'s manifest stats overlap EVERY `[lo, hi]` of
-   * `ranges` (double space)? A file or column without stats is kept. */
-  private def rangesMayMatch(m: Manifest, ranges: Map[String, (Double, Double)])
-                            (rel: String): Boolean =
-    m.stats.get(rel) match {
-      case None => true // no stats: conservative keep
-      case Some(ss) => ranges.forall { case (c, (lo, hi)) =>
-        val key = MergeSnapshotStore.statKeyOf(m.schema, c)
-        ss.find(_.column == key).forall(s => s.mx >= lo && s.mn <= hi)
-      }
-    }
-
-  /** The exact predicate of `ranges` (non-empty), so callers get exact
-   * results, not the pruning superset. */
+  /** The exact predicate of `ranges` (non-empty). The epoch-based
+   * double bounds re-type into the column's own literal space (a
+   * date/timestamp literal keeps the comparison PUSHED into the parquet
+   * scan, where a promoted `unix_date(col) >= x` function-of-column form
+   * would not); dates are integral, so the bound tightens to
+   * [ceil(lo), floor(hi)], and timestamps likewise in micros. A numeric
+   * column compares with the double itself: the analyzer wraps a
+   * non-double column in `cast(c AS double)`, which the walk judges
+   * like `c`. An infinite bound is an open side on every column type,
+   * and a range whose both sides are open still refuses NULL. A NaN
+   * bound is refused: Spark orders NaN above every value, so it names
+   * no range. */
   private def rangesPredicate(m: Manifest,
                               ranges: Map[String, (Double, Double)]): Column =
-    // the exact predicate re-types the epoch-based double bounds into
-    // the column's own literal space (a date/timestamp literal keeps
-    // the comparison PUSHED into the parquet scan, where a promoted
-    // `unix_date(col) >= x` function-of-column form would not); dates
-    // are integral, so the bound tightens to [ceil(lo), floor(hi)]
     ranges.map { case (c, (lo, hi)) =>
-      m.schema(c).dataType match {
-        case DateType =>
-          val (dlo, dhi) = (math.ceil(lo).toLong, math.floor(hi).toLong)
-          col(c) >= lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(dlo))) &&
-            col(c) <= lit(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(dhi)))
-        case TimestampType =>
-          def ts(micros: Long) = java.time.Instant.ofEpochSecond(
-            Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
-          col(c) >= lit(ts(math.ceil(lo).toLong)) &&
-            col(c) <= lit(ts(math.floor(hi).toLong))
-        case _ => col(c) >= lit(lo) && col(c) <= lit(hi)
-      }
+      require(!lo.isNaN && !hi.isNaN,
+        s"range [$lo, $hi] on '$c' has a NaN bound — NaN orders above " +
+          "every value and names no range")
+      def bound(b: Double, round: Double => Double): Option[Column] =
+        m.schema(c).dataType match {
+          case DateType | TimestampType if b.isInfinite => None
+          case DateType => Some(lit(java.sql.Date.valueOf(
+            java.time.LocalDate.ofEpochDay(round(b).toLong))))
+          case TimestampType =>
+            val micros = round(b).toLong
+            Some(lit(java.time.Instant.ofEpochSecond(
+              Math.floorDiv(micros, 1000000L),
+              Math.floorMod(micros, 1000000L) * 1000L)))
+          case _ => Some(lit(b))
+        }
+      (bound(lo, math.ceil).map(col(c) >= _) ++
+        bound(hi, math.floor).map(col(c) <= _))
+        .reduceOption(_ && _).getOrElse(col(c).isNotNull)
     }.reduce(_ && _)
 
-  /** The pruned-file read funnel. `tagCol` (the DML find phase) adds
-   * input_file_name() ON THE RAW SCAN, before [[applyDeletes]] joins a
-   * second source in — the expression is ill-defined (and refused by
-   * Spark) over the joined plan. One funnel, so the masking layers can
-   * never diverge between the find phase and every other read. */
+  /** The DML paths' pruned-file read (find, fold, file-scoped
+   * commits); every other pruned read is [[skippingWhere]]. `tagCol`
+   * (the DML find phase) adds input_file_name() ON THE RAW SCAN, before
+   * [[applyDeletes]] joins a second source in — the expression is
+   * ill-defined (and refused by Spark) over the joined plan. */
   private def loadFiles(meta: TableMeta, m: Manifest, keep: Seq[String],
                         pred: Column,
                         tagCol: Option[String] = None): DataFrame =
@@ -903,9 +895,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         (df, c) => df.withColumn(c, lit("")))
         .filter(pred)
     else {
-      val raw = spark.read.format(meta.format)
-        .schema(MergeSnapshotStore.physicalSchema(m.schema))
-        .load(keep.map(rel => refPath(meta.location, rel)): _*)
+      val raw = spark.read.schema(MergeSnapshotStore.physicalSchema(m.schema))
+        .parquet(keep.map(rel => refPath(meta.location, rel)): _*)
       toLogical(applyDeletes(meta, m,
         tagCol.foldLeft(raw)((df, c) => df.withColumn(c, input_file_name()))),
         m.schema, extras = tagCol.toSeq)
@@ -913,45 +904,44 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     }
 
   /**
-   * Data skipping on STRING columns: scan only the files whose
-   * truncated lexicographic bounds ([[StrStat]], the Iceberg
-   * `truncate(16)` pattern) admit a value in every requested inclusive
-   * `[lo, hi]` range, then apply the exact predicate. Bounds and
-   * predicate agree on UTF-8 byte order (Spark's own string order), and
-   * truncation only ever WIDENS a file's recorded range, so pruning is
-   * a superset and the result equals the full-scan filter. What prunes
-   * at 100 TB: string-keyed layouts with locality — a URL table
-   * committed clustered by canonical URL, lexicographic id ranges —
-   * exactly the numeric [[readRange]] story; a file lacking stats for a
-   * requested column is conservatively kept.
+   * Data skipping on STRING columns: the exact `[lo, hi]` predicate of
+   * every requested range (inclusive, UTF-8 byte order — Spark's own
+   * string order) read through the skipping walk, which judges it
+   * against each file's truncated lexicographic bounds ([[StrStat]],
+   * the Iceberg `truncate(16)` pattern). What prunes at 100 TB:
+   * string-keyed layouts with locality — a URL table committed
+   * clustered by canonical URL, lexicographic id ranges — exactly the
+   * numeric [[readRange]] story. A null bound is refused: no row
+   * compares TRUE against NULL.
    */
   def readStringRange(db: String, table: String,
                       ranges: Map[String, (String, String)],
                       version: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readStringRange needs at least one column range")
+    ranges.foreach { case (c, (lo, hi)) =>
+      require(lo != null && hi != null,
+        s"readStringRange on '$c' has a null bound — no row compares " +
+          "TRUE against NULL; pass both bounds")
+    }
     val meta = catalog0(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    val pred = ranges.map { case (c, (lo, hi)) =>
+    skippingWhere(meta, m, ranges.map { case (c, (lo, hi)) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
-    }.reduce(_ && _)
-    loadStringRanged(meta, m,
-      ranges.map { case (c, (lo, hi)) => c -> ((lo, Option(hi))) }, pred)
+    }.reduce(_ && _))
   }
 
   /**
-   * Equality / IN read with VALUE-SET file skipping: plans only the
-   * files whose recorded set ([[SetStat]], for columns opted in via
-   * [[MergeSnapshotStore.SetStatsProp]]) intersects EVERY probe list,
-   * then applies the exact `isin` predicate on top. Probes canonicalize
-   * to Spark's cast-to-string form — the form the sets were measured
-   * in — so a match decision is never representation-sensitive. A file
-   * without a set line for a probed column (not opted in, over the
-   * distinct cap, or written before the opt-in) is conservatively kept;
-   * an empty recorded set (all-null file) prunes. What prunes at
-   * 100 TB: the enum-dimension point read — segment / status /
-   * language / source-tagged corpora where a commit's files each carry
-   * a handful of classes; min/max bounds cannot separate interleaved
-   * class VALUES, the exact set can.
+   * Equality / IN read: the exact `isin` predicate read through the
+   * skipping walk, whose VALUE-SET arm ([[SetStat]], for columns opted
+   * in via [[MergeSnapshotStore.SetStatsProp]]) plans only the files
+   * whose recorded set intersects EVERY probe list. Probes are typed to
+   * the column first, so coercion never wraps the column in a cast the
+   * walk cannot judge; an integral probe outside a narrower column's
+   * range matches nothing and is dropped. What prunes at 100 TB: the
+   * enum-dimension point read — segment / status / language /
+   * source-tagged corpora where a commit's files each carry a handful
+   * of classes; min/max bounds cannot separate interleaved class
+   * VALUES, the exact set can.
    */
   def readEquals(db: String, table: String, probes: Map[String, Seq[Any]],
                  version: Option[Int] = None): DataFrame = {
@@ -960,12 +950,13 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       "every probed column needs at least one value")
     val meta = catalog0(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    // probe values must match the column's own type: the skip check
-    // compares canonical STRINGS while the exact predicate compares in
-    // Spark's coercion rules, and the two disagree across types (an int
-    // column probed with the string "05" canonicalizes to "05", misses
-    // the set's "5", and prunes a file the coercing filter would match)
-    probes.foreach { case (c, vs) =>
+    // probe values must match the column's own type family: the set
+    // judge compares canonical STRINGS while the exact predicate
+    // compares in Spark's coercion rules, and the two disagree across
+    // types (an int column probed with the string "05" canonicalizes to
+    // "05", misses the set's "5", and prunes a file the coercing filter
+    // would match)
+    val pred = probes.map { case (c, vs) =>
       require(m.schema.fieldNames.contains(c),
         s"readEquals column '$c' is not in ${meta.qualified}'s schema")
       val dt = m.schema(c).dataType
@@ -974,64 +965,31 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
           .getOrElse("null")} '$v' does not match column '$c' of type " +
           s"${dt.simpleString} — pass the column's own type so the " +
           "set-stats skip and the exact predicate agree"))
-    }
-    val canon = probes.map { case (c, vs) =>
-      c -> vs.map(MergeSnapshotStore.canonicalSetValue).toSet }
-    val keep = listDataFiles(meta, m, None).filter { rel =>
-      m.setStats.get(rel) match {
-        case None => true // no set lines at all: conservative keep
-        case Some(ss) => canon.forall { case (c, vs) =>
-          val key = MergeSnapshotStore.statKeyOf(m.schema, c)
-          ss.find(_.column == key).forall(_.values.exists(vs.contains))
-        }
-      }
-    }
-    val pred = probes.map { case (c, vs) => col(c).isin(vs: _*) }
-      .reduce(_ && _)
-    loadFiles(meta, m, keep, pred)
+      val typed = vs.flatMap(MergeSnapshotStore.probeAs(dt, _))
+      if (typed.isEmpty) lit(false) else col(c).isin(typed: _*)
+    }.reduce(_ && _)
+    skippingWhere(meta, m, pred)
   }
 
   /**
    * Prefix read — the string stats' headline use (URL prefixes,
-   * lexicographic ids): keeps the files whose bounds admit a value in
-   * `[prefix, incrementLast(prefix)]` (one key generous at the top —
-   * conservative, never wrong) and applies an exact `startswith`.
+   * lexicographic ids): an exact `startswith` read through the skipping
+   * walk, which keeps the files whose bounds admit a value in
+   * `[prefix, incrementLast(prefix))`.
    */
   def readPrefix(db: String, table: String, column: String, prefix: String,
                  version: Option[Int] = None): DataFrame = {
     require(prefix.nonEmpty, "readPrefix needs a non-empty prefix")
     val meta = catalog0(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    loadStringRanged(meta, m,
-      Map(column -> ((prefix, MergeSnapshotStore.incrementLast(prefix)))),
-      col(column).startsWith(prefix))
-  }
-
-  /** String twin of [[readRange]]'s selection: `hi = None` means unbounded above
-   * (a prefix whose every code point is MAX). A file's upper bound of
-   * None likewise never prunes. */
-  private def loadStringRanged(meta: TableMeta, m: Manifest,
-                               ranges: Map[String, (String, Option[String])],
-                               pred: Column): DataFrame = {
-    import MergeSnapshotStore.strCmp
-    val keep = listDataFiles(meta, m, None).filter { rel =>
-      m.strStats.get(rel) match {
-        case None => true // no stats: conservative keep
-        case Some(ys) => ranges.forall { case (c, (lo, hi)) =>
-          val key = MergeSnapshotStore.statKeyOf(m.schema, c)
-          ys.find(_.column == key).forall(y =>
-            y.hi.forall(h => strCmp(h, lo) >= 0) &&
-              hi.forall(hq => strCmp(y.lo, hq) <= 0))
-        }
-      }
-    }
-    loadFiles(meta, m, keep, pred)
+    skippingWhere(meta, m, col(column).startsWith(prefix))
   }
 
   /**
-   * Expression-derived data skipping — the general read the typed forms
-   * ([[readRange]]/[[readStringRange]]/[[readEquals]]/[[readPrefix]])
-   * are special cases of: the caller hands an arbitrary `Column`
+   * Expression-derived data skipping — the one pruned read the typed
+   * forms ([[readRange]]/[[readStringRange]]/[[readEquals]]/
+   * [[readPrefix]]) and [[pointLookup]] build their exact predicates
+   * for: the caller hands an arbitrary `Column`
    * predicate and the store walks its expression tree against every
    * file's manifest stats, planning only the files that MAY hold a row
    * where the predicate is TRUE (Delta/Iceberg's dataFilters-to-file-
@@ -1039,7 +997,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * AND/OR over `=`, `<`, `<=`, `>`, `>=`, `IN`, `startswith` between a
    * stats-carrying column and a literal — numeric/date/timestamp
    * min-max bounds, truncated string bounds, and value-set lines all
-   * participate. On a keyed table, equality/IN on the whole primary key
+   * participate; a numeric column under `cast(c AS double)` judges like
+   * `c`. On a keyed table, equality/IN on the whole primary key
    * also prunes by BUCKET: the literals hash to their
    * `pmod(hash(pk), nBuckets)` buckets in the driver and only those
    * buckets' files are kept ([[keyBuckets]]) — the one pruning
@@ -1074,7 +1033,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                 version: Option[Int] = None): DataFrame = {
     val meta = catalog0(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    loadFiles(meta, m, prunedFilesOf(meta, m, predicate), predicate)
+    skippingWhere(meta, m, predicate)
   }
 
   /** [[readWhere]]'s file-selection half alone — the plan-pin hook the
@@ -1084,13 +1043,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                                  version: Option[Int] = None): Seq[String] = {
     val meta = catalog0(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    prunedFilesOf(meta, m, predicate)
-  }
-
-  private def prunedFilesOf(meta: TableMeta, m: Manifest,
-                            predicate: Column): Seq[String] = {
-    val e = resolvePredicate(m, predicate)
-    listDataFiles(meta, m, None).filter(fileMayMatch(e, meta, m))
+    listDataFiles(meta, m, None)
+      .filter(fileMayMatch(resolvePredicate(m, predicate), meta, m))
   }
 
   /**
@@ -1113,9 +1067,6 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * so [[graft.operators.DomainRunner]] and
    * [[graft.operators.QueryRunner]] route through it when their store
    * is a [[MergeSnapshotStore]].
-   *
-   * Non-parquet tables fall back to the plain full-scan [[read]] (the
-   * vectorized scan + stats contract is parquet's).
    */
   override def readSkipping(db: String, table: String): DataFrame =
     readSkipping(db, table, None)
@@ -1123,33 +1074,22 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   /** [[readSkipping]] pinned to a committed-and-retained version. */
   override def readSkipping(db: String, table: String,
                             version: Option[Int]): DataFrame =
-    skippingScan(db, table, version) match {
-      case Some((df, _)) => df
-      case None =>
-        // non-parquet fallback: the plain manifest-resolved load (same
-        // retention-validated version resolution, no FileIndex)
-        val meta = catalog0(db, table)
-        load(meta,
-          readManifest(meta.location, resolveVersion(meta, version)), None)
-    }
+    skippingScan(db, table, version)._1
 
   /** [[readSkipping]]'s body, exposing the [[StoreFileIndex]] for
-   * plan-pin specs; None when the table is not parquet-backed. */
+   * plan-pin specs. */
   private[graft] def skippingScan(db: String, table: String,
                                   version: Option[Int] = None)
-      : Option[(DataFrame, StoreFileIndex)] = {
+      : (DataFrame, StoreFileIndex) = {
     val meta = catalog0(db, table)
-    if (meta.format != "parquet") None
-    else {
-      val m = readManifest(meta.location, resolveVersion(meta, version))
-      // statuses (size + mtime) off the SHARED bucket enumeration —
-      // sizes feed sizeInBytes so SQL joins auto-broadcast small store
-      // tables
-      Some(skippingFrame(meta, m, listDataFileStatuses(meta, m, None)))
-    }
+    val m = readManifest(meta.location, resolveVersion(meta, version))
+    // statuses (size + mtime) off the SHARED bucket enumeration —
+    // sizes feed sizeInBytes so SQL joins auto-broadcast small store
+    // tables
+    skippingFrame(meta, m, listDataFileStatuses(meta, m, None))
   }
 
-  /** The skipping scan over `files` of manifest `m` (a parquet table):
+  /** The skipping scan over `files` of manifest `m`:
    * a [[StoreFileIndex]] relation judged by [[fileMayMatch]], with the
    * merge-on-read masking and the logical aliasing on top. */
   private def skippingFrame(meta: TableMeta, m: Manifest,
@@ -1179,15 +1119,13 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * narrowed up front to the files the [[fileMayMatch]] walk (and
    * `keep`) admit — so `inputFiles` and `sizeInBytes` describe the
    * pruned read, not the snapshot — while the pushed predicate still
-   * reaches the index at planning. Non-parquet tables read the same
-   * file list through [[loadFiles]]. */
+   * reaches the index at planning. */
   private def skippingWhere(meta: TableMeta, m: Manifest, predicate: Column,
-                            keep: String => Boolean): DataFrame = {
+                            keep: String => Boolean = _ => true): DataFrame = {
     val may = fileMayMatch(resolvePredicate(m, predicate), meta, m)
     val files = listDataFileStatuses(meta, m, None)
       .filter { case (rel, _) => keep(rel) && may(rel) }
-    if (meta.format != "parquet") loadFiles(meta, m, files.map(_._1), predicate)
-    else skippingFrame(meta, m, files)._1.filter(predicate)
+    skippingFrame(meta, m, files)._1.filter(predicate)
   }
 
   /** `predicate` resolved and type-coerced by Spark's OWN analyzer
@@ -1389,13 +1327,21 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     def dtOf(c: String): Option[DataType] =
       m.schema.fields.find(f => MergeSnapshotStore.physicalOf(f) == c)
         .orElse(m.schema.fields.find(_.name == c)).map(_.dataType)
+    def isNum(t: DataType) = t.isInstanceOf[NumericType]
+    // `cast(c AS double)` of a numeric column — the analyzer's shape for
+    // a double literal against a long or decimal column — judges like
+    // `c`: the bounds already live in that double space, under the same
+    // monotone rounding (Decimal.toDouble is the footer bounds'
+    // BigDecimal.doubleValue), and the walk's numeric pruning is
+    // non-strict, so ties keep the file
     def attr(x: Expression): Option[String] = x match {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
         if a.nameParts.size == 1 => Some(a.nameParts.head)
       case a: AttributeReference => Some(a.name)
+      case Cast(a: AttributeReference, DoubleType, _, _)
+        if dtOf(a.name).exists(isNum) => Some(a.name)
       case _ => None
     }
-    def isNum(t: DataType) = t.isInstanceOf[NumericType]
     // the double bound space is shared only within a type family: any
     // numeric literal against a numeric column, date days against
     // DateType, timestamp micros against TimestampType — never across
@@ -2210,10 +2156,6 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                                 current: Manifest,
                                 e: org.apache.spark.sql.catalyst.expressions.Expression,
                                 predicate: Column): Long = {
-    require(meta.format == "parquet",
-      s"merge-on-read position deletes on ${meta.qualified} need parquet " +
-        "data files (row addresses come from the reader's " +
-        "_metadata.row_index) — use CopyOnWrite for other formats")
     val files = listDataFiles(meta, current, None)
     val cand = files.filter(fileMayMatch(e, meta, current))
     if (cand.isEmpty) return 0L
@@ -2227,9 +2169,8 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     // would silently NULL the renamed column under the predicate);
     // addresses capture on the raw scan, masking binds physically,
     // the logical projection carries the address columns through
-    val raw = spark.read.format(meta.format)
-      .schema(MergeSnapshotStore.physicalSchema(current.schema))
-      .load(cand.map(r => refPath(meta.location, r)): _*)
+    val raw = spark.read.schema(MergeSnapshotStore.physicalSchema(current.schema))
+      .parquet(cand.map(r => refPath(meta.location, r)): _*)
     toLogical(applyDeletes(meta, current, withRowAddress(raw)),
         current.schema,
         extras = Seq(MergeSnapshotStore.PosFileCol,
@@ -4279,6 +4220,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                   ifNotExists: Boolean = false): Unit = {
     require(location.trim.nonEmpty, "CREATE TABLE needs a LOCATION — " +
       "the store's tables are external (the store owns the files)")
+    MergeSnapshotStore.requireParquet(s"$db.$table", format)
     properties.keys.foreach(guardPropKey)
     schema.foreach { s =>
       (primaryKey ++ partitionBy).foreach { c =>
@@ -4657,8 +4599,9 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * manifest. A file where a column is all-NULL (or whose footer
    * carries no usable bounds — NaN-tainted float/double chunks, a
    * stats-less writer) gets no stats line for it and pruned reads keep
-   * the file (conservative). Non-parquet formats fall back to the
-   * column-pruned measurement scan.
+   * the file (conservative). Every table writes parquet: a table
+   * registered with another format is refused here, before any file
+   * is written.
    *
    * Crash/concurrency safety: files go to a `.tmp-` directory first and
    * a successful write renames it into place. Both paths carry a
@@ -4677,6 +4620,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       : (SortedMap[Int, String], Map[String, Seq[ColStat]],
          Map[String, Seq[StrStat]], Map[String, Seq[SetStat]],
          Map[String, Long]) = {
+    MergeSnapshotStore.requireParquet(meta.qualified, meta.format)
     // set-stats misconfiguration fails BEFORE the write job: an opted
     // column must exist and carry a type whose canonical string is
     // stable across the probe and cast sides
@@ -4761,15 +4705,10 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     }
     val bloomCols = meta.properties.get(MergeSnapshotStore.BloomProp)
       .map(MergeSnapshotStore.parseBloomProp).getOrElse(Nil)
-    if (bloomCols.nonEmpty) {
-      require(meta.format == "parquet",
-        s"${MergeSnapshotStore.BloomProp} is parquet-native; " +
-          s"${meta.qualified} writes ${meta.format}")
-      bloomCols.foreach { case (c, _) =>
-        require(df.schema.fieldNames.contains(c),
-          s"${MergeSnapshotStore.BloomProp} names '$c' which " +
-            s"${meta.qualified} does not have")
-      }
+    bloomCols.foreach { case (c, _) =>
+      require(df.schema.fieldNames.contains(c),
+        s"${MergeSnapshotStore.BloomProp} names '$c' which " +
+          s"${meta.qualified} does not have")
     }
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val rel = f"data/c$next%06d-$nonce"
@@ -4831,7 +4770,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     // every file (row-group-level equality skipping on read; the
     // manifest carries nothing — blooms live where they amortize)
     val writer = bloomCols.foldLeft(
-        bucketed.write.format(meta.format).mode("errorifexists")) {
+        bucketed.write.format("parquet").mode("errorifexists")) {
       case (w, (c, ndv)) => w
         .option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
@@ -4872,7 +4811,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       if ((statCols.isEmpty && strCols.isEmpty) || found.isEmpty)
         (Map.empty[String, Seq[ColStat]], Map.empty[String, Seq[StrStat]],
           Map.empty[String, Long])
-      else if (meta.format == "parquet") {
+      else {
         // enumerate the just-written data files (driver-side listing of
         // the bucket dirs already produced above — manifest-sized)
         val rels = found.values.toSeq.flatMap { rel =>
@@ -4925,58 +4864,6 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
           }.toMap,
           bounds.collect { case (rel, _, _, n) if n >= 0L => rel -> n }
             .toMap)
-      } else {
-        // non-parquet formats carry no footer stats — measure with one
-        // column-pruned scan of the written files. NaN is excluded: a
-        // NaN bound poisons the overlap check (`mx >= lo` is false),
-        // silently pruning a file whose FINITE rows are in range; an
-        // all-NaN column yields no stats line — conservative keep.
-        val written = spark.read.format(meta.format).load(dataDir.toString)
-        def finite(c: String) = {
-          // temporal columns measure in the same epoch-based double
-          // space the footer path and the promoted predicate use
-          val d = written.schema(c).dataType match {
-            case DateType => org.apache.spark.sql.functions.unix_date(col(c)).cast("double")
-            case TimestampType => org.apache.spark.sql.functions.unix_micros(col(c)).cast("double")
-            case _ => col(c).cast("double")
-          }
-          when(!isnan(d), d)
-        }
-        val aggs = statCols.flatMap(c => Seq(min(finite(c)), max(finite(c)))) ++
-          strCols.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-          Seq(org.apache.spark.sql.functions.count(lit(1L)))
-        // manifest-sized collect: one row per written FILE. Spark's
-        // string min/max order is UTF8String byte order — the manifest's
-        // bound order, so truncation applies directly.
-        val rows = jobPhase("stats")(written.groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*).collect())
-        val strOff = 1 + 2 * statCols.size
-        val pairs = rows.flatMap { r =>
-          val p = r.getString(0)
-          // a written file's path always embeds its commit dir; the
-          // LAST occurrence belongs to the store (a table location
-          // containing "/data/c" itself cannot shadow it)
-          val cut = p.lastIndexOf("/data/c")
-          if (cut < 0) None
-          else {
-            val ss = statCols.zipWithIndex.flatMap { case (c, i) =>
-              if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-              else Some(ColStat(c, r.getDouble(1 + 2 * i), r.getDouble(2 + 2 * i)))
-            }
-            val ys = strCols.zipWithIndex.flatMap { case (c, i) =>
-              if (r.isNullAt(strOff + 2 * i) || r.isNullAt(strOff + 2 * i + 1)) None
-              else Some(StrStat(c,
-                MergeSnapshotStore.truncLower(r.getString(strOff + 2 * i)),
-                MergeSnapshotStore.truncUpper(r.getString(strOff + 2 * i + 1))))
-            }
-            val n = r.getLong(strOff + 2 * strCols.size)
-            if (ss.isEmpty && ys.isEmpty && n < 0) None
-            else Some(p.substring(cut + 1) -> ((ss, ys, n)))
-          }
-        }
-        (pairs.collect { case (f, (ss, _, _)) if ss.nonEmpty => f -> ss }.toMap,
-          pairs.collect { case (f, (_, ys, _)) if ys.nonEmpty => f -> ys }.toMap,
-          pairs.collect { case (f, (_, _, n)) if n >= 0 => f -> n }.toMap)
       }
     // VALUE-SET stats for the opted-in columns: ONE column-pruned data
     // pass over the written files (footers cannot yield distinct sets —
@@ -4985,7 +4872,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     // an over-cap file yields null and records no line (conservative
     // keep); an all-null file records the EMPTY set (prunes every
     // probe). Values travel as Spark's cast-to-string — the exact form
-    // [[readEquals]] canonicalizes probes into.
+    // the walk canonicalizes equality literals into.
     val setStats: Map[String, Seq[SetStat]] =
       if (setCols.isEmpty || found.isEmpty) Map.empty
       else {
@@ -4993,7 +4880,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
           new MergeSnapshotStore.CappedSetAgg(
             MergeSnapshotStore.SetStatsMaxValues),
           org.apache.spark.sql.Encoders.STRING)
-        val written = spark.read.format(meta.format).load(dataDir.toString)
+        val written = spark.read.parquet(dataDir.toString)
         val aggs = setCols.map(c => capSet(col(c).cast("string")))
         val rows = jobPhase("stats")(written.groupBy(input_file_name().as("__f"))
           .agg(aggs.head, aggs.tail: _*).collect())
@@ -5962,7 +5849,7 @@ object MergeSnapshotStore {
   }
 
   /** The types set-stats supports: those whose driver-side canonical
-   * string ([[canonicalSetValue]]) provably equals Spark's
+   * string ([[litCanonical]]) provably equals Spark's
    * `cast(col AS STRING)` — the equality the skip check keys on.
    * Fractional types are excluded on purpose: value-equality probes on
    * floats are an antipattern and their string forms are
@@ -5977,8 +5864,16 @@ object MergeSnapshotStore {
     case _ => false
   }
 
+  /** The one data format the store writes and reads: its stats come
+   * from parquet footers, its skipping scan is a parquet relation, and
+   * its position deletes address parquet row ordinals. */
+  private[graft] def requireParquet(qualified: String, format: String): Unit =
+    require(format == "parquet",
+      s"MergeSnapshotStore is parquet-native: $qualified declares format " +
+        s"'$format' — register it with format parquet")
+
   /** Does a probe value's runtime type pair with the column type such
-   * that [[canonicalSetValue]] and Spark's own equality agree? Integral
+   * that [[litCanonical]] and Spark's own equality agree? Integral
    * probes pair with any integral column (toString matches the cast for
    * every width); everything else pairs only with its own type. */
   private[graft] def probeMatches(dt: DataType, v: Any): Boolean = {
@@ -5993,22 +5888,25 @@ object MergeSnapshotStore {
     }
   }
 
-  /** One probe value's canonical string — must match Spark's
-   * cast-to-string of the column exactly, or a skip could prune a live
-   * file. Unsupported probe types fail loudly. */
-  private[graft] def canonicalSetValue(v: Any): String = v match {
-    case s: String => s
-    case b: Boolean => b.toString
-    case b: Byte => b.toString
-    case s: Short => s.toString
-    case i: Int => i.toString
-    case l: Long => l.toString
-    case d: java.sql.Date => d.toString
-    case d: java.time.LocalDate => d.toString
-    case null => throw new IllegalArgumentException(
-      "null probes are not equality-comparable — filter nulls explicitly")
-    case other => throw new IllegalArgumentException(
-      s"unsupported set-stats probe type ${other.getClass.getName}")
+  /** A probe that [[probeMatches]] column type `dt`, as a value of the
+   * column's own type, so the `isin` literal needs no coercion; None
+   * for an integral probe outside the column's range (no row equals
+   * it). */
+  private[graft] def probeAs(dt: DataType, v: Any): Option[Any] = {
+    val n: Option[Long] = v match {
+      case b: Byte => Some(b.toLong)
+      case s: Short => Some(s.toLong)
+      case i: Int => Some(i.toLong)
+      case l: Long => Some(l)
+      case _ => None
+    }
+    (dt, n) match {
+      case (ByteType, Some(x)) => Option.when(x.isValidByte)(x.toByte)
+      case (ShortType, Some(x)) => Option.when(x.isValidShort)(x.toShort)
+      case (IntegerType, Some(x)) => Option.when(x.isValidInt)(x.toInt)
+      case (LongType, Some(x)) => Some(x)
+      case _ => Some(v)
+    }
   }
 
   /** A Catalyst literal's INTERNAL value in the manifest's double bound
@@ -6029,8 +5927,7 @@ object MergeSnapshotStore {
   }
 
   /** A Catalyst literal's INTERNAL value in the value-set lines'
-   * canonical (Spark cast-to-string) form — [[canonicalSetValue]] for
-   * internal representations. The caller has already proven the
+   * canonical (Spark cast-to-string) form. The caller has already proven the
    * column/literal pairing via canonCompatible, so a date's internal
    * Int renders as the ISO date Spark's cast produces. */
   private[graft] def litCanonical(value: Any, dt: DataType): Option[String] =

@@ -421,6 +421,13 @@ object ChangeLogApplier {
     val tables = partitionTables(eventLog).getOrElse(
       cached.select(col("table")).distinct()
         .as[String](Encoders.STRING).collect().toSeq)
+    // a null `table` (a truncated GoldenGate line read PERMISSIVE lands
+    // in the null partition) names no target: refuse before any table
+    // applies; the events are counted only on this refusing path
+    if (tables.contains(null)) throw new IllegalArgumentException(
+      s"$db: ${cached.filter(col("table").isNull).count()} change " +
+        "event(s) carry a null source table — the landing holds lines " +
+        "that did not parse; repair or drop them before applying")
     // two source names can resolve to ONE target (A.T and B.T both ->
     // t); group them so each target snapshot has exactly one concurrent
     // writer — parallel futures racing on one version directory would

@@ -110,7 +110,7 @@ class AlterColumnTypeSpec extends AnyFunSuite with SparkFixture {
     assert(kept.size < total,
       s"stats must keep pruning after the widen: kept ${kept.size}/$total")
     assert(store.readWhere("adb", "t", pred).count() == 32)
-    val Some((df, index)) = store.skippingScan("adb", "t")
+    val (df, index) = store.skippingScan("adb", "t")
     assert(df.filter(pred).count() == 32)
     assert(index.lastKept.size == kept.size,
       s"SQL path kept ${index.lastKept.size}, typed path ${kept.size}")

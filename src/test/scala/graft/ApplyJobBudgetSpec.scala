@@ -57,10 +57,11 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
   }
 
   /** Lands one seeded batch (mostly U, some I and D, repeated keys) of
-   * `n` events per table as raw GG JSON, ingests it into a fresh landing
-   * table, and returns the landing read the applier takes. */
+   * `n` events per table as raw GG JSON, plus `nullTable` events whose
+   * `table` is null, ingests it into a fresh landing table, and returns
+   * the landing read the applier takes. */
   private def landBatch(store: MergeSnapshotStore, dir: String, batch: Int,
-                        n: Int = 60): DataFrame = {
+                        n: Int = 60, nullTable: Int = 0): DataFrame = {
     val rnd = new Random(batch)
     var pos = batch * 10000
     def ev(table: String, op: String, img: Row): Row = {
@@ -79,7 +80,7 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
     } ++ (1 to n).map { _ =>
       val bid = 1 + rnd.nextInt(320)
       ev("OMS_OWNER.BOOKINGS", op(), Row(null, null, bid, bid % 50, s"s$pos"))
-    }
+    } ++ (1 to nullTable).map(_ => ev(null, "U", Row(1, "x", null, null, null)))
     val raw = s"$dir/raw/b$batch"
     spark.createDataFrame(spark.sparkContext.parallelize(evs, 2), evSchema)
       .write.json(raw)
@@ -131,6 +132,20 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
         landing.filter(col("table") === src), pk)
       assert(canon(store.read(Db, t)) == canon(want), t)
     }
+  }
+
+  test("a landing with a null-table event is refused before any table applies") {
+    val (store, dir) = mkStore()
+    val before = Seq("offenders", "bookings").map(t => t -> store.latestVersion(Db, t))
+    val landing = landBatch(store, dir, 3, nullTable = 1)
+    assert(landing.filter(col("table").isNull).count() == 1,
+      "fixture: the null-table event must land")
+    val err = intercept[IllegalArgumentException] {
+      ChangeLogApplier.run(spark, store, Db, landing)
+    }
+    assert(err.getMessage.contains(s"$Db: 1 change event"), err.getMessage)
+    assert(Seq("offenders", "bookings").map(t => t -> store.latestVersion(Db, t)) ==
+      before, "a table committed before the refusal")
   }
 
   test("scoped merges and overwrites write one file per bucket from min(nBuckets, cores) tasks") {

@@ -75,7 +75,7 @@ class BucketPruningSpec extends AnyFunSuite with SparkFixture {
     val want = canon(full.filter(pred))
     assert(canon(store.readWhere(Db, tbl, pred, version)) == want,
       s"readWhere diverged for $pred")
-    val Some((frame, idx)) = store.skippingScan(Db, tbl, version)
+    val (frame, idx) = store.skippingScan(Db, tbl, version)
     assert(canon(frame.filter(pred)) == want, s"SQL scan diverged for $pred")
     (store.prunedFiles(Db, tbl, pred, version).toSet, idx.lastKept.toSet)
   }
@@ -117,7 +117,7 @@ class BucketPruningSpec extends AnyFunSuite with SparkFixture {
     val many = (100L until 112L).toSeq
     val manyBuckets = b(store, "t", many: _*)
     assertKeeps(store, "t", col("id").isin(many: _*), manyBuckets)
-    val (frame0, idx) = store.skippingScan(Db, "t").get
+    val (frame0, idx) = store.skippingScan(Db, "t")
     val pushed = frame0.filter(col("id").isin(many: _*))
     pushed.collect()
     assert(pushed.queryExecution.optimizedPlan.exists(_.expressions.exists(
@@ -225,7 +225,7 @@ class BucketPruningSpec extends AnyFunSuite with SparkFixture {
     assertKeepsAll(store, "c", col("region") === "r2")
     // the SQL path splits the conjunction into separate pushed filters;
     // the index re-joins them, so the whole key still prunes
-    val (frame0, idx) = store.skippingScan(Db, "c").get
+    val (frame0, idx) = store.skippingScan(Db, "c")
     frame0.createOrReplaceTempView("bp_c")
     val got = spark.sql("SELECT * FROM bp_c WHERE region = 'r1' AND id = 37")
     assert(canon(got) == canon(store.read(Db, "c")

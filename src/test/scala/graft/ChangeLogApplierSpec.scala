@@ -16,9 +16,9 @@ import graft.operators.ChangeLogApplier._
  */
 class ChangeLogApplierSpec extends AnyFunSuite with SparkFixture {
   private lazy val events =
-    spark.read.parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
+    spark.read.parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
   private lazy val target =
-    spark.read.parquet(s"$RefData/database/oms_owner/offenders")
+    spark.read.parquet(refData("database/oms_owner/offenders"))
   private lazy val mapped = mapEvents(events, target.schema)
 
   test("merge schema = target + 4 transient fields (reference expects 55)") {

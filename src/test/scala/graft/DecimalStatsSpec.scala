@@ -65,9 +65,11 @@ class DecimalStatsSpec extends AnyFunSuite with SparkFixture {
     assert(got.inputFiles.length < total,
       "the disjoint-range layout must actually prune on the decimal band")
     assertExact(got, full.filter(pred))
-    // readRange's double-space bounds agree
-    assertExact(store.readRange("ddb", "amt", Map("amt" -> ((10.0, 30.0)))),
-      full.filter(col("amt") >= 10.0 && col("amt") <= 30.0))
+    // readRange's double-space bounds agree, and prune as well
+    val ranged = store.readRange("ddb", "amt", Map("amt" -> ((10.0, 30.0))))
+    assertExact(ranged, full.filter(col("amt") >= 10.0 && col("amt") <= 30.0))
+    assert(ranged.inputFiles.length < total,
+      "double bounds must prune the decimal column like its own literals")
   }
 
   test("precision boundary: decimal(18,0) past 2^53 stays correct (non-strict)") {

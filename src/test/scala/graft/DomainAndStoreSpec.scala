@@ -26,9 +26,9 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
       // curated fixtures: the pair whose offender_id ranges overlap
       // (reference test_4 joins the curated zone)
       store.overwrite("db", "offenders",
-        spark.read.parquet(s"$RefData/database/oms_owner/offenders_curated"))
+        spark.read.parquet(refData("database/oms_owner/offenders_curated")))
       store.overwrite("db", "offender_bookings",
-        spark.read.parquet(s"$RefData/database/oms_owner/offender_bookings_curated"))
+        spark.read.parquet(refData("database/oms_owner/offender_bookings_curated")))
     }
   }
 
@@ -40,7 +40,7 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     assert(store.read("db", "offenders").count() == 5)
     // restore for later tests
     store.overwrite("db", "offenders",
-      spark.read.parquet(s"$RefData/database/oms_owner/offenders_curated"))
+      spark.read.parquet(refData("database/oms_owner/offenders_curated")))
     assert(store.read("db", "offenders").count() == 18)
   }
 
@@ -55,7 +55,7 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     assert(after.columns.contains("extra"))
     assert(after.filter(col("first_name").isNotNull).count() == 0)
     store.overwrite("db", "offenders",
-      spark.read.parquet(s"$RefData/database/oms_owner/offenders_curated"))
+      spark.read.parquet(refData("database/oms_owner/offenders_curated")))
   }
 
   test("compaction rewrites the snapshot into the target file count") {
@@ -68,13 +68,13 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     assert(after.count() == 18)
     assert(after.rdd.getNumPartitions == 1)
     store.overwrite("db", "offenders",
-      spark.read.parquet(s"$RefData/database/oms_owner/offenders_curated"))
+      spark.read.parquet(refData("database/oms_owner/offenders_curated")))
   }
 
   test("domain defs load + dependency activation") {
     bootstrap()
     val runner = new DomainRunner(spark, store)
-    val defs = runner.loadDefs(s"$RefData/database/domain_definitions/domain_table_1.csv")
+    val defs = runner.loadDefs(refData("database/domain_definitions/domain_table_1.csv"))
     val all = defs.collect()
     assert(all.length == 1)
     assert(all.head.dependencies.map(_.trim) == Seq("offenders", "offender_bookings"))
@@ -86,7 +86,7 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     bootstrap()
     val runner = new DomainRunner(spark, store)
     val made = runner.run("db",
-      s"$RefData/database/domain_definitions/domain_table_1.csv",
+      refData("database/domain_definitions/domain_table_1.csv"),
       changedTables = Seq("offenders"), processId = 42L)
     assert(made == Seq("domain1_off_book"))
     val out = store.read("db", "domain1_off_book")
@@ -112,12 +112,12 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     bootstrap()
     catalog.register(TableMeta("db", "domain2_book_off", s"$tmp/domain2_book_off"))
     val runner = new DomainRunner(spark, store)
-    val defs = runner.loadDefs(s"$RefData/database/domain_definitions/domain_table_2.csv")
+    val defs = runner.loadDefs(refData("database/domain_definitions/domain_table_2.csv"))
     assert(defs.count() == 2)
     // of the two definitions, only the offenders-dependent one activates
     assert(runner.activate(defs, Seq("offender_bookings")).count() == 1)
     val made = runner.run("db",
-      s"$RefData/database/domain_definitions/domain_table_2.csv",
+      refData("database/domain_definitions/domain_table_2.csv"),
       changedTables = Seq("offender_bookings"), processId = 7L)
     assert(made == Seq("domain2_book_off"))
     val out = store.read("db", "domain2_book_off")

@@ -16,7 +16,7 @@ import graft.ingest.GgLogsToParquet._
  * asserts are reproduced from the landing parquet in ChangeLogApplierSpec.)
  */
 class IngestSpec extends AnyFunSuite with SparkFixture {
-  private val jsonRoot = s"$RefData/kinesis/transac/json/oms_owner/offenders"
+  private def jsonRoot = refData("kinesis/transac/json/oms_owner/offenders")
 
   private lazy val inserts = withHashesDropTokens(spark.read.json(s"$jsonRoot/inserts"))
   private lazy val deletes = withHashesDropTokens(spark.read.json(s"$jsonRoot/deletes"))

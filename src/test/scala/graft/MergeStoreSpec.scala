@@ -810,8 +810,8 @@ class MergeStoreSpec extends AnyFunSuite with SparkFixture {
 
   test("CDC run() through the merge store matches the full-rewrite store") {
     val events =
-      spark.read.parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
-    val target = spark.read.parquet(s"$RefData/database/oms_owner/offenders")
+      spark.read.parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
+    val target = spark.read.parquet(refData("database/oms_owner/offenders"))
 
     val plainCat = new InMemoryCatalog
     val plain = new SnapshotStore(spark, plainCat)
@@ -1393,6 +1393,27 @@ class MergeStoreSpec extends AnyFunSuite with SparkFixture {
       .count() == 0 && gotT.count() == 30)
     assert(gotT.inputFiles.length <= 2,
       s"timestamp window failed to prune: ${gotT.inputFiles.length} of $total")
+    // an infinite bound is an open side, as on numeric columns; a range
+    // open on both sides still refuses NULL; a NaN bound is refused
+    val all = store.read("mdb", "evts")
+    Seq("d" -> day _, "ts" -> micros _).foreach { case (c, at) =>
+      val below = store.readRange("mdb", "evts",
+        Map(c -> ((Double.NegativeInfinity, at("1995-01-10")))))
+      assert(below.count() == 10 && below.inputFiles.length == 1, c)
+      val above = store.readRange("mdb", "evts",
+        Map(c -> ((at("1997-03-02"), Double.PositiveInfinity))))
+      assert(above.count() == all.filter(col("d") >= lit("1997-03-02")).count() &&
+        above.inputFiles.length == 1, c)
+      assert(store.readRange("mdb", "evts",
+        Map(c -> ((Double.NegativeInfinity, Double.PositiveInfinity))))
+        .count() == 800, c)
+      Seq((Double.NaN, at("1995-02-01")), (at("1995-02-01"), Double.NaN))
+        .foreach { r =>
+          intercept[IllegalArgumentException] {
+            store.readRange("mdb", "evts", Map(c -> r))
+          }
+        }
+    }
     // legacy INT96 timestamps (the session default) carry no orderable
     // stats: reads stay CORRECT, files conservatively all kept
     store.catalog.register(TableMeta("mdb", "evts96",

@@ -510,7 +510,7 @@ class MorDeleteSpec extends AnyFunSuite with SparkFixture {
       frame().filter(col("cls") =!= "c1"))
     assertExact(store.readWhere("mdb", "nopk", col("v") < 10L),
       frame().filter(col("v") < 10L && col("cls") =!= "c1"))
-    val Some((sqlFrame, _)) = store.skippingScan("mdb", "nopk")
+    val (sqlFrame, _) = store.skippingScan("mdb", "nopk")
     assert(sqlFrame.count() == 192L)
 
     // composition: a second delete works over the logical view — rows

@@ -122,7 +122,7 @@ class RenameColumnSpec extends AnyFunSuite with SparkFixture {
     assert(store.readWhere("rdb", "t", pred).count() == 32)
     // the SQL skipping path pushes the renamed attribute down to the
     // physical scan and prunes the same files
-    val Some((df, index)) = store.skippingScan("rdb", "t")
+    val (df, index) = store.skippingScan("rdb", "t")
     assert(df.filter(pred).count() == 32)
     assert(index.lastKept.size == kept.size,
       s"SQL path kept ${index.lastKept.size}, typed path ${kept.size}")

@@ -111,7 +111,7 @@ class SessionCatalogSpec extends AnyFunSuite with SparkFixture {
     }
     def runArc(cat: Catalog, db: String) = {
       val work = Files.createTempDirectory(s"graft-arc-$db").toString
-      val arc = PipelineMain.referenceArc(spark, cat, work, RefData, db)
+      val arc = PipelineMain.referenceArc(spark, cat, work, refData(), db)
       (arc, Map(
         "raw_events" -> canon(arc.store.readFlat(db, "raw_events")),
         "offenders" -> canon(arc.store.read(db, "offenders")),

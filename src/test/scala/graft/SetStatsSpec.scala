@@ -221,15 +221,26 @@ class SetStatsSpec extends AnyFunSuite with SparkFixture {
   test("integral and date probes canonicalize to Spark's cast form") {
     import spark.implicits._
     val store = mkStore()
-    register(store, "ty", setCols = "k,d")
+    register(store, "ty", setCols = "k,d,n")
     store.overwrite("vdb", "ty",
       (0 until 32).map(i => (i.toLong, (i % 3).toLong,
-          java.sql.Date.valueOf(s"2024-0${1 + i % 3}-01")))
-        .toDF("id", "k", "d").repartitionByRange(3, col("k")))
+          java.sql.Date.valueOf(s"2024-0${1 + i % 3}-01"), i % 3))
+        .toDF("id", "k", "d", "n").repartitionByRange(3, col("k")))
     val total = store.read("vdb", "ty").inputFiles.length
     val byK = store.readEquals("vdb", "ty", Map("k" -> Seq(2L)))
     assert(byK.inputFiles.length < total)
     assertExact(byK, store.read("vdb", "ty").filter(col("k") === 2L))
+    // probes of another integral width are typed to the column, so they
+    // prune alike; a probe outside the int column's range matches nothing
+    val byKInt = store.readEquals("vdb", "ty", Map("k" -> Seq(2)))
+    assert(byKInt.inputFiles.length < total)
+    assertExact(byKInt, store.read("vdb", "ty").filter(col("k") === 2L))
+    val byNLong = store.readEquals("vdb", "ty",
+      Map("n" -> Seq(2L, Int.MaxValue + 1L)))
+    assert(byNLong.inputFiles.length < total)
+    assertExact(byNLong, store.read("vdb", "ty").filter(col("n") === 2))
+    assert(store.readEquals("vdb", "ty", Map("n" -> Seq(Long.MinValue)))
+      .inputFiles.isEmpty)
     val byD = store.readEquals("vdb", "ty",
       Map("d" -> Seq(java.sql.Date.valueOf("2024-02-01"))))
     assertExact(byD, store.read("vdb", "ty")

@@ -26,8 +26,8 @@ class SkippingPropSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val store = new MergeSnapshotStore(spark, new InMemoryCatalog,
       nBuckets = 4, keepVersions = 2, vacuumRetentionMs = 0L)
-    store.catalog.register(TableMeta("sdb", "fuzz",
-      Files.createTempDirectory("graft-skipprop").toString,
+    val loc = Files.createTempDirectory("graft-skipprop").toString
+    store.catalog.register(TableMeta("sdb", "fuzz", loc,
       primaryKey = Seq("id"),
       properties = Map(MergeSnapshotStore.SetStatsProp -> "tag")))
     // s is NULL every 11th row: the three-valued corners (NOT over a
@@ -78,6 +78,48 @@ class SkippingPropSpec extends AnyFunSuite with SparkFixture {
         val kept = store.prunedFiles("sdb", "fuzz", p).size
         assert(kept <= total, s"seed=$seed #$i planned MORE than all files")
         if (kept < total) prunedSomewhere = true
+      }
+      // the typed reads are predicates over the same walk: each one's
+      // rows equal the full-scan filter of its exact predicate, and it
+      // plans exactly that predicate's pruned files
+      def rel(f: String) = f.substring(f.indexOf(loc) + loc.length + 1)
+      for (i <- 1 to 12) {
+        val (a, b) = (rnd.nextInt(9), rnd.nextInt(9))
+        val (got, p) = rnd.nextInt(6) match {
+          case 0 =>
+            val lo = rnd.nextInt(1009).toDouble
+            val hi = lo + rnd.nextInt(200)
+            (store.readRange("sdb", "fuzz", Map("v" -> ((lo, hi)))),
+              col("v") >= lo && col("v") <= hi)
+          case 1 => // a long column against double bounds
+            val lo = rnd.nextInt(4500).toDouble
+            val hi = lo + rnd.nextInt(300)
+            (store.readRange("sdb", "fuzz", Map("id" -> ((lo, hi)))),
+              col("id") >= lo && col("id") <= hi)
+          case 2 =>
+            (store.readEquals("sdb", "fuzz", Map("tag" -> Seq(a, b))),
+              col("tag").isin(a, b))
+          case 3 => // long probes on the int column; one past its range
+            (store.readEquals("sdb", "fuzz",
+              Map("tag" -> Seq(a.toLong, b.toLong, Int.MaxValue + 1L))),
+              col("tag").isin(a, b))
+          case 4 =>
+            val lo = f"k${rnd.nextInt(4500)}%05d"
+            val hi = f"k${rnd.nextInt(4500)}%05d"
+            (store.readStringRange("sdb", "fuzz", Map("s" -> ((lo, hi)))),
+              col("s") >= lo && col("s") <= hi)
+          case 5 =>
+            val prefix = f"k0${rnd.nextInt(5)}"
+            (store.readPrefix("sdb", "fuzz", "s", prefix),
+              col("s").startsWith(prefix))
+        }
+        val want = full.filter(p)
+        assert(got.exceptAll(want).count() == 0 &&
+          want.exceptAll(got).count() == 0,
+          s"seed=$seed typed read #$i diverged: ${p.toString}")
+        assert(got.inputFiles.map(rel).toSet ==
+          store.prunedFiles("sdb", "fuzz", p).toSet,
+          s"seed=$seed typed read #$i planned other files than ${p.toString}")
       }
     }
     assert(prunedSomewhere,

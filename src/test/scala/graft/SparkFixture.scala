@@ -26,6 +26,18 @@ trait SparkFixture {
   lazy val spark: SparkSession = SparkFixture.session
   val RefData = "/root/reference/tests/data/dummy"
 
+  /** `rel` under [[RefData]], the reference checkout's dummy fixtures,
+   * which this repository does not ship (FIXTURES.md). Every fixture
+   * read goes through here, so without the checkout a spec fails at
+   * once with one line instead of deep inside a Spark job. */
+  def refData(rel: String = ""): String = {
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefData)))
+      throw new org.scalatest.exceptions.TestFailedException(
+        s"reference fixtures missing: no checkout at $RefData " +
+          "(see FIXTURES.md)", 0)
+    if (rel.isEmpty) RefData else s"$RefData/$rel"
+  }
+
   /** Every message down a throwable's cause chain, joined — deferred
    * errors (raise_error inside a fold, a failed stream) surface wrapped
    * in SparkException layers, so asserting on the top message misses. */

@@ -50,7 +50,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     store.overwrite("sdb", "t", fact(2000))
     val pred = col("v") >= 100.0 && col("v") <= 200.0
 
-    val Some((frame, idx)) = store.skippingScan("sdb", "t")
+    val (frame, idx) = store.skippingScan("sdb", "t")
     frame.createOrReplaceTempView("t_view")
     val got = spark.sql("SELECT id, v, s, tag FROM t_view WHERE v >= 100.0 AND v <= 200.0")
     val want = store.read("sdb", "t").filter(pred)
@@ -79,7 +79,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     store.overwrite("sdb", "dim2",
       (0 until 7).map(i => (i, s"name$i")).toDF("tag", "tag_name"))
 
-    val Some((factFrame, factIdx)) = store.skippingScan("sdb", "fact2")
+    val (factFrame, factIdx) = store.skippingScan("sdb", "fact2")
     factFrame.createOrReplaceTempView("fact_view")
     store.readSkipping("sdb", "dim2").createOrReplaceTempView("dim_view")
     val got = spark.sql(
@@ -104,7 +104,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     store.overwrite("sdb", "mix", fact(2000))
     val pred = (col("v") >= 100.0 && col("v") <= 200.0 &&
       col("s") === "k00150") || col("s").startsWith("k0019")
-    val Some((frame, idx)) = store.skippingScan("sdb", "mix")
+    val (frame, idx) = store.skippingScan("sdb", "mix")
     frame.createOrReplaceTempView("mix_view")
     val got = spark.sql(
       """SELECT * FROM mix_view
@@ -153,7 +153,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     val n0 = store.read("sdb", "pin").count()
     store.overwrite("sdb", "pin", fact(800))
     // unpredicated: the index keeps everything
-    val Some((all, idx)) = store.skippingScan("sdb", "pin")
+    val (all, idx) = store.skippingScan("sdb", "pin")
     assert(all.count() == 800)
     assert(idx.lastKept.size == idx.inputFiles.length)
     // pinned: the frame is the OLD snapshot
@@ -169,7 +169,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     store.overwrite("sdb", "asof", fact(400))
     val pred = col("v") >= 100.0 && col("v") <= 200.0
 
-    val Some((frame, idx)) = store.skippingScan("sdb", "asof", Some(v0))
+    val (frame, idx) = store.skippingScan("sdb", "asof", Some(v0))
     frame.createOrReplaceTempView("asof_view")
     val got = spark.sql(
       "SELECT id, v, s, tag FROM asof_view WHERE v >= 100.0 AND v <= 200.0")
@@ -265,15 +265,33 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
         .filter(col("v") < 10.0 && col("tag") < 3).count())
   }
 
-  test("non-parquet tables fall back to the plain snapshot read") {
+  test("non-parquet tables are refused before any file is written") {
     val store = mkStore(nBuckets = 2)
-    register(store, "js", format = "json")
     import spark.implicits._
-    store.overwrite("sdb", "js",
-      (0 until 50).map(i => (i.toLong, s"w$i")).toDF("id", "w"))
-    assert(store.skippingScan("sdb", "js").isEmpty)
-    assert(canon(store.readSkipping("sdb", "js")) ==
-      canon(store.read("sdb", "js")))
+    def anyFile(loc: String): Boolean = {
+      val p = java.nio.file.Paths.get(loc)
+      Files.exists(p) && {
+        val w = Files.walk(p)
+        try w.anyMatch(f => Files.isRegularFile(f)) finally w.close()
+      }
+    }
+    // the SQL door: CREATE TABLE … USING json registers nothing
+    val loc = Files.createTempDirectory("graft-sqlskip-js").toString + "/t"
+    val viaSql = intercept[IllegalArgumentException] {
+      new graft.operators.QueryRunner(store).dml("sdb",
+        s"CREATE TABLE js (id BIGINT, w STRING) USING json LOCATION '$loc'")
+    }
+    assert(viaSql.getMessage.contains("parquet-native"), viaSql.getMessage)
+    assert(store.catalog.get("sdb", "js").isEmpty && !anyFile(loc))
+    // a directly registered json table: its first write refuses
+    register(store, "js2", format = "json")
+    val loc2 = store.catalog("sdb", "js2").location
+    val viaWrite = intercept[IllegalArgumentException] {
+      store.overwrite("sdb", "js2",
+        (0 until 50).map(i => (i.toLong, s"w$i")).toDF("id", "w"))
+    }
+    assert(viaWrite.getMessage.contains("parquet-native"), viaWrite.getMessage)
+    assert(!anyFile(loc2), "the refused write left files behind")
   }
 
   test("runners route through the skipping scan with identical results") {

@@ -20,7 +20,7 @@ import graft.streaming.{StreamEvent, StreamingAnalytics, StreamingIngest}
 class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("streaming ingest lands exactly the batch ingest result") {
-    val raw = s"$RefData/kinesis/transac/json/oms_owner/offenders"
+    val raw = refData("kinesis/transac/json/oms_owner/offenders")
     val batchRaw = GgLogsToParquet.unionRagged(
       Seq("base", "inserts", "deletes").map(d =>
         GgLogsToParquet.readRaw(spark, s"$raw/$d")))
@@ -63,8 +63,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("foreachBatch CDC apply reaches the batch end state") {
     val events = spark.read
-      .parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
-    val target = spark.read.parquet(s"$RefData/database/oms_owner/offenders")
+      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
+    val target = spark.read.parquet(refData("database/oms_owner/offenders"))
 
     // batch answer
     val expect = ChangeLogApplier.applyTable(target, events, "offender_id")
@@ -78,7 +78,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       primaryKey = Seq("offender_id")))
     store.overwrite("sdb", "offenders", target)
     val stream = spark.readStream.schema(events.schema)
-      .parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
+      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
     val q = StreamingIngest.applyEachBatch(spark, stream, store, "sdb", s"$tmp/ckpt")
     q.awaitTermination()
 
@@ -90,8 +90,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("foreachBatch apply also runs the chain-verified fold path") {
     val events = spark.read
-      .parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
-    val target = spark.read.parquet(s"$RefData/database/oms_owner/offenders")
+      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
+    val target = spark.read.parquet(refData("database/oms_owner/offenders"))
     val expect = ChangeLogApplier
       .applyTable(target, events, "offender_id", chainVerified = true)
       .drop(graft.model.CdcModel.AdminEventTs)
@@ -102,7 +102,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       primaryKey = Seq("offender_id")))
     store.overwrite("cdb", "offenders", target)
     val stream = spark.readStream.schema(events.schema)
-      .parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
+      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
     val q = StreamingIngest.applyEachBatch(spark, stream, store, "cdb",
       s"$tmp/ckpt", chainVerified = true)
     q.awaitTermination()
@@ -114,8 +114,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("foreachBatch apply through the merge store: scoped commits per micro-batch") {
     import graft.catalog.MergeSnapshotStore
     val events = spark.read
-      .parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
-    val target = spark.read.parquet(s"$RefData/database/oms_owner/offenders")
+      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
+    val target = spark.read.parquet(refData("database/oms_owner/offenders"))
     val expect = ChangeLogApplier.applyTable(target, events, "offender_id")
       .drop(graft.model.CdcModel.AdminEventTs)
     val tmp = Files.createTempDirectory("graft-stream-merge").toString
@@ -125,7 +125,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       primaryKey = Seq("offender_id")))
     store.overwrite("mdb", "offenders", target)
     val stream = spark.readStream.schema(events.schema)
-      .parquet(s"$RefData/kinesis/transac/parquet/oms_owner/offenders")
+      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
     val q = StreamingIngest.applyEachBatch(spark, stream, store, "mdb", s"$tmp/ckpt")
     q.awaitTermination()
     val got = store.read("mdb", "offenders").drop(graft.model.CdcModel.AdminEventTs)

@@ -90,6 +90,12 @@ class StringStatsSpec extends AnyFunSuite with SparkFixture {
     assert(got.count() == 100)
     assert(got.inputFiles.length < total,
       s"string range failed to prune: ${got.inputFiles.length} of $total")
+    // a null bound names no range
+    Seq(((null, "u0199")), (("u0100", null))).foreach { r =>
+      intercept[IllegalArgumentException] {
+        store.readStringRange("sdb", "ids", Map("uid" -> r))
+      }
+    }
   }
 
   test("readPrefix answers a prefix scan from a fraction of the files") {
