@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.col
  *
  * Bucketing rides Spark's session catalog (`bucketBy` metadata only
  * exists for catalog tables), so these are registered tables with an
- * explicit external `path`, unlike the path-based [[SnapshotStore]].
+ * explicit external `path`, unlike the path-based [[MergeSnapshotStore]].
  */
 object Bucketing {
 

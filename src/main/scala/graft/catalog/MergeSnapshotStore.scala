@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
  * A CDC batch therefore rewrites ONLY the buckets containing changed keys
  * — commit cost is proportional to the change set, not the table. At
  * 100 TB with 4096 buckets a 1-row batch rewrites ~1/4096th of the table
- * instead of all of it; the manifest rename is the same single atomic
- * commit the base [[SnapshotStore]] uses.
+ * instead of all of it; the version commit is one atomic manifest
+ * publish.
  *
  * Readers resolve the latest manifest and scan exactly the referenced
  * directories — always a complete, consistent snapshot. Vacuum retains the
@@ -79,16 +79,50 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
  * default horizon satisfies this for any sane batch; only
  * explicitly-eager (retention 0) stores must stay single-writer.
  */
-class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
+class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                          val nBuckets: Int = 32, keepVersions: Int = 2,
                          vacuumRetentionMs: Long = MergeSnapshotStore.DefaultRetentionMs,
-                         manifestLog: ManifestLog = HadoopManifestLog)
-    extends SnapshotStore(spark, catalog0, keepVersions) {
+                         manifestLog: ManifestLog = HadoopManifestLog) {
   import MergeSnapshotStore.{TombstoneEpoch, TombstoneGarbled, TombstoneRead, TombstoneUnreadable}
   require(nBuckets >= 1, "nBuckets must be >= 1")
   require(vacuumRetentionMs >= 0, "vacuumRetentionMs must be >= 0")
   private val ManifestRe = "^v=(\\d{6})\\.manifest$".r
 
+  protected def fs(path: Path) =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Runs `body` with the thread's Spark jobs labeled `desc` — the
+   * store's multi-job mutators attribute their phases in the UI and in
+   * listeners (optimization guide §1.5). OUTERMOST label wins: a
+   * mutator called inside an already-labeled operation (insertInto →
+   * mergeScoped, a registry commit fanning table writes) keeps the
+   * caller's label, so attribution reads at the operation the user
+   * invoked. Thread-local, hence safe under concurrent writers. */
+  protected[graft] def jobLabel[T](desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    if (sc.getLocalProperty("spark.job.description") != null) body
+    else {
+      sc.setJobDescription(desc)
+      try body finally sc.setJobDescription(null)
+    }
+  }
+
+  /** Runs `body` with the thread's Spark jobs labelled by one PHASE of
+   * the enclosing store operation: the head `store: <op> <db.table>`
+   * that [[jobLabel]] set stays first and the phase follows it
+   * (`store: merge db.t write`), so trace readers that key on the op
+   * keep working. The operation's label comes back after `body`; a
+   * nested phase replaces the outer one for its own extent. Outside a
+   * store label `body` runs as it is. */
+  protected[graft] def jobPhase[T](phase: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val cur = sc.getLocalProperty("spark.job.description")
+    if (cur == null || !cur.startsWith("store: ")) body
+    else {
+      sc.setJobDescription(cur.split(' ').take(3).mkString(" ") + " " + phase)
+      try body finally sc.setJobDescription(cur)
+    }
+  }
 
   /** Bucket assignment — deterministic Murmur3 of the PK value(s).
    * Composite keys hash every key column in registered order; the
@@ -436,67 +470,91 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
 
   /** Test/diagnostic hook: the bucket->directory map of one version. */
   private[graft] def manifestEntries(db: String, table: String, version: Int): Map[Int, String] =
-    readManifest(catalog0(db, table).location, version).buckets
+    readManifest(catalog(db, table).location, version).buckets
 
   /** Test/diagnostic hook: the per-bucket CARRIED-FILE lists of one
    * version (files from older commit dirs carried by reference). */
   private[graft] def manifestCarries(db: String, table: String,
                                      version: Int): Map[Int, Seq[String]] =
-    readManifest(catalog0(db, table).location, version).carries
+    readManifest(catalog(db, table).location, version).carries
 
   /** Test/diagnostic hook: (sidecar dir, applies-below version) of one
    * version's merge-on-read delete files. */
   private[graft] def manifestDeletes(db: String, table: String,
                                      version: Int): Seq[(String, Int)] =
-    readManifest(catalog0(db, table).location, version).deletes
+    readManifest(catalog(db, table).location, version).deletes
       .map(d => (d.rel, d.version))
 
   /** Test/diagnostic hook: per-file (column, min, max) stats of one version. */
   private[graft] def manifestStats(db: String, table: String,
                                    version: Int): Map[String, Seq[(String, Double, Double)]] =
-    readManifest(catalog0(db, table).location, version).stats
+    readManifest(catalog(db, table).location, version).stats
       .map { case (f, ss) => f -> ss.map(s => (s.column, s.mn, s.mx)) }
 
   /** Test/diagnostic hook: per-file truncated string bounds of one version. */
   private[graft] def manifestStrStats(db: String, table: String,
                                       version: Int): Map[String, Seq[(String, String, Option[String])]] =
-    readManifest(catalog0(db, table).location, version).strStats
+    readManifest(catalog(db, table).location, version).strStats
       .map { case (f, ys) => f -> ys.map(y => (y.column, y.lo, y.hi)) }
 
   /** Test/diagnostic hook: per-file value sets of one version. */
   private[graft] def manifestSetStats(db: String, table: String,
                                       version: Int): Map[String, Seq[(String, Seq[String])]] =
-    readManifest(catalog0(db, table).location, version).setStats
+    readManifest(catalog(db, table).location, version).setStats
       .map { case (f, ss) => f -> ss.map(s => (s.column, s.values)) }
 
-  /** Latest committed MANIFEST version (this store's version space), -1
-   * when the table has none — the base-class contract, against manifest
-   * versions so it pairs with this store's [[readVersion]]. */
-  override def latestVersion(db: String, table: String): Int = {
-    val vs = manifestVersions(catalog0(db, table).location)
+  /** Latest committed manifest version, -1 when the table has none —
+   * lets a caller PIN a version (with [[readVersion]]) so a retried
+   * computation re-reads the same bases instead of its own output. */
+  def latestVersion(db: String, table: String): Int = {
+    val vs = manifestVersions(catalog(db, table).location)
     if (vs.isEmpty) -1 else vs.last
+  }
+
+  // ------------------------------------------------------------ landing zone
+
+  /**
+   * Append-only partitioned write for the landing zone (reference
+   * gg_logs_to_parquet partitions by `part_date`,
+   * src/gg_logs_to_parquet.py:35,126-159). Not versioned: the event log is
+   * immutable, and date partitions give partition pruning downstream.
+   */
+  def appendPartitioned(db: String, table: String, df: DataFrame): Unit = {
+    val meta = catalog(db, table)
+    val w = df.write.format(meta.format).mode("append")
+    (if (meta.partitionBy.nonEmpty) w.partitionBy(meta.partitionBy: _*) else w)
+      .save(meta.location)
+  }
+
+  /** Read a non-versioned (landing-zone) table. The schema the ingest
+   * registered is handed to the reader, so planning the read runs no
+   * schema-inference job over the files' footers. */
+  def readFlat(db: String, table: String): DataFrame = {
+    val meta = catalog(db, table)
+    val reader = spark.read.format(meta.format)
+    meta.schema.fold(reader)(reader.schema).load(meta.location)
   }
 
   // ------------------------------------------------------------------- reads
 
-  override def exists(db: String, table: String): Boolean =
-    catalog0.get(db, table).exists(m => manifestVersions(m.location).nonEmpty)
+  def exists(db: String, table: String): Boolean =
+    catalog.get(db, table).exists(m => manifestVersions(m.location).nonEmpty)
 
-  override def read(db: String, table: String): DataFrame = {
-    val meta = catalog0(db, table)
+  def read(db: String, table: String): DataFrame = {
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     readVersion(meta, vs.last)
   }
 
-  override def readVersion(meta: TableMeta, version: Int): DataFrame =
+  def readVersion(meta: TableMeta, version: Int): DataFrame =
     load(meta, readManifest(meta.location, version), None)
 
   /** The latest committed schema under its logical column names, read
    * from the manifest — what a caller that only needs the table's
    * shape asks for, without planning a scan. */
   def committedSchema(db: String, table: String): StructType = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     MergeSnapshotStore.plainLogical(readManifest(meta.location, vs.last).schema)
@@ -519,7 +577,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   /** Scan only the given buckets of the latest snapshot — the file-pruned
    * read a key-scoped merge or point-lookup wants. */
   def readBuckets(db: String, table: String, buckets: Seq[Int]): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     load(meta, readManifest(meta.location, vs.last), Some(buckets.toSet))
@@ -550,7 +608,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   def pointLookup(db: String, table: String, keys: DataFrame,
                   ranges: Map[String, (Double, Double)] = Map.empty,
                   version: Option[Int] = None): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     if (!meta.hasPrimaryKey) throw new IllegalStateException(
       s"pointLookup needs a registered PK for ${meta.qualified}")
     val pks = meta.primaryKey
@@ -790,7 +848,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                 ranges: Map[String, (Double, Double)],
                 version: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readRange needs at least one column range")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     skippingWhere(meta, m, rangesPredicate(m, ranges))
   }
@@ -853,31 +911,38 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * [ceil(lo), floor(hi)], and timestamps likewise in micros. A numeric
    * column compares with the double itself: the analyzer wraps a
    * non-double column in `cast(c AS double)`, which the walk judges
-   * like `c`. An infinite bound is an open side on every column type,
-   * and a range whose both sides are open still refuses NULL. A NaN
-   * bound is refused: Spark orders NaN above every value, so it names
-   * no range. */
+   * like `c`. On a date or timestamp column a bound at or beyond the
+   * type's value range (`Int` days, `Long` micros; ±Infinity included)
+   * is an open side when it lies beyond its own end — a low bound
+   * below, a high bound above — and an empty read when it lies beyond
+   * the other end; a range whose both sides are open still refuses
+   * NULL. A NaN bound is refused: Spark orders NaN above every value,
+   * so it names no range. */
   private def rangesPredicate(m: Manifest,
                               ranges: Map[String, (Double, Double)]): Column =
     ranges.map { case (c, (lo, hi)) =>
       require(!lo.isNaN && !hi.isNaN,
         s"range [$lo, $hi] on '$c' has a NaN bound — NaN orders above " +
           "every value and names no range")
-      def bound(b: Double, round: Double => Double): Option[Column] =
-        m.schema(c).dataType match {
-          case DateType | TimestampType if b.isInfinite => None
-          case DateType => Some(lit(java.sql.Date.valueOf(
-            java.time.LocalDate.ofEpochDay(round(b).toLong))))
-          case TimestampType =>
-            val micros = round(b).toLong
-            Some(lit(java.time.Instant.ofEpochSecond(
-              Math.floorDiv(micros, 1000000L),
-              Math.floorMod(micros, 1000000L) * 1000L)))
-          case _ => Some(lit(b))
-        }
-      (bound(lo, math.ceil).map(col(c) >= _) ++
-        bound(hi, math.floor).map(col(c) <= _))
-        .reduceOption(_ && _).getOrElse(col(c).isNotNull)
+      val temporal: Option[(Double, Double, Long => Any)] = m.schema(c).dataType match {
+        case DateType => Some((Int.MinValue.toDouble, Int.MaxValue.toDouble,
+          (d: Long) => java.time.LocalDate.ofEpochDay(d)))
+        case TimestampType => Some((Long.MinValue.toDouble, Long.MaxValue.toDouble,
+          (micros: Long) => java.time.Instant.ofEpochSecond(
+            Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)))
+        case _ => None
+      }
+      temporal match {
+        case None => col(c) >= lit(lo) && col(c) <= lit(hi)
+        case Some((min, max, _)) if math.ceil(lo) > max || math.floor(hi) < min =>
+          lit(false)
+        case Some((min, max, literal)) =>
+          val l = math.ceil(lo)
+          val h = math.floor(hi)
+          (Option.when(l > min)(col(c) >= lit(literal(l.toLong))) ++
+            Option.when(h < max)(col(c) <= lit(literal(h.toLong))))
+            .reduceOption(_ && _).getOrElse(col(c).isNotNull)
+      }
     }.reduce(_ && _)
 
   /** The DML paths' pruned-file read (find, fold, file-scoped
@@ -923,7 +988,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
         s"readStringRange on '$c' has a null bound — no row compares " +
           "TRUE against NULL; pass both bounds")
     }
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     skippingWhere(meta, m, ranges.map { case (c, (lo, hi)) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
@@ -948,7 +1013,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     require(probes.nonEmpty, "readEquals needs at least one probed column")
     require(probes.values.forall(_.nonEmpty),
       "every probed column needs at least one value")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     // probe values must match the column's own type family: the set
     // judge compares canonical STRINGS while the exact predicate
@@ -980,7 +1045,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   def readPrefix(db: String, table: String, column: String, prefix: String,
                  version: Option[Int] = None): DataFrame = {
     require(prefix.nonEmpty, "readPrefix needs a non-empty prefix")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     skippingWhere(meta, m, col(column).startsWith(prefix))
   }
@@ -1031,7 +1096,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def readWhere(db: String, table: String, predicate: Column,
                 version: Option[Int] = None): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     skippingWhere(meta, m, predicate)
   }
@@ -1041,7 +1106,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   private[graft] def prunedFiles(db: String, table: String,
                                  predicate: Column,
                                  version: Option[Int] = None): Seq[String] = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     listDataFiles(meta, m, None)
       .filter(fileMayMatch(resolvePredicate(m, predicate), meta, m))
@@ -1065,15 +1130,14 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * domain SQL over temp views (reference src/apply_to_domains.py:54-68)
    * and the glue_query CLI predicate (reference dev/glue_query:5-9) —
    * so [[graft.operators.DomainRunner]] and
-   * [[graft.operators.QueryRunner]] route through it when their store
-   * is a [[MergeSnapshotStore]].
+   * [[graft.operators.QueryRunner]] route through it.
    */
-  override def readSkipping(db: String, table: String): DataFrame =
+  def readSkipping(db: String, table: String): DataFrame =
     readSkipping(db, table, None)
 
   /** [[readSkipping]] pinned to a committed-and-retained version. */
-  override def readSkipping(db: String, table: String,
-                            version: Option[Int]): DataFrame =
+  def readSkipping(db: String, table: String,
+                   version: Option[Int]): DataFrame =
     skippingScan(db, table, version)._1
 
   /** [[readSkipping]]'s body, exposing the [[StoreFileIndex]] for
@@ -1081,7 +1145,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   private[graft] def skippingScan(db: String, table: String,
                                   version: Option[Int] = None)
       : (DataFrame, StoreFileIndex) = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     // statuses (size + mtime) off the SHARED bucket enumeration —
     // sizes feed sizeInBytes so SQL joins auto-broadcast small store
@@ -1560,19 +1624,23 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
 
   // ----------------------------------------------------------------- commits
 
-  /** Full-snapshot commit (same contract as the base store): every bucket
-   * is rewritten. Used for bootstrap loads and schema-evolving domain
-   * writes; CDC batches use [[mergeScoped]]. Replaces the table
+  /** Full-snapshot commit (the reference's Delta overwrite, reference
+   * src/apply_change_log_to_delta.py:218-245): every bucket is
+   * rewritten. With `mergeSchema = true` the new snapshot's schema is
+   * the union of the committed one and `df`'s (Delta's `mergeSchema` on
+   * the domain outputs, reference src/apply_to_domains.py:213-228).
+   * Used for bootstrap loads and schema-evolving domain writes; CDC
+   * batches use [[mergeScoped]]. Replaces the table
    * wholesale, so losing a commit race never invalidates the written
    * data — the CAS retry just republishes at the next version (last
    * overwrite wins, the natural semantics of "overwrite"). */
-  override def overwrite(db: String, table: String, df: DataFrame,
-                         mergeSchema: Boolean = false): Unit = {
-    val meta = catalog0(db, table)
+  def overwrite(db: String, table: String, df: DataFrame,
+                mergeSchema: Boolean = false): Unit = {
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     val out =
       if (mergeSchema && vs.nonEmpty)
-        SnapshotStore.alignToUnion(readManifest(meta.location, vs.last).schema, df)
+        MergeSnapshotStore.alignToUnion(readManifest(meta.location, vs.last).schema, df)
       else df
     overwriteWith(meta, out)
   }
@@ -1681,7 +1749,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   def mergeScoped(db: String, table: String, changedKeys: DataFrame)
                  (rewrite: DataFrame => DataFrame): Seq[Int] = jobLabel(
       s"store: merge $db.$table") {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     if (!meta.hasPrimaryKey) throw new IllegalStateException(
       s"mergeScoped needs a registered PK for ${meta.qualified}")
     val pks = meta.primaryKey
@@ -1737,7 +1805,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def insertInto(db: String, table: String, rows: DataFrame): Long = jobLabel(
       s"store: insert $db.$table") {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     require(meta.hasPrimaryKey,
       s"INSERT INTO needs a registered PK for ${meta.qualified} — " +
         "PK-less tables append through overwrite() of the union (or " +
@@ -1788,7 +1856,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * silently retype drifted columns. */
   private[graft] def alignToCommittedSchema(db: String, table: String,
       rows: DataFrame, op: String): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     require(manifestVersions(meta.location).nonEmpty,
       s"bootstrap ${meta.qualified} with overwrite() before $op")
     val schema = committedSchema(db, table)
@@ -2049,7 +2117,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                   mode: MergeSnapshotStore.DeleteMode =
                     MergeSnapshotStore.CopyOnWrite): Long = jobLabel(
       s"store: delete $db.$table") {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty,
       s"nothing committed at ${meta.qualified} to delete from")
@@ -2343,7 +2411,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                   assignments: Map[String, Column]): Long = jobLabel(
       s"store: update $db.$table") {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty,
       s"nothing committed at ${meta.qualified} to update")
@@ -2438,7 +2506,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     require(columns.nonEmpty, "advisor needs at least one column")
     require(adviseAbove > 0 && adviseAbove < 1,
       "adviseAbove is a strict scan fraction in (0, 1)")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     val files = listDataFiles(meta, m, None)
     columns.map { c =>
@@ -2516,7 +2584,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       : Seq[MergeSnapshotStore.BucketHealth] = {
     require(adviseAbove > 0 && adviseAbove < 1,
       "adviseAbove is a strict scan fraction in (0, 1)")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     val files = listDataFiles(meta, m, None)
     val bounds = fileBounds(m, files, column)
@@ -2553,7 +2621,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                               dims: Seq[(String, Option[(Double, Double)])],
                               filesPerBucket: Int, buckets: Seq[Int],
                               bits: Int = 8): CompactionReport = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     compactBucketsClusteredCore(meta, dims, filesPerBucket, buckets, bits,
       Set.empty)
   }
@@ -2621,7 +2689,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       : Seq[MergeSnapshotStore.FileHealth] = {
     require(adviseAbove > 0 && adviseAbove < 1,
       "adviseAbove is a strict scan fraction in (0, 1)")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     val files = listDataFiles(meta, m, None)
     val bounds = fileBounds(m, files, column)
@@ -2650,7 +2718,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                             dims: Seq[(String, Option[(Double, Double)])],
                             targetFiles: Int, files: Seq[String],
                             bits: Int = 8): CompactionReport = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     compactFilesClusteredCore(meta, dims, targetFiles, files, bits, Set.empty)
   }
 
@@ -2735,7 +2803,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       : MergeSnapshotStore.DeleteDebt = {
     require(adviseAtSidecars >= 1, "adviseAtSidecars must be >= 1")
     require(adviseAtRows >= 1L, "adviseAtRows must be >= 1")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     val live = m.deletes.count(d =>
       (m.buckets.values ++ m.carries.values.flatten).exists(p =>
@@ -2817,7 +2885,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * clobber a racing commit; re-run against the new snapshot.
    */
   def compactDebt(db: String, table: String): CompactionReport = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     val base = vs.last
@@ -2992,7 +3060,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   def rebucket(db: String, table: String,
                newBuckets: Int): CompactionReport = {
     require(newBuckets >= 1, "newBuckets must be >= 1")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     require(meta.hasPrimaryKey,
       s"rebucket re-hashes PK buckets — ${meta.qualified} has no PK " +
         "(PK-less tables hold one logical bucket; size files with compact)")
@@ -3050,7 +3118,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def renameColumn(db: String, table: String,
                    oldName: String, newName: String): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty,
       s"bootstrap ${meta.qualified} with overwrite() before renaming")
@@ -3156,7 +3224,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def renamePrimaryKeyColumn(db: String, table: String,
                              oldName: String, newName: String): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     require(meta.primaryKey.exists(_.equalsIgnoreCase(oldName)),
       s"$oldName is not a PRIMARY KEY column of ${meta.qualified} " +
         s"(key: ${meta.primaryKey.mkString(", ")}) — use renameColumn()")
@@ -3261,7 +3329,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * properties reference. Returns the new head version.
    */
   def dropColumn(db: String, table: String, name: String): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty,
       s"bootstrap ${meta.qualified} with overwrite() before dropping")
@@ -3325,7 +3393,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def addColumn(db: String, table: String, name: String,
                 dataType: DataType): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty,
       s"bootstrap ${meta.qualified} with overwrite() before adding columns")
@@ -3403,7 +3471,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def alterColumnType(db: String, table: String, name: String,
                       to: DataType): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty,
       s"bootstrap ${meta.qualified} with overwrite() before widening")
@@ -3524,12 +3592,22 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     }
   }
 
-  /** [[SnapshotStore.changesBetween]] comparing versions by PHYSICAL
-   * column identity, so the feed survives a rename between the two
-   * versions (output columns spell the NEWER version's names). */
-  override def changesBetween(db: String, table: String, fromVersion: Int,
-                              toVersion: Int): DataFrame = {
-    val meta = catalog0(db, table)
+  /**
+   * Change data feed between two committed versions: the I/U/D
+   * changelog ([[graft.operators.Scd.snapshotDiff]] contract, keyed by
+   * the registered PK) that turns `fromVersion`'s snapshot into
+   * `toVersion`'s — the Delta/Iceberg CDF surface rebuilt from
+   * snapshots, so any pair of RETAINED versions feeds delta-sized
+   * consumers ([[graft.operators.Ivm]] folds, downstream replication,
+   * audits) even though the writer recorded no changelog at commit
+   * time. Cost is one full-outer join of the two manifest-resolved
+   * version scans. Versions compare by PHYSICAL column identity, so the
+   * feed survives a rename between them (output columns spell the
+   * NEWER version's names).
+   */
+  def changesBetween(db: String, table: String, fromVersion: Int,
+                     toVersion: Int): DataFrame = {
+    val meta = catalog(db, table)
     if (!meta.hasPrimaryKey) throw new IllegalStateException(
       s"changesBetween needs a registered PK for ${meta.qualified} — " +
         "PK-less tables get the multiset feed (multisetChangesBetween)")
@@ -3539,16 +3617,25 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     graft.operators.Scd.snapshotDiff(old0, new0, meta.primaryKey)
   }
 
-  /** [[SnapshotStore.multisetChangesBetween]] under the same
-   * physical-identity alignment. */
-  override def multisetChangesBetween(db: String, table: String,
-                                      fromVersion: Int,
-                                      toVersion: Int): DataFrame = {
-    val meta = catalog0(db, table)
+  /**
+   * The PK-LESS change feed: the exact MULTISET delta between two
+   * retained versions — per distinct ROW IMAGE, how many physical
+   * copies arrived (`change` = I) or left (D), with the net `copies`
+   * count. Raw crawl shards and log dumps have no row identity for the
+   * keyed diff, but takedown audits and downstream replication still
+   * need what-changed; counting by the full row is the only identity
+   * such a table has. A row whose copy count is unchanged does not
+   * appear; an UPDATE reads as one D and one I. Same physical-identity
+   * alignment as [[changesBetween]].
+   */
+  def multisetChangesBetween(db: String, table: String,
+                             fromVersion: Int,
+                             toVersion: Int): DataFrame = {
+    val meta = catalog(db, table)
     val old0 = alignedOld(meta, fromVersion, toVersion)
     val new0 = readVersion(meta, toVersion)
     requireOneEra(meta, old0, new0, fromVersion, toVersion)
-    SnapshotStore.multisetDiff(old0, new0,
+    MergeSnapshotStore.multisetDiff(old0, new0,
       meta.qualified, fromVersion, toVersion)
   }
 
@@ -3581,7 +3668,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * the rewind is still wanted.
    */
   def restore(db: String, table: String, toVersion: Int): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     val head = vs.last
@@ -3637,7 +3724,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def filesOf(db: String, table: String,
               version: Option[Int] = None): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
     val carried = m.carries.values.flatten.toSet
     val rows: java.util.List[org.apache.spark.sql.Row] =
@@ -3679,7 +3766,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * version read.
    */
   def versionAt(db: String, table: String, epochMs: Long): Int = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     val stamped = vs.map(v => v -> readManifest(meta.location, v).at)
@@ -3719,7 +3806,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    */
   def countRows(db: String, table: String,
                 version: Option[Int] = None): Long = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val v = resolveVersion(meta, version)
     manifestRowCount(db, table, version).getOrElse(
       readVersion(meta, v).count())
@@ -3731,7 +3818,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * manifest read plus the dir listings planning already pays. */
   def manifestRowCount(db: String, table: String,
                        version: Option[Int] = None): Option[Long] = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val v = resolveVersion(meta, version)
     val m = readManifest(meta.location, v)
     // count what the READ would actually resolve: the live file listing
@@ -3786,7 +3873,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                          predicate: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name '$name' must be a plain identifier")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val key = MergeSnapshotStore.CheckPropPrefix + name
     require(!meta.properties.contains(key),
       s"${meta.qualified} already has a CHECK constraint named $name " +
@@ -3805,7 +3892,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
 
   /** Drop a CHECK constraint added by [[addCheckConstraint]]. */
   def dropCheckConstraint(db: String, table: String, name: String): Unit = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val key = MergeSnapshotStore.CheckPropPrefix + name
     require(meta.properties.contains(key),
       s"${meta.qualified} has no CHECK constraint named $name")
@@ -3834,7 +3921,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * could answer.
    */
   def describeDetail(db: String, table: String): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     val m = readManifest(meta.location, vs.last)
@@ -3876,7 +3963,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   /** SHOW TBLPROPERTIES — the catalog's property map as (key, value)
    * rows, sorted for stable output. */
   def showProperties(db: String, table: String): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val rows = meta.properties.toSeq.sortBy(_._1)
       .map { case (k, v) => org.apache.spark.sql.Row(k, v) }
     spark.createDataFrame(
@@ -3911,7 +3998,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one entry")
     props.keys.foreach(guardPropKey)
     catalog.synchronized {
-      val live = catalog0(db, table)
+      val live = catalog(db, table)
       val cand = live.copy(properties = live.properties ++ props)
       // the store's own parsers ARE the validators
       if (props.contains(MergeSnapshotStore.RetentionProp))
@@ -3932,7 +4019,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
     keys.foreach(guardPropKey)
     catalog.synchronized {
-      val live = catalog0(db, table)
+      val live = catalog(db, table)
       catalog.register(live.copy(properties = live.properties -- keys))
     }
   }
@@ -3960,7 +4047,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * registration-level trailer rows (primary key, partitioning,
    * format, location). Driver-side manifest parse only. */
   def describeTable(db: String, table: String): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     val schema: Option[StructType] =
       if (vs.nonEmpty)
@@ -3995,7 +4082,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * re-attach). With [[dropTable]]'s external semantics this is the
    * full detach/re-attach round trip as text. */
   def showCreateTable(db: String, table: String): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     val schema: Option[StructType] =
       if (vs.nonEmpty)
@@ -4031,7 +4118,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   }
 
   def history(db: String, table: String): DataFrame = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val rows: java.util.List[org.apache.spark.sql.Row] =
       new java.util.ArrayList()
     manifestVersions(meta.location).reverse.foreach { v =>
@@ -4106,7 +4193,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                  dstDb: String, dstTable: String, dstLocation: String,
                  version: Option[Int] = None,
                  deep: Boolean = false): Int = {
-    val srcMeta = catalog0(srcDb, srcTable)
+    val srcMeta = catalog(srcDb, srcTable)
     val srcVer = resolveVersion(srcMeta, version)
     val m = readManifest(srcMeta.location, srcVer)
     require(manifestVersions(dstLocation).isEmpty,
@@ -4294,7 +4381,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * detached half-deleted table. Returns true when data was purged.
    */
   def dropTable(db: String, table: String, purge: Boolean = false): Boolean = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     if (purge) {
       // the guard reads the held locations' ACTUAL references, not the
       // raw index — a severed clone whose hold has not auto-released
@@ -4373,7 +4460,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
       : Option[CompactionReport] = {
     require(partialAbove > 0 && partialAbove <= 1,
       "partialAbove is an advised-fraction gate in (0, 1]")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val debt = deleteDebt(db, table, adviseAtSidecars, adviseAtRows)
     if (layout.isEmpty) {
       if (!debt.compactAdvised) return None
@@ -4446,14 +4533,14 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
    * Compaction in the merge layout is bucket-granular: a PK table's
    * [[writeData]] already collapses each bucket to one file, so a full
    * rewrite IS the compacted form and `targetFiles` only shapes PK-less
-   * tables (single logical bucket, parallel files). Overridden because the
-   * base implementation's `repartition(targetFiles)` would be silently
-   * re-partitioned on the bucket column here.
+   * tables (single logical bucket, parallel files) — a plain
+   * `repartition(targetFiles)` would be silently re-partitioned on the
+   * bucket column here.
    */
-  override def compact(db: String, table: String, targetFiles: Int)
+  def compact(db: String, table: String, targetFiles: Int)
       : CompactionReport = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     val df = readVersion(meta, vs.last)
@@ -4519,7 +4606,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
                        dims: Seq[(String, Option[(Double, Double)])],
                        filesPerBucket: Int, bits: Int = 8): CompactionReport = {
     require(filesPerBucket >= 1, "filesPerBucket must be >= 1")
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     require(meta.hasPrimaryKey,
       s"compactClustered keeps PK bucketing — ${meta.qualified} has no PK " +
         "(PK-less tables: write through Layout.writeClustered instead)")
@@ -4957,7 +5044,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   def vacuum(db: String, table: String,
              retainMs: Option[Long] = None,
              dryRun: Boolean = false): VacuumReport = {
-    val meta = catalog0(db, table)
+    val meta = catalog(db, table)
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     retainMs.foreach(r => require(r >= 0, "retainMs must be >= 0"))
@@ -5033,7 +5120,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
     // concurrent cloners of the same source cannot lose each other's
     // hold (cross-PROCESS raciness is the metastore's to arbitrate)
     catalog.synchronized {
-      val live = catalog0(db, table)
+      val live = catalog(db, table)
       val holds = holdsOf(live)
       if (!holds.contains(borrowerLocation))
         catalog.register(live.copy(properties = live.properties +
@@ -5050,7 +5137,7 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
   def releaseHold(db: String, table: String,
                   borrowerLocation: String): Unit = {
     catalog.synchronized {
-      val live = catalog0(db, table)
+      val live = catalog(db, table)
       val kept = holdsOf(live).filterNot(_ == borrowerLocation)
       catalog.register(live.copy(properties =
         if (kept.isEmpty) live.properties - MergeSnapshotStore.HoldsProp
@@ -5380,6 +5467,45 @@ class MergeSnapshotStore(spark: SparkSession, catalog0: Catalog,
 }
 
 object MergeSnapshotStore {
+  /** The multiset-delta core of
+   * [[MergeSnapshotStore.multisetChangesBetween]]: per distinct row
+   * image, copies arrived/left between the two frames. */
+  private[catalog] def multisetDiff(old0: DataFrame, new0: DataFrame,
+                                    qualified: String, fromVersion: Int,
+                                    toVersion: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{abs, col, lit, when}
+    val cols = old0.columns.toSeq
+    require(cols.nonEmpty && new0.columns.toSeq == cols,
+      s"multiset diff needs identical schemas on both versions of " +
+        s"$qualified (a schema-evolving overwrite sits between " +
+        s"$fromVersion and $toVersion — diff within one schema era)")
+    val o = old0.groupBy(cols.map(col): _*).count()
+      .withColumnRenamed("count", "__n0")
+    val n = new0.groupBy(cols.map(col): _*).count()
+      .withColumnRenamed("count", "__n1")
+    // null-safe equality: NULL-valued cells are part of the row image
+    // (groupBy already grouped them), so the join must match them too
+    val cond = cols.map(c => o(c) <=> n(c)).reduce(_ && _)
+    val joined = o.join(n, cond, "full_outer")
+    val n0 = org.apache.spark.sql.functions.coalesce(col("__n0"), lit(0L))
+    val n1 = org.apache.spark.sql.functions.coalesce(col("__n1"), lit(0L))
+    joined
+      .select(cols.map(c =>
+        org.apache.spark.sql.functions.coalesce(o(c), n(c)).as(c)) ++
+        Seq((n1 - n0).as("__d")): _*)
+      .filter(col("__d") =!= 0L)
+      .withColumn("change", when(col("__d") > 0, lit("I")).otherwise(lit("D")))
+      .withColumn("copies", abs(col("__d")))
+      .drop("__d")
+  }
+
+  /** Align `df` to the union of `existing` and `df.schema` (nulls for gaps). */
+  private[catalog] def alignToUnion(existing: StructType, df: DataFrame): DataFrame = {
+    val have = df.schema.map(f => f.name.toLowerCase).toSet
+    val missing = existing.filterNot(f => have.contains(f.name.toLowerCase))
+    missing.foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  }
+
   /** How [[MergeSnapshotStore.deleteWhere]] realizes a delete.
    *
    *  - [[CopyOnWrite]] (default): rewrite every bucket owning a matched

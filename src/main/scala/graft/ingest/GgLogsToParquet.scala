@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType, TimestampType}
 
-import graft.catalog.SnapshotStore
+import graft.catalog.MergeSnapshotStore
 
 /**
  * Stage 1 — raw GoldenGate JSON event logs -> hashed, date-partitioned
@@ -76,7 +76,7 @@ object GgLogsToParquet {
    * reference's `write_catalog(enableUpdateCatalog=True, partitionKeys=
    * PARTITION_BY)` at ingest (src/gg_logs_to_parquet.py:106-123), which
    * keeps the Glue table definition in step with every landing write. */
-  def run(spark: SparkSession, store: SnapshotStore, rawPath: String,
+  def run(spark: SparkSession, store: MergeSnapshotStore, rawPath: String,
           db: String, table: String, schema: Option[StructType] = None): Unit = {
     val landed = ingest(readRaw(spark, rawPath, schema))
     val meta = store.catalog(db, table)

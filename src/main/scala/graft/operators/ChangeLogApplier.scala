@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.catalog.{MergeSnapshotStore, SnapshotStore}
+import graft.catalog.MergeSnapshotStore
 import graft.model.CdcModel._
 
 /**
@@ -398,11 +398,11 @@ object ChangeLogApplier {
    * the jobs in parallel) — the reference serializes them in a Python for
    * loop (:551). Returns the processed target-table names (the reference
    * fires its Kinesis-notify stub per table here, :659-660 — kept as a
-   * caller-supplied hook). On a [[MergeSnapshotStore]] a last-wins table
-   * commits through [[mergeLastWins]] and a chain-verified one through
-   * `applyFold` inside `mergeScoped`.
+   * caller-supplied hook). A last-wins table commits through
+   * [[mergeLastWins]] and a chain-verified one through `applyFold` inside
+   * `mergeScoped`.
    */
-  def run(spark: SparkSession, store: SnapshotStore, db: String,
+  def run(spark: SparkSession, store: MergeSnapshotStore, db: String,
           eventLog: DataFrame, chainVerified: Boolean = false,
           parallelism: Int = 4,
           onTableDone: String => Unit = _ => ()): Seq[String] = {
@@ -441,22 +441,16 @@ object ChangeLogApplier {
         Future {
           val pk = store.catalog.primaryKey(db, tbl)
           val events = cached.filter(col("table").isin(srcs: _*))
-          store match {
-            case ms: MergeSnapshotStore =>
-              // partition-scoped commit: read + rewrite ONLY the PK-hash
-              // buckets the batch touches; untouched buckets carry into
-              // the new version by manifest reference. Commit cost is
-              // proportional to the change set, not the table.
-              val mapped = mapEvents(events, ms.committedSchema(db, tbl))
-              if (chainVerified)
-                ms.mergeScoped(db, tbl, mapped.select(pk.map(col): _*)) { old =>
-                  applyFold(old, mapped, pk, chainVerified = true)
-                }
-              else mergeLastWins(ms, db, tbl, mapped, pk)
-            case _ =>
-              val target = store.read(db, tbl)
-              store.overwrite(db, tbl, applyTable(target, events, pk, chainVerified))
-          }
+          // partition-scoped commit: read + rewrite ONLY the PK-hash
+          // buckets the batch touches; untouched buckets carry into the
+          // new version by manifest reference. Commit cost is
+          // proportional to the change set, not the table.
+          val mapped = mapEvents(events, store.committedSchema(db, tbl))
+          if (chainVerified)
+            store.mergeScoped(db, tbl, mapped.select(pk.map(col): _*)) { old =>
+              applyFold(old, mapped, pk, chainVerified = true)
+            }
+          else mergeLastWins(store, db, tbl, mapped, pk)
           onTableDone(tbl)
           tbl
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.catalog.SnapshotStore
+import graft.catalog.MergeSnapshotStore
 import graft.model.DomainDef
 
 /**
@@ -21,7 +21,7 @@ import graft.model.DomainDef
  * gets a `process_id` stamp, and snapshot-overwrites its target with
  * schema evolution (mergeSchema, :213-228).
  */
-final class DomainRunner(spark: SparkSession, store: SnapshotStore) {
+final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
   import spark.implicits._
 
   /** CSV scan with header (reference src/apply_to_domains.py:181-197). */
@@ -45,8 +45,8 @@ final class DomainRunner(spark: SparkSession, store: SnapshotStore) {
 
   /** Run one definition: temp views for dependencies, Catalyst SQL,
    * process-id stamp (reference `run_statement`, src/apply_to_domains.py:54-68).
-   * On a [[graft.catalog.MergeSnapshotStore]] the dependency views are
-   * SKIPPING scans ([[graft.catalog.MergeSnapshotStore.readSkipping]]):
+   * The dependency views are SKIPPING scans
+   * ([[graft.catalog.MergeSnapshotStore.readSkipping]]):
    * any predicate the Resolution SQL pushes to a scan prunes files
    * through the manifest stats before a footer opens — results are
    * identical (pruning is a sound superset), only the file list
@@ -62,7 +62,7 @@ final class DomainRunner(spark: SparkSession, store: SnapshotStore) {
   def runStatement(db: String, d: DomainDef, processId: Long,
                    pins: Map[String, Int]): DataFrame = {
     d.dependencies.foreach { dep =>
-      DomainRunner.storeView(store, db, dep.trim, pins.get(dep.trim))
+      store.readSkipping(db, dep.trim, pins.get(dep.trim))
         .createOrReplaceTempView(dep.trim)
     }
     spark.sql(d.resolution).withColumn("process_id", lit(processId))
@@ -88,18 +88,6 @@ final class DomainRunner(spark: SparkSession, store: SnapshotStore) {
 }
 
 object DomainRunner {
-  /** The store-table frame the SQL surfaces query: the store's own
-   * [[graft.catalog.SnapshotStore.readSkipping]] capability (manifest-
-   * stats file skipping where the store supports it, the plain snapshot
-   * read at the base contract) — one seam shared by [[DomainRunner]]
-   * and [[QueryRunner]], dispatching on the interface so wrappers and
-   * future stores keep skipping without the runners knowing their
-   * class. */
-  private[operators] def storeView(store: SnapshotStore, db: String,
-                                   table: String,
-                                   version: Option[Int] = None): DataFrame =
-    store.readSkipping(db, table, version)
-
   /**
    * Catalog-registration type narrowing (reference `glue_datatypes` +
    * `schema_to_columns`, src/apply_to_domains.py:121-144): anything outside

@@ -325,9 +325,8 @@ object Ivm {
    * Each [[commit]] folds one I/U/D changelog (the [[Scd.snapshotDiff]]
    * contract, keyed by the base table's registered PK) into BOTH tables:
    * the base via a partition-scoped [[graft.catalog.MergeSnapshotStore
-   * .mergeScoped]] commit when the store is a merge store (only the
-   * PK-hash buckets holding changed keys are rewritten — commit cost is
-   * changelog-proportional at 100 TB) and a full overwrite otherwise;
+   * .mergeScoped]] commit (only the PK-hash buckets holding changed keys
+   * are rewritten — commit cost is changelog-proportional at 100 TB);
    * the aggregate via [[applyCountSumDelta]] (delta-sized work, group-
    * cardinality merge). Both plans are pinned to the PRE-commit versions
    * before either commit happens, so the maintenance math always sees a
@@ -339,7 +338,7 @@ object Ivm {
    * DETECTED and repaired, and re-running a completed one is refused —
    * never silently double-folded.
    */
-  final class MaintainedCountSum(store: graft.catalog.SnapshotStore,
+  final class MaintainedCountSum(store: graft.catalog.MergeSnapshotStore,
       db: String, baseTable: String, aggTable: String,
       group: Column, value: Column) {
 
@@ -369,8 +368,8 @@ object Ivm {
    * it from the initial base snapshot, and its changelog delta rule
    * `fold(agg, oldSnap, newSnap, changes, keys)`.
    *
-   * `scope` (optional) makes the table's commit PARTITION-SCOPED on a
-   * merge store: `scope(oldSnap, newSnap, changes, keys)` returns the
+   * `scope` (optional) makes the table's commit PARTITION-SCOPED:
+   * `scope(oldSnap, newSnap, changes, keys)` returns the
    * frame of the AGGREGATE's own registered-PK values the batch can
    * touch, and the fold then receives ONLY those buckets' current rows
    * (instead of the whole table) and returns their replacement — so a
@@ -378,8 +377,7 @@ object Ivm {
    * commits at changelog-proportional cost, exactly like the base. The
    * fold must be scope-closed: every row it removes or adds is keyed
    * within the scope (the merge store fail-fasts on strays). Without
-   * `scope` — or on a store that is not a [[graft.catalog
-   * .MergeSnapshotStore]], or a table with no registered PK — the fold
+   * `scope` — or on a table with no registered PK — the fold
    * sees the whole aggregate and the commit is a full overwrite, which
    * is right for group-cardinality dashboards. */
   final case class MaintainedAgg(
@@ -676,7 +674,7 @@ object Ivm {
    * ([[graft.streaming.StreamingAnalytics.maintainAggregate]])
    * instead pins base versions per batch id.
    */
-  final class MaintainedAggregates(store: graft.catalog.SnapshotStore,
+  final class MaintainedAggregates(store: graft.catalog.MergeSnapshotStore,
       db: String, baseTable: String, aggs: Seq[MaintainedAgg]) {
     require(aggs.nonEmpty, "need at least one maintained aggregate")
     require(aggs.map(_.table).distinct.size == aggs.size,
@@ -857,13 +855,8 @@ object Ivm {
           target.join(gone, ks, "left_anti")
             .unionByName(arrived.select(target.columns.map(col).toIndexedSeq: _*))
         val newSnap = folded(old)
-        val mergeStore = store match {
-          case ms: graft.catalog.MergeSnapshotStore => Some(ms)
-          case _ => None
-        }
         def scopedKeysOf(a: MaintainedAgg): Option[DataFrame] =
           for {
-            ms <- mergeStore
             sc <- a.scope
             if store.catalog(db, a.table).hasPrimaryKey
           } yield sc(old, newSnap, chg, ks)
@@ -887,12 +880,7 @@ object Ivm {
         // concurrent winner moved it) and wrongly mark this digest
         // applied. Crashes (no catch runs) keep the documented
         // fresh-incomplete semantics, which are sound single-writer.
-        try
-          store match {
-            case ms: graft.catalog.MergeSnapshotStore =>
-              ms.mergeScoped(db, baseTable, chg.select(ks.map(col): _*))(folded)
-            case s => s.overwrite(db, baseTable, newSnap)
-          }
+        try store.mergeScoped(db, baseTable, chg.select(ks.map(col): _*))(folded)
         catch {
           case e: java.util.ConcurrentModificationException =>
             preBatchMarker match {
@@ -913,7 +901,7 @@ object Ivm {
         Materialize.fanOut(newAggs) {
           case (a, Left(df)) => store.overwrite(db, a.table, df)
           case (a, Right(keysFrame)) =>
-            mergeStore.get.mergeScoped(db, a.table, keysFrame)(rows =>
+            store.mergeScoped(db, a.table, keysFrame)(rows =>
               a.fold(rows, old, newSnap, chg, ks))
         }
         writeMarker(changes.sparkSession,
@@ -975,7 +963,7 @@ object Ivm {
      * TIME TRAVEL for the dashboards: every maintained aggregate AS OF
      * base version `toVersion`, rebuilt by seeding from `fromVersion`'s
      * retained snapshot and folding the per-step changelogs the store
-     * derives after the fact ([[graft.catalog.SnapshotStore
+     * derives after the fact ([[graft.catalog.MergeSnapshotStore
      * .changesBetween]]) — so the registry answers "what did this
      * dashboard show at version N?" even though no writer recorded a
      * changelog and the aggregate tables only hold their LATEST state.

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 
-import graft.catalog.SnapshotStore
+import graft.catalog.MergeSnapshotStore
 
 /**
  * Stage 3 — structured -> curated promotion (reference
@@ -11,7 +11,7 @@ import graft.catalog.SnapshotStore
  * placeholder (`apply_changes`, :153-161); the hook point is kept so real
  * curation logic (PII masking, conforming) slots in per table.
  */
-final class CuratedApplier(store: SnapshotStore,
+final class CuratedApplier(store: MergeSnapshotStore,
                            transform: DataFrame => DataFrame = identity) {
   /** `onTableDone` fires after each curated write — the reference's
    * Kinesis-notify stub runs here too (`trigger_kinesis_event`,
@@ -32,8 +32,8 @@ final class CuratedApplier(store: SnapshotStore,
  * pushdown/pruning are free; e.g.
  * `run("offenders", Seq("offender_id","last_name"), "offender_id>15")`.
  */
-final class QueryRunner(store: SnapshotStore) {
-  /** On a MergeSnapshotStore the scan is the SKIPPING read: the parsed
+final class QueryRunner(store: MergeSnapshotStore) {
+  /** The scan is the store's SKIPPING read: the parsed
    * `where` prunes files through the manifest stats and, for equality
    * or IN on the whole primary key, to the keys' hash buckets (same
    * walk as the typed readWhere) before any footer opens. `asOfVersion` pins the
@@ -43,23 +43,16 @@ final class QueryRunner(store: SnapshotStore) {
           where: String = "1=1",
           asOfVersion: Option[Int] = None): DataFrame =
     QueryRunner.select(
-      DomainRunner.storeView(store, db, table, asOfVersion), fields, where)
+      store.readSkipping(db, table, asOfVersion), fields, where)
 
   /** [[run]] pinned by WALL-CLOCK instant instead of version number:
    * the epoch resolves through the provenance stamps
    * ([[graft.catalog.MergeSnapshotStore.versionAt]]) and the read is
    * the same pinned skipping scan an AS-OF version query gets. */
   def runAt(db: String, table: String, fields: Seq[String],
-            where: String, asOfEpochMs: Long): DataFrame = {
-    val ms = store match {
-      case m: graft.catalog.MergeSnapshotStore => m
-      case _ => throw new IllegalArgumentException(
-        "TIMESTAMP AS OF resolves through commit provenance stamps — " +
-          "open the table through a MergeSnapshotStore")
-    }
+            where: String, asOfEpochMs: Long): DataFrame =
     run(db, table, fields, where,
-      asOfVersion = Some(ms.versionAt(db, table, asOfEpochMs)))
-  }
+      asOfVersion = Some(store.versionAt(db, table, asOfEpochMs)))
 
   def apply(df: DataFrame, fields: Seq[String], where: String): DataFrame =
     QueryRunner.select(df, fields, where)
@@ -68,16 +61,16 @@ final class QueryRunner(store: SnapshotStore) {
    * `UPDATE t SET … WHERE …` route to the store's row-level operators.
    * See [[QueryRunner.dml]]. */
   def dml(db: String, statement: String,
-          mode: graft.catalog.MergeSnapshotStore.DeleteMode =
-            graft.catalog.MergeSnapshotStore.CopyOnWrite): Long =
+          mode: MergeSnapshotStore.DeleteMode =
+            MergeSnapshotStore.CopyOnWrite): Long =
     QueryRunner.dml(store, db, statement, mode)
 
   /** Frame-returning statement surface (`DESCRIBE HISTORY` / `SELECT *
    * FROM files(t)` / everything [[dml]] runs as a one-row `affected`
    * frame). See [[QueryRunner.sql]]. */
   def sql(db: String, statement: String,
-          mode: graft.catalog.MergeSnapshotStore.DeleteMode =
-            graft.catalog.MergeSnapshotStore.CopyOnWrite): DataFrame =
+          mode: MergeSnapshotStore.DeleteMode =
+            MergeSnapshotStore.CopyOnWrite): DataFrame =
     QueryRunner.sql(store, db, statement, mode)
 }
 
@@ -182,27 +175,21 @@ object QueryRunner {
    * dialect. Both metadata forms are driver-side manifest reads — no
    * data job at any table size.
    */
-  def sql(store: SnapshotStore, db: String, statement: String,
-          mode: graft.catalog.MergeSnapshotStore.DeleteMode =
-            graft.catalog.MergeSnapshotStore.CopyOnWrite): DataFrame = {
-    val ms = store match {
-      case m: graft.catalog.MergeSnapshotStore => m
-      case _ => throw new IllegalArgumentException(
-        "the statement dialect is the merge store's — open the table " +
-          "through a MergeSnapshotStore")
-    }
+  def sql(store: MergeSnapshotStore, db: String, statement: String,
+          mode: MergeSnapshotStore.DeleteMode =
+            MergeSnapshotStore.CopyOnWrite): DataFrame = {
     statement match {
-      case DescribeHistoryRe(raw) => ms.history(db, tableName(db, raw))
-      case DescribeDetailRe(raw) => ms.describeDetail(db, tableName(db, raw))
-      case ShowCreateRe(raw) => ms.showCreateTable(db, tableName(db, raw))
-      case DescribeTableRe(raw) => ms.describeTable(db, tableName(db, raw))
-      case ShowPropsRe(raw) => ms.showProperties(db, tableName(db, raw))
+      case DescribeHistoryRe(raw) => store.history(db, tableName(db, raw))
+      case DescribeDetailRe(raw) => store.describeDetail(db, tableName(db, raw))
+      case ShowCreateRe(raw) => store.showCreateTable(db, tableName(db, raw))
+      case DescribeTableRe(raw) => store.describeTable(db, tableName(db, raw))
+      case ShowPropsRe(raw) => store.showProperties(db, tableName(db, raw))
       case ShowTablesRe(dbRaw) =>
         // the catalog listing as a frame: name, key, format, location —
         // the registration-level fields an operator browses
         val d = Option(dbRaw).map(_.replace("`", "")).getOrElse(db)
         val spark = org.apache.spark.sql.SparkSession.active
-        val rows = ms.catalog.list(d).sortBy(_.name).map(m =>
+        val rows = store.catalog.list(d).sortBy(_.name).map(m =>
           org.apache.spark.sql.Row(m.name, m.primaryKey.mkString(","),
             m.format, m.location))
         spark.createDataFrame(
@@ -217,10 +204,10 @@ object QueryRunner {
             org.apache.spark.sql.types.StructField("location",
               org.apache.spark.sql.types.StringType, nullable = false))))
       case FilesTableRe(raw, v) =>
-        ms.filesOf(db, tableName(db, raw), Option(v).map(_.toInt))
+        store.filesOf(db, tableName(db, raw), Option(v).map(_.toInt))
       case s if s.trim.take(6).equalsIgnoreCase("SELECT") ||
           s.trim.take(5).equalsIgnoreCase("WITH ") =>
-        select(ms, db, statement)
+        select(store, db, statement)
       case _ =>
         val spark = org.apache.spark.sql.SparkSession.active
         import spark.implicits._
@@ -248,11 +235,11 @@ object QueryRunner {
    * attributes (`t.col`) resolve and the outer statement analyzes
    * normally over the already-resolved children.
    */
-  private def select(ms: graft.catalog.MergeSnapshotStore, db: String,
+  private def select(store: MergeSnapshotStore, db: String,
                      statement: String): DataFrame = {
     val spark = org.apache.spark.sql.SparkSession.active
     org.apache.spark.sql.graftbridge.ColumnBridge.dataset(spark,
-      spliceStorePlans(ms, db,
+      spliceStorePlans(store, db,
         spark.sessionState.sqlParser.parsePlan(statement)))
   }
 
@@ -260,7 +247,7 @@ object QueryRunner {
    * every store-table reference in `plan` (pinned or HEAD) is replaced
    * with its resolved skipping scan; non-store names stay for Spark's
    * own resolution. */
-  private def spliceStorePlans(ms: graft.catalog.MergeSnapshotStore,
+  private def spliceStorePlans(store: MergeSnapshotStore,
                                db: String,
                                plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -272,10 +259,10 @@ object QueryRunner {
       case Seq(d0, t) if d0.equalsIgnoreCase(db) => Some(t)
       case _ => None
     }
-    def registered(t: String): Boolean = ms.catalog.get(db, t).nonEmpty
+    def registered(t: String): Boolean = store.catalog.get(db, t).nonEmpty
     def splice(tbl: String, pin: Option[Int]) =
       SubqueryAlias(tbl,
-        ms.readSkipping(db, tbl, pin).queryExecution.analyzed)
+        store.readSkipping(db, tbl, pin).queryExecution.analyzed)
     // CTE aliases SHADOW table names in SQL (CTESubstitution runs at
     // analysis time) — an eager splice of a bare reference whose name a
     // CTE binds would silently read the store table and drop the CTE's
@@ -327,11 +314,11 @@ object QueryRunner {
           case None => ts match {
             case Some(l: Literal)
                 if l.dataType == org.apache.spark.sql.types.StringType =>
-              ms.versionAt(db, tbl, epochOf(String.valueOf(l.value)))
+              store.versionAt(db, tbl, epochOf(String.valueOf(l.value)))
             case Some(l: Literal)
                 if l.dataType == org.apache.spark.sql.types.LongType ||
                   l.dataType == org.apache.spark.sql.types.IntegerType =>
-              ms.versionAt(db, tbl, String.valueOf(l.value).toLong)
+              store.versionAt(db, tbl, String.valueOf(l.value).toLong)
             case other => throw new IllegalArgumentException(
               s"TIMESTAMP AS OF wants a '<ts>' string (or epoch-ms) " +
                 s"literal, got $other")
@@ -424,18 +411,11 @@ object QueryRunner {
    *    `dropCheckConstraint` (ADD validates the existing snapshot
    *    first, like Delta); both return 0.
    */
-  def dml(store: SnapshotStore, db: String, statement: String,
-          mode: graft.catalog.MergeSnapshotStore.DeleteMode =
-            graft.catalog.MergeSnapshotStore.CopyOnWrite): Long = {
+  def dml(store: MergeSnapshotStore, db: String, statement: String,
+          mode: MergeSnapshotStore.DeleteMode =
+            MergeSnapshotStore.CopyOnWrite): Long = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
     import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, UpdateTable}
-    val ms = store match {
-      case m: graft.catalog.MergeSnapshotStore => m
-      case _ => throw new IllegalArgumentException(
-        "SQL DML routes to row-level DELETE/UPDATE, which are the " +
-          "merge store's operators — open the table through a " +
-          "MergeSnapshotStore")
-    }
     // the dialect statements Spark's grammar cannot parse dispatch
     // FIRST (parsePlan would throw on them); a name here is the bare
     // identifier form only — quoted/exotic names go through the typed
@@ -443,32 +423,32 @@ object QueryRunner {
     def namedTable(raw: String): String = tableName(db, raw)
     statement match {
       case RestoreRe(raw, v) =>
-        return ms.restore(db, namedTable(raw), v.toInt).toLong
+        return store.restore(db, namedTable(raw), v.toInt).toLong
       case RestoreTsRe(raw, ts) =>
         val tbl = namedTable(raw)
-        return ms.restore(db, tbl, ms.versionAt(db, tbl, epochOf(ts))).toLong
+        return store.restore(db, tbl, store.versionAt(db, tbl, epochOf(ts))).toLong
       case CloneRe(dstRaw, srcRaw, v, ts, loc) =>
         val src = namedTable(srcRaw)
         val pinned =
           if (v != null) Some(v.toInt)
-          else Option(ts).map(t => ms.versionAt(db, src, epochOf(t)))
-        return ms.cloneTable(db, src, db, namedTable(dstRaw),
+          else Option(ts).map(t => store.versionAt(db, src, epochOf(t)))
+        return store.cloneTable(db, src, db, namedTable(dstRaw),
           loc, version = pinned).toLong
       case VacuumRe(raw, hours, dry) =>
         // Delta's VACUUM statement: the retention horizon stays the
         // table's own (property, else store default) unless RETAIN
         // overrides it for this pass; DRY RUN reports without touching
         // anything. Returns how much was (or would be) reclaimed.
-        val report = ms.vacuum(db, namedTable(raw),
+        val report = store.vacuum(db, namedTable(raw),
           retainMs = Option(hours).map(h =>
             (h.toDouble * 3600 * 1000).toLong),
           dryRun = dry != null)
         return report.reclaimed.toLong
       case AddConstraintRe(raw, name, pred) =>
-        ms.addCheckConstraint(db, namedTable(raw), name, pred.trim)
+        store.addCheckConstraint(db, namedTable(raw), name, pred.trim)
         return 0L
       case DropConstraintRe(raw, name) =>
-        ms.dropCheckConstraint(db, namedTable(raw), name)
+        store.dropCheckConstraint(db, namedTable(raw), name)
         return 0L
       case RenameColumnRe(raw, o, n) =>
         // metadata-only column mapping (Delta ALTER TABLE RENAME
@@ -477,26 +457,26 @@ object QueryRunner {
         // registration and the sidecar-binding record with the schema
         val tbl = namedTable(raw)
         val oldName = o.replace("`", "")
-        val isPk = ms.catalog.get(db, tbl)
+        val isPk = store.catalog.get(db, tbl)
           .exists(_.primaryKey.exists(_.equalsIgnoreCase(oldName)))
         return (if (isPk)
-          ms.renamePrimaryKeyColumn(db, tbl, oldName, n.replace("`", ""))
-        else ms.renameColumn(db, tbl, oldName, n.replace("`", ""))).toLong
+          store.renamePrimaryKeyColumn(db, tbl, oldName, n.replace("`", ""))
+        else store.renameColumn(db, tbl, oldName, n.replace("`", ""))).toLong
       case DropColumnRe(raw, c) =>
-        return ms.dropColumn(db, namedTable(raw),
+        return store.dropColumn(db, namedTable(raw),
           c.replace("`", "")).toLong
       case AddColumnRe(raw, c, typeDdl) =>
         // the type parses through Spark's OWN DDL grammar (decimal
         // precision, nested types, intervals all come for free)
         val dt = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
           .parseDataType(typeDdl.trim)
-        return ms.addColumn(db, namedTable(raw),
+        return store.addColumn(db, namedTable(raw),
           c.replace("`", ""), dt).toLong
       case DropTableRe(raw, purge) =>
         // metadata-only by default (external-table semantics: the
         // location survives, re-registering re-attaches); PURGE deletes
         // the bytes and refuses while shallow clones still borrow them
-        ms.dropTable(db, namedTable(raw), purge = purge != null)
+        store.dropTable(db, namedTable(raw), purge = purge != null)
         return 0L
       case SetPropsRe(raw, body) =>
         // 'k'='v' pairs, Delta's spelling; the store validates typed
@@ -506,13 +486,13 @@ object QueryRunner {
           .map(m => m.group(1) -> m.group(2)).toSeq
         require(pairs.nonEmpty,
           s"SET TBLPROPERTIES wants 'key'='value' pairs, got: $body")
-        ms.setProperties(db, namedTable(raw), pairs.toMap)
+        store.setProperties(db, namedTable(raw), pairs.toMap)
         return 0L
       case UnsetPropsRe(raw, body) =>
         val keys = PropKeyRe.findAllMatchIn(body).map(_.group(1)).toSeq
         require(keys.nonEmpty,
           s"UNSET TBLPROPERTIES wants 'key' entries, got: $body")
-        ms.unsetProperties(db, namedTable(raw), keys)
+        store.unsetProperties(db, namedTable(raw), keys)
         return 0L
       case AlterTypeRe(raw, c, typeDdl) =>
         // metadata-only type WIDENING (Delta ALTER COLUMN … TYPE):
@@ -520,7 +500,7 @@ object QueryRunner {
         // the store with the safe-set message
         val dt = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
           .parseDataType(typeDdl.trim)
-        return ms.alterColumnType(db, namedTable(raw),
+        return store.alterColumnType(db, namedTable(raw),
           c.replace("`", ""), dt).toLong
       case OptimizeRe(raw, zorder, opts) =>
         val tbl = namedTable(raw)
@@ -548,7 +528,7 @@ object QueryRunner {
             require(!knobs.contains("filesperbucket"),
               "filesPerBucket applies to ZORDER BY compaction — plain " +
                 "OPTIMIZE takes targetFiles")
-            ms.compact(db, tbl, targetFiles = knobs.getOrElse("targetfiles",
+            store.compact(db, tbl, targetFiles = knobs.getOrElse("targetfiles",
               org.apache.spark.sql.SparkSession.active.sessionState.conf
                 .numShufflePartitions))
           } else {
@@ -558,7 +538,7 @@ object QueryRunner {
             val dims = zorder.split(',').toSeq
               .map(_.trim.replace("`", "")).filter(_.nonEmpty)
             require(dims.nonEmpty, "ZORDER BY needs at least one column")
-            ms.compactClustered(db, tbl, dims.map(_ -> None),
+            store.compactClustered(db, tbl, dims.map(_ -> None),
               filesPerBucket = knobs.getOrElse("filesperbucket", 4))
           }
         return report.version.toLong
@@ -628,7 +608,7 @@ object QueryRunner {
           ct.columns.map(c =>
             org.apache.spark.sql.types.StructField(c.name, c.dataType,
               c.nullable)))
-        ms.createTable(db, tbl,
+        store.createTable(db, tbl,
           location = spec.location.getOrElse(
             throw new IllegalArgumentException(
               "CREATE TABLE needs a LOCATION — the store's tables are " +
@@ -651,7 +631,7 @@ object QueryRunner {
             "routes rows by its own layout")
         val tbl = tableOf(ins.table)
         val qdf0 = org.apache.spark.sql.graftbridge.ColumnBridge.dataset(
-          spark, spliceStorePlans(ms, db, ins.query))
+          spark, spliceStorePlans(store, db, ins.query))
         val named =
           if (ins.userSpecifiedCols.nonEmpty) {
             require(qdf0.columns.length == ins.userSpecifiedCols.length,
@@ -660,7 +640,7 @@ object QueryRunner {
             qdf0.toDF(ins.userSpecifiedCols: _*)
           } else if (ins.byName) qdf0
           else {
-            val tableCols = ms.readSkipping(db, tbl).schema.fieldNames.toSeq
+            val tableCols = store.readSkipping(db, tbl).schema.fieldNames.toSeq
             require(qdf0.columns.length == tableCols.length,
               s"INSERT INTO $tbl supplies ${qdf0.columns.length} " +
                 s"positional column(s); the table has ${tableCols.length}" +
@@ -672,12 +652,12 @@ object QueryRunner {
           // nullable, cast, refuse extras) — a raw overwrite publishes
           // the frame's schema and would silently shrink/retype the
           // table under a column-list or drifted-type INSERT OVERWRITE
-          ms.overwrite(db, tbl,
-            ms.alignToCommittedSchema(db, tbl, named, "INSERT OVERWRITE"))
-          ms.countRows(db, tbl)
-        } else ms.insertInto(db, tbl, named)
+          store.overwrite(db, tbl,
+            store.alignToCommittedSchema(db, tbl, named, "INSERT OVERWRITE"))
+          store.countRows(db, tbl)
+        } else store.insertInto(db, tbl, named)
       case DeleteFromTable(t, condition) =>
-        ms.deleteWhere(db, tableOf(t), columnOf(condition), mode)
+        store.deleteWhere(db, tableOf(t), columnOf(condition), mode)
       case UpdateTable(t, assignments, condition) =>
         val sets = assignments.map {
           case Assignment(k: UnresolvedAttribute, v) => k.name -> columnOf(v)
@@ -686,10 +666,10 @@ object QueryRunner {
         }.toMap
         require(sets.size == assignments.size,
           "duplicate assignment targets in UPDATE")
-        ms.updateWhere(db, tableOf(t),
+        store.updateWhere(db, tableOf(t),
           condition.map(columnOf).getOrElse(expr("true")), sets)
       case m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable =>
-        mergeInto(ms, db, m, tableOf)
+        mergeInto(store, db, m, tableOf)
       case other => throw new IllegalArgumentException(
         s"not a DML statement (DELETE FROM … / UPDATE … SET … / " +
           s"MERGE INTO …): parsed as ${other.nodeName}; run queries " +
@@ -728,7 +708,7 @@ object QueryRunner {
    * Returns the number of rows the merge changed (matched rows an
    * action claimed + inserted rows).
    */
-  private def mergeInto(ms: graft.catalog.MergeSnapshotStore, db: String,
+  private def mergeInto(store: MergeSnapshotStore, db: String,
       m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable,
       tableOf: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => String)
       : Long = {
@@ -757,7 +737,7 @@ object QueryRunner {
       case u: UnresolvedRelation =>
         val n = u.multipartIdentifier.last
         val df =
-          if (ms.exists(db, n)) ms.read(db, n)
+          if (store.exists(db, n)) store.read(db, n)
           else spark.table(u.multipartIdentifier.map(q => s"`$q`").mkString("."))
         (n, df)
       case other => throw new IllegalArgumentException(
@@ -765,7 +745,7 @@ object QueryRunner {
           "table or register the query as a temp view first")
     }
     val sAlias = sAliasOpt.getOrElse(sName)
-    val meta = ms.catalog(db, target)
+    val meta = store.catalog(db, target)
     require(meta.primaryKey.nonEmpty,
       s"MERGE INTO needs a registered PK on ${meta.qualified} — the ON " +
         "clause scopes by key buckets")
@@ -820,7 +800,7 @@ object QueryRunner {
       coalesce(conds.zipWithIndex.map { case (c, i) =>
         when(c.map(columnOfSql).getOrElse(lit(true)), lit(i))
       } :+ lit(null).cast("int"): _*)
-    val fieldType = ms.read(db, target).schema.fields
+    val fieldType = store.read(db, target).schema.fields
       .map(f => f.name -> f.dataType).toMap
     def assignedCol(name: String,
                     byAction: Seq[(Int, Option[org.apache.spark.sql.Column])],
@@ -837,7 +817,7 @@ object QueryRunner {
     // keys CAST to the target PK types: the bucket hash is type-
     // sensitive (hash(300: int) != hash(300L)), so an uncast source
     // key of a wider type would scope the wrong buckets silently
-    ms.mergeScoped(db, target,
+    store.mergeScoped(db, target,
         source0.select(pks.map(k =>
           col(srcKeyOf(k)).cast(fieldType(k)).as(k)): _*)) { old =>
       val cols = old.columns.toSeq

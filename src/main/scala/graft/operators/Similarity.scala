@@ -583,7 +583,7 @@ object Similarity {
   /** Persist an [[assignCellsFor]]-shaped index into the table store,
    * bucketed by CELL — each cell's members co-locate, so a query batch
    * reads only its probed cells' buckets ([[ivfTopKFromStore]]). */
-  def writeIvfIndex(store: graft.catalog.SnapshotStore, db: String,
+  def writeIvfIndex(store: graft.catalog.MergeSnapshotStore, db: String,
                     table: String, location: String,
                     index: DataFrame): Unit = {
     store.catalog.register(ivfIndexMeta(db, table, location))

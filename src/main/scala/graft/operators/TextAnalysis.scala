@@ -345,7 +345,7 @@ object TextAnalysis {
    * the corpus-sized postings table. Doc lengths bucket by doc for the
    * same reason on the join side.
    */
-  def writeBm25Index(store: graft.catalog.SnapshotStore, db: String,
+  def writeBm25Index(store: graft.catalog.MergeSnapshotStore, db: String,
                      prefix: String, baseLocation: String,
                      idx: Bm25Index): Unit = {
     registerBm25Tables(store, db, prefix, baseLocation)
@@ -359,7 +359,7 @@ object TextAnalysis {
    * persist ([[writeBm25Index]]) and the maintained path
    * ([[bm25IndexSpecs]]), so the layout (postings/docfreq bucketed by
    * term, doclens by doc) cannot drift between them. */
-  def registerBm25Tables(store: graft.catalog.SnapshotStore, db: String,
+  def registerBm25Tables(store: graft.catalog.MergeSnapshotStore, db: String,
                          prefix: String, baseLocation: String): Unit = {
     import graft.catalog.TableMeta
     // the index tables' reads are term/doc point lookups and full scans
@@ -506,7 +506,7 @@ object TextAnalysis {
 
   /** The index read back from the store (latest committed version of
    * each table). */
-  def readBm25Index(store: graft.catalog.SnapshotStore, db: String,
+  def readBm25Index(store: graft.catalog.MergeSnapshotStore, db: String,
                     prefix: String): Bm25Index =
     Bm25Index(store.read(db, s"${prefix}_postings"),
       store.read(db, s"${prefix}_doclens"),

@@ -7,14 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.catalog.SnapshotStore
+import graft.catalog.MergeSnapshotStore
 
 /**
  * The store's change feed as a STRUCTURED STREAMING source — the Delta
  * CDF `readStream` story (`readChangeFeed` + `startingVersion`),
  * rebuilt on two public seams: the store's committed-version diff
- * ([[SnapshotStore.changesBetween]] keyed /
- * [[SnapshotStore.multisetChangesBetween]] PK-less) and Spark's own
+ * ([[MergeSnapshotStore.changesBetween]] keyed /
+ * [[MergeSnapshotStore.multisetChangesBetween]] PK-less) and Spark's own
  * file stream source.
  *
  * Shape: a feed DIRECTORY owned by the exporter. Each [[advance]] call
@@ -148,7 +148,7 @@ object ChangeFeed {
    * the multiset feed (per distinct row image, copies arrived/left) —
    * each the exact delta its table kind supports.
    */
-  def advance(store: SnapshotStore, db: String, table: String,
+  def advance(store: MergeSnapshotStore, db: String, table: String,
               feedDir: String,
               startVersion: Option[Int] = None): Option[(Int, Int)] = {
     val spark = SparkSession.active

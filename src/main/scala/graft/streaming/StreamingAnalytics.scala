@@ -172,14 +172,14 @@ object StreamingAnalytics {
    * version of both tables in a marker under the checkpoint
    * (tmp-write + rename, the landing-marker discipline), and every
    * attempt — first or replayed — recomputes from those pinned versions
-   * via [[graft.catalog.SnapshotStore.readVersion]]: byte-identical
+   * via [[graft.catalog.MergeSnapshotStore.readVersion]]: byte-identical
    * results, so re-overwriting is harmless and the fold is idempotent by
    * determinism, not by a done-flag. A retry chain deeper than the
    * store's `keepVersions` loses the pinned base and FAILS the batch
    * (readVersion throws) — fail-safe, never a silent double-apply; size
    * `keepVersions` to the retry depth you want to ride out.
    */
-  def maintainCountSum(changes: DataFrame, store: graft.catalog.SnapshotStore,
+  def maintainCountSum(changes: DataFrame, store: graft.catalog.MergeSnapshotStore,
                        db: String, snapTable: String, aggTable: String,
                        keys: Seq[String], group: Column, value: Column,
                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -198,7 +198,7 @@ object StreamingAnalytics {
    * against the batch's own NEW snapshot (which this runner computes
    * anyway), so per-trigger work stays changelog-plus-affected-groups
    * sized. Seed the aggregate with [[graft.operators.Ivm.minMaxAgg]]. */
-  def maintainMinMax(changes: DataFrame, store: graft.catalog.SnapshotStore,
+  def maintainMinMax(changes: DataFrame, store: graft.catalog.MergeSnapshotStore,
                      db: String, snapTable: String, aggTable: String,
                      keys: Seq[String], group: Column, value: Column,
                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -217,7 +217,7 @@ object StreamingAnalytics {
    * itself is a group-cardinality read off the view
    * ([[graft.operators.Ivm.distinctCount]]). Seed the view with
    * `distinctAux` over the initial snapshot. */
-  def maintainDistinct(changes: DataFrame, store: graft.catalog.SnapshotStore,
+  def maintainDistinct(changes: DataFrame, store: graft.catalog.MergeSnapshotStore,
                        db: String, snapTable: String, auxTable: String,
                        keys: Seq[String], group: Column, value: Column,
                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -233,7 +233,7 @@ object StreamingAnalytics {
    * ONE downstream aggregate whose delta rule is `fold(agg, oldSnap,
    * newSnap, changelog)` — count/sum and min/max are the shipped folds;
    * any aggregate with a changelog delta rule slots in. */
-  def maintainAggregate(changes: DataFrame, store: graft.catalog.SnapshotStore,
+  def maintainAggregate(changes: DataFrame, store: graft.catalog.MergeSnapshotStore,
                         db: String, snapTable: String, aggTable: String,
                         keys: Seq[String], checkpoint: String,
                         seed: Option[DataFrame => DataFrame] = None)(
@@ -268,7 +268,7 @@ object StreamingAnalytics {
    * landing on a table between micro-batches reseeds every aggregate
    * from the current logical snapshot before the next fold.
    */
-  def maintainAggregates(changes: DataFrame, store: graft.catalog.SnapshotStore,
+  def maintainAggregates(changes: DataFrame, store: graft.catalog.MergeSnapshotStore,
                          db: String, snapTable: String,
                          aggs: Seq[graft.operators.Ivm.MaintainedAgg],
                          keys: Seq[String], checkpoint: String)
@@ -315,7 +315,7 @@ object StreamingAnalytics {
    * silently reseeding with the raw snapshot would hand the next fold a
    * wrong-shaped aggregate. */
   private[graft] def applyIvmBatch(chg: DataFrame, batchId: Long,
-      store: graft.catalog.SnapshotStore, db: String, snapTable: String,
+      store: graft.catalog.MergeSnapshotStore, db: String, snapTable: String,
       aggTable: String, keys: Seq[String], checkpoint: String,
       seed: Option[DataFrame => DataFrame] = None)(
       fold: (DataFrame, DataFrame, DataFrame, DataFrame) => DataFrame): Unit =
@@ -335,7 +335,7 @@ object StreamingAnalytics {
    * snapshot's — for a single aggregate exactly the historical
    * "aggV,snapV" format. */
   private[graft] def applyIvmRegistryBatch(chg: DataFrame, batchId: Long,
-      store: graft.catalog.SnapshotStore, db: String, snapTable: String,
+      store: graft.catalog.MergeSnapshotStore, db: String, snapTable: String,
       aggs: Seq[graft.operators.Ivm.MaintainedAgg], keys: Seq[String],
       checkpoint: String): Unit = {
         require(aggs.nonEmpty, "need at least one maintained aggregate")

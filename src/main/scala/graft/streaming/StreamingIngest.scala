@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.catalog.SnapshotStore
+import graft.catalog.MergeSnapshotStore
 import graft.ingest.GgLogsToParquet
 import graft.operators.ChangeLogApplier
 
@@ -58,7 +58,7 @@ object StreamingIngest {
 
   /** Land the hashed, date-partitioned stream through the catalog — the
    * streaming twin of the batch stage-1 landing ([[GgLogsToParquet.run]]).
-   * Each micro-batch appends via [[SnapshotStore.appendPartitioned]]
+   * Each micro-batch appends via [[MergeSnapshotStore.appendPartitioned]]
    * (partition layout comes from the table's registered metadata, not a
    * hardcoded path) and then re-registers the landed schema, keeping the
    * catalog definition in step with every landing write — parity with the
@@ -82,7 +82,7 @@ object StreamingIngest {
    * clearing the markers too. The residual crash window (append done,
    * marker not yet renamed) is at-least-once — the downstream CDC
    * stage's `pos` dedup ([[dedupByPos]]) absorbs exactly that case. */
-  def landTo(df: DataFrame, store: SnapshotStore, db: String, table: String,
+  def landTo(df: DataFrame, store: MergeSnapshotStore, db: String, table: String,
              checkpoint: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     df.drop("event_ts").writeStream
@@ -205,7 +205,7 @@ object StreamingIngest {
   /** Merge each micro-batch into the structured snapshots with the batch
    * CDC applier (per-batch semantics identical to a batch run over that
    * slice of the log). */
-  def applyEachBatch(spark: SparkSession, stream: DataFrame, store: SnapshotStore,
+  def applyEachBatch(spark: SparkSession, stream: DataFrame, store: MergeSnapshotStore,
                      db: String, checkpoint: String,
                      chainVerified: Boolean = false,
                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =

@@ -13,14 +13,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
 import graft.ingest.GgLogsToParquet
 import graft.model.CdcModel
-import graft.operators.ChangeLogApplier
+import graft.operators.{ChangeLogApplier, CuratedApplier, DomainRunner}
 
 /**
  * What one CDC batch costs and leaves behind on the merge store: the
  * Spark jobs of a trickle-shaped `ChangeLogApplier.run` (two targets, a
  * landing table partitioned by `table`), the one-file-per-bucket layout
  * and write-task count of scoped merges and overwrites, and a batch
- * re-run after a crash between its two tables' commits.
+ * re-run after a crash between its two tables' commits, and past apply
+ * at the curated and the domain commit.
  */
 class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
   private val Db = "jb"
@@ -201,5 +202,72 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
     Seq("offenders", "bookings").foreach { t =>
       assert(canon(store.read(Db, t)) == canon(clean.read(Db, t)), t)
     }
+  }
+
+  /** One whole batch, apply → curated → domain, over a store whose
+   * curated (`<t>_curated`) and domain (`off_book`) tables are
+   * registered on first use. `arm(stage)` runs just before that
+   * stage: the failpoint hook goes in there. */
+  private def fullBatch(store: MergeSnapshotStore, dir: String, landing: DataFrame,
+                        arm: String => Unit = _ => ()): Unit = {
+    val defs = s"$dir/defs.csv"
+    if (store.catalog.get(Db, "off_book").isEmpty) {
+      Files.write(java.nio.file.Paths.get(defs),
+        ("Status,Type,Domain,Dependancies,Target,Resolution\n" +
+          "Active,SQL,dom,\"offenders,bookings\",off_book,\"select " +
+          "offenders.id, offenders.name, bookings.bid, bookings.status from " +
+          "offenders INNER JOIN bookings ON offenders.id = bookings.oid\"\n")
+          .getBytes("UTF-8"))
+      Seq("offenders" -> "id", "bookings" -> "bid").foreach { case (t, pk) =>
+        store.catalog.register(TableMeta(Db, s"${t}_curated",
+          s"$dir/${t}_curated", primaryKey = Seq(pk)))
+      }
+      store.catalog.register(TableMeta(Db, "off_book", s"$dir/off_book"))
+    }
+    arm("apply")
+    val applied = ChangeLogApplier.run(spark, store, Db, landing, parallelism = 1)
+    arm("curated")
+    new CuratedApplier(store).run(Db, applied.sorted)
+    arm("domain")
+    new DomainRunner(spark, store).run(Db, defs, applied, processId = 1L)
+  }
+
+  private val chainTables =
+    Seq("offenders", "bookings", "offenders_curated", "bookings_curated", "off_book")
+
+  /** Crashes the batch at the publish of `stage` after letting `lets`
+   * of its publishes through, checks that exactly `committed` of the
+   * chain's tables hold a version, re-runs the whole batch, and compares
+   * every table of the chain with a clean run. */
+  private def crashAndReplay(stage: String, lets: Int, committed: Seq[String]): Unit = {
+    val (store, dir) = mkStore()
+    val (clean, cleanDir) = mkStore()
+    val landing = landBatch(store, dir, 5)
+    fullBatch(clean, cleanDir, landing)
+    val crash: () => Unit = () => throw new IllegalStateException("crash before publish")
+    val err = intercept[IllegalStateException] {
+      fullBatch(store, dir, landing, arm = s =>
+        if (s == stage) store.beforePublish =
+          if (lets == 0) crash else () => { store.beforePublish = crash })
+    }
+    assert(err.getMessage.contains("crash before publish"))
+    assert(chainTables.filter(t => store.exists(Db, t)) == committed)
+    // the whole batch again: apply finds every event stale, curated and
+    // domain rewrite from the committed structured tables
+    fullBatch(store, dir, landing)
+    chainTables.foreach { t =>
+      assert(canon(store.read(Db, t)) == canon(clean.read(Db, t)), t)
+    }
+  }
+
+  test("a batch that fails at its second curated commit re-runs apply -> curated -> domain to the clean result") {
+    // curated runs the applied tables in name order: bookings, offenders
+    crashAndReplay("curated", lets = 1,
+      committed = Seq("offenders", "bookings", "bookings_curated"))
+  }
+
+  test("a batch that fails at its domain commit re-runs apply -> curated -> domain to the clean result") {
+    crashAndReplay("domain", lets = 0,
+      committed = Seq("offenders", "bookings", "offenders_curated", "bookings_curated"))
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{InMemoryCatalog, SnapshotStore, TableMeta}
+import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
 import graft.operators.{CuratedApplier, DomainRunner, QueryRunner}
 
 /**
@@ -16,7 +16,7 @@ import graft.operators.{CuratedApplier, DomainRunner, QueryRunner}
 class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
   private lazy val tmp = Files.createTempDirectory("graft-test").toString
   private lazy val catalog = new InMemoryCatalog
-  private lazy val store = new SnapshotStore(spark, catalog)
+  private lazy val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
 
   private def bootstrap(): Unit = synchronized {
     if (catalog.get("db", "offenders").isEmpty) {
@@ -60,15 +60,15 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
 
   test("compaction rewrites the snapshot into the target file count") {
     bootstrap()
-    // fragment: write a many-partition snapshot
-    store.overwrite("db", "offenders",
+    // `targetFiles` shapes PK-less tables (a PK table is already one
+    // file per bucket): fragment a key-less copy, then compact it
+    catalog.register(TableMeta("db", "offenders_frag", s"$tmp/offenders_frag"))
+    store.overwrite("db", "offenders_frag",
       store.read("db", "offenders").repartition(7))
-    store.compact("db", "offenders", targetFiles = 1)
-    val after = store.read("db", "offenders")
+    store.compact("db", "offenders_frag", targetFiles = 1)
+    val after = store.read("db", "offenders_frag")
     assert(after.count() == 18)
     assert(after.rdd.getNumPartitions == 1)
-    store.overwrite("db", "offenders",
-      spark.read.parquet(refData("database/oms_owner/offenders_curated")))
   }
 
   test("domain defs load + dependency activation") {
@@ -144,7 +144,7 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     assert(runner.runStatement("db", d, 1L,
       pins = Map("asof_dep" -> v0)).count() == 20)
     // an uncommitted pin refuses EAGERLY with the retention-window
-    // message on the base store too — never a lazy path-not-found
+    // message — never a lazy path-not-found
     val err = intercept[IllegalArgumentException] {
       runner.runStatement("db", d, 1L, pins = Map("asof_dep" -> 99))
     }

@@ -58,9 +58,9 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
 
   test("stage-1 run registers the landed schema in the catalog") {
     import java.nio.file.Files
-    import graft.catalog.{InMemoryCatalog, SnapshotStore, TableMeta}
+    import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
     val cat = new InMemoryCatalog
-    val store = new SnapshotStore(spark, cat)
+    val store = new MergeSnapshotStore(spark, cat)
     val loc = Files.createTempDirectory("graft-landing-reg").toString
     cat.register(TableMeta("idb", "landing", loc, partitionBy = PartitionBy))
     graft.ingest.GgLogsToParquet.run(spark, store, s"$jsonRoot/inserts", "idb", "landing")
@@ -74,9 +74,9 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
 
   test("landing appends register the union of their schemas; readFlat reads with it") {
     import java.nio.file.Files
-    import graft.catalog.{InMemoryCatalog, SnapshotStore, TableMeta}
+    import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
     val cat = new InMemoryCatalog
-    val store = new SnapshotStore(spark, cat)
+    val store = new MergeSnapshotStore(spark, cat)
     val dir = Files.createTempDirectory("graft-landing-union").toString
     cat.register(TableMeta("idb", "union", s"$dir/landing", partitionBy = PartitionBy))
     def land(name: String, json: Seq[String]): Unit = {
@@ -109,11 +109,11 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import graft.catalog.{InMemoryCatalog, SnapshotStore, TableMeta}
+    import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
     import graft.operators.ChangeLogApplier
 
     val cat = new InMemoryCatalog
-    val store = new SnapshotStore(spark, cat)
+    val store = new MergeSnapshotStore(spark, cat)
     val loc = Files.createTempDirectory("graft-landing").toString
     cat.register(TableMeta("idb", "raw_events", loc, partitionBy = PartitionBy))
     // two source tables land in one zone

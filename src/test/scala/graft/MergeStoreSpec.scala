@@ -10,15 +10,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, SnapshotStore, TableMeta}
+import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
 import graft.model.CdcModel
 import graft.operators.ChangeLogApplier
 
 /**
  * The incremental MERGE commit path: partition-scoped rewrites (only the
  * PK-hash buckets a batch touches), manifest-by-reference carry-over of
- * untouched files, vacuum of unreferenced data, and full behavioural parity
- * with the full-rewrite [[SnapshotStore]] on the reference CDC fixture.
+ * untouched files, vacuum of unreferenced data, and CDC `run()` parity
+ * with the plain-frame reference fold (`ChangeLogApplier.applyTable`).
  */
 class MergeStoreSpec extends AnyFunSuite with SparkFixture {
 
@@ -808,31 +808,82 @@ class MergeStoreSpec extends AnyFunSuite with SparkFixture {
       s"distributed-footer stats failed to prune: ${gotWide.inputFiles.length} files planned")
   }
 
-  test("CDC run() through the merge store matches the full-rewrite store") {
-    val events =
-      spark.read.parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
-    val target = spark.read.parquet(refData("database/oms_owner/offenders"))
+  /** A seeded event log over two source tables (`S.T` -> `t`, `S.U` ->
+   * `u`) in the shape of CdcFoldPropSpec's random cases: ids 1..8 plus
+   * NULL, target rows holding random applied positions (events below
+   * them are stale), some events replayed verbatim, and a D-then-I run
+   * on id 9 of each table. An image's hash is its position; an event's
+   * `before_hash` continues its key's chain four times in five, so the
+   * chain-verified fold both applies and rejects events. Returns each
+   * target's bootstrap frame and the one shuffled log. */
+  private def cdcCase(seed: Int): (Map[String, DataFrame], DataFrame) = {
+    val rnd = new scala.util.Random(seed)
+    val tSchema = StructType(Seq(StructField("id", IntegerType),
+      StructField("name", StringType)) ++ CdcModel.adminFields)
+    val payload = StructType(Seq(StructField("ID", IntegerType),
+      StructField("NAME", StringType)))
+    val evSchema = StructType(Seq(
+      StructField("table", StringType), StructField("op_type", StringType),
+      StructField("op_ts", StringType), StructField("pos", StringType),
+      StructField("before", payload), StructField("after", payload),
+      StructField("after_hash", IntegerType), StructField("before_hash", IntegerType)))
+    val ids: Seq[Integer] = (1 to 8).map(Int.box) :+ null
+    val sources = Seq("t" -> "S.T", "u" -> "S.U")
+    // (source, id) -> hash of the key's latest image
+    val chain = scala.collection.mutable.Map.empty[(String, Integer), Int]
+    val targets = sources.map { case (tbl, src) =>
+      val rows = (ids.filter(_ => rnd.nextBoolean()) :+ Int.box(9)).map { id =>
+        chain((src, id)) = -rnd.nextInt(1000) - 1
+        Row(id, s"$tbl$id", chain((src, id)), f"${rnd.nextInt(30)}%020d", null, null)
+      }
+      tbl -> spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), tSchema)
+    }.toMap
+    var pos = 0
+    def event(src: String, id: Integer, op: String): Row = {
+      pos += 1 + rnd.nextInt(2)
+      val prev: Integer =
+        if (rnd.nextInt(5) == 0) -1 - rnd.nextInt(1000)
+        else chain.get((src, id)).map(Int.box).orNull
+      if (op != "D") chain((src, id)) = pos
+      val img = Row(id, s"v$pos")
+      Row(src, op, "2022-09-26 14:57:13.817732", f"$pos%020d",
+        if (op == "I") null else img, if (op == "D") null else img,
+        if (op == "D") null else Int.box(pos), prev)
+    }
+    val fresh = (1 to 60).map { _ =>
+      event(sources(rnd.nextInt(2))._2, ids(rnd.nextInt(ids.size)),
+        Seq("I", "U", "D")(rnd.nextInt(3)))
+    } ++ sources.flatMap { case (_, src) =>
+      Seq(event(src, 9, "D"), event(src, 9, "I"))
+    }
+    val replayed = fresh.filter(_ => rnd.nextInt(5) == 0)
+    (targets, spark.createDataFrame(
+      spark.sparkContext.parallelize(rnd.shuffle(fresh ++ replayed), 2), evSchema))
+  }
 
-    val plainCat = new InMemoryCatalog
-    val plain = new SnapshotStore(spark, plainCat)
-    plainCat.register(TableMeta("cdb", "offenders",
-      Files.createTempDirectory("graft-plain-off").toString,
-      primaryKey = Seq("offender_id")))
-    plain.overwrite("cdb", "offenders", target)
-    ChangeLogApplier.run(spark, plain, "cdb", events)
-
-    val merge = mkStore(nBuckets = 16)
-    register(merge, "cdb", "offenders", "offender_id")
-    merge.overwrite("cdb", "offenders", target)
-    ChangeLogApplier.run(spark, merge, "cdb", events)
-
-    val a = plain.read("cdb", "offenders").drop(CdcModel.AdminEventTs)
-    val b = merge.read("cdb", "offenders").drop(CdcModel.AdminEventTs)
-    assert(a.count() == b.count())
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-    // and it really was a scoped commit: v1 exists with some v0 dirs carried
-    val v1 = merge.manifestEntries("cdb", "offenders", 1)
-    assert(v1.nonEmpty)
+  test("CDC run() through the merge store matches applyTable on a seeded two-table log") {
+    for (seed <- 1 to 3; chainVerified <- Seq(false, true)) {
+      val (targets, events) = cdcCase(seed)
+      val store = mkStore(nBuckets = 4)
+      targets.foreach { case (tbl, df) =>
+        register(store, "cdb", tbl, "id")
+        store.overwrite("cdb", tbl, df)
+      }
+      val applied = ChangeLogApplier.run(spark, store, "cdb", events,
+        chainVerified = chainVerified)
+      assert(applied.sorted == Seq("t", "u"))
+      targets.foreach { case (tbl, target) =>
+        val want = ChangeLogApplier.applyTable(target,
+          events.filter(col("table") === s"S.${tbl.toUpperCase}"), "id",
+          chainVerified).drop(CdcModel.AdminEventTs)
+        val got = store.read("cdb", tbl).drop(CdcModel.AdminEventTs)
+        val ctx = s"seed=$seed chainVerified=$chainVerified table=$tbl"
+        assert(got.count() == want.count(), ctx)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, ctx)
+        // one scoped commit on top of the bootstrap
+        assert(store.latestVersion("cdb", tbl) == 1, ctx)
+      }
+    }
   }
 
   test("maintained aggregate: N scoped commits == from-scratch recompute") {
@@ -1414,6 +1465,21 @@ class MergeStoreSpec extends AnyFunSuite with SparkFixture {
           }
         }
     }
+    // a finite date bound past Spark's Int day range (and LocalDate's
+    // own: ofEpochDay(1e15) throws) is an open side on its own end, an
+    // empty read on the other
+    def dateRows(r: (Double, Double)) =
+      store.readRange("mdb", "evts", Map("d" -> r)).count()
+    assert(dateRows((0.0, 1e15)) == 800)
+    assert(dateRows((-1e15, day("1995-01-10"))) == 10)
+    assert(dateRows((1e15, 2e15)) == 0)
+    assert(dateRows((-2e15, -1e15)) == 0)
+    // timestamps take the same rule at the Long micros range (a bound
+    // saturated to Long.MinValue micros overflows Spark's filter pushdown)
+    def tsRows(r: (Double, Double)) =
+      store.readRange("mdb", "evts", Map("ts" -> r)).count()
+    assert(tsRows((-1e300, 1e300)) == 800)
+    assert(tsRows((1e300, 2e300)) == 0)
     // legacy INT96 timestamps (the session default) carry no orderable
     // stats: reads stay CORRECT, files conservatively all kept
     store.catalog.register(TableMeta("mdb", "evts96",

@@ -302,16 +302,4 @@ class SamplingSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e.getMessage.contains("two distinct"))
   }
-
-  test("store JSON write round-trips (reference dev event-log generation)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
-    val cat = new graft.catalog.InMemoryCatalog
-    val store = new graft.catalog.SnapshotStore(spark, cat)
-    val df = li.select("l_orderkey", "l_linenumber", "l_returnflag").limit(20)
-    store.writeJson(s"$dir/logs", df)
-    val back = spark.read.json(s"$dir/logs")
-    assert(back.count() == 20)
-    assert(back.columns.sorted.toSeq ==
-      Seq("l_linenumber", "l_orderkey", "l_returnflag"))
-  }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{Catalog, InMemoryCatalog, SessionCatalog, SnapshotStore, TableMeta}
+import graft.catalog.{Catalog, InMemoryCatalog, MergeSnapshotStore, SessionCatalog, TableMeta}
 
 /** The session-catalog-backed Catalog: metadata round-trips through the
  * metastore client surface, and the versioned snapshot store runs over it
@@ -75,7 +75,7 @@ class SessionCatalogSpec extends AnyFunSuite with SparkFixture {
     val cat = new SessionCatalog(spark)
     val tmp = Files.createTempDirectory("graft-sess-store").toString
     cat.register(TableMeta("scdb2", "t", s"$tmp/t"))
-    val store = new SnapshotStore(spark, cat)
+    val store = new MergeSnapshotStore(spark, cat)
     val v1 = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
     store.overwrite("scdb2", "t", v1)
     assert(store.latestVersion("scdb2", "t") == 0)

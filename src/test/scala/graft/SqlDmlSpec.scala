@@ -112,7 +112,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("non-DML statements and non-merge stores refuse loudly") {
+  test("non-DML statements refuse loudly") {
     val store = mkStore()
     val runner = new QueryRunner(store)
     register(store, "r")
@@ -121,12 +121,6 @@ class SqlDmlSpec extends AnyFunSuite with SparkFixture {
       runner.dml("sdb", "SELECT * FROM r")
     }
     assert(eSel.getMessage.contains("not a DML statement"))
-    // the base snapshot store has no row-level DML to route to
-    val plain = new graft.catalog.SnapshotStore(spark, new InMemoryCatalog)
-    val ePlain = intercept[IllegalArgumentException] {
-      QueryRunner.dml(plain, "sdb", "DELETE FROM r WHERE id = 1")
-    }
-    assert(ePlain.getMessage.contains("MergeSnapshotStore"))
   }
 
   test("TIMESTAMP AS OF statements resolve through the provenance stamps") {

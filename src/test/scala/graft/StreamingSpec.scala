@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{InMemoryCatalog, SnapshotStore, TableMeta}
+import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
 import graft.ingest.GgLogsToParquet
 import graft.operators.{ChangeLogApplier, TextAnalysis}
 import graft.streaming.{StreamEvent, StreamingAnalytics, StreamingIngest}
@@ -28,7 +28,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
     val out = Files.createTempDirectory("graft-stream-land").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("ldb", "raw_events", s"$out/landing",
       partitionBy = GgLogsToParquet.PartitionBy))
     val stream = StreamingIngest.ingest(
@@ -73,7 +73,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // streaming run over the same files
     val tmp = Files.createTempDirectory("graft-stream-apply").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("sdb", "offenders", s"$tmp/offenders",
       primaryKey = Seq("offender_id")))
     store.overwrite("sdb", "offenders", target)
@@ -86,6 +86,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(got.count() == expect.count())
     assert(got.exceptAll(expect).count() == 0)
     assert(expect.exceptAll(got).count() == 0)
+    // each micro-batch advanced the manifest version via mergeScoped
+    assert(store.latestVersion("sdb", "offenders") >= 1)
   }
 
   test("foreachBatch apply also runs the chain-verified fold path") {
@@ -97,7 +99,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .drop(graft.model.CdcModel.AdminEventTs)
     val tmp = Files.createTempDirectory("graft-stream-chain").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("cdb", "offenders", s"$tmp/offenders",
       primaryKey = Seq("offender_id")))
     store.overwrite("cdb", "offenders", target)
@@ -109,31 +111,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val got = store.read("cdb", "offenders").drop(graft.model.CdcModel.AdminEventTs)
     assert(got.count() == expect.count())
     assert(got.exceptAll(expect).count() == 0)
-  }
-
-  test("foreachBatch apply through the merge store: scoped commits per micro-batch") {
-    import graft.catalog.MergeSnapshotStore
-    val events = spark.read
-      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
-    val target = spark.read.parquet(refData("database/oms_owner/offenders"))
-    val expect = ChangeLogApplier.applyTable(target, events, "offender_id")
-      .drop(graft.model.CdcModel.AdminEventTs)
-    val tmp = Files.createTempDirectory("graft-stream-merge").toString
-    val catalog = new InMemoryCatalog
-    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 16)
-    catalog.register(TableMeta("mdb", "offenders", s"$tmp/offenders",
-      primaryKey = Seq("offender_id")))
-    store.overwrite("mdb", "offenders", target)
-    val stream = spark.readStream.schema(events.schema)
-      .parquet(refData("kinesis/transac/parquet/oms_owner/offenders"))
-    val q = StreamingIngest.applyEachBatch(spark, stream, store, "mdb", s"$tmp/ckpt")
-    q.awaitTermination()
-    val got = store.read("mdb", "offenders").drop(graft.model.CdcModel.AdminEventTs)
-    assert(got.count() == expect.count())
-    assert(got.exceptAll(expect).count() == 0)
-    assert(expect.exceptAll(got).count() == 0)
-    // each micro-batch advanced the manifest version via mergeScoped
-    assert(store.latestVersion("mdb", "offenders") >= 1)
   }
 
   test("narrow text/PII operators run unchanged on a streaming frame") {
@@ -365,7 +342,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val catalog = new InMemoryCatalog
     // keepVersions = 4: the marker-pinned pre-batch versions must stay
     // readable through the two extra replay commits this spec performs
-    val store = new SnapshotStore(spark, catalog, keepVersions = 4)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4, keepVersions = 4)
     catalog.register(TableMeta("ivmdb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("ivmdb", "agg", s"$tmp/agg"))
     val init = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
@@ -435,7 +412,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Ivm
     val tmp = Files.createTempDirectory("graft-stream-minmax").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("mmdb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("mmdb", "agg", s"$tmp/agg"))
     val init = Seq((1L, "a", 10L), (2L, "a", 5L), (3L, "b", 30L))
@@ -472,7 +449,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Ivm
     val tmp = Files.createTempDirectory("graft-stream-dc").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("dcdb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("dcdb", "aux", s"$tmp/aux"))
     // value 5 duplicated in group a — deleting ONE copy must not move
@@ -508,7 +485,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Ivm
     val tmp = Files.createTempDirectory("graft-stream-reg").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("rdb", "snap", s"$tmp/snap"))
     val tables = Seq("r_cs", "r_mm", "r_dc")
     tables.foreach(t => catalog.register(TableMeta("rdb", t, s"$tmp/$t")))
@@ -601,7 +578,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // aggregate — not hand the next fold a raw-snapshot-shaped table
     val tmp = Files.createTempDirectory("graft-stream-oob").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog, keepVersions = 4)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4, keepVersions = 4)
     catalog.register(TableMeta("odb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("odb", "agg", s"$tmp/agg"))
     val init = Seq((1L, "a", 10L), (2L, "b", 30L)).toDF("k", "grp_in", "v")
@@ -634,7 +611,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("mid-BATCH foreign commit: guard refuses, clears its marker, rerun repairs") {
     import spark.implicits._
     import graft.operators.Ivm
-    import graft.catalog.MergeSnapshotStore
     // a takedown landing INSIDE the batch window (pin taken, writes not
     // yet) must refuse — the full snapshot overwrite would resurrect
     // the taken-down rows — and must take its own marker with it: left
@@ -689,7 +665,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("drift repair is delta-sized: the foreign feed folds through the delta rule, seed never fires") {
     import spark.implicits._
     import graft.operators.Ivm
-    import graft.catalog.MergeSnapshotStore
     // an out-of-band takedown between micro-batches must repair through
     // the missed commits' OWN changelog (diff of the version the
     // registry left vs the version that stands — delta-sized for the
@@ -746,7 +721,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("replay guards: a done batch's replay skips; a mid-write replay refuses proven foreign commits") {
     import spark.implicits._
     import graft.operators.Ivm
-    import graft.catalog.MergeSnapshotStore
     // two crash shapes a replay must survive WITHOUT un-happening an
     // out-of-band takedown: (a) crash AFTER every write landed (done
     // marker present) — the replay must skip its writes entirely, or a
@@ -811,7 +785,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("streaming MoR visibility: a mid-stream takedown folds masked, dashboard repairs") {
     import spark.implicits._
     import graft.operators.Ivm
-    import graft.catalog.MergeSnapshotStore
     val tmp = Files.createTempDirectory("graft-stream-mor").toString
     val catalog = new InMemoryCatalog
     // a REAL retention window: the runner's pinned reads and the
@@ -864,7 +837,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Ivm
     val tmp = Files.createTempDirectory("graft-stream-hll").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("hsdb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("hsdb", "r_hll", s"$tmp/r_hll"))
     val specs = Seq(Ivm.hllDistinctSpec("r_hll", col("grp_in"), col("v")))
@@ -910,7 +883,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Ivm
     val tmp = Files.createTempDirectory("graft-stream-kll").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("ksdb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("ksdb", "r_kll", s"$tmp/r_kll"))
     val specs = Seq(Ivm.kllQuantileSpec("r_kll", col("grp_in"), col("v")))
@@ -953,7 +926,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Ivm
     val tmp = Files.createTempDirectory("graft-stream-freq").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("fsdb", "snap", s"$tmp/snap"))
     catalog.register(TableMeta("fsdb", "r_fi", s"$tmp/r_fi"))
     val specs = Seq(Ivm.freqItemsSpec("r_fi", col("grp_in"), col("item"),
@@ -998,7 +971,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // docs tokenized, proven equal to a from-scratch rebuild
     val tmp = Files.createTempDirectory("graft-stream-bm25").toString
     val catalog = new InMemoryCatalog
-    val store = new SnapshotStore(spark, catalog)
+    val store = new MergeSnapshotStore(spark, catalog, nBuckets = 4)
     catalog.register(TableMeta("sbm", "docs", s"$tmp/docs"))
     TextAnalysis.registerBm25Tables(store, "sbm", "bm", tmp)
     val specs = TextAnalysis.bm25IndexSpecs("bm", "doc_id", "text")

@@ -168,7 +168,7 @@ class ChangeFeedSpec extends AnyFunSuite with SparkFixture {
     // then maintained from the FEED alone — the source never rescans
     val downTmp = Files.createTempDirectory("graft-feed-down").toString
     val downCat = new InMemoryCatalog
-    val down = new graft.catalog.SnapshotStore(spark, downCat,
+    val down = new MergeSnapshotStore(spark, downCat, nBuckets = 4,
       keepVersions = 4)
     downCat.register(TableMeta("ddb", "mirror", s"$downTmp/mirror"))
     downCat.register(TableMeta("ddb", "agg", s"$downTmp/agg"))
