@@ -204,7 +204,7 @@ object PipelineMain {
     // Keys hash through the TARGET's pk type — mapEvents casts them there
     val v0 = store.manifestEntries(Db, "offenders", 0)
     val v1 = store.manifestEntries(Db, "offenders", 1)
-    val pkType = store.read(Db, "offenders").schema("offender_id").dataType
+    val pkType = store.committedSchema(Db, "offenders")("offender_id").dataType
     val touched = landed
       .selectExpr("coalesce(after.OFFENDER_ID, before.OFFENDER_ID) AS k")
       .na.drop()

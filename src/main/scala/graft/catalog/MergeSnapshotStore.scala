@@ -59,19 +59,31 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
  * cannot close the race and a loud warning fires. Multi-writer
  * deployments there pass a [[ManifestLog]] built on the store's
  * conditional-put API (S3 If-None-Match, GCS generation-match), which
- * makes the publish a true CAS with no rename assumption. A scoped merge
- * that loses the race checks the winner's manifest at BUCKET
- * granularity: if every bucket this merge touched still points at the
- * exact directories it read from (and the schema is unchanged), its
- * written output is still valid verbatim and it REBASES — republishes
- * against the winner's manifest, carrying the winner's untouched-bucket
- * work — and retries; if any touched bucket moved (or the schema
- * changed), it refuses with [[java.util.ConcurrentModificationException]]
- * and the caller re-runs against the new snapshot. A full [[overwrite]]
- * replaces the table wholesale, so losing the race only bumps its
- * version number and retries. A refused or crashed attempt's data
- * directories are unreferenced by any manifest and are reclaimed by the
- * normal vacuum tombstone cycle. Because a commit's data directories
+ * makes the publish a true CAS with no rename assumption. Every publish
+ * but [[cloneTable]]'s goes through one commit funnel (`publish`): it
+ * stamps the operation, publishes at base + 1 (a base whose successor
+ * vacuum has already expired loses without a CAS: the create-if-absent
+ * would re-create that version below the head), vacuums on success,
+ * and on a lost race hands the winner to the commit's policy, one of
+ * three:
+ *  - REFUSE with [[java.util.ConcurrentModificationException]]: the
+ *    metadata-only DDL, RESTORE, and the base-pinned maintenance
+ *    rewrites (compact, compactClustered, rebucket, compactFilesClustered,
+ *    the PK-less debt fold and the dead-sidecar clear) — the caller
+ *    re-runs against the new snapshot;
+ *  - REBASE AFTER ADJUDICATION: the scoped commits (CDC merge, insert,
+ *    copy-on-write delete/update, bucket-scoped compaction, keyed debt
+ *    fold) and merge-on-read deletes check the winner's manifest at
+ *    BUCKET granularity; if every bucket this commit depends on still
+ *    points at the exact directories it read from (and the schema
+ *    shape and bucket count are unchanged), its written output is still
+ *    valid verbatim and it republishes against the winner's manifest,
+ *    carrying the winner's untouched-bucket work; otherwise it refuses;
+ *  - RETRY UNCHANGED: a plain [[overwrite]] replaces the table
+ *    wholesale, so losing the race only bumps its version number (last
+ *    writer wins).
+ * A refused or crashed attempt's data directories are unreferenced by
+ * any manifest and are reclaimed by the normal vacuum tombstone cycle. Because a commit's data directories
  * are orphans to every OTHER writer's vacuum until its manifest
  * publishes, concurrent writers additionally require
  * `vacuumRetentionMs` to exceed the longest write-to-publish window
@@ -613,9 +625,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       s"pointLookup needs a registered PK for ${meta.qualified}")
     val pks = meta.primaryKey
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    require(m.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${m.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)}")
+    requireBucketCount(meta, m)
     val pkTypes = pks.map(k => m.schema(k).dataType)
     val typedKeys = keys.select(pks.zip(pkTypes).map { case (k, t) =>
       col(k).cast(t).as(k) }: _*).na.drop()
@@ -1630,10 +1640,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * the union of the committed one and `df`'s (Delta's `mergeSchema` on
    * the domain outputs, reference src/apply_to_domains.py:213-228).
    * Used for bootstrap loads and schema-evolving domain writes; CDC
-   * batches use [[mergeScoped]]. Replaces the table
-   * wholesale, so losing a commit race never invalidates the written
-   * data — the CAS retry just republishes at the next version (last
-   * overwrite wins, the natural semantics of "overwrite"). */
+   * batches use [[mergeScoped]]. A lost commit race retries unchanged
+   * (last overwrite wins). */
   def overwrite(db: String, table: String, df: DataFrame,
                 mergeSchema: Boolean = false): Unit = {
     val meta = catalog(db, table)
@@ -1642,20 +1650,24 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       if (mergeSchema && vs.nonEmpty)
         MergeSnapshotStore.alignToUnion(readManifest(meta.location, vs.last).schema, df)
       else df
-    overwriteWith(meta, out)
+    overwriteWith(meta, vs.lastOption.getOrElse(-1), out)
   }
 
-  /** The overwrite commit body, with an optional cluster layout for
-   * [[compactClustered]] (resolved dims, bits, files per bucket). */
-  private def overwriteWith(meta: TableMeta, out: DataFrame,
+  /** The overwrite commit body over version `base` (-1 before the first
+   * commit), with an optional cluster layout for [[compactClustered]]
+   * (resolved dims, bits, files per bucket). A `pinned` rewrite (compact, compactClustered,
+   * rebucket) rewrote the snapshot at `base` and refuses a lost
+   * race: republishing would silently CLOBBER the racing commit's rows
+   * under a new version number. A plain overwrite retries unchanged
+   * (last writer wins). */
+  private def overwriteWith(meta: TableMeta, base: Int, out: DataFrame,
       cluster: Option[(Seq[(String, (Double, Double))], Int, Int)] = None,
-      requireBase: Option[Int] = None,
+      pinned: Boolean = false,
       op: String = "overwrite",
       enforceChecks: Boolean = true): Unit = jobLabel(
       s"store: $op ${meta.qualified}") {
-    val vs = manifestVersions(meta.location)
     val (written, stats, strStats, setStats, fileRows) =
-      writeData(meta, vs.lastOption.getOrElse(-1) + 1, out, meta.primaryKey,
+      writeData(meta, base + 1, out, meta.primaryKey,
         cluster, enforceChecks)
     // a whole-table rewrite re-materializes every file under the
     // CURRENT logical names — the column mapping RESETS (defensive
@@ -1664,41 +1676,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     val m = Manifest(
       MergeSnapshotStore.plainLogical(dropBucketCol(out.schema)),
       written, nBucketsOf(meta),
-      stats, strStats, setStats,
-      op = op, at = System.currentTimeMillis(), rows = fileRows)
-    runBeforePublish()
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val cur = manifestVersions(meta.location)
-      // a REWRITE of a snapshot (compact / compactClustered) must never
-      // win a race it lost: if the table moved past the version the
-      // rewrite read, republishing would silently CLOBBER the racing
-      // commit's rows under a new version number. Refuse instead — the
-      // caller re-runs against the new snapshot. Plain overwrite keeps
-      // its documented last-writer-wins semantics (requireBase = None).
-      requireBase.foreach { base =>
-        val now = cur.lastOption.getOrElse(-1)
-        if (now != base)
-          throw new java.util.ConcurrentModificationException(
-            s"${meta.qualified} moved from version $base to $now while a " +
-              "compaction rewrote it — the rewrite is stale; re-run " +
-              "against the new snapshot (a compaction must never clobber " +
-              "a concurrent commit)")
-      }
-      val next = cur.lastOption.getOrElse(-1) + 1
-      if (publishManifest(meta.location, next, m)) {
-        jobPhase("vacuum") { vacuum(meta, cur); clearTombstones(meta, written) }
-        done = true
-      }
-      else {
-        attempt += 1
-        if (attempt >= MergeSnapshotStore.MaxCommitAttempts)
-          throw new java.util.ConcurrentModificationException(
-            s"could not commit overwrite of ${meta.qualified} after $attempt " +
-              "attempts — a writer keeps taking every version; retry or " +
-              "serialize the writers")
-      }
+      stats, strStats, setStats, rows = fileRows)
+    // the new manifest depends on no base: it stands in for one
+    publish(meta, base, m, op, written.values)((_, _) => m) { (now, winner) =>
+      if (pinned) refuseLoss(meta, s"a compaction rewrote version " +
+        s"$base: the rewrite is stale and must never clobber a " +
+        "concurrent commit")(now, winner)
     }
   }
 
@@ -1714,9 +1697,122 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   private[graft] def beforePublish_=(f: () => Unit): Unit =
     beforePublishRef.set(f)
   /** Atomically take the armed hook (replacing it with a no-op) and run
-   * it — the one way commit paths consume the failpoint. */
+   * it — the one way the commit funnel consumes the failpoint. */
   private def runBeforePublish(): Unit =
     beforePublishRef.getAndSet(() => ())()
+
+  /** The one commit funnel: every manifest publish but [[cloneTable]]'s
+   * (that one targets an unregistered location) goes through here —
+   * Delta's commit protocol of data first, then a compare-and-swap of
+   * version base + 1. `readVer` is the version `read` was read at (-1
+   * before the first commit). The armed [[beforePublish]] failpoint
+   * runs once; then each attempt lists the versions and `build(baseVer,
+   * base)`, stamped with `op` and the wall clock, publishes at
+   * `baseVer + 1`. The CAS arbitrates every race but one: once vacuum
+   * has expired the base's successor (the base is more than
+   * `keepVersions` behind the head), a create-if-absent would re-create
+   * it below the head, so a listing that shows a later head without
+   * that successor is a loss without a CAS. On success the versions up
+   * to the base are vacuumed and stray tombstones cleared on the
+   * commit's `fresh` directories. On a loss the winner's version and
+   * manifest go to `onLoss`, the caller's policy: throw to refuse, or
+   * return to publish again over the winner (a `build` that reads its
+   * base rebases onto it, one that ignores it retries unchanged), up
+   * to a fixed number of attempts. Returns the published version. */
+  private def publish(meta: TableMeta, readVer: Int, read: Manifest,
+                      op: String, fresh: Iterable[String])
+                     (build: (Int, Manifest) => Manifest)
+                     (onLoss: (Int, Manifest) => Unit): Int = {
+    runBeforePublish()
+    var baseVer = readVer
+    var base = read
+    var attempt = 0
+    while (true) {
+      val listed = manifestVersions(meta.location)
+      val expired = listed.lastOption.exists(_ > baseVer) &&
+        !listed.contains(baseVer + 1)
+      if (!expired && publishManifest(meta.location, baseVer + 1,
+          build(baseVer, base).copy(op = op, at = System.currentTimeMillis()))) {
+        jobPhase("vacuum") {
+          vacuum(meta, listed.filter(_ <= baseVer))
+          clearTombstones(meta, fresh)
+        }
+        return baseVer + 1
+      }
+      attempt += 1
+      val latest = manifestVersions(meta.location).last
+      base = readManifest(meta.location, latest)
+      baseVer = latest
+      jobPhase("publish")(onLoss(latest, base))
+      if (attempt >= MergeSnapshotStore.MaxCommitAttempts)
+        throw new java.util.ConcurrentModificationException(
+          s"could not commit $op to ${meta.qualified} after $attempt " +
+            "attempts — writers keep taking every version; retry or " +
+            "serialize the writers")
+    }
+    sys.error("unreachable: the loop returns or throws")
+  }
+
+  /** The head version and manifest a mutator starts from;
+   * refuses, naming what it is `doing`, when nothing is committed. */
+  private def headOf(meta: TableMeta, doing: String): (Int, Manifest) = {
+    val vs = manifestVersions(meta.location)
+    require(vs.nonEmpty,
+      s"bootstrap ${meta.qualified} with overwrite() before $doing")
+    (vs.last, readManifest(meta.location, vs.last))
+  }
+
+  /** The bucket function is pinned by the table's committed layout: a
+   * store opened with a different nBuckets would compute bucket ids
+   * against the wrong modulus and merge rows past their existing
+   * versions (duplicate PKs, deletes that miss). Fail fast instead. */
+  private def requireBucketCount(meta: TableMeta, m: Manifest): Unit =
+    require(m.nBuckets == nBucketsOf(meta),
+      s"${meta.qualified} is committed with nBuckets=${m.nBuckets}; " +
+        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
+        "store/table with the committed bucket count (or overwrite() to " +
+        "re-bucket)")
+
+  /** The rebase adjudication [[commitScoped]] and [[publishMorSidecar]]
+   * share, against the manifest `current` the commit READ at `readVer`:
+   * a winner that re-bucketed the table, changed its schema shape or
+   * rewrote one of the `guarded` buckets invalidated this commit's
+   * inputs, so it refuses and the caller re-runs against the new
+   * snapshot. The schema compares structurally (catalogString ignores
+   * nullability and metadata): a winner that relaxed a column to
+   * nullable is safe to rebase over, since nullability is OR-merged at
+   * publish; one that added, dropped or retyped a column is not. */
+  private def requireRebasable(meta: TableMeta, what: String, readVer: Int,
+                               current: Manifest, guarded: Iterable[Int])
+                              (latest: Int, winner: Manifest): Unit = {
+    require(winner.nBuckets == nBucketsOf(meta),
+      s"${meta.qualified} was concurrently re-bucketed to " +
+        s"nBuckets=${winner.nBuckets}; rerun against the new layout")
+    if (winner.schema.catalogString != current.schema.catalogString)
+      throw new java.util.ConcurrentModificationException(
+        s"concurrent commit to ${meta.qualified} changed the schema " +
+          s"while this $what (base version $readVer) was in flight — " +
+          "rerun against the new snapshot")
+    val moved = guarded.filter(b =>
+      winner.buckets.get(b) != current.buckets.get(b) ||
+        winner.carries.get(b) != current.carries.get(b))
+    if (moved.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"concurrent commit to ${meta.qualified} rewrote buckets " +
+          s"${moved.toSeq.sorted.mkString(",")} this $what depends on " +
+          s"(base version $readVer, now $latest) — rerun against the " +
+          "new snapshot")
+  }
+
+  /** The refuse-on-loss policy: another writer moved the table while
+   * `what` happened, and this commit may not rebase over it (a
+   * metadata-only commit republishes the schema it judged; a
+   * base-pinned rewrite would clobber the winner's rows). */
+  private def refuseLoss(meta: TableMeta, what: String)
+                        (now: Int, winner: Manifest): Unit =
+    throw new java.util.ConcurrentModificationException(
+      s"${meta.qualified} moved to version $now while $what — re-run " +
+        "against the new snapshot")
 
   /**
    * Partition-scoped merge commit. `changedKeys` (any frame exposing the
@@ -1734,17 +1830,11 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * labelled `store: merge <db.table> <phase>`, the phase one of scan,
    * decide (inside `rewrite`), write, stats, publish and vacuum.
    *
-   * Under concurrent writers the commit is optimistic: losing the
-   * version CAS to a writer whose commit left every bucket THIS merge
-   * touched untouched (and the schema unchanged) rebases — the written
-   * output is still byte-valid because its input directories are
-   * byte-identical, so the merge republishes carrying the winner's
-   * work and retries. A winner that moved any touched bucket (or the
-   * schema) invalidates this merge's inputs; it refuses with
-   * [[java.util.ConcurrentModificationException]] and the caller
-   * re-runs `rewrite` against the new snapshot. Nothing is ever
-   * half-committed: until the manifest CAS lands, the written data is
-   * invisible orphan files.
+   * A lost commit race rebases after adjudication (see the class doc):
+   * a winner that moved a touched bucket, the schema or the delete set
+   * refuses with [[java.util.ConcurrentModificationException]] and the
+   * caller re-runs `rewrite` against the new snapshot. Until the
+   * manifest CAS lands, the written data is invisible orphan files.
    */
   def mergeScoped(db: String, table: String, changedKeys: DataFrame)
                  (rewrite: DataFrame => DataFrame): Seq[Int] = jobLabel(
@@ -1753,18 +1843,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     if (!meta.hasPrimaryKey) throw new IllegalStateException(
       s"mergeScoped needs a registered PK for ${meta.qualified}")
     val pks = meta.primaryKey
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"bootstrap ${meta.qualified} with overwrite() before merging")
-    val current = readManifest(meta.location, vs.last)
-    // the bucket function is pinned by the table's committed layout — a
-    // store opened with a different nBuckets would compute bucket ids
-    // against the wrong modulus and merge rows past their existing
-    // versions (duplicate PKs, deletes that miss). Fail fast instead.
-    require(current.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${current.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
-        "store/table with the committed bucket count (or overwrite() to " +
-        "re-bucket)")
+    val (readVer, current) = headOf(meta, "merging")
+    requireBucketCount(meta, current)
     // loop control; <= nBuckets values. A key frame already on the
     // driver (a local relation, which the bucket projection folds into)
     // is hashed there with no job; any other frame pays one scan that
@@ -1780,7 +1860,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       }
     }).distinct.toSeq.sorted
     if (touched.isEmpty) return Nil
-    commitScoped(meta, vs.last, current, touched, pks)(rewrite)
+    commitScoped(meta, readVer, current, touched, pks)(rewrite)
     touched
   }
 
@@ -1946,18 +2026,13 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     require(stray.isEmpty,
       s"merge rewrote buckets $stray outside the changed-key set $touched — " +
         "rewrite() must not introduce rows for untouched keys")
-    runBeforePublish()
     // new manifest = base entries minus touched (covers emptied buckets),
     // plus whatever the rewrite actually produced; carried-forward
     // buckets KEEP their stats (their files are carried by reference,
     // so the stats that measured them stay exact), touched buckets get
     // the freshly-measured ones. On a rebase the base advances to the
     // winner's manifest — its untouched-bucket work is carried instead.
-    var base = current
-    var baseVer = readVer
-    var attempt = 0
-    var committed = false
-    while (!committed) {
+    publish(meta, readVer, current, op, written.values) { (baseVer, base) =>
       val carried = (base.buckets -- touched)
       val carriedDirs = carried.values.toSet
       // untouched buckets' CARRY lines ride along too (their files were
@@ -1997,67 +2072,27 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         .filter(d =>
           (newBuckets.values ++ carriedCarries.values.flatten).exists(p =>
             commitNumberOf(p).forall(_ < d.version)))
-      if (publishManifest(meta.location, baseVer + 1,
-          Manifest(schema, newBuckets, nBucketsOf(meta),
-            carriedStats ++ newStats, carriedStrStats ++ newStrStats,
-            carriedSetStats ++ newSetStats, liveDeletes, carriedCarries,
-            op = op, at = System.currentTimeMillis(),
-            rows = base.rows.filter { case (fp, _) => keeps(fp) } ++
-              newRows,
-            retired = base.retired))) {
-        jobPhase("vacuum") {
-          vacuum(meta, manifestVersions(meta.location).filter(_ <= baseVer))
-          clearTombstones(meta, written)
-        }
-        committed = true
-      } else {
-        // lost the CAS: adjudicate at bucket granularity against the
-        // manifest we actually READ the rewritten rows from
-        val latest = manifestVersions(meta.location).last
-        val winner = readManifest(meta.location, latest)
-        require(winner.nBuckets == nBucketsOf(meta),
-          s"${meta.qualified} was concurrently re-bucketed to " +
-            s"nBuckets=${winner.nBuckets}; rerun against the new layout")
-        // structural comparison (catalogString ignores nullability and
-        // metadata): a winner that relaxed a column to nullable is safe
-        // to rebase over (nullability is OR-merged at publish); a winner
-        // that added/dropped/retyped a column is not — our rewritten
-        // rows were computed against the old shape
-        if (winner.schema.catalogString != current.schema.catalogString)
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent commit to ${meta.qualified} changed the schema " +
-              s"while this merge (base version ${readVer}) was in flight — " +
-              "rerun the merge against the new snapshot")
-        // a winner that changed the delete-sidecar set refuses: this
-        // rewrite read its buckets WITHOUT the winner's sidecar (its
-        // output may physically re-materialize rows the winner deleted
-        // — and new files would be exempt from the sidecar by the
-        // sequence rule), and a winner that CLEARED sidecars folded
-        // rows this rewrite still excludes
-        if (winner.deletes != current.deletes)
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent commit to ${meta.qualified} changed the " +
-              s"merge-on-read delete set while this merge (base version " +
-              s"$readVer) was in flight — rerun against the new snapshot")
-        val moved = touched.filter(b =>
-          winner.buckets.get(b) != current.buckets.get(b) ||
-            winner.carries.get(b) != current.carries.get(b))
-        if (moved.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent commit to ${meta.qualified} rewrote buckets " +
-              s"${moved.mkString(",")} this merge also touched (base " +
-              s"version ${readVer}, now $latest) — rerun the merge against " +
-              "the new snapshot")
-        jobPhase("publish")(rebaseGuard(winner))
-        attempt += 1
-        if (attempt >= MergeSnapshotStore.MaxCommitAttempts)
-          throw new java.util.ConcurrentModificationException(
-            s"could not commit merge to ${meta.qualified} after $attempt " +
-              "rebases — writers keep taking every version; retry or " +
-              "serialize the writers")
-        base = winner
-        baseVer = latest
-      }
+      Manifest(schema, newBuckets, nBucketsOf(meta),
+        carriedStats ++ newStats, carriedStrStats ++ newStrStats,
+        carriedSetStats ++ newSetStats, liveDeletes, carriedCarries,
+        rows = base.rows.filter { case (fp, _) => keeps(fp) } ++ newRows,
+        retired = base.retired)
+    } { (latest, winner) =>
+      // lost the CAS: adjudicate at bucket granularity against the
+      // manifest we actually READ the rewritten rows from
+      requireRebasable(meta, "merge", readVer, current, touched)(latest, winner)
+      // a winner that changed the delete-sidecar set refuses: this
+      // rewrite read its buckets WITHOUT the winner's sidecar (its
+      // output may physically re-materialize rows the winner deleted
+      // — and new files would be exempt from the sidecar by the
+      // sequence rule), and a winner that CLEARED sidecars folded
+      // rows this rewrite still excludes
+      if (winner.deletes != current.deletes)
+        throw new java.util.ConcurrentModificationException(
+          s"concurrent commit to ${meta.qualified} changed the " +
+            s"merge-on-read delete set while this merge (base version " +
+            s"$readVer) was in flight — rerun against the new snapshot")
+      rebaseGuard(winner)
     }
   }
 
@@ -2118,24 +2153,18 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                     MergeSnapshotStore.CopyOnWrite): Long = jobLabel(
       s"store: delete $db.$table") {
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"nothing committed at ${meta.qualified} to delete from")
-    val current = readManifest(meta.location, vs.last)
+    val (readVer, current) = headOf(meta, "deleting")
     val e = resolvePredicate(current, predicate)
     require(e.deterministic,
       s"deleteWhere on ${meta.qualified} needs a deterministic predicate " +
         "— the find scan and the bucket rewrite evaluate it independently")
-    require(current.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${current.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
-        "store/table with the committed bucket count")
+    requireBucketCount(meta, current)
     mode match {
       case MergeSnapshotStore.CopyOnWrite =>
         matchedBuckets(meta, current, e, predicate) match {
           case None => 0L
           case Some((touched, matched)) =>
-            commitScoped(meta, vs.last, current, touched, meta.primaryKey,
+            commitScoped(meta, readVer, current, touched, meta.primaryKey,
                 dmlRebaseGuard(meta, current, e, "delete"),
                 op = "delete") { old =>
               old.filter(org.apache.spark.sql.functions.not(
@@ -2144,7 +2173,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
             matched
         }
       case MergeSnapshotStore.MergeOnRead =>
-        deleteWhereMor(meta, vs.last, current, e, predicate)
+        deleteWhereMor(meta, readVer, current, e, predicate)
     }
   }
 
@@ -2177,32 +2206,18 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     val files = listDataFiles(meta, current, None)
     val cand = files.filter(fileMayMatch(e, meta, current))
     if (cand.isEmpty) return 0L
-    // one job: the matched keys land as the sidecar (tmp + rename, the
-    // data-commit discipline); count and touched buckets read back off
-    // the written file — delete-sized
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val rel = f"data/d${readVer + 1}%06d-$nonce/k"
-    val tmp = new Path(f"${meta.location}/data/.tmp-d${readVer + 1}%06d-$nonce")
-    val fin = new Path(f"${meta.location}/data/d${readVer + 1}%06d-$nonce")
-    val f = fs(fin)
     // the sidecar spells the key's ON-DISK (physical) name, the one
     // spelling every era's read funnel binds — identical to the
     // logical name unless the PK was renamed (PkPhysicalProp)
     val pkDisk = pks.map(k => MergeSnapshotStore.pkPhysicalOf(meta, k))
-    loadFiles(meta, current, cand, predicate)
+    val keys = loadFiles(meta, current, cand, predicate)
       .select(pks.map(col): _*)
       .toDF(pkDisk: _*)
-      .coalesce(1) // delete-sized by contract
-      .write.mode("errorifexists").parquet(s"$tmp/k")
-    if (!f.rename(tmp, fin))
-      throw new IllegalStateException(s"delete sidecar rename failed: $tmp -> $fin")
-    val keys = spark.read.parquet(refPath(meta.location, rel))
-    val matched = keys.count()
-    if (matched == 0L) { f.delete(fin, true); return 0L }
-    val keyBuckets = keys.select(bucketOf(meta, pkDisk.map(col)).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet // <= nBuckets values
-    publishMorSidecar(meta, readVer, current, e, rel, matched, keyBuckets,
-      MergeSnapshotStore.EqDeleteKind, "merge-on-read delete")
+    publishMorSidecar(meta, readVer, current, e, keys,
+        MergeSnapshotStore.EqDeleteKind, "merge-on-read delete") { written =>
+      written.select(bucketOf(meta, pkDisk.map(col)).as("__b"))
+        .distinct().collect().map(_.getInt(0)).toSet // <= nBuckets values
+    }
   }
 
   /** The position-delete body (PK-less tables — raw crawl shards, log
@@ -2227,11 +2242,6 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     val files = listDataFiles(meta, current, None)
     val cand = files.filter(fileMayMatch(e, meta, current))
     if (cand.isEmpty) return 0L
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val rel = f"data/d${readVer + 1}%06d-$nonce/k"
-    val tmp = new Path(f"${meta.location}/data/.tmp-d${readVer + 1}%06d-$nonce")
-    val fin = new Path(f"${meta.location}/data/d${readVer + 1}%06d-$nonce")
-    val f = fs(fin)
     // the scan reads the files' PHYSICAL spelling like every read
     // funnel (a logical-named read over post-rename carried files
     // would silently NULL the renamed column under the predicate);
@@ -2239,89 +2249,66 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     // the logical projection carries the address columns through
     val raw = spark.read.schema(MergeSnapshotStore.physicalSchema(current.schema))
       .parquet(cand.map(r => refPath(meta.location, r)): _*)
-    toLogical(applyDeletes(meta, current, withRowAddress(raw)),
+    val addrs = toLogical(applyDeletes(meta, current, withRowAddress(raw)),
         current.schema,
         extras = Seq(MergeSnapshotStore.PosFileCol,
           MergeSnapshotStore.PosPosCol))
       .filter(predicate)
       .select(col(MergeSnapshotStore.PosFileCol).as("__file"),
         col(MergeSnapshotStore.PosPosCol).as("__pos"))
-      .coalesce(1) // delete-sized by contract
-      .write.mode("errorifexists").parquet(s"$tmp/k")
-    if (!f.rename(tmp, fin))
-      throw new IllegalStateException(s"delete sidecar rename failed: $tmp -> $fin")
-    val addrs = spark.read.parquet(refPath(meta.location, rel))
-    val matched = addrs.count()
-    if (matched == 0L) { f.delete(fin, true); return 0L }
-    // a row whose file path failed to relativize would be silently
-    // unmaskable at read time — refuse before publishing
-    require(addrs.filter(col("__file") === "").isEmpty,
-      s"position delete on ${meta.qualified} matched rows in a data file " +
-        "outside the store's data/cNNNNNN naming — refusing to publish " +
-        "an unmaskable address")
-    val refFiles = addrs.select("__file").distinct()
-      .collect().map(_.getString(0)).toSet // <= candidate file count
-    val refBuckets = refFiles.flatMap(current.bucketOf(_))
-    publishMorSidecar(meta, readVer, current, e, rel, matched, refBuckets,
-      MergeSnapshotStore.PosDeleteKind, "merge-on-read position delete")
+    publishMorSidecar(meta, readVer, current, e, addrs,
+        MergeSnapshotStore.PosDeleteKind,
+        "merge-on-read position delete") { written =>
+      // a row whose file path failed to relativize would be silently
+      // unmaskable at read time — refuse before publishing
+      require(written.filter(col("__file") === "").isEmpty,
+        s"position delete on ${meta.qualified} matched rows in a data " +
+          "file outside the store's data/cNNNNNN naming — refusing to " +
+          "publish an unmaskable address")
+      val refFiles = written.select("__file").distinct()
+        .collect().map(_.getString(0)).toSet // <= candidate file count
+      refFiles.flatMap(current.bucketOf(_))
+    }
   }
 
-  /** The shared CAS-publish tail of both MoR delete kinds: append one
-   * sidecar line to the current manifest, rebasing on losses only when
-   * the winner neither rewrote a guarded bucket (key-owning for eq,
+  /** The sidecar writer and commit both MoR delete kinds share: one
+   * job lands `rows` (the matched keys or addresses) as a sidecar
+   * directory (tmp + rename, the data-commit discipline), which is
+   * read back and counted — an empty match deletes it and commits
+   * nothing. The commit appends one sidecar line to the current
+   * manifest, rebasing on losses only when the winner neither rewrote
+   * a `guarded` bucket of the written sidecar (key-owning for eq,
    * address-referenced for pos) nor wrote files that may match the
-   * predicate (the [[dmlRebaseGuard]] concurrent-insert hazard). */
+   * predicate (the [[dmlRebaseGuard]] concurrent-insert hazard).
+   * Returns the matched row count. */
   private def publishMorSidecar(meta: TableMeta, readVer: Int,
                                 current: Manifest,
                                 e: org.apache.spark.sql.catalyst.expressions.Expression,
-                                rel: String, matched: Long,
-                                guardBuckets: Set[Int],
-                                kind: String, op: String): Long = {
-    runBeforePublish()
-    var base = current
-    var baseVer = readVer
-    var attempt = 0
-    while (true) {
-      if (publishManifest(meta.location, baseVer + 1,
-          base.copy(deletes =
-            base.deletes :+ DeleteFile(rel, baseVer + 1, matched, kind),
-            op = "delete-mor", at = System.currentTimeMillis()))) {
-        vacuum(meta, manifestVersions(meta.location).filter(_ <= baseVer))
-        // a racing vacuum may have tombstoned the fresh sidecar dir
-        // between its rename and this publish — same clear as data dirs
-        clearTombstones(meta, SortedMap(0 -> rel))
-        return matched
-      }
-      val latest = manifestVersions(meta.location).last
-      val winner = readManifest(meta.location, latest)
-      require(winner.nBuckets == nBucketsOf(meta),
-        s"${meta.qualified} was concurrently re-bucketed to " +
-          s"nBuckets=${winner.nBuckets}; rerun against the new layout")
-      if (winner.schema.catalogString != current.schema.catalogString)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit to ${meta.qualified} changed the schema " +
-            s"while this $op (base version $readVer) was in flight — " +
-            "rerun against the new snapshot")
-      val moved = guardBuckets.filter(b =>
-        winner.buckets.get(b) != current.buckets.get(b) ||
-          winner.carries.get(b) != current.carries.get(b))
-      if (moved.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit to ${meta.qualified} rewrote buckets " +
-            s"${moved.toSeq.sorted.mkString(",")} this $op depends on " +
-            s"(base version $readVer, now $latest) — rerun against the " +
-            "new snapshot")
-      dmlRebaseGuard(meta, current, e, op)(winner)
-      attempt += 1
-      if (attempt >= MergeSnapshotStore.MaxCommitAttempts)
-        throw new java.util.ConcurrentModificationException(
-          s"could not commit $op to ${meta.qualified} after $attempt " +
-            "rebases — writers keep taking every version; retry or " +
-            "serialize the writers")
-      base = winner
-      baseVer = latest
+                                rows: DataFrame, kind: String, what: String)
+                               (guarded: DataFrame => Set[Int]): Long = {
+    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val rel = f"data/d${readVer + 1}%06d-$nonce/k"
+    val tmp = new Path(f"${meta.location}/data/.tmp-d${readVer + 1}%06d-$nonce")
+    val fin = new Path(f"${meta.location}/data/d${readVer + 1}%06d-$nonce")
+    val f = fs(fin)
+    rows.coalesce(1) // delete-sized by contract
+      .write.mode("errorifexists").parquet(s"$tmp/k")
+    if (!f.rename(tmp, fin))
+      throw new IllegalStateException(s"delete sidecar rename failed: $tmp -> $fin")
+    val written = spark.read.parquet(refPath(meta.location, rel))
+    val matched = written.count()
+    if (matched == 0L) { f.delete(fin, true); return 0L }
+    val guardBuckets = guarded(written)
+    // the fresh sidecar dir is the commit's only new directory: a
+    // racing vacuum may have tombstoned it between rename and publish
+    publish(meta, readVer, current, "delete-mor", Seq(rel)) { (baseVer, base) =>
+      base.copy(deletes =
+        base.deletes :+ DeleteFile(rel, baseVer + 1, matched, kind))
+    } { (latest, winner) =>
+      requireRebasable(meta, what, readVer, current, guardBuckets)(latest, winner)
+      dmlRebaseGuard(meta, current, e, what)(winner)
     }
-    matched // unreachable; the loop returns or throws
+    matched
   }
 
   /** The DML rebase guard (Delta's ConcurrentAppendException contract):
@@ -2412,14 +2399,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       s"store: update $db.$table") {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"nothing committed at ${meta.qualified} to update")
-    val current = readManifest(meta.location, vs.last)
-    require(current.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${current.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
-        "store/table with the committed bucket count")
+    val (readVer, current) = headOf(meta, "updating")
+    requireBucketCount(meta, current)
     assignments.keys.foreach { c =>
       require(current.schema.fieldNames.contains(c),
         s"updateWhere assigns '$c' which ${meta.qualified} does not have " +
@@ -2442,7 +2423,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       case None => 0L
       case Some((touched, matched)) =>
         val hit = org.apache.spark.sql.functions.coalesce(predicate, lit(false))
-        commitScoped(meta, vs.last, current, touched, meta.primaryKey,
+        commitScoped(meta, readVer, current, touched, meta.primaryKey,
             dmlRebaseGuard(meta, current, e, "update"),
             op = "update") { old =>
           // every assignment resolves against the PRE-update row (SQL
@@ -2639,14 +2620,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     require(meta.hasPrimaryKey,
       s"compactBucketsClustered keeps PK bucketing — ${meta.qualified} " +
         "has no PK")
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val base = vs.last
-    val current = readManifest(meta.location, base)
-    require(current.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${current.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
-        "store/table with the committed bucket count")
+    val (readVer, current) = headOf(meta, "compacting")
+    requireBucketCount(meta, current)
     val missing = buckets.filterNot(b =>
       current.buckets.contains(b) || current.carries.contains(b))
     require(missing.isEmpty,
@@ -2664,7 +2639,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
           promoted(col(c), scoped.schema(c).dataType).as(c) }: _*)
         Some((Layout.resolveRanges(shadow, dims), bits, filesPerBucket))
       }
-    commitScoped(meta, base, current, buckets, meta.primaryKey,
+    commitScoped(meta, readVer, current, buckets, meta.primaryKey,
       cluster = clusterOpt,
       dropDeletes = dropDeletes,
       op = if (dropDeletes.nonEmpty) "debt-fold" else "compact-buckets",
@@ -2734,21 +2709,15 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     require(!meta.hasPrimaryKey,
       s"compactFilesClustered is the PK-less partial rewrite — " +
         s"${meta.qualified} is keyed; use compactBucketsClustered")
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val base = vs.last
-    val current = readManifest(meta.location, base)
-    require(current.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${current.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
-        "store/table with the committed bucket count")
+    val (readVer, current) = headOf(meta, "compacting")
+    requireBucketCount(meta, current)
     val listing = listDataFiles(meta, current, None).toSet
     val missing = files.filterNot(listing)
     require(missing.isEmpty,
       s"files ${missing.sorted.mkString(",")} are not part of " +
         s"${meta.qualified}'s current snapshot")
     val before = current.deletes
-    commitFileScoped(meta, base, current, files.toSet, dropDeletes,
+    commitFileScoped(meta, readVer, current, files.toSet, dropDeletes,
       op = if (dropDeletes.nonEmpty) "debt-fold" else "compact-files") { rows =>
       // an all-masked selection has nothing to lay out — identity
       // (writeData emits no files; the selection just disappears)
@@ -2886,15 +2855,9 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    */
   def compactDebt(db: String, table: String): CompactionReport = {
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val base = vs.last
-    val current = readManifest(meta.location, base)
-    if (current.deletes.isEmpty) return CompactionReport(base, 0, 0L)
-    require(current.nBuckets == nBucketsOf(meta),
-      s"${meta.qualified} is committed with nBuckets=${current.nBuckets}; " +
-        s"this table resolves to nBuckets=${nBucketsOf(meta)} — open the " +
-        "store/table with the committed bucket count")
+    val (readVer, current) = headOf(meta, "compacting")
+    if (current.deletes.isEmpty) return CompactionReport(readVer, 0, 0L)
+    requireBucketCount(meta, current)
     val before = current.deletes
     if (meta.hasPrimaryKey) {
       // keyed tables only ever carry equality sidecars (deleteWhereMor
@@ -2903,9 +2866,9 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         s"${meta.qualified} is keyed but carries position-delete " +
           "sidecars — the manifest is corrupt")
       val affected = eqDebtBuckets(meta, current)
-      if (affected.isEmpty) publishDeleteClear(meta, base, current)
+      if (affected.isEmpty) publishDeleteClear(meta, readVer, current)
       else
-        commitScoped(meta, base, current, affected.toSeq.sorted,
+        commitScoped(meta, readVer, current, affected.toSeq.sorted,
           meta.primaryKey,
           dropDeletes = before.map(_.rel).toSet, op = "debt-fold",
           enforceChecks = false)(identity)
@@ -2913,7 +2876,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       require(before.forall(_.kind == MergeSnapshotStore.PosDeleteKind),
         s"${meta.qualified} is PK-less but carries equality-delete " +
           "sidecars — the manifest is corrupt")
-      compactDebtPos(meta, base, current)
+      compactDebtPos(meta, readVer, current)
     }
     compactionReport(meta, before)
   }
@@ -2923,16 +2886,10 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * its delete lines — no data job, one CAS publish, refuse on loss
    * (another writer moved the table; its commit re-judged liveness). */
   private def publishDeleteClear(meta: TableMeta, base: Int,
-                                 current: Manifest): Unit = {
-    runBeforePublish()
-    if (!publishManifest(meta.location, base + 1,
-        current.copy(deletes = Nil,
-          op = "debt-clear", at = System.currentTimeMillis())))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} moved past version $base while compactDebt " +
-          "cleared its dead sidecars — re-run against the new snapshot")
-    vacuum(meta, manifestVersions(meta.location).filter(_ <= base))
-  }
+                                 current: Manifest): Unit =
+    publish(meta, base, current, "debt-clear", Nil)(
+      (_, _) => current.copy(deletes = Nil))(
+      refuseLoss(meta, "compactDebt cleared its dead sidecars"))
 
   /** The files a PK-less snapshot's POSITION sidecars still address:
    * each sidecar's distinct `__file` set (one small read per sidecar),
@@ -3017,24 +2974,18 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     // keep masking
     val liveDeletes = current.deletes
       .filterNot(d => dropDeletes.contains(d.rel))
-    runBeforePublish()
-    if (!publishManifest(meta.location, base + 1,
-        Manifest(current.schema,
-          SortedMap((keptDirs ++ written.toSeq): _*), current.nBuckets,
-          current.stats.filter(kv => keeps(kv._1)) ++ newStats,
-          current.strStats.filter(kv => keeps(kv._1)) ++ newStrStats,
-          current.setStats.filter(kv => keeps(kv._1)) ++ newSetStats,
-          liveDeletes, carriesNew,
-          op = op, at = System.currentTimeMillis(),
-          rows = current.rows.filter(kv => keeps(kv._1)) ++ newRows,
-          retired = current.retired)))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} moved past version $base while a file-scoped " +
-          "maintenance pass rewrote it — the rewrite is stale; re-run " +
-          "against the new snapshot (a maintenance pass must never " +
-          "clobber a concurrent commit)")
-    vacuum(meta, manifestVersions(meta.location).filter(_ <= base))
-    clearTombstones(meta, written)
+    publish(meta, base, current, op, written.values) { (_, _) =>
+      Manifest(current.schema,
+        SortedMap((keptDirs ++ written.toSeq): _*), current.nBuckets,
+        current.stats.filter(kv => keeps(kv._1)) ++ newStats,
+        current.strStats.filter(kv => keeps(kv._1)) ++ newStrStats,
+        current.setStats.filter(kv => keeps(kv._1)) ++ newSetStats,
+        liveDeletes, carriesNew,
+        rows = current.rows.filter(kv => keeps(kv._1)) ++ newRows,
+        retired = current.retired)
+    }(refuseLoss(meta, s"a file-scoped maintenance pass rewrote " +
+      s"version $base: the rewrite is stale and must never clobber a " +
+      "concurrent commit"))
   }
 
   /**
@@ -3069,12 +3020,11 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         "a same-modulus rewrite is compact, not rebucket")
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val base = vs.last
-    val df = readVersion(meta, base)
+    val df = readVersion(meta, vs.last)
     val newMeta = meta.copy(properties = meta.properties +
       (MergeSnapshotStore.BucketsProp -> newBuckets.toString))
     catalog.register(newMeta)
-    try rewriteCommit(newMeta, base, df, "rebucket")
+    try rewriteCommit(newMeta, vs.last, df, "rebucket")
     catch {
       case t: Throwable =>
         // restore the old property ONLY if the new-modulus manifest was
@@ -3119,81 +3069,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   def renameColumn(db: String, table: String,
                    oldName: String, newName: String): Int = {
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"bootstrap ${meta.qualified} with overwrite() before renaming")
-    val m = readManifest(meta.location, vs.last)
-    val field = m.schema.fields.find(_.name.equalsIgnoreCase(oldName))
-      .getOrElse(throw new IllegalArgumentException(
-        s"${meta.qualified} has no column $oldName (columns: " +
-          s"${m.schema.fieldNames.mkString(", ")})"))
-    require(newName.trim.nonEmpty, "new column name must be non-empty")
-    require(!newName.equalsIgnoreCase(field.name),
-      s"rename $oldName -> $newName is a no-op")
-    locally {
-      val lc = newName.toLowerCase
-      require(!(lc == "__b" || lc == "__fv" || lc.startsWith("__graft_")),
-        s"$newName is a reserved internal column name — __b, __fv and " +
-          "__graft_* belong to the store's bucketing and merge-on-read " +
-          "machinery")
-    }
-    require(!m.schema.fields.exists(_.name.equalsIgnoreCase(newName)),
-      s"${meta.qualified} already has a column $newName")
-    m.schema.fields.filterNot(_.name.equalsIgnoreCase(oldName))
-      .find(f => MergeSnapshotStore.physicalOf(f).equalsIgnoreCase(newName))
-      .foreach { owner =>
-        throw new IllegalArgumentException(
-          s"cannot rename to $newName: carried files already hold a " +
-            s"physical column '${MergeSnapshotStore.physicalOf(owner)}' " +
-            s"(the on-disk spelling of renamed column ${owner.name}) — " +
-            "pick another name")
-      }
     require(!meta.primaryKey.exists(_.equalsIgnoreCase(oldName)),
       s"renaming PRIMARY KEY column $oldName of ${meta.qualified} " +
         "threads the catalog registration, equality-delete sidecars " +
         "and the scoped-commit funnels — use renamePrimaryKeyColumn(), " +
         "the guided path that moves all three in one commit")
-    Seq(MergeSnapshotStore.SetStatsProp, MergeSnapshotStore.BloomProp)
-      .foreach { prop =>
-        meta.properties.get(prop).foreach { v =>
-          require(!v.split(',').map(_.trim.takeWhile(_ != ':'))
-              .exists(_.equalsIgnoreCase(oldName)),
-            s"$prop on ${meta.qualified} names $oldName — re-point the " +
-              "property before renaming")
-        }
-      }
-    MergeSnapshotStore.checksOf(meta).foreach { case (name, predSql) =>
-      val re = ("(?i)\\b" +
-        java.util.regex.Pattern.quote(oldName) + "\\b").r
-      require(re.findFirstIn(predSql).isEmpty,
-        s"CHECK constraint $name ($predSql) references $oldName — drop " +
-          "the constraint and re-add it under the new name")
-    }
-    val physical = MergeSnapshotStore.physicalOf(field)
-    val newField =
-      if (physical == newName)
-        // renamed BACK to its on-disk spelling: the mapping dissolves
-        field.copy(name = newName,
-          metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(field.metadata)
-            .remove(MergeSnapshotStore.PhysicalKey).build())
-      else field.copy(name = newName,
-        metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(field.metadata)
-          .putString(MergeSnapshotStore.PhysicalKey, physical).build())
-    val newSchema = StructType(m.schema.fields.map(f =>
-      if (f.name.equalsIgnoreCase(oldName)) newField else f))
-    runBeforePublish()
-    val next = vs.last + 1
-    if (!publishManifest(meta.location, next,
-        m.copy(schema = newSchema, op = s"rename($oldName->$newName)",
-          at = System.currentTimeMillis())))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} took version $next while a rename " +
-          "committed — re-run against the new snapshot")
-    vacuum(meta, vs)
-    clearTombstones(meta, m.buckets)
-    next
+    renameCommit(meta, oldName, newName, "rename")._1
   }
 
   /**
@@ -3218,7 +3099,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * Bucket routing is untouched (hashing binds values, not names), so
    * carried buckets keep their assignment. Scoped merges race-safe as
    * for every DDL: an in-flight merge's schema CAS refuses. Refusals
-   * mirror [[renameColumn]]'s (duplicates, shadows, constraints,
+   * are [[renameColumn]]'s (duplicates, shadows, constraints,
    * properties, reserved names); a non-PK column refuses toward
    * [[renameColumn]]. Returns the new head version.
    */
@@ -3228,70 +3109,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     require(meta.primaryKey.exists(_.equalsIgnoreCase(oldName)),
       s"$oldName is not a PRIMARY KEY column of ${meta.qualified} " +
         s"(key: ${meta.primaryKey.mkString(", ")}) — use renameColumn()")
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"bootstrap ${meta.qualified} with overwrite() before renaming")
-    val m = readManifest(meta.location, vs.last)
-    val field = m.schema.fields.find(_.name.equalsIgnoreCase(oldName))
-      .getOrElse(throw new IllegalStateException(
-        s"PK column $oldName of ${meta.qualified} is not in the " +
-          "committed schema — the registration is stale"))
-    require(newName.trim.nonEmpty, "new column name must be non-empty")
-    require(!newName.equalsIgnoreCase(field.name),
-      s"rename $oldName -> $newName is a no-op")
-    locally {
-      val lc = newName.toLowerCase
-      require(!(lc == "__b" || lc == "__fv" || lc.startsWith("__graft_")),
-        s"$newName is a reserved internal column name")
-    }
-    require(!m.schema.fields.exists(_.name.equalsIgnoreCase(newName)),
-      s"${meta.qualified} already has a column $newName")
-    m.schema.fields.filterNot(_.name.equalsIgnoreCase(oldName))
-      .find(f => MergeSnapshotStore.physicalOf(f).equalsIgnoreCase(newName))
-      .foreach { owner =>
-        throw new IllegalArgumentException(
-          s"cannot rename to $newName: carried files already hold a " +
-            s"physical column '${MergeSnapshotStore.physicalOf(owner)}' " +
-            s"(the on-disk spelling of renamed column ${owner.name}) — " +
-            "pick another name")
-      }
-    Seq(MergeSnapshotStore.SetStatsProp, MergeSnapshotStore.BloomProp)
-      .foreach { prop =>
-        meta.properties.get(prop).foreach { v =>
-          require(!v.split(',').map(_.trim.takeWhile(_ != ':'))
-              .exists(_.equalsIgnoreCase(oldName)),
-            s"$prop on ${meta.qualified} names $oldName — re-point the " +
-              "property before renaming")
-        }
-      }
-    MergeSnapshotStore.checksOf(meta).foreach { case (name, predSql) =>
-      val re = ("(?i)\\b" +
-        java.util.regex.Pattern.quote(oldName) + "\\b").r
-      require(re.findFirstIn(predSql).isEmpty,
-        s"CHECK constraint $name ($predSql) references $oldName — drop " +
-          "the constraint and re-add it under the new name")
-    }
-    val physical = MergeSnapshotStore.physicalOf(field)
-    val newField =
-      if (physical == newName)
-        field.copy(name = newName,
-          metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(field.metadata)
-            .remove(MergeSnapshotStore.PhysicalKey).build())
-      else field.copy(name = newName,
-        metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(field.metadata)
-          .putString(MergeSnapshotStore.PhysicalKey, physical).build())
-    val newSchema = StructType(m.schema.fields.map(f =>
-      if (f.name.equalsIgnoreCase(oldName)) newField else f))
-    runBeforePublish()
-    val next = vs.last + 1
-    if (!publishManifest(meta.location, next,
-        m.copy(schema = newSchema, op = s"rename-pk($oldName->$newName)",
-          at = System.currentTimeMillis())))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} took version $next while a rename " +
-          "committed — re-run against the new snapshot")
+    val (next, physical) = renameCommit(meta, oldName, newName, "rename-pk")
     // manifest first, registration second: a reader in the window binds
     // masking through the PHYSICAL spelling either way (the property and
     // the old registration both resolve it), so the order only decides
@@ -3308,9 +3126,103 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       else meta.properties + (MergeSnapshotStore.PkPhysicalProp ->
         physMap.toSeq.sorted.map { case (l, p) => s"$l:$p" }
           .mkString(","))))
-    vacuum(meta, vs)
-    clearTombstones(meta, m.buckets)
     next
+  }
+
+  /** The rename core both renames share: validate `newName` against
+   * the head schema and its references, map the field to its new
+   * logical name (its physical spelling rides in the field metadata;
+   * renaming BACK to the on-disk spelling dissolves the mapping) and
+   * publish the metadata-only commit as `op(old->new)`. Returns the
+   * new version and the column's physical name. */
+  private def renameCommit(meta: TableMeta, oldName: String, newName: String,
+                           op: String): (Int, String) = {
+    val (readVer, m) = headOf(meta, "renaming")
+    val field = columnOf(meta, m, oldName)
+    require(newName.trim.nonEmpty, "new column name must be non-empty")
+    require(!newName.equalsIgnoreCase(field.name),
+      s"rename $oldName -> $newName is a no-op")
+    requireUnreserved(meta, Seq(newName))
+    require(!m.schema.fields.exists(_.name.equalsIgnoreCase(newName)),
+      s"${meta.qualified} already has a column $newName")
+    m.schema.fields.filterNot(_.name.equalsIgnoreCase(oldName))
+      .find(f => MergeSnapshotStore.physicalOf(f).equalsIgnoreCase(newName))
+      .foreach { owner =>
+        throw new IllegalArgumentException(
+          s"cannot rename to $newName: carried files already hold a " +
+            s"physical column '${MergeSnapshotStore.physicalOf(owner)}' " +
+            s"(the on-disk spelling of renamed column ${owner.name}) — " +
+            "pick another name")
+      }
+    requireUnreferenced(meta, oldName, "renaming")
+    val physical = MergeSnapshotStore.physicalOf(field)
+    val mapping = new org.apache.spark.sql.types.MetadataBuilder()
+      .withMetadata(field.metadata)
+    val newField = field.copy(name = newName, metadata =
+      if (physical == newName)
+        mapping.remove(MergeSnapshotStore.PhysicalKey).build()
+      else mapping.putString(MergeSnapshotStore.PhysicalKey, physical).build())
+    val newSchema = StructType(m.schema.fields.map(f =>
+      if (f.name.equalsIgnoreCase(oldName)) newField else f))
+    val next = publish(meta, readVer, m, s"$op($oldName->$newName)", Nil)(
+      (_, _) => m.copy(schema = newSchema))(refuseLoss(meta, "a rename committed"))
+    (next, physical)
+  }
+
+  /** The field `name` of a head schema, or refuse naming the columns. */
+  private def columnOf(meta: TableMeta, m: Manifest, name: String): StructField =
+    m.schema.fields.find(_.name.equalsIgnoreCase(name))
+      .getOrElse(throw new IllegalArgumentException(
+        s"${meta.qualified} has no column $name (columns: " +
+          s"${m.schema.fieldNames.mkString(", ")})"))
+
+  /** Refuses `doing` to column `c` while the set-stats or bloom
+   * property names it: their sidecars and value sets were built under
+   * the column's current name and type. */
+  private def requireNoPropertyRef(meta: TableMeta, c: String,
+                                   doing: String): Unit =
+    Seq(MergeSnapshotStore.SetStatsProp, MergeSnapshotStore.BloomProp)
+      .foreach { prop =>
+        meta.properties.get(prop).foreach { v =>
+          require(!v.split(',').map(_.trim.takeWhile(_ != ':'))
+              .exists(_.equalsIgnoreCase(c)),
+            s"$prop on ${meta.qualified} names $c — re-point the " +
+              s"property before $doing")
+        }
+      }
+
+  /** [[requireNoPropertyRef]] plus the CHECK constraints: a rename or
+   * drop would leave a constraint naming a column that is gone. */
+  private def requireUnreferenced(meta: TableMeta, c: String,
+                                  doing: String): Unit = {
+    requireNoPropertyRef(meta, c, doing)
+    MergeSnapshotStore.checksOf(meta).foreach { case (name, predSql) =>
+      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
+      require(re.findFirstIn(predSql).isEmpty,
+        s"CHECK constraint $name ($predSql) references $c — drop the " +
+          s"constraint before $doing (re-add it afterwards if still wanted)")
+    }
+  }
+
+  /** Internal column names are reserved at the write boundary and for
+   * every DDL that names a column: __b is the bucket routing column
+   * [[writeData]] adds, __fv the read-time file-commit column
+   * (withColumn would silently REPLACE a same-named user column), and
+   * __graft_* the position-delete row addresses (applyDeletes detects
+   * a find scan by that name — a user column would skip address
+   * derivation and anti-join data against file paths). Compared
+   * case-INSENSITIVELY: Spark's default resolution is, so a user
+   * column named __FV would otherwise pass and still be replaced by
+   * the read funnel's withColumn("__fv", ...). */
+  private def requireUnreserved(meta: TableMeta, names: Seq[String]): Unit = {
+    val bad = names.filter { n =>
+      val lc = n.toLowerCase
+      lc == "__b" || lc == "__fv" || lc.startsWith("__graft_")
+    }
+    if (bad.nonEmpty) throw new IllegalArgumentException(
+      s"${meta.qualified}: ${bad.mkString(", ")} — reserved internal " +
+        "column name(s); __b, __fv and __graft_* belong to the store's " +
+        "bucketing and merge-on-read machinery")
   }
 
   /**
@@ -3330,49 +3242,20 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    */
   def dropColumn(db: String, table: String, name: String): Int = {
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"bootstrap ${meta.qualified} with overwrite() before dropping")
-    val m = readManifest(meta.location, vs.last)
-    val field = m.schema.fields.find(_.name.equalsIgnoreCase(name))
-      .getOrElse(throw new IllegalArgumentException(
-        s"${meta.qualified} has no column $name (columns: " +
-          s"${m.schema.fieldNames.mkString(", ")})"))
+    val (readVer, m) = headOf(meta, "dropping")
+    val field = columnOf(meta, m, name)
     require(m.schema.fields.length > 1,
       s"cannot drop the last column of ${meta.qualified}")
     require(!meta.primaryKey.exists(_.equalsIgnoreCase(name)),
       s"dropping PRIMARY KEY column $name of ${meta.qualified} is not " +
         "supported — restructure with overwrite() and re-register")
-    Seq(MergeSnapshotStore.SetStatsProp, MergeSnapshotStore.BloomProp)
-      .foreach { prop =>
-        meta.properties.get(prop).foreach { v =>
-          require(!v.split(',').map(_.trim.takeWhile(_ != ':'))
-              .exists(_.equalsIgnoreCase(name)),
-            s"$prop on ${meta.qualified} names $name — re-point the " +
-              "property before dropping")
-        }
-      }
-    MergeSnapshotStore.checksOf(meta).foreach { case (cname, predSql) =>
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
-      require(re.findFirstIn(predSql).isEmpty,
-        s"CHECK constraint $cname ($predSql) references $name — drop " +
-          "the constraint first")
-    }
+    requireUnreferenced(meta, name, "dropping")
     val newSchema = StructType(
       m.schema.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    runBeforePublish()
-    val next = vs.last + 1
-    if (!publishManifest(meta.location, next,
-        m.copy(schema = newSchema,
-          retired = (m.retired :+ MergeSnapshotStore.physicalOf(field))
-            .distinct,
-          op = s"drop($name)", at = System.currentTimeMillis())))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} took version $next while a drop committed — " +
-          "re-run against the new snapshot")
-    vacuum(meta, vs)
-    clearTombstones(meta, m.buckets)
-    next
+    publish(meta, readVer, m, s"drop($name)", Nil) { (_, _) =>
+      m.copy(schema = newSchema,
+        retired = (m.retired :+ MergeSnapshotStore.physicalOf(field)).distinct)
+    }(refuseLoss(meta, "a drop committed"))
   }
 
   /**
@@ -3394,40 +3277,19 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   def addColumn(db: String, table: String, name: String,
                 dataType: DataType): Int = {
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"bootstrap ${meta.qualified} with overwrite() before adding columns")
-    val m = readManifest(meta.location, vs.last)
+    val (readVer, m) = headOf(meta, "adding columns")
     require(name.trim.nonEmpty, "column name must be non-empty")
-    locally {
-      val lc = name.toLowerCase
-      require(!(lc == "__b" || lc == "__fv" || lc.startsWith("__graft_")),
-        s"$name is a reserved internal column name — __b, __fv and " +
-          "__graft_* belong to the store's bucketing and merge-on-read " +
-          "machinery")
-    }
+    requireUnreserved(meta, Seq(name))
     require(!m.schema.fields.exists(_.name.equalsIgnoreCase(name)),
       s"${meta.qualified} already has a column $name")
+    val newSchema = StructType(m.schema.fields :+
+      StructField(name, dataType, nullable = true))
     // the same resurrection/shadow guards the scoped-merge add path
     // enforces (attachPhysical) — checked HERE so the statement fails
     // at the DDL, not at the next write
-    MergeSnapshotStore.attachPhysical(m.schema, m.retired.toSet,
-      StructType(m.schema.fields :+
-        StructField(name, dataType, nullable = true)))
-    val newSchema = StructType(m.schema.fields :+
-      StructField(name, dataType, nullable = true))
-    runBeforePublish()
-    val next = vs.last + 1
-    if (!publishManifest(meta.location, next,
-        m.copy(schema = newSchema,
-          op = s"add($name ${dataType.catalogString})",
-          at = System.currentTimeMillis())))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} took version $next while an add committed — " +
-          "re-run against the new snapshot")
-    vacuum(meta, vs)
-    clearTombstones(meta, m.buckets)
-    next
+    MergeSnapshotStore.attachPhysical(m.schema, m.retired.toSet, newSchema)
+    publish(meta, readVer, m, s"add($name ${dataType.catalogString})", Nil)(
+      (_, _) => m.copy(schema = newSchema))(refuseLoss(meta, "an add committed"))
   }
 
   /**
@@ -3472,14 +3334,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   def alterColumnType(db: String, table: String, name: String,
                       to: DataType): Int = {
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty,
-      s"bootstrap ${meta.qualified} with overwrite() before widening")
-    val m = readManifest(meta.location, vs.last)
-    val field = m.schema.fields.find(_.name.equalsIgnoreCase(name))
-      .getOrElse(throw new IllegalArgumentException(
-        s"${meta.qualified} has no column $name (columns: " +
-          s"${m.schema.fieldNames.mkString(", ")})"))
+    val (readVer, m) = headOf(meta, "widening")
+    val field = columnOf(meta, m, name)
     require(field.dataType != to,
       s"${meta.qualified}.$name is already ${to.catalogString} — no-op")
     require(MergeSnapshotStore.isSafeWidening(field.dataType, to),
@@ -3498,31 +3354,14 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       s"widening partition column $name of ${meta.qualified} is not " +
         "supported — partition directory values were rendered under " +
         "the narrow type; restructure with overwrite()")
-    Seq(MergeSnapshotStore.SetStatsProp, MergeSnapshotStore.BloomProp)
-      .foreach { prop =>
-        meta.properties.get(prop).foreach { v =>
-          require(!v.split(',').map(_.trim.takeWhile(_ != ':'))
-              .exists(_.equalsIgnoreCase(name)),
-            s"$prop on ${meta.qualified} names $name — its sidecars " +
-              "hashed the narrow values; re-point the property before " +
-              "widening")
-        }
-      }
+    // the property sidecars hashed the narrow values
+    requireNoPropertyRef(meta, name, "widening")
     val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name.equalsIgnoreCase(name)) f.copy(dataType = to) else f))
-    runBeforePublish()
-    val next = vs.last + 1
-    if (!publishManifest(meta.location, next,
-        m.copy(schema = newSchema,
-          op = s"widen($name ${field.dataType.catalogString}->" +
-            s"${to.catalogString})",
-          at = System.currentTimeMillis())))
-      throw new java.util.ConcurrentModificationException(
-        s"${meta.qualified} took version $next while a widen committed " +
-          "— re-run against the new snapshot")
-    vacuum(meta, vs)
-    clearTombstones(meta, m.buckets)
-    next
+    publish(meta, readVer, m, s"widen($name ${field.dataType.catalogString}->" +
+        s"${to.catalogString})", Nil)(
+      (_, _) => m.copy(schema = newSchema))(
+      refuseLoss(meta, "a widen committed"))
   }
 
   /** The old version's frame with its columns ALIGNED to the new
@@ -3679,27 +3518,13 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     if (needFlip)
       catalog.register(meta.copy(properties = meta.properties +
         (MergeSnapshotStore.BucketsProp -> m.nBuckets.toString)))
-    try {
-      runBeforePublish()
-      val cur = manifestVersions(meta.location)
-      val now = cur.lastOption.getOrElse(-1)
-      if (now != head)
-        throw new java.util.ConcurrentModificationException(
-          s"${meta.qualified} moved from version $head to $now while a " +
-            "restore targeted it — the rewind would clobber the racing " +
-            "commit; re-read the history and re-run if still wanted")
-      val next = head + 1
-      if (!publishManifest(meta.location, next,
-          m.copy(op = s"restore(v=$target)",
-            at = System.currentTimeMillis())))
-        throw new java.util.ConcurrentModificationException(
-          s"${meta.qualified} took version $next while a restore " +
-            s"targeted $head — re-read the history and re-run if still " +
-            "wanted")
-      vacuum(meta, cur)
-      clearTombstones(meta, m.buckets)
-      next
-    } catch {
+    // the restored dirs may carry tombstones from while no manifest
+    // referenced them: they are the commit's fresh dirs
+    try publish(meta, head, m, s"restore(v=$target)", m.buckets.values)(
+        (_, _) => m)(refuseLoss(meta, s"a restore rewound version $head: " +
+        "the rewind must never clobber a concurrent commit; re-read the " +
+        "history first"))
+    catch {
       case t: Throwable =>
         if (needFlip) {
           val landed = manifestVersions(meta.location).lastOption.exists(v =>
@@ -4575,7 +4400,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       cluster: Option[(Seq[(String, (Double, Double))], Int, Int)] = None)
       : CompactionReport = {
     val before = readManifest(meta.location, base).deletes
-    overwriteWith(meta, df, cluster, requireBase = Some(base), op = op,
+    overwriteWith(meta, base, df, cluster, pinned = true, op = op,
       enforceChecks = false)
     compactionReport(meta, before)
   }
@@ -4612,8 +4437,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         "(PK-less tables: write through Layout.writeClustered instead)")
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val base = vs.last
-    val df = readVersion(meta, base)
+    val df = readVersion(meta, vs.last)
     // range inference runs over the dims PROMOTED into the manifest's
     // epoch-based double space (dates as days, timestamps as micros) —
     // the same space readRange prunes in, so "cluster the event table
@@ -4623,7 +4447,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     val shadow = df.select(dims.map { case (c, _) =>
       promoted(col(c), df.schema(c).dataType).as(c) }: _*)
     val resolved = Layout.resolveRanges(shadow, dims)
-    rewriteCommit(meta, base, df, "compact-clustered",
+    rewriteCommit(meta, vs.last, df, "compact-clustered",
       Some((resolved, bits, filesPerBucket)))
   }
 
@@ -4711,26 +4535,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     // set-stats misconfiguration fails BEFORE the write job: an opted
     // column must exist and carry a type whose canonical string is
     // stable across the probe and cast sides
-    // internal column names are reserved at the write boundary: __b is
-    // the bucket routing column this method adds, __fv the read-time
-    // file-commit column (withColumn would silently REPLACE a same-named
-    // user column), and __graft_* the position-delete row addresses
-    // (applyDeletes detects a find scan by that name — a user column
-    // would skip address derivation and anti-join data against file
-    // paths). Refusing here keeps every read/delete funnel sound.
-    // compared case-INSENSITIVELY: Spark's default resolution is, so a
-    // user column named __FV would otherwise pass here and still be
-    // replaced by the read funnel's withColumn("__fv", ...)
-    df.schema.fieldNames.filter { n =>
-      val lc = n.toLowerCase
-      lc == "__b" || lc == "__fv" || lc.startsWith("__graft_")
-    } match {
-      case Array() => ()
-      case bad => throw new IllegalArgumentException(
-        s"${meta.qualified} schema uses reserved internal column " +
-          s"name(s) ${bad.mkString(", ")} — __b, __fv and __graft_* " +
-          "belong to the store's bucketing and merge-on-read machinery")
-    }
+    requireUnreserved(meta, df.schema.fieldNames.toSeq)
     // CHECK constraints ride the write job itself: the guard is a
     // filter whose Or short-circuits in codegen, so a conforming row
     // pays one predicate eval and a violating row raises with the
@@ -5403,12 +5208,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * referenced, clear the stray tombstones — otherwise a future expiry
    * would inherit a pre-publish epoch and delete the dirs without the
    * full retention horizon a pinned reader is promised. */
-  private def clearTombstones(meta: TableMeta, written: SortedMap[Int, String]): Unit = {
+  private def clearTombstones(meta: TableMeta, written: Iterable[String]): Unit = {
     val f = fs(new Path(meta.location))
     // absolute references are another table's directories (a shallow
     // clone's borrowed source files) — their tombstone lifecycle belongs
     // to that table's own vacuum; this store never writes there
-    written.values.filterNot(MergeSnapshotStore.isAbsoluteRef).foreach { rel =>
+    written.filterNot(MergeSnapshotStore.isAbsoluteRef).foreach { rel =>
       try f.delete(new Path(s"${meta.location}/$rel/_expired_at"), false)
       catch { case scala.util.control.NonFatal(_) => () }
     }

@@ -400,7 +400,9 @@ object ChangeLogApplier {
    * fires its Kinesis-notify stub per table here, :659-660 — kept as a
    * caller-supplied hook). A last-wins table commits through
    * [[mergeLastWins]] and a chain-verified one through `applyFold` inside
-   * `mergeScoped`.
+   * `mergeScoped`. Returns or throws only once every table has settled;
+   * a failure rethrows the first table's error with the others
+   * attached as suppressed.
    */
   def run(spark: SparkSession, store: MergeSnapshotStore, db: String,
           eventLog: DataFrame, chainVerified: Boolean = false,
@@ -455,7 +457,16 @@ object ChangeLogApplier {
           tbl
         }
       }
-      Await.result(Future.sequence(futures), Duration.Inf)
+      // every table settles before run returns or throws: failing fast
+      // on the first error would leave sibling tables merging and
+      // publishing after the throw, racing an immediate replay
+      futures.foreach(Await.ready(_, Duration.Inf))
+      val failures = futures.flatMap(_.value.get.failed.toOption)
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+      futures.map(_.value.get.get)
     } finally {
       pool.shutdown()
       if (!prunable) cached.unpersist(blocking = false)

@@ -81,7 +81,7 @@ final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
       store.overwrite(db, d.target, out, mergeSchema = true)
       val meta = store.catalog(db, d.target)
       store.catalog.register(meta.copy(
-        schema = Some(DomainRunner.narrowForCatalog(store.read(db, d.target).schema))))
+        schema = Some(DomainRunner.narrowForCatalog(store.committedSchema(db, d.target)))))
       d.target
     }
   }

@@ -640,7 +640,7 @@ object QueryRunner {
             qdf0.toDF(ins.userSpecifiedCols: _*)
           } else if (ins.byName) qdf0
           else {
-            val tableCols = store.readSkipping(db, tbl).schema.fieldNames.toSeq
+            val tableCols = store.committedSchema(db, tbl).fieldNames.toSeq
             require(qdf0.columns.length == tableCols.length,
               s"INSERT INTO $tbl supplies ${qdf0.columns.length} " +
                 s"positional column(s); the table has ${tableCols.length}" +
@@ -800,7 +800,7 @@ object QueryRunner {
       coalesce(conds.zipWithIndex.map { case (c, i) =>
         when(c.map(columnOfSql).getOrElse(lit(true)), lit(i))
       } :+ lit(null).cast("int"): _*)
-    val fieldType = store.read(db, target).schema.fields
+    val fieldType = store.committedSchema(db, target).fields
       .map(f => f.name -> f.dataType).toMap
     def assignedCol(name: String,
                     byAction: Seq[(Int, Option[org.apache.spark.sql.Column])],

@@ -149,6 +149,30 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
       before, "a table committed before the refusal")
   }
 
+  test("a table that fails fast leaves run waiting for its sibling's commit") {
+    val (store, dir) = mkStore()
+    // bookings loses its PK: its future fails at once, before any job
+    store.catalog.register(store.catalog(Db, "bookings").copy(primaryKey = Nil))
+    val landing = landBatch(store, dir, 6)
+    val v0 = store.latestVersion(Db, "offenders")
+    val done = new java.util.concurrent.CountDownLatch(1)
+    @volatile var doneAt = 0L
+    store.beforePublish = () => Thread.sleep(2000)
+    val err = intercept[IllegalStateException] {
+      ChangeLogApplier.run(spark, store, Db, landing, onTableDone = _ => {
+        doneAt = System.nanoTime(); done.countDown()
+      })
+    }
+    val threwAt = System.nanoTime()
+    assert(err.getMessage.contains("no PK registered"), err.getMessage)
+    val atThrow = store.latestVersion(Db, "offenders")
+    // a sibling still running after the throw would finish in here
+    assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    assert(doneAt < threwAt, "offenders settled after run had thrown")
+    assert(atThrow == v0 + 1 && store.latestVersion(Db, "offenders") == atThrow,
+      s"offenders at $atThrow when run threw, later ${store.latestVersion(Db, "offenders")}")
+  }
+
   test("scoped merges and overwrites write one file per bucket from min(nBuckets, cores) tasks") {
     val cores = spark.sparkContext.defaultParallelism
     Seq(32, 2).foreach { nBuckets =>
@@ -258,6 +282,12 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
     chainTables.foreach { t =>
       assert(canon(store.read(Db, t)) == canon(clean.read(Db, t)), t)
     }
+    // the domain registers the committed schema, narrowed: the scan's
+    // schema narrows to the same catalog columns
+    assert(store.catalog(Db, "off_book").schema ==
+      Some(DomainRunner.narrowForCatalog(store.read(Db, "off_book").schema)))
+    assert(store.catalog(Db, "off_book").schema.get.fieldNames.toSeq.take(4) ==
+      Seq("id", "name", "bid", "status"))
   }
 
   test("a batch that fails at its second curated commit re-runs apply -> curated -> domain to the clean result") {
