@@ -754,7 +754,7 @@ object PipelineMain {
       col("src") === "src1" && col("ntok") % 7 === 0,
       MergeSnapshotStore.MergeOnRead)
     val vMor = store.latestVersion(Db, "dml_docs")
-    store.readSkipping(Db, "dml_docs").createOrReplaceTempView("dml_v")
+    store.read(Db, "dml_docs").createOrReplaceTempView("dml_v")
     val morSurvivors = spark.sql(
       "SELECT count(*) AS n FROM dml_v WHERE src = 'src1' AND ntok % 7 = 0")
       .head.getLong(0)

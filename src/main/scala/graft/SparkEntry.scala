@@ -3036,7 +3036,7 @@ object SparkEntry {
       store.vacuum("q90", "orders", retainMs = Some(0L))
       require(store.history("q90", "orders").count() == 2,
         "the keep window must hold BOTH manifests past the count floor")
-      store.readPinned("q90", "orders", Some(0)).orderBy("o_orderkey")
+      store.read("q90", "orders", Some(0)).orderBy("o_orderkey")
     }),
 
     // Column-mapping DROP (the second half of schema evolution): the
@@ -3081,7 +3081,7 @@ object SparkEntry {
       store.read("q89", "orders").orderBy("o_orderkey")
     }),
 
-    // The SQL surface THROUGH the storage engine (readSkipping /
+    // The SQL surface THROUGH the storage engine (read /
     // StoreFileIndex): the reference's primary query shape — domain SQL
     // over temp views (reference src/apply_to_domains.py:54-68) — runs
     // over store-backed views whose scans prune files via the manifest
@@ -3105,9 +3105,9 @@ object SparkEntry {
       val store = new MergeSnapshotStore(s, cat, nBuckets = 8)
       store.overwrite("q67", "orders", orders)
       store.overwrite("q67", "customer", cust)
-      store.readSkipping("q67", "orders")
+      store.read("q67", "orders")
         .createOrReplaceTempView("q67_orders")
-      store.readSkipping("q67", "customer")
+      store.read("q67", "customer")
         .createOrReplaceTempView("q67_customer")
       s.sql(
         """SELECT c.c_mktsegment,

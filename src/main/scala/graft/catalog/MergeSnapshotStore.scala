@@ -552,15 +552,41 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   def exists(db: String, table: String): Boolean =
     catalog.get(db, table).exists(m => manifestVersions(m.location).nonEmpty)
 
-  def read(db: String, table: String): DataFrame = {
-    val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    readVersion(meta, vs.last)
-  }
+  /**
+   * The latest snapshot, or the `version` pinned (committed AND
+   * retained: [[resolveVersion]]'s loud message, so a serving pin past
+   * the vacuum horizon fails with the finish-inside-the-retention-window
+   * error instead of a raw FileNotFoundException from a reclaimed
+   * directory) — the store's one snapshot read, the one seam both
+   * serving modes route through. The frame is the [[skippingFrame]]
+   * scan: any predicate Catalyst pushes down to it (directly, or through
+   * a join via filter pushdown) reaches [[StoreFileIndex.listFiles]] as
+   * the resolved, constant-folded Catalyst expression and is judged per
+   * file by the SAME `fileMayMatch` walk the typed [[readWhere]] runs —
+   * footer bounds, truncated string bounds, value sets, the
+   * negation/prefix/IN shapes and the primary-key bucket arm included.
+   * An AS-OF query prunes through the pinned manifest's stats exactly
+   * as HEAD SQL does: a pin changes WHICH manifest answers, never how
+   * much it scans. Evaluation-time clock expressions need no refusal
+   * here (unlike the DML paths): Catalyst's ComputeCurrentTime folds
+   * them to one literal per query BEFORE planning, so pruning and scan
+   * see the same instant.
+   *
+   * The reference's primary query surface is exactly this shape —
+   * domain SQL over temp views (reference src/apply_to_domains.py:54-68)
+   * and the glue_query CLI predicate (reference dev/glue_query:5-9) —
+   * so [[graft.operators.DomainRunner]] and
+   * [[graft.operators.QueryRunner]] route through it.
+   */
+  def read(db: String, table: String, version: Option[Int] = None): DataFrame =
+    skippingScan(db, table, version)._1
 
-  def readVersion(meta: TableMeta, version: Int): DataFrame =
-    load(meta, readManifest(meta.location, version), None)
+  /** [[read]] of `meta` at `version`, under the same retention
+   * contract. */
+  def readVersion(meta: TableMeta, version: Int): DataFrame = {
+    val m = readManifest(meta.location, resolveVersion(meta, Some(version)))
+    skippingFrame(meta, m, listDataFileStatuses(meta, m, None))._1
+  }
 
   /** The latest committed schema under its logical column names, read
    * from the manifest — what a caller that only needs the table's
@@ -570,29 +596,6 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     val vs = manifestVersions(meta.location)
     require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
     MergeSnapshotStore.plainLogical(readManifest(meta.location, vs.last).schema)
-  }
-
-  /** [[readVersion]] under the pinned-read contract: the version must
-   * be committed AND retained ([[resolveVersion]]'s loud message), so a
-   * serving pin past the vacuum horizon fails with the
-   * finish-inside-the-retention-window error instead of a raw
-   * FileNotFoundException from a reclaimed directory. `None` reads the
-   * latest snapshot — the one seam both serving modes route through.
-   * The read IS the skipping scan ([[readSkipping]] at the pinned
-   * version): an AS-OF query's pushed predicates prune files through
-   * the pinned manifest's stats exactly as HEAD SQL does — a serving
-   * pin changes WHICH manifest answers, never how much it scans. */
-  def readPinned(db: String, table: String,
-                 version: Option[Int]): DataFrame =
-    readSkipping(db, table, version)
-
-  /** Scan only the given buckets of the latest snapshot — the file-pruned
-   * read a key-scoped merge or point-lookup wants. */
-  def readBuckets(db: String, table: String, buckets: Seq[Int]): DataFrame = {
-    val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    load(meta, readManifest(meta.location, vs.last), Some(buckets.toSet))
   }
 
   /**
@@ -669,7 +672,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * Identity when the schema has no renames (zero plan change for every
    * pre-rename table); otherwise one aliasing projection Catalyst folds
    * filters straight through, so pushdown and pruning are unaffected.
-   * `extras` survive the projection (a find scan's tag column). */
+   * `extras` survive the projection (a find scan's row address). */
   private def toLogical(df: DataFrame, s: StructType,
                         extras: Seq[String] = Nil): DataFrame =
     if (!MergeSnapshotStore.hasRenames(s)) df
@@ -683,36 +686,10 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         .as(f.name, org.apache.spark.sql.types.Metadata.empty)) ++
       extras.map(c => df(c)): _*)
 
-  private def load(meta: TableMeta, m: Manifest, only: Option[Set[Int]]): DataFrame = {
-    val dirs = m.buckets.toSeq
-      .collect { case (b, dir) if only.forall(_.contains(b)) => refPath(meta.location, dir) }
-    // carried files load alongside the bucket dirs (spark.read takes a
-    // mix of dirs and files) — a bucket may even consist of carries only
-    val carryPaths = m.carries.toSeq
-      .collect { case (b, rels) if only.forall(_.contains(b)) => rels }
-      .flatten.map(rel => refPath(meta.location, rel))
-    val paths = dirs ++ carryPaths
-    // an empty selection masks to an empty selection — and the local
-    // empty relation has no scan metadata columns for the position-
-    // delete arm to read, so applyDeletes must not see it
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        MergeSnapshotStore.plainLogical(m.schema))
-    else
-      // the scan reads the files' own PHYSICAL spelling (a carried
-      // pre-rename file resolves by name); the logical projection sits
-      // above the delete masking — PK names never rename (refused), so
-      // the anti-joins bind identically on either side
-      toLogical(applyDeletes(meta, m,
-        spark.read.schema(MergeSnapshotStore.physicalSchema(m.schema))
-          .parquet(paths: _*)), m.schema)
-  }
-
   /** The merge-on-read delete view — the read-time half of
-   * [[deleteWhere]]'s MergeOnRead mode, applied by EVERY read funnel
-   * (full loads, pruned file loads, the SQL skipping scan). Two sidecar
-   * kinds, Iceberg v2's pair:
+   * [[deleteWhere]]'s MergeOnRead mode, applied by the one scan builder
+   * ([[skippingFrame]]) and so by every read. Two sidecar kinds,
+   * Iceberg v2's pair:
    *
    *  - EQUALITY deletes (keyed tables): anti-join away rows whose PK
    *    appears in a sidecar that APPLIES to the row's file, under the
@@ -729,10 +706,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * exist (the keys union delete-sized by the MoR contract); zero cost
    * when the manifest carries none. Scan-stage address columns
    * (file commit number, row address) are captured BEFORE any join —
-   * metadata columns resolve on the relation, not through join output. */
-  private def applyDeletes(meta: TableMeta, m: Manifest,
-                           df: DataFrame): DataFrame =
-    if (m.deletes.isEmpty) df
+   * metadata columns resolve on the relation, not through join output.
+   * `withAddress` (a DML find) keeps the row address in the output. */
+  private def applyDeletes(meta: TableMeta, m: Manifest, df: DataFrame,
+                           withAddress: Boolean): DataFrame =
+    if (m.deletes.isEmpty)
+      if (withAddress) df.withColumns(rowAddress) else df
     else {
       import org.apache.spark.sql.functions.{broadcast, coalesce, regexp_extract_all, try_element_at}
       val (eqDels, posDels) =
@@ -746,21 +725,16 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       // that itself contains a "data/c<digits>-" segment would fool a
       // first-match parse into one constant commit number — silently
       // breaking the sequence rule in both directions. The path comes
-      // from the scan's `_metadata` column, not input_file_name(): a
-      // nondeterministic projection would stop Catalyst pushing a
+      // from the scan's `_metadata` column, not the file-name function:
+      // a nondeterministic projection would stop Catalyst pushing a
       // filter above the mask down into the scan, and with it every
       // file the skipping walk could have pruned
-      val withFv =
-        if (eqDels.isEmpty) df
-        else df.withColumn("__fv",
-          try_element_at(regexp_extract_all(col("_metadata.file_path"),
-            lit("data/c(\\d+)-"), lit(1)), lit(-1)).cast("int"))
-      // a find scan passes a frame already carrying row addresses (it
-      // needs them for its own sidecar); every other funnel derives
-      // them here and gets them dropped below
-      val hadAddr = df.columns.contains(MergeSnapshotStore.PosFileCol)
-      val addressed =
-        if (posDels.isEmpty || hadAddr) withFv else withRowAddress(withFv)
+      val addressed = df.withColumns(
+        (if (eqDels.isEmpty) Map.empty[String, Column]
+        else Map("__fv" -> try_element_at(regexp_extract_all(
+          col("_metadata.file_path"), lit("data/c(\\d+)-"), lit(1)),
+          lit(-1)).cast("int"))) ++
+          (if (posDels.isEmpty && !withAddress) Map.empty else rowAddress))
       // ---- equality kind
       val afterEq =
         if (eqDels.isEmpty) addressed
@@ -770,10 +744,10 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
             s"${meta.qualified} carries equality-delete sidecars but no " +
               "PK — equality deletes are keyed; the manifest is corrupt")
           // the anti-join binds the PK's ON-DISK spelling: `addressed`
-          // is the raw physical-named scan in every funnel, sidecars
-          // write the physical spelling, and the spelling survives a
-          // PK rename by construction (PkPhysicalProp) — so a manifest
-          // pinned BEFORE the rename masks identically to head
+          // is the raw physical-named scan, sidecars write the physical
+          // spelling, and the spelling survives a PK rename by
+          // construction (PkPhysicalProp) — so a manifest pinned BEFORE
+          // the rename masks identically to head
           val pkDisk = pks.map(k => MergeSnapshotStore.pkPhysicalOf(meta, k))
           val dels = eqDels.map { d =>
             val raw = spark.read.parquet(refPath(meta.location, d.rel))
@@ -811,28 +785,27 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
           afterEq.join(broadcast(addrs), cond, "left_anti")
         }
       afterPos.drop(
-        (Seq("__fv") ++ (if (hadAddr) Nil
+        (Seq("__fv") ++ (if (withAddress) Nil
           else Seq(MergeSnapshotStore.PosFileCol,
             MergeSnapshotStore.PosPosCol))): _*)
     }
 
-  /** The row's physical address — its file's table-relative path and
-   * its ordinal within that file — captured from the scan's metadata
-   * columns (`_metadata.file_path` / `_metadata.row_index`, the parquet
-   * reader's row-position support). The relative form survives a table
-   * LOCATION move and normalizes scheme differences; an unmatched path
-   * yields "" and the position-delete WRITER refuses it loudly (a
-   * silent empty address would drop the delete at read time). */
-  private def withRowAddress(df: DataFrame): DataFrame =
-    df.withColumn(MergeSnapshotStore.PosFileCol,
-        org.apache.spark.sql.functions.regexp_extract(
-          // the exact three-segment tail writeData produces
-          // (commit dir / bucket dir / file); $-anchored and
-          // segment-typed, so a table LOCATION containing a look-alike
-          // "data/c" segment can never shift the capture
-          col("_metadata.file_path"),
-          "(data/c\\d+-[^/]+/__b=\\d+/[^/]+)$", 1))
-      .withColumn(MergeSnapshotStore.PosPosCol, col("_metadata.row_index"))
+  /** The row's physical ADDRESS — its file's table-relative tail
+   * (`data/cNNNNNN-<nonce>/__b=<bucket>/<file>`, the form every reader
+   * compares: the position-delete anti-join, the debt fold's footprint,
+   * the finds' bucket mapping) and its ordinal within that file —
+   * captured from the scan's metadata columns (`_metadata.file_path` /
+   * `_metadata.row_index`, the parquet reader's row-position support).
+   * The tail survives a table LOCATION move, normalizes scheme
+   * differences, and is the same for a file read natively and read
+   * borrowed by a shallow clone (whose manifest names it absolutely).
+   * An unmatched path yields "" and the position-delete WRITER refuses
+   * it loudly (a silent empty address would drop the delete at read
+   * time). */
+  private def rowAddress: Map[String, Column] = Map(
+    MergeSnapshotStore.PosFileCol -> org.apache.spark.sql.functions.regexp_extract(
+      col("_metadata.file_path"), MergeSnapshotStore.AddressRe.regex, 1),
+    MergeSnapshotStore.PosPosCol -> col("_metadata.row_index"))
 
   /**
    * Data skipping over a committed snapshot: the exact predicate of
@@ -885,9 +858,9 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   /** The data-file STATUSES of the selected buckets, enumerated from
    * the bucket directories — never from the stats maps alone, so a file
    * that produced no stats lines is still read. The ONE enumeration
-   * (visibility rule included) both the name-only listing and the SQL
-   * skipping scan's status-carrying index derive from, so the hidden-
-   * file rule can never drift between the typed and SQL read paths. */
+   * (visibility rule included) the name-only listing, the file-scoped
+   * commit's dir grouping and every scan's [[StoreFileIndex]] derive
+   * from, so the hidden-file rule can never drift between paths. */
   private def listDataFileStatuses(meta: TableMeta, m: Manifest,
                                    only: Option[Set[Int]])
       : Seq[(String, FileStatus)] = {
@@ -954,29 +927,6 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
             .reduceOption(_ && _).getOrElse(col(c).isNotNull)
       }
     }.reduce(_ && _)
-
-  /** The DML paths' pruned-file read (find, fold, file-scoped
-   * commits); every other pruned read is [[skippingWhere]]. `tagCol`
-   * (the DML find phase) adds input_file_name() ON THE RAW SCAN, before
-   * [[applyDeletes]] joins a second source in — the expression is
-   * ill-defined (and refused by Spark) over the joined plan. */
-  private def loadFiles(meta: TableMeta, m: Manifest, keep: Seq[String],
-                        pred: Column,
-                        tagCol: Option[String] = None): DataFrame =
-    if (keep.isEmpty)
-      tagCol.foldLeft(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          MergeSnapshotStore.plainLogical(m.schema)))(
-        (df, c) => df.withColumn(c, lit("")))
-        .filter(pred)
-    else {
-      val raw = spark.read.schema(MergeSnapshotStore.physicalSchema(m.schema))
-        .parquet(keep.map(rel => refPath(meta.location, rel)): _*)
-      toLogical(applyDeletes(meta, m,
-        tagCol.foldLeft(raw)((df, c) => df.withColumn(c, input_file_name()))),
-        m.schema, extras = tagCol.toSeq)
-        .filter(pred)
-    }
 
   /**
    * Data skipping on STRING columns: the exact `[lo, hi]` predicate of
@@ -1118,89 +1068,82 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                                  version: Option[Int] = None): Seq[String] = {
     val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    listDataFiles(meta, m, None)
-      .filter(fileMayMatch(resolvePredicate(m, predicate), meta, m))
+    walkedFiles(meta, m, resolvePredicate(m, predicate)).map(_._1)
   }
 
-  /**
-   * The latest (or pinned) snapshot as a DataFrame whose SCAN prunes
-   * files through the manifest stats walk — the read that makes
-   * `spark.sql` over a registered view equal in skipping power to the
-   * typed [[readWhere]]: any predicate Catalyst pushes down to the scan
-   * (directly, or through a join via filter pushdown) reaches
-   * [[StoreFileIndex.listFiles]] as the resolved, constant-folded
-   * Catalyst expression and is judged per file by the SAME
-   * `fileMayMatch` walk — footer bounds, truncated string bounds,
-   * value sets, the negation/prefix/IN shapes included. Evaluation-time
-   * clock expressions need no refusal here (unlike the DML paths):
-   * Catalyst's ComputeCurrentTime folds them to one literal per query
-   * BEFORE planning, so pruning and scan see the same instant.
-   *
-   * The reference's primary query surface is exactly this shape —
-   * domain SQL over temp views (reference src/apply_to_domains.py:54-68)
-   * and the glue_query CLI predicate (reference dev/glue_query:5-9) —
-   * so [[graft.operators.DomainRunner]] and
-   * [[graft.operators.QueryRunner]] route through it.
-   */
-  def readSkipping(db: String, table: String): DataFrame =
-    readSkipping(db, table, None)
-
-  /** [[readSkipping]] pinned to a committed-and-retained version. */
-  def readSkipping(db: String, table: String,
-                   version: Option[Int]): DataFrame =
-    skippingScan(db, table, version)._1
-
-  /** [[readSkipping]]'s body, exposing the [[StoreFileIndex]] for
-   * plan-pin specs. */
+  /** [[read]]'s body, exposing the [[StoreFileIndex]] for plan-pin
+   * specs. */
   private[graft] def skippingScan(db: String, table: String,
                                   version: Option[Int] = None)
       : (DataFrame, StoreFileIndex) = {
     val meta = catalog(db, table)
     val m = readManifest(meta.location, resolveVersion(meta, version))
-    // statuses (size + mtime) off the SHARED bucket enumeration —
-    // sizes feed sizeInBytes so SQL joins auto-broadcast small store
-    // tables
     skippingFrame(meta, m, listDataFileStatuses(meta, m, None))
   }
 
-  /** The skipping scan over `files` of manifest `m`:
-   * a [[StoreFileIndex]] relation judged by [[fileMayMatch]], with the
-   * merge-on-read masking and the logical aliasing on top. */
+  /** The store's ONE scan builder: every data read of a manifest —
+   * snapshot reads, pruned reads, a scoped commit's touched buckets,
+   * the DML finds, the file-scoped rewrites — is this frame over some
+   * slice of the one enumeration ([[listDataFileStatuses]]). It is a
+   * [[StoreFileIndex]] relation judged by [[fileMayMatch]] (sizes and
+   * mtimes from the statuses feed sizeInBytes, so SQL joins
+   * auto-broadcast small store tables; the driver lists, so no Spark
+   * listing job runs however many bucket dirs the slice spans), with
+   * the merge-on-read masking and the logical aliasing on top. An empty
+   * slice is an empty relation of the manifest's schema.
+   * `withAddress` keeps each row's scan-stage address (the
+   * [[rowAddress]] columns) through both. */
   private def skippingFrame(meta: TableMeta, m: Manifest,
-                            files: Seq[(String, FileStatus)])
+                            files: Seq[(String, FileStatus)],
+                            withAddress: Boolean = false)
       : (DataFrame, StoreFileIndex) = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    // the relation reads the files' PHYSICAL spelling; pushed-down
-    // predicates arrive at the index with physical attribute names,
-    // which is exactly how the stats lines are keyed
-    val phys = MergeSnapshotStore.physicalSchema(m.schema)
-    val index = new StoreFileIndex(meta.location, phys, files,
+    // the relation reads the files' PHYSICAL spelling (a carried
+    // pre-rename file resolves by name); pushed-down predicates arrive
+    // at the index with physical attribute names, which is exactly how
+    // the stats lines are keyed. Every column reads nullable, Spark's
+    // own rule for a file source's declared schema: a carried file may
+    // hold nulls a later schema declares away
+    val phys = MergeSnapshotStore.asNullable(
+      MergeSnapshotStore.physicalSchema(m.schema))
+    val index = new StoreFileIndex(meta.location, files,
       e => fileMayMatch(e, meta, m))
     val relation = HadoopFsRelation(index, new StructType(), phys,
       None, new ParquetFileFormat(), Map.empty)(spark)
-    // merge-on-read sidecars mask on top of the skipping scan too —
-    // the anti-join sits above the relation, so file pruning still
-    // runs below it and SQL readers see the logical snapshot; the
-    // logical aliasing sits above BOTH, and Catalyst rewrites pushed
-    // filters through it down to the physical scan
-    (toLogical(
-      applyDeletes(meta, m, spark.baseRelationToDataFrame(relation)),
-      m.schema), index)
+    // merge-on-read sidecars mask on top of the scan — the anti-join
+    // sits above the relation, so file pruning still runs below it; the
+    // logical aliasing sits above BOTH (PK names never rename, so the
+    // anti-joins bind identically on either side), and Catalyst
+    // rewrites pushed filters through it down to the physical scan
+    val extras =
+      if (withAddress) Seq(MergeSnapshotStore.PosFileCol, MergeSnapshotStore.PosPosCol)
+      else Nil
+    (toLogical(applyDeletes(meta, m, spark.baseRelationToDataFrame(relation),
+      withAddress), m.schema, extras), index)
   }
 
-  /** The skipping scan of `m` filtered by `predicate`, its index
-   * narrowed up front to the files the [[fileMayMatch]] walk (and
-   * `keep`) admit — so `inputFiles` and `sizeInBytes` describe the
-   * pruned read, not the snapshot — while the pushed predicate still
-   * reaches the index at planning. */
-  private def skippingWhere(meta: TableMeta, m: Manifest, predicate: Column,
-                            keep: String => Boolean = _ => true): DataFrame = {
-    val may = fileMayMatch(resolvePredicate(m, predicate), meta, m)
-    val files = listDataFileStatuses(meta, m, None)
+  /** The files of `m` the [[fileMayMatch]] walk admits for the resolved
+   * predicate `e` (and `keep` keeps) — the narrowed slice a pruned read
+   * or a DML find scans. */
+  private def walkedFiles(meta: TableMeta, m: Manifest,
+                          e: org.apache.spark.sql.catalyst.expressions.Expression,
+                          keep: String => Boolean = _ => true)
+      : Seq[(String, FileStatus)] = {
+    val may = fileMayMatch(e, meta, m)
+    listDataFileStatuses(meta, m, None)
       .filter { case (rel, _) => keep(rel) && may(rel) }
-    skippingFrame(meta, m, files)._1.filter(predicate)
   }
+
+  /** The scan of `m` filtered by `predicate`, its index narrowed up
+   * front to the walked files ([[walkedFiles]]) — so `inputFiles` and
+   * `sizeInBytes` describe the pruned read, not the snapshot — while
+   * the pushed predicate still reaches the index at planning. */
+  private def skippingWhere(meta: TableMeta, m: Manifest, predicate: Column,
+                            keep: String => Boolean = _ => true): DataFrame =
+    skippingFrame(meta, m,
+      walkedFiles(meta, m, resolvePredicate(m, predicate), keep))._1
+      .filter(predicate)
 
   /** `predicate` resolved and type-coerced by Spark's OWN analyzer
    * against the manifest schema — pruning must judge exactly the
@@ -1972,15 +1915,16 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                            op: String = "merge",
                            enforceChecks: Boolean = true)
                           (rewrite: DataFrame => DataFrame): Unit = {
-    val old = load(meta, current, Some(touched.toSet))
+    val old = skippingFrame(meta, current,
+      listDataFileStatuses(meta, current, Some(touched.toSet)))._1
     // a rewrite may run jobs of its own while it builds the replacement
     // (the inline CDC merge reads its stale-event guard here)
     val out = jobPhase("decide")(rewrite(old))
     // scoped-merge schema EVOLUTION contract (spec-pinned): a rewrite
     // may ADD columns — an evolving CDC feed's natural shape; the
     // widened schema lands in the manifest, carried old-schema files
-    // read under it with NULLs for the missing column (load supplies
-    // the manifest schema to the scan), and their stats simply lack
+    // read under it with NULLs for the missing column (the scan reads
+    // under the manifest schema), and their stats simply lack
     // the new column (every pruning family keeps a file it has no
     // bounds for). Added columns must be NULLABLE: the carried rows
     // WILL surface NULL there, so a non-nullable add would publish a
@@ -2139,8 +2083,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * leaves every data file untouched — a 1-row takedown then writes
    * O(1) data instead of rewriting its whole bucket, the difference
    * between GDPR-rate deletes being free and being a rolling compaction
-   * at 100 TB. Readers ([[applyDeletes]] in every read funnel,
-   * including the SQL skipping scan) anti-join the sidecar; the
+   * at 100 TB. Readers ([[applyDeletes]] in the one scan builder, so
+   * every read) anti-join the sidecar; the
    * sequence rule (sidecars apply only to files COMMITTED BEFORE them)
    * keeps later re-inserts of a deleted key alive; [[compact]] /
    * [[compactClustered]] fold sidecars into a clean rewrite and clear
@@ -2203,14 +2147,13 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                                e: org.apache.spark.sql.catalyst.expressions.Expression,
                                predicate: Column): Long = {
     val pks = meta.primaryKey
-    val files = listDataFiles(meta, current, None)
-    val cand = files.filter(fileMayMatch(e, meta, current))
+    val cand = walkedFiles(meta, current, e)
     if (cand.isEmpty) return 0L
     // the sidecar spells the key's ON-DISK (physical) name, the one
-    // spelling every era's read funnel binds — identical to the
-    // logical name unless the PK was renamed (PkPhysicalProp)
+    // spelling every era's read binds — identical to the logical name
+    // unless the PK was renamed (PkPhysicalProp)
     val pkDisk = pks.map(k => MergeSnapshotStore.pkPhysicalOf(meta, k))
-    val keys = loadFiles(meta, current, cand, predicate)
+    val keys = skippingFrame(meta, current, cand)._1.filter(predicate)
       .select(pks.map(col): _*)
       .toDF(pkDisk: _*)
     publishMorSidecar(meta, readVer, current, e, keys,
@@ -2239,20 +2182,9 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                                 current: Manifest,
                                 e: org.apache.spark.sql.catalyst.expressions.Expression,
                                 predicate: Column): Long = {
-    val files = listDataFiles(meta, current, None)
-    val cand = files.filter(fileMayMatch(e, meta, current))
+    val cand = walkedFiles(meta, current, e)
     if (cand.isEmpty) return 0L
-    // the scan reads the files' PHYSICAL spelling like every read
-    // funnel (a logical-named read over post-rename carried files
-    // would silently NULL the renamed column under the predicate);
-    // addresses capture on the raw scan, masking binds physically,
-    // the logical projection carries the address columns through
-    val raw = spark.read.schema(MergeSnapshotStore.physicalSchema(current.schema))
-      .parquet(cand.map(r => refPath(meta.location, r)): _*)
-    val addrs = toLogical(applyDeletes(meta, current, withRowAddress(raw)),
-        current.schema,
-        extras = Seq(MergeSnapshotStore.PosFileCol,
-          MergeSnapshotStore.PosPosCol))
+    val addrs = skippingFrame(meta, current, cand, withAddress = true)._1
       .filter(predicate)
       .select(col(MergeSnapshotStore.PosFileCol).as("__file"),
         col(MergeSnapshotStore.PosPosCol).as("__pos"))
@@ -2265,9 +2197,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         s"position delete on ${meta.qualified} matched rows in a data " +
           "file outside the store's data/cNNNNNN naming — refusing to " +
           "publish an unmaskable address")
-      val refFiles = written.select("__file").distinct()
-        .collect().map(_.getString(0)).toSet // <= candidate file count
-      refFiles.flatMap(current.bucketOf(_))
+      bucketsOfAddresses(meta, current, cand, written.select("__file")
+        .distinct().collect().map(_.getString(0))) // <= candidate file count
     }
   }
 
@@ -2347,27 +2278,31 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   private def matchedBuckets(meta: TableMeta, current: Manifest,
                              e: org.apache.spark.sql.catalyst.expressions.Expression,
                              predicate: Column): Option[(Seq[Int], Long)] = {
-    val files = listDataFiles(meta, current, None)
-    val cand = files.filter(fileMayMatch(e, meta, current))
+    val cand = walkedFiles(meta, current, e)
     if (cand.isEmpty) return None
-    // the tagged funnel counts each physical file's LOGICAL rows (the
-    // tag is captured on the raw scan, before the MoR anti-join)
-    val matches = loadFiles(meta, current, cand, predicate, Some("__file"))
-      .groupBy(col("__file").as("__f")).count()
+    // each physical file's LOGICAL matched rows (the address is
+    // captured on the scan, before the MoR anti-join)
+    val matches = skippingFrame(meta, current, cand, withAddress = true)._1
+      .filter(predicate)
+      .groupBy(col(MergeSnapshotStore.PosFileCol)).count()
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     if (matches.isEmpty) return None
-    val byDir = current.buckets.toSeq.map { case (b, dir) =>
-      (new Path(refPath(meta.location, dir)).toUri.getPath, b) }
-    val byCarry = current.carries.toSeq.flatMap { case (b, rels) =>
-      rels.map(rel => (new Path(refPath(meta.location, rel)).toUri.getPath, b)) }.toMap
-    val touched = matches.map { case (f, _) =>
-      val p = new Path(f).toUri.getPath
-      byDir.collectFirst { case (dir, b) if p.startsWith(s"$dir/") => b }
-        .orElse(byCarry.get(p))
-        .getOrElse(throw new IllegalStateException(
-          s"matched file $f is outside every bucket dir of ${meta.qualified}"))
-    }.distinct.sorted
-    Some((touched, matches.map(_._2).sum))
+    Some((bucketsOfAddresses(meta, current, cand, matches.map(_._1))
+      .toSeq.sorted, matches.map(_._2).sum))
+  }
+
+  /** The buckets of `m` owning the files a find scanned over `files`
+   * addressed ([[rowAddress]]'s form), through [[Manifest.bucketOf]]
+   * of each address's listed reference — a shallow clone lists its
+   * borrowed files absolutely, while an address is always the
+   * table-relative tail. */
+  private def bucketsOfAddresses(meta: TableMeta, m: Manifest,
+                                 files: Seq[(String, FileStatus)],
+                                 addrs: Iterable[String]): Set[Int] = {
+    val refOf = files.map { case (rel, _) => MergeSnapshotStore.addressOf(rel) -> rel }.toMap
+    addrs.map(a => refOf.get(a).flatMap(m.bucketOf).getOrElse(
+      throw new IllegalStateException(
+        s"matched file $a is outside every bucket dir of ${meta.qualified}"))).toSet
   }
 
   /**
@@ -2628,7 +2563,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       s"buckets ${missing.sorted.mkString(",")} of ${meta.qualified} " +
         "hold no committed files")
     val before = current.deletes
-    val scoped = load(meta, current, Some(buckets.toSet))
+    val scoped = skippingFrame(meta, current,
+      listDataFileStatuses(meta, current, Some(buckets.toSet)))._1
     // a fully-masked selection has nothing to lay out: the identity
     // rewrite then just drops the empty buckets' files (and range
     // inference has no rows to see) — plain scoped commit
@@ -2803,8 +2739,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     current.deletes.iterator.flatMap { d =>
       val raw = spark.read.parquet(refPath(meta.location, d.rel))
       // sidecars spell the key's physical name (a pre-record sidecar
-      // may spell the era's logical one — same resolution as the read
-      // funnels')
+      // may spell the era's logical one — same resolution as the
+      // read's)
       val keyCols = pks.map { k =>
         val phys = MergeSnapshotStore.pkPhysicalOf(meta, k)
         col(raw.columns.find(_.equalsIgnoreCase(phys))
@@ -2892,16 +2828,18 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       refuseLoss(meta, "compactDebt cleared its dead sidecars"))
 
   /** The files a PK-less snapshot's POSITION sidecars still address:
-   * each sidecar's distinct `__file` set (one small read per sidecar),
-   * intersected with what the manifest still lists — an address whose
-   * file a prior rewrite already removed is a dead line. This is the
-   * exact footprint a partial debt fold must rewrite. */
+   * the listed files whose address ([[MergeSnapshotStore.addressOf]])
+   * is in some sidecar's distinct `__file` set (one small read per
+   * sidecar) — an address whose file a prior rewrite already removed is
+   * a dead line. This is the exact footprint a partial debt fold must
+   * rewrite. */
   private def posDebtFiles(meta: TableMeta, current: Manifest): Set[String] = {
     val refAll = current.deletes.iterator.flatMap { d =>
       spark.read.parquet(refPath(meta.location, d.rel))
         .select("__file").distinct().collect().map(_.getString(0))
     }.toSet
-    refAll.intersect(listDataFiles(meta, current, None).toSet)
+    listDataFiles(meta, current, None)
+      .filter(rel => refAll(MergeSnapshotStore.addressOf(rel))).toSet
   }
 
   /** The position-kind debt fold body: rewrite exactly the files the
@@ -2928,19 +2866,14 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                                dropDeletes: Set[String],
                                op: String = "compact-files")
                               (shape: DataFrame => DataFrame): Unit = {
-    val f = fs(new Path(meta.location))
+    val listing = listDataFileStatuses(meta, current, None)
+    val byDir = listing.map(_._1).groupBy(rel => rel.substring(0, rel.lastIndexOf('/')))
     val dirFiles: Seq[(Int, String, Seq[String])] =
-      current.buckets.toSeq.map { case (b, dir) =>
-        val fl = f.listStatus(new Path(refPath(meta.location, dir))).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(st => s"$dir/${st.getPath.getName}")
-        (b, dir, fl)
-      }
+      current.buckets.toSeq.map { case (b, dir) => (b, dir, byDir.getOrElse(dir, Nil)) }
     // survivors of the referenced files under the LOGICAL view (the
     // sidecars mask their addressed rows; nothing else is read)
-    val survivors = shape(loadFiles(meta, current, refLive.toSeq.sorted,
-      lit(true)))
+    val survivors = shape(skippingFrame(meta, current,
+      listing.filter { case (rel, _) => refLive(rel) })._1)
     val (written, newStats, newStrStats, newSetStats, newRows) =
       writeData(meta, base + 1, survivors, Nil, enforceChecks = false,
         publishSchema = current.schema)
@@ -3018,13 +2951,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     require(newBuckets != nBucketsOf(meta),
       s"${meta.qualified} already resolves to nBuckets=$newBuckets — " +
         "a same-modulus rewrite is compact, not rebucket")
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val df = readVersion(meta, vs.last)
+    val (base, _) = headOf(meta, "rebucketing")
+    val df = readVersion(meta, base)
     val newMeta = meta.copy(properties = meta.properties +
       (MergeSnapshotStore.BucketsProp -> newBuckets.toString))
     catalog.register(newMeta)
-    try rewriteCommit(newMeta, vs.last, df, "rebucket")
+    try rewriteCommit(newMeta, base, df, "rebucket")
     catch {
       case t: Throwable =>
         // restore the old property ONLY if the new-modulus manifest was
@@ -3208,12 +3140,10 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * every DDL that names a column: __b is the bucket routing column
    * [[writeData]] adds, __fv the read-time file-commit column
    * (withColumn would silently REPLACE a same-named user column), and
-   * __graft_* the position-delete row addresses (applyDeletes detects
-   * a find scan by that name — a user column would skip address
-   * derivation and anti-join data against file paths). Compared
-   * case-INSENSITIVELY: Spark's default resolution is, so a user
-   * column named __FV would otherwise pass and still be replaced by
-   * the read funnel's withColumn("__fv", ...). */
+   * __graft_* the row addresses the scan captures the same way.
+   * Compared case-INSENSITIVELY: Spark's default resolution is, so a
+   * user column named __FV would otherwise pass and still be replaced
+   * by the scan's capture. */
   private def requireUnreserved(meta: TableMeta, names: Seq[String]): Unit = {
     val bad = names.filter { n =>
       val lc = n.toLowerCase
@@ -3581,7 +3511,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * provenance stamp is at or before `epochMs` — the manifest-priced
    * bridge from wall-clock time travel to the engine's version pins
    * (pass the result anywhere a `version`/`asOfVersion` parameter
-   * goes: [[readPinned]], [[graft.operators.QueryRunner.run]], change
+   * goes: [[read]], [[graft.operators.QueryRunner.run]], change
    * feeds, clones). Stamps are the PUBLISHING writer's clock, so the
    * mapping is as good as the fleet's clock discipline — same contract
    * as Delta/Iceberg timestamp travel. Pre-provenance versions carry no
@@ -4366,13 +4296,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       : CompactionReport = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
     val meta = catalog(db, table)
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val df = readVersion(meta, vs.last)
+    val (base, _) = headOf(meta, "compacting")
+    val df = readVersion(meta, base)
     val out =
       if (meta.hasPrimaryKey) df
       else df.repartition(targetFiles)
-    rewriteCommit(meta, vs.last, out, "compact")
+    rewriteCommit(meta, base, out, "compact")
   }
 
   /** The [[CompactionReport]] of a just-published rewrite: the debt paid
@@ -4435,9 +4364,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     require(meta.hasPrimaryKey,
       s"compactClustered keeps PK bucketing — ${meta.qualified} has no PK " +
         "(PK-less tables: write through Layout.writeClustered instead)")
-    val vs = manifestVersions(meta.location)
-    require(vs.nonEmpty, s"no manifest versions at ${meta.location}")
-    val df = readVersion(meta, vs.last)
+    val (base, _) = headOf(meta, "compacting")
+    val df = readVersion(meta, base)
     // range inference runs over the dims PROMOTED into the manifest's
     // epoch-based double space (dates as days, timestamps as micros) —
     // the same space readRange prunes in, so "cluster the event table
@@ -4447,7 +4375,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     val shadow = df.select(dims.map { case (c, _) =>
       promoted(col(c), df.schema(c).dataType).as(c) }: _*)
     val resolved = Layout.resolveRanges(shadow, dims)
-    rewriteCommit(meta, vs.last, df, "compact-clustered",
+    rewriteCommit(meta, base, df, "compact-clustered",
       Some((resolved, bits, filesPerBucket)))
   }
 
@@ -5332,6 +5260,17 @@ object MergeSnapshotStore {
    * merge-on-read delete applicability is judged against. */
   private[catalog] val CommitDirRe = "data/c(\\d+)-".r
 
+  /** A data file's ADDRESS (the row address's file half): the exact
+   * three-segment tail writeData produces (commit dir / bucket dir /
+   * file), `$`-anchored and segment-typed, so a table LOCATION holding
+   * a look-alike "data/c" segment can never shift the capture. */
+  private[catalog] val AddressRe = "(data/c\\d+-[^/]+/__b=\\d+/[^/]+)$".r
+
+  /** The address of a manifest file reference, relative or absolute —
+   * the driver-side twin of the scan-stage capture ("" off-naming). */
+  private[catalog] def addressOf(rel: String): String =
+    AddressRe.findFirstMatchIn(rel).fold("")(_.group(1))
+
   /** True for a manifest file reference that is ABSOLUTE (a shallow
    * clone's borrowed source path) rather than table-relative. Relative
    * references are writeData's own `data/c…` naming, which never
@@ -5357,7 +5296,7 @@ object MergeSnapshotStore {
    * three surfaces that field metadata alone cannot reach: the catalog
    * registration (its own names), equality-delete SIDECARS (parquet
    * files spelling the key at their write time), and every read
-   * funnel's delete-masking anti-join, which binds on the RAW
+   * scan's delete-masking anti-join, which binds on the RAW
    * physical-named scan — including scans of manifests PINNED before
    * the rename, whose schemas know nothing of the new name. The
    * property is the one era-stable record all of them resolve
@@ -5605,6 +5544,22 @@ object MergeSnapshotStore {
     })
   }
 
+  /** `s` nullable at every depth (Spark's `asNullable`, which is
+   * internal to Spark). */
+  private[catalog] def asNullable(s: StructType): StructType =
+    StructType(s.fields.map(f =>
+      f.copy(dataType = anyNull(f.dataType), nullable = true)))
+
+  private def anyNull(dt: DataType): DataType = dt match {
+    case s: StructType => asNullable(s)
+    case a: org.apache.spark.sql.types.ArrayType =>
+      a.copy(elementType = anyNull(a.elementType), containsNull = true)
+    case m: org.apache.spark.sql.types.MapType =>
+      m.copy(keyType = anyNull(m.keyType), valueType = anyNull(m.valueType),
+        valueContainsNull = true)
+    case other => other
+  }
+
   private def orNullable(a: DataType, b: DataType): DataType = (a, b) match {
     case (x: StructType, y: StructType) => mergeNullability(x, y)
     case (x: org.apache.spark.sql.types.ArrayType,
@@ -5638,8 +5593,8 @@ object MergeSnapshotStore {
   private[catalog] val EqDeleteKind: String = "eq"
   private[catalog] val PosDeleteKind: String = "pos"
 
-  /** Internal column names a position-delete find scan and the read
-   * funnel share for the row's physical address. */
+  /** Internal column names of the row's physical address, shared by
+   * the finds and the position-delete anti-join. */
   private[catalog] val PosFileCol: String = "__graft_pos_file"
   private[catalog] val PosPosCol: String = "__graft_pos_idx"
 

@@ -7,16 +7,20 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory
 import org.apache.spark.sql.types.StructType
 
 /**
- * The SQL surface's door into the store's data skipping: a
- * [[FileIndex]] over ONE committed manifest version whose
- * `listFiles` prunes with the store's own walk
- * ([[MergeSnapshotStore]] `fileMayMatch`) before Spark opens a single
- * parquet footer. The walk has two arms: the bucket arm hashes
+ * Every store read's index: a [[FileIndex]] over a slice of ONE
+ * committed manifest version — the whole snapshot, a scoped commit's
+ * touched buckets, a DML find's candidate files — whose `listFiles`
+ * prunes with the store's own walk ([[MergeSnapshotStore]]
+ * `fileMayMatch`) before Spark opens a single parquet footer. The
+ * store's one scan builder (`skippingFrame`) puts it under every read,
+ * typed and SQL alike. The walk has two arms: the bucket arm hashes
  * primary-key literals (`pk = v`, `pk <=> v`, `pk IN (…)`, and
  * composite keys pinned by one conjunction) to their
  * `pmod(hash(pk), nBuckets)` buckets in the driver and keeps only
  * those buckets' files; the stats arm judges footer min/max bounds,
- * truncated string bounds and value sets.
+ * truncated string bounds and value sets. The file statuses come from
+ * the store's driver-side enumeration, so planning runs no Spark
+ * listing job however many bucket directories the slice spans.
  *
  * This is the architecture Delta Lake uses on Spark (TahoeFileIndex →
  * HadoopFsRelation), chosen over a DataSource V2 `TableProvider`
@@ -38,17 +42,16 @@ import org.apache.spark.sql.types.StructType
  * Snapshot semantics: the file list and stats are pinned to the
  * manifest version the index was built from — a later commit is
  * invisible (re-derive the frame to see it), `refresh()` is a no-op,
- * and vacuum retention covers readers the same way it covers
- * [[MergeSnapshotStore.readPinned]].
+ * and vacuum retention covers readers the same way it covers a
+ * pinned [[MergeSnapshotStore.read]].
  *
  * Scale shape: `listFiles` is a driver-side fold over manifest-sized
  * stats (the same walk `readWhere` runs — no file is opened to decide),
- * and `sizeInBytes` reports the snapshot's true byte size, so Catalyst
+ * and `sizeInBytes` reports the slice's true byte size, so Catalyst
  * auto-broadcasts genuinely small store tables in SQL joins.
  */
 private[graft] final class StoreFileIndex(
     location: String,
-    dataSchema: StructType,
     files: Seq[(String, FileStatus)],
     mayMatch: Expression => String => Boolean)
   extends FileIndex {

@@ -46,7 +46,7 @@ final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
   /** Run one definition: temp views for dependencies, Catalyst SQL,
    * process-id stamp (reference `run_statement`, src/apply_to_domains.py:54-68).
    * The dependency views are SKIPPING scans
-   * ([[graft.catalog.MergeSnapshotStore.readSkipping]]):
+   * ([[graft.catalog.MergeSnapshotStore.read]]):
    * any predicate the Resolution SQL pushes to a scan prunes files
    * through the manifest stats before a footer opens — results are
    * identical (pruning is a sound superset), only the file list
@@ -62,7 +62,7 @@ final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
   def runStatement(db: String, d: DomainDef, processId: Long,
                    pins: Map[String, Int]): DataFrame = {
     d.dependencies.foreach { dep =>
-      store.readSkipping(db, dep.trim, pins.get(dep.trim))
+      store.read(db, dep.trim, pins.get(dep.trim))
         .createOrReplaceTempView(dep.trim)
     }
     spark.sql(d.resolution).withColumn("process_id", lit(processId))

@@ -43,7 +43,7 @@ final class QueryRunner(store: MergeSnapshotStore) {
           where: String = "1=1",
           asOfVersion: Option[Int] = None): DataFrame =
     QueryRunner.select(
-      store.readSkipping(db, table, asOfVersion), fields, where)
+      store.read(db, table, asOfVersion), fields, where)
 
   /** [[run]] pinned by WALL-CLOCK instant instead of version number:
    * the epoch resolves through the provenance stamps
@@ -262,7 +262,7 @@ object QueryRunner {
     def registered(t: String): Boolean = store.catalog.get(db, t).nonEmpty
     def splice(tbl: String, pin: Option[Int]) =
       SubqueryAlias(tbl,
-        store.readSkipping(db, tbl, pin).queryExecution.analyzed)
+        store.read(db, tbl, pin).queryExecution.analyzed)
     // CTE aliases SHADOW table names in SQL (CTESubstitution runs at
     // analysis time) — an eager splice of a bare reference whose name a
     // CTE binds would silently read the store table and drop the CTE's

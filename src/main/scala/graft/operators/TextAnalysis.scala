@@ -559,11 +559,11 @@ object TextAnalysis {
                          maxDfFrac: Double,
                          verOf: String => Option[Int]): DataFrame = {
     requireBm25Args(k, k1, b, maxDfFrac)
-    // pinned reads validate committed-AND-retained (readPinned routes
-    // through resolveVersion), so an expired pin fails with the loud
+    // pinned reads validate committed-AND-retained (read resolves a
+    // pin through resolveVersion), so an expired pin fails with the loud
     // retention-window error here exactly as the postings pointLookup
     // below does — never a raw FileNotFoundException mid-scan
-    def at(t: String): DataFrame = store.readPinned(db, t, verOf(t))
+    def at(t: String): DataFrame = store.read(db, t, verOf(t))
     // cut: the query tokenization feeds BOTH the point lookup's key
     // collect and the scoring broadcast — one tiny cut, one pass
     val qt = Materialize(queries.select(col(idCol).as("query_id"),

@@ -173,7 +173,7 @@ object ChangeFeed {
     // surface the retention refusal with the store's own loud message
     // (an exporter paused past the vacuum horizon must not fabricate a
     // gap): the pinned skipping read resolves the FROM version or refuses
-    store.readSkipping(db, table, Some(last))
+    store.read(db, table, Some(last))
     val meta = store.catalog(db, table)
     val delta0 =
       try {

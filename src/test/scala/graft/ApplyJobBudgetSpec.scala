@@ -175,13 +175,23 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
 
   test("scoped merges and overwrites write one file per bucket from min(nBuckets, cores) tasks") {
     val cores = spark.sparkContext.defaultParallelism
-    Seq(32, 2).foreach { nBuckets =>
+    // 64 bucket dirs is past Spark's parallel-listing threshold (32): a
+    // scan that handed them to Spark's own file index would run an
+    // unlabelled listing job
+    Seq(64, 32, 2).foreach { nBuckets =>
       val tasks = math.min(nBuckets, cores)
       val (store, dir) = mkStore(nBuckets)
       assert(filesPerBucket(store, "offenders").values.forall(_ == 1))
+      val landing = landBatch(store, dir, 3)
       val (_, jobs) = JobRecorder.during(spark) {
-        ChangeLogApplier.run(spark, store, Db, landBatch(store, dir, 3))
+        ChangeLogApplier.run(spark, store, Db, landing)
       }
+      val merge = s"store: merge $Db\\.(offenders|bookings) [a-z]+".r
+      assert(jobs.forall(j => merge.matches(j.desc)),
+        s"$nBuckets buckets, jobs outside a labelled merge phase: " +
+          jobs.map(_.desc).mkString("; "))
+      val (_, readJobs) = JobRecorder.during(spark)(store.read(Db, "offenders"))
+      assert(readJobs.isEmpty, s"$nBuckets buckets, read before an action ran $readJobs")
       Seq("offenders", "bookings").foreach { t =>
         val counts = filesPerBucket(store, t)
         assert(counts.size == nBuckets && counts.values.forall(_ == 1),

@@ -129,6 +129,28 @@ class CloneSpec extends AnyFunSuite with SparkFixture {
     assert(store.read("cdb", "dst").count() == 48)
   }
 
+  test("position deletes on a PK-less clone survive the debt fold") {
+    val store = mkStore()
+    register(store, "psrc", pk = Nil)
+    store.overwrite("cdb", "psrc", frame())
+    store.cloneTable("cdb", "psrc", "cdb", "pdst", freshLoc("pos"))
+    // the sidecar addresses BORROWED files, which the clone's manifest
+    // names absolutely
+    store.deleteWhere("cdb", "pdst", col("cls") === "c2",
+      MergeSnapshotStore.MergeOnRead)
+    assert(store.read("cdb", "pdst").count() == 72)
+    // the fold must find those files as its footprint, rewrite them
+    // under the mask, and only then drop the sidecar
+    val rep = store.compactDebt("cdb", "pdst")
+    assert(rep.clearedSidecars == 1)
+    val after = store.read("cdb", "pdst")
+    assert(after.count() == 72)
+    assert(after.filter(col("cls") === "c2").isEmpty)
+    assert(store.manifestDeletes("cdb", "pdst",
+      store.latestVersion("cdb", "pdst")).isEmpty)
+    assert(store.read("cdb", "psrc").count() == 96)
+  }
+
   test("the clone's vacuum never reclaims borrowed source directories") {
     val store = mkStore(keep = 2)
     register(store, "src")

@@ -107,7 +107,7 @@ class HistorySpec extends AnyFunSuite with SparkFixture {
       "an instant between commits resolves to the earlier version")
     assert(store.versionAt("hdb", "t", afterV1) == 1)
     // the resolved pin reads the snapshot of that instant
-    assert(store.readPinned("hdb", "t",
+    assert(store.read("hdb", "t",
       Some(store.versionAt("hdb", "t", betweenV0andV1))).count() == 64)
     // an instant before the table refuses loudly
     val ex = intercept[IllegalArgumentException] {

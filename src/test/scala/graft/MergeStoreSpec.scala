@@ -409,14 +409,15 @@ class MergeStoreSpec extends AnyFunSuite with SparkFixture {
     // falsify it): after v0 expires, reading it fails loudly
     store.overwrite("mc", "mc_t", idTable(65))
     store.overwrite("mc", "mc_t", idTable(66)) // keepVersions=2: v0 manifest gone
-    intercept[java.io.FileNotFoundException] {
-      store.readVersion(meta, 0)
-    }
-    // and the pinned path keeps its own loud retention message
+    // with the pinned read's own retention message
     val err = intercept[IllegalArgumentException] {
-      store.readPinned("mc", "mc_t", Some(0))
+      store.read("mc", "mc_t", Some(0))
     }
     assert(err.getMessage.contains("retention"))
+    val byMeta = intercept[IllegalArgumentException] {
+      store.readVersion(meta, 0)
+    }
+    assert(byMeta.getMessage == err.getMessage)
   }
 
   test("vacuum retains keepVersions manifests and deletes unreferenced dirs") {
@@ -1237,7 +1238,8 @@ class MergeStoreSpec extends AnyFunSuite with SparkFixture {
 
     val touched = mapped.select(bucketIds(store, mapped)).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val old = store.readBuckets("mdb", "t5", touched)
+    val old = store.read("mdb", "t5")
+      .filter(store.bucketOf(col("id")).isin(touched: _*))
     val result = ChangeLogApplier.applyLastWins(old, mapped, "id")
     assert(result.count() == old.count()) // 3 updates, no inserts/deletes
 

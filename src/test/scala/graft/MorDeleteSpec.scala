@@ -100,7 +100,7 @@ class MorDeleteSpec extends AnyFunSuite with SparkFixture {
       want.filter(col("v") >= 90L && col("v") < 130L))
     assertExact(store.readRange("mdb", "fun", Map("v" -> ((90.0, 129.0)))),
       want.filter(col("v") >= 90L && col("v") <= 129L))
-    store.readSkipping("mdb", "fun").createOrReplaceTempView("mor_fun")
+    store.read("mdb", "fun").createOrReplaceTempView("mor_fun")
     assertExact(spark.sql("SELECT * FROM mor_fun WHERE v < 200"),
       want.filter(col("v") < 200L))
   }
@@ -350,7 +350,7 @@ class MorDeleteSpec extends AnyFunSuite with SparkFixture {
       s"carried stats must keep biting: planned ${pruned.inputFiles.length}")
     assertExact(pruned,
       frame().filter(col("v") >= 10L && col("v") < 100L))
-    store.readSkipping("mdb", "posfold").createOrReplaceTempView("posfold_v")
+    store.read("mdb", "posfold").createOrReplaceTempView("posfold_v")
     assert(spark.sql("SELECT count(*) AS n FROM posfold_v").head().getLong(0)
       == 246L)
 

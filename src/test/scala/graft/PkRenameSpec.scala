@@ -92,7 +92,7 @@ class PkRenameSpec extends AnyFunSuite with SparkFixture {
       head.filter(col("v").isin(10L, 11L)).count() == 0)
     // pinned MID-ERA read (pre-rename manifest, post-rename meta): the
     // old spelling binds through the physical record
-    val pinned = store.readPinned("kdb", "t", Some(vMid))
+    val pinned = store.read("kdb", "t", Some(vMid))
     assert(pinned.columns.head == "id" && pinned.count() == 63,
       "the pinned pre-rename era reads under its own spelling, masked")
     // scoped merge under the NEW key name; untouched buckets carry

@@ -69,6 +69,45 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
         s"${fscans.map(_.metadata.get("PushedFilters")).mkString(",")}")
   }
 
+  test("every store read scans its data files through a StoreFileIndex relation") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.functions._
+    import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, StoreFileIndex, TableMeta}
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-plan-scan").toString
+    val cat = new InMemoryCatalog
+    val meta = TableMeta("pdb", "k", s"$work/k", primaryKey = Seq("id"))
+    cat.register(meta)
+    val store = new MergeSnapshotStore(spark, cat, nBuckets = 4, keepVersions = 8)
+    store.overwrite("pdb", "k",
+      (0 until 64).map(i => (i.toLong, i % 8, s"n$i")).toDF("id", "v", "nm"))
+    val v0 = store.latestVersion("pdb", "k")
+    // a live sidecar: its own scan is the one other file relation a
+    // read may hold
+    store.deleteWhere("pdb", "k", col("id") === 3L, MergeSnapshotStore.MergeOnRead)
+    var rewriteInput: DataFrame = null
+    store.mergeScoped("pdb", "k", Seq(5L).toDF("id")) { old => rewriteInput = old; old }
+    val reads: Seq[(String, () => DataFrame)] = Seq(
+      "read" -> (() => store.read("pdb", "k")),
+      "read pinned" -> (() => store.read("pdb", "k", Some(v0 + 1))),
+      "readVersion" -> (() => store.readVersion(meta, v0 + 1)),
+      "readWhere" -> (() => store.readWhere("pdb", "k", col("v") === 2)),
+      "pointLookup" -> (() => store.pointLookup("pdb", "k", Seq(7L).toDF("id"))),
+      "mergeScoped rewrite input" -> (() => rewriteInput))
+    reads.foreach { case (name, frame) =>
+      val files = frame().queryExecution.optimizedPlan.collectLeaves().collect {
+        case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+          l.relation.asInstanceOf[HadoopFsRelation].location
+      }
+      val (indexed, other) = files.partition(_.isInstanceOf[StoreFileIndex])
+      assert(indexed.nonEmpty, s"$name: no StoreFileIndex scan")
+      val dataScans = other.filter(_.inputFiles.exists(!_.contains("/data/d")))
+      assert(dataScans.isEmpty,
+        s"$name scans data files outside a StoreFileIndex: ${dataScans.mkString("; ")}")
+    }
+  }
+
   test("s09 range search: probe join broadcasts, never a shuffle join") {
     val p = plan("s09_ann_range_search")
     assert(p.contains("BroadcastHashJoin"),

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{InMemoryCatalog, MergeSnapshotStore, TableMeta}
 
 /**
- * The SQL surface's data skipping ([[MergeSnapshotStore.readSkipping]]
+ * The SQL surface's data skipping ([[MergeSnapshotStore.read]]
  * over [[graft.catalog.StoreFileIndex]]): `spark.sql` over a registered
  * store view must prune files through the SAME manifest-stats walk as
  * the typed `readWhere` — same file list for the same predicate — while
@@ -81,7 +81,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
 
     val (factFrame, factIdx) = store.skippingScan("sdb", "fact2")
     factFrame.createOrReplaceTempView("fact_view")
-    store.readSkipping("sdb", "dim2").createOrReplaceTempView("dim_view")
+    store.read("sdb", "dim2").createOrReplaceTempView("dim_view")
     val got = spark.sql(
       """SELECT d.tag_name, count(*) AS n, sum(f.v) AS sv
          FROM fact_view f JOIN dim_view d ON f.tag = d.tag
@@ -124,8 +124,8 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     store.overwrite("sdb", "bdim",
       (0 until 7).map(i => (i, s"nm$i")).toDF("tag", "tag_name"))
-    store.readSkipping("sdb", "bfact").createOrReplaceTempView("bfact_v")
-    store.readSkipping("sdb", "bdim").createOrReplaceTempView("bdim_v")
+    store.read("sdb", "bfact").createOrReplaceTempView("bfact_v")
+    store.read("sdb", "bdim").createOrReplaceTempView("bdim_v")
     // AQE OFF for the pin: adaptive execution would convert the join to
     // a broadcast at RUNTIME from the observed shuffle size even if
     // sizeInBytes were wrong — the static plan is what proves the
@@ -157,7 +157,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     assert(all.count() == 800)
     assert(idx.lastKept.size == idx.inputFiles.length)
     // pinned: the frame is the OLD snapshot
-    assert(store.readSkipping("sdb", "pin", Some(v0)).count() == n0)
+    assert(store.read("sdb", "pin", Some(v0)).count() == n0)
   }
 
   test("AS-OF SQL prunes through the pinned manifest exactly like readWhere there") {
@@ -188,10 +188,10 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     assert(canon(qr.run("sdb", "asof", Seq("id", "v"),
         "v >= 100.0 AND v <= 200.0", asOfVersion = Some(v0))) ==
       canon(want.select("id", "v")))
-    // and readPinned (now the skipping scan) keeps the retention-window
+    // and the pinned read keeps the retention-window
     // validation contract for expired pins
     val err = intercept[IllegalArgumentException] {
-      store.readPinned("sdb", "asof", Some(v0 + 99))
+      store.read("sdb", "asof", Some(v0 + 99))
     }
     assert(err.getMessage.contains("retention"))
   }
@@ -207,7 +207,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
     // pinned single-table SELECT == the typed pinned read, and it PRUNES
     val got = runner.sql("sdb", s"SELECT id, v FROM tfact VERSION AS OF " +
       s"$v0 WHERE v >= 100.0 AND v <= 200.0")
-    val want = store.readPinned("sdb", "tfact", Some(v0))
+    val want = store.read("sdb", "tfact", Some(v0))
       .filter(col("v") >= 100.0 && col("v") <= 200.0).select("id", "v")
     assert(canon(got) == canon(want), "pinned SQL changed the answer")
     got.collect()
@@ -238,7 +238,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
       s"SELECT f.id, d.name FROM tfact f JOIN tdim VERSION AS OF $dv0 d " +
         "ON f.tag = d.k WHERE f.v < 50.0")
     val wantMixed = store.read("sdb", "tfact").filter(col("v") < 50.0)
-      .join(store.readPinned("sdb", "tdim", Some(dv0)),
+      .join(store.read("sdb", "tdim", Some(dv0)),
         col("tag") === col("k")).select("id", "name")
     assert(canon(mixed) == canon(wantMixed),
       "HEAD fact x pinned dim must answer each side from its own manifest")
@@ -261,7 +261,7 @@ class SqlSkippingSpec extends AnyFunSuite with SparkFixture {
       s"SELECT f.id, s.dbl FROM tfact VERSION AS OF $v0 f " +
         "JOIN side_view s ON f.tag = s.k WHERE f.v < 10.0")
     assert(withView.count() ==
-      store.readPinned("sdb", "tfact", Some(v0))
+      store.read("sdb", "tfact", Some(v0))
         .filter(col("v") < 10.0 && col("tag") < 3).count())
   }
 

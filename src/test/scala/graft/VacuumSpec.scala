@@ -151,14 +151,18 @@ class VacuumSpec extends AnyFunSuite with SparkFixture {
     val head = store.latestVersion("vdb", "t")
     store.vacuum("vdb", "t", retainMs = Some(0L))
     // the floor: head, head-1, head-2 all still resolvable
-    assert(store.readPinned("vdb", "t", Some(head - 2)).count() == 63)
+    assert(store.read("vdb", "t", Some(head - 2)).count() == 63)
     assert(store.history("vdb", "t").count() == 3)
-    // and the expired pin refuses naming the window in TIME
-    val ex = intercept[IllegalArgumentException] {
-      store.readPinned("vdb", "t", Some(head - 3))
+    // and the expired pin refuses naming the window in TIME, through
+    // the pinned read and through readVersion alike
+    Seq[() => Any](
+      () => store.read("vdb", "t", Some(head - 3)),
+      () => store.readVersion(store.catalog("vdb", "t"), head - 3)
+    ).foreach { expired =>
+      val ex = intercept[IllegalArgumentException](expired())
+      assert(ex.getMessage.contains("retention window") &&
+        ex.getMessage.contains("ms for this table"), ex.getMessage)
     }
-    assert(ex.getMessage.contains("retention window") &&
-      ex.getMessage.contains("ms for this table"), ex.getMessage)
   }
 
   test("the VACUUM statement rides the dialect: bare honors the horizon, RETAIN overrides") {
@@ -218,7 +222,7 @@ class VacuumSpec extends AnyFunSuite with SparkFixture {
     // keeps every young manifest readable — guaranteed time travel
     assert(store.history("vdb", "t").count() == 3,
       "manifests younger than the window must survive expiry")
-    assert(store.readPinned("vdb", "t", Some(0)).count() == 64)
+    assert(store.read("vdb", "t", Some(0)).count() == 64)
     // an unparseable window refuses loudly
     register(store, "t2",
       Map(MergeSnapshotStore.ManifestKeepProp -> "forever"))
