@@ -60,7 +60,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
  * deployments there pass a [[ManifestLog]] built on the store's
  * conditional-put API (S3 If-None-Match, GCS generation-match), which
  * makes the publish a true CAS with no rename assumption. Every publish
- * but [[cloneTable]]'s goes through one commit funnel (`publish`): it
+ * goes through one commit funnel (`publish`): it
  * stamps the operation, publishes at base + 1 (a base whose successor
  * vacuum has already expired loses without a CAS: the create-if-absent
  * would re-create that version below the head), vacuums on success,
@@ -79,9 +79,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
  *    shape and bucket count are unchanged), its written output is still
  *    valid verbatim and it republishes against the winner's manifest,
  *    carrying the winner's untouched-bucket work; otherwise it refuses;
- *  - RETRY UNCHANGED: a plain [[overwrite]] replaces the table
- *    wholesale, so losing the race only bumps its version number (last
- *    writer wins).
+ *  - RETRY UNCHANGED: a plain [[overwrite]] and a [[promote]] replace
+ *    the table wholesale, so losing the race only bumps the version
+ *    number (last writer wins). A [[cloneTable]] targets a fresh
+ *    location and refuses instead.
  * A refused or crashed attempt's data directories are unreferenced by
  * any manifest and are reclaimed by the normal vacuum tombstone cycle. Because a commit's data directories
  * are orphans to every OTHER writer's vacuum until its manifest
@@ -1644,8 +1645,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   private def runBeforePublish(): Unit =
     beforePublishRef.getAndSet(() => ())()
 
-  /** The one commit funnel: every manifest publish but [[cloneTable]]'s
-   * (that one targets an unregistered location) goes through here —
+  /** The one commit funnel: every manifest publish goes through here —
    * Delta's commit protocol of data first, then a compare-and-swap of
    * version base + 1. `readVer` is the version `read` was read at (-1
    * before the first commit). The armed [[beforePublish]] failpoint
@@ -1655,7 +1655,9 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * has expired the base's successor (the base is more than
    * `keepVersions` behind the head), a create-if-absent would re-create
    * it below the head, so a listing that shows a later head without
-   * that successor is a loss without a CAS. On success the versions up
+   * that successor is a loss without a CAS. On success `published`
+   * sees the new version first (a borrowing commit's post-publish
+   * source check, which may unwind it and throw), then the versions up
    * to the base are vacuumed and stray tombstones cleared on the
    * commit's `fresh` directories. On a loss the winner's version and
    * manifest go to `onLoss`, the caller's policy: throw to refuse, or
@@ -1663,7 +1665,8 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * base rebases onto it, one that ignores it retries unchanged), up
    * to a fixed number of attempts. Returns the published version. */
   private def publish(meta: TableMeta, readVer: Int, read: Manifest,
-                      op: String, fresh: Iterable[String])
+                      op: String, fresh: Iterable[String],
+                      published: Int => Unit = _ => ())
                      (build: (Int, Manifest) => Manifest)
                      (onLoss: (Int, Manifest) => Unit): Int = {
     runBeforePublish()
@@ -1676,6 +1679,7 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
         !listed.contains(baseVer + 1)
       if (!expired && publishManifest(meta.location, baseVer + 1,
           build(baseVer, base).copy(op = op, at = System.currentTimeMillis()))) {
+        published(baseVer + 1)
         jobPhase("vacuum") {
           vacuum(meta, listed.filter(_ <= baseVer))
           clearTombstones(meta, fresh)
@@ -3901,48 +3905,36 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
    * SHALLOW CLONE — a new table whose first manifest references the
    * source's data files (and live delete sidecars) by ABSOLUTE path,
    * without copying a byte: the Delta `CREATE TABLE … SHALLOW CLONE` /
-   * Iceberg snapshot-ref story. METADATA-ONLY — one manifest write, so
-   * cloning a 100 TB table costs the same as cloning a 100 MB one; the
-   * borrowed references carry the source's per-file stats lines
-   * verbatim, so the clone's skipping scans prune exactly like the
-   * source's from the first read.
+   * Iceberg snapshot-ref story. It is a [[promote]] of the source's
+   * `version` (None = head; committed and retained) into a fresh
+   * location, then a catalog register of `dstDb.dstTable` with the
+   * source's registration (PK, properties, the committed bucket count).
+   * METADATA-ONLY — one manifest write, so cloning a 100 TB table costs
+   * the same as cloning a 100 MB one; the borrowed references carry the
+   * source's per-file stats lines verbatim, so the clone's skipping
+   * scans prune exactly like the source's from the first read.
    *
    * The clone is a fully independent table from its first commit:
    * writes land under ITS location (row-level DML, merges, maintenance
    * all work — the scoped-commit carry keeps borrowing untouched
-   * source files by reference), its version history starts fresh, and
-   * its vacuum NEVER reclaims borrowed directories (absolute
-   * references are another table's files; only the source's own vacuum
-   * governs them). `version` pins the clone to a committed-and-retained
-   * source version (None = head).
+   * source files by reference), and its vacuum NEVER reclaims borrowed
+   * directories (absolute references are another table's files; only
+   * the source's own vacuum governs them, under the hold [[promote]]
+   * registers). A borrower cloned through a DIFFERENT catalog is
+   * covered exactly when [[registerHold]] is called on the source's
+   * side; without it, that clone remains Delta's documented
+   * shallow-clone contract: once the source rewrites the borrowed files
+   * away and its retention window passes, its reads fail with missing
+   * paths — loud, never wrong data. Sever the dependency any time with
+   * `deep = true` here, or later with one [[compact]] on the clone (any
+   * whole-table rewrite re-materializes every borrowed row under the
+   * clone's own location).
    *
-   * The borrowing liability, ENFORCED within one catalog: the clone
-   * indexes itself on the source's [[MergeSnapshotStore.HoldsProp]]
-   * BEFORE its manifest publishes, the source's vacuum checks only the
-   * held locations' retained manifests before deleting anything and
-   * SKIPS what a clone still borrows (`VacuumReport.borrowedSkipped`
-   * counts the holds; the space releases once the borrower severs —
-   * the auto-release in vacuum's borrower scan), and the clone
-   * re-verifies the source manifest ON DISK after publishing, unwinding
-   * with a loud refusal if a racing vacuum expired it first — a
-   * silently severed clone is impossible here at any interleaving. A
-   * borrower cloned through a DIFFERENT catalog is covered exactly
-   * when [[registerHold]] is called on the source's side; without it,
-   * that clone remains Delta's documented shallow-clone contract: once
-   * the source rewrites the borrowed files away and its retention
-   * window passes, its reads fail with missing paths — loud, never
-   * wrong data. Sever the dependency any time with `deep = true`
-   * here, or later with one [[compact]] on the clone (any whole-table
-   * rewrite re-materializes every borrowed row under the clone's own
-   * location).
-   *
-   * Version numbering: the clone's first manifest publishes at source
-   * version + 1, which places every borrowed commit directory's number
-   * (≤ the source version, by writeData's naming) BELOW every future
-   * clone commit — the merge-on-read sequence rule (sidecar masks
-   * exactly the files that predate it) keeps working across the
-   * borrowed/native boundary without translation. Returns that first
-   * version.
+   * The catalog entry registers only on success: registering before
+   * the publish leaves, on a failed publish, an entry whose reads die
+   * with the generic "no manifest versions" instead of a clone failure.
+   * A lost publish race refuses (the location was not fresh after
+   * all). Returns the clone's first version, source version + 1.
    */
   def cloneTable(srcDb: String, srcTable: String,
                  dstDb: String, dstTable: String, dstLocation: String,
@@ -3950,14 +3942,120 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
                  deep: Boolean = false): Int = {
     val srcMeta = catalog(srcDb, srcTable)
     val srcVer = resolveVersion(srcMeta, version)
-    val m = readManifest(srcMeta.location, srcVer)
     require(manifestVersions(dstLocation).isEmpty,
       s"$dstLocation already holds a committed table — clone into a " +
         "fresh location")
-    // a source ref may itself be absolute (cloning a clone keeps
-    // borrowing the ORIGINAL files — no chain of indirection to walk)
+    val m = readManifest(srcMeta.location, srcVer)
+    val dstMeta = srcMeta.copy(db = dstDb, name = dstTable,
+      location = dstLocation,
+      properties = srcMeta.properties +
+        (MergeSnapshotStore.BucketsProp -> m.nBuckets.toString))
+    promoteCore(srcMeta, srcVer, m, dstMeta, "clone") { (now, _) =>
+      throw new java.util.ConcurrentModificationException(
+        s"$dstLocation took version $now while the clone committed — " +
+          "clone into a fresh location")
+    }
+    catalog.register(dstMeta)
+    // a deep clone that fails mid-compact leaves a VALID shallow clone
+    // (the borrowing version is committed); the caller can retry the
+    // sever with compact()
+    if (deep) compact(dstDb, dstTable,
+      targetFiles = math.max(1, m.buckets.size))
+    latestVersion(dstDb, dstTable)
+  }
+
+  /**
+   * PROMOTE BY REFERENCE — publish `dstDb.dst`'s next version as the
+   * manifest of `srcDb.src`'s head, with every file, carry and
+   * delete-sidecar reference made absolute: the identity curated commit
+   * (structured → curated) as one manifest write. It writes no parquet
+   * and runs no Spark job; Delta's shallow clone, applied on every
+   * commit rather than once.
+   *
+   * `dst` takes `src`'s primary key and committed bucket count, as a
+   * clone does. It refuses with an IllegalArgumentException, before any
+   * hold or publish, when it declares a CHECK constraint (a promote
+   * writes no rows, so nothing would enforce it), or a primary key or
+   * `graft.nbuckets` different from `src`'s.
+   *
+   * The commit goes through the funnel, stamped `promote(<db.src>@<v>)`;
+   * a lost race retries unchanged (the promoted snapshot replaces the
+   * table wholesale, like [[overwrite]]). Its version is at least
+   * `src`'s + 1, which keeps every borrowed commit directory below
+   * every later native `dst` commit, so the merge-on-read sequence rule
+   * holds across the borrowed/native boundary without translation. The
+   * borrowing follows [[promoteCore]]'s hold-before-publish /
+   * verify-after-publish protocol: `src`'s vacuum keeps every directory
+   * a retained `dst` version borrows and reclaims it once `dst` moves
+   * on. Returns the published version.
+   */
+  def promote(srcDb: String, src: String, dstDb: String, dst: String): Int =
+    jobLabel(s"store: promote $dstDb.$dst") {
+      val srcMeta = catalog(srcDb, src)
+      val dstMeta = catalog(dstDb, dst)
+      val checks = MergeSnapshotStore.checksOf(dstMeta).map(_._1)
+      require(checks.isEmpty,
+        s"${dstMeta.qualified} declares CHECK constraint(s) " +
+          s"${checks.mkString(", ")}: a promote writes no rows to check " +
+          "— drop them, or curate through a transform")
+      val (srcVer, m) = headOf(srcMeta, "promoting it")
+      def lower(k: Seq[String]) = k.map(_.toLowerCase)
+      require(!dstMeta.hasPrimaryKey ||
+          lower(dstMeta.primaryKey) == lower(srcMeta.primaryKey),
+        s"${dstMeta.qualified} declares PRIMARY KEY " +
+          s"(${dstMeta.primaryKey.mkString(", ")}), ${srcMeta.qualified}'s " +
+          s"is (${srcMeta.primaryKey.mkString(", ")}) — a promote borrows " +
+          "the source's layout")
+      require(!dstMeta.properties.contains(MergeSnapshotStore.BucketsProp) ||
+          nBucketsOf(dstMeta) == m.nBuckets,
+        s"${dstMeta.qualified} declares ${MergeSnapshotStore.BucketsProp}=" +
+          s"${nBucketsOf(dstMeta)}, ${srcMeta.qualified}@$srcVer is " +
+          s"committed with ${m.nBuckets} — a promote borrows the source's " +
+          "layout")
+      // the source's layout, on any registration of dst: its PK (and
+      // that key's on-disk spelling, which the borrowed equality
+      // sidecars bind) and its committed bucket count
+      val pkDisk = MergeSnapshotStore.PkPhysicalProp
+      def adopt(t: TableMeta): TableMeta = t.copy(
+        primaryKey = srcMeta.primaryKey,
+        properties = (t.properties - pkDisk) ++
+          srcMeta.properties.get(pkDisk).map(pkDisk -> _) +
+          (MergeSnapshotStore.BucketsProp -> m.nBuckets.toString))
+      val adopted = adopt(dstMeta)
+      val v = promoteCore(srcMeta, srcVer, m, adopted, "promote")((_, _) => ())
+      if (adopted != dstMeta) catalog.synchronized {
+        catalog.register(adopt(catalog(dstDb, dst)))
+      }
+      v
+    }
+
+  /** The borrowing commit [[promote]] and [[cloneTable]] share: `dst`'s
+   * next version, at least `srcVer` + 1, is `src`@`srcVer`'s manifest
+   * `m` with every reference absolute (a source ref that is already
+   * absolute stays as it is: promoting a clone borrows the ORIGINAL
+   * files, no chain of indirection to walk), published through the
+   * funnel as `<op>(<db.src>@<srcVer>)` with `onLoss` as its loss
+   * policy.
+   *
+   * HOLD before publish, VERIFY after: the borrower index must be
+   * visible before the borrowing manifest lands, and the source
+   * manifest must still exist after. This closes the borrow-vs-vacuum
+   * race — vacuum expires manifests BEFORE it reads the borrower index
+   * (vacuumCore forces `borrowed` only at deletion time, after the
+   * expiry loop), so a vacuum pass that missed this hold must have
+   * expired the source manifest before the post-publish check sees it,
+   * and a pass that sees the hold skips the borrowed dirs. Either way:
+   * `dst` borrows files that survive, or the commit unwinds and refuses
+   * loudly — never a silently severed table within one catalog. The
+   * check runs inside the funnel before its vacuum of `dst`, so an
+   * unwound commit has expired none of `dst`'s versions. A commit that
+   * does not land releases only the holds it added: an earlier
+   * promote's hold still guards `dst`'s retained versions. */
+  private def promoteCore(srcMeta: TableMeta, srcVer: Int, m: Manifest,
+                          dst: TableMeta, op: String)
+                         (onLoss: (Int, Manifest) => Unit): Int = {
     def abs(rel: String): String = refPath(srcMeta.location, rel)
-    val cloned = Manifest(
+    val borrowed = Manifest(
       m.schema,
       m.buckets.map { case (b, dir) => b -> abs(dir) },
       m.nBuckets,
@@ -3968,78 +4066,53 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
       m.carries.map { case (b, rels) => b -> rels.map(abs) },
       rows = m.rows.map { case (fp, n) => abs(fp) -> n },
       retired = m.retired)
-    val dstMeta = srcMeta.copy(db = dstDb, name = dstTable,
-      location = dstLocation,
-      properties = srcMeta.properties +
-        (MergeSnapshotStore.BucketsProp -> m.nBuckets.toString))
-    // HOLD before publish, VERIFY after: the borrower index must be
-    // visible before the clone manifest lands, and the source manifest
-    // must still exist after. This closes the clone-vs-vacuum race —
-    // vacuum expires manifests BEFORE it reads the borrower index
-    // (vacuumCore forces `borrowed` only at deletion time, after the
-    // expiry loop), so a vacuum pass that missed this hold must have
-    // expired the source manifest before our post-publish check sees
-    // it, and a pass that sees the hold skips the borrowed dirs. Either
-    // way: the clone borrows files that survive, or refuses loudly —
-    // never a silently severed clone within one catalog.
-    val borrowedRefs = (cloned.buckets.values ++
-      cloned.deletes.map(_.rel) ++ cloned.carries.values.flatten)
+    val borrowedRefs = (borrowed.buckets.values ++
+      borrowed.deletes.map(_.rel) ++ borrowed.carries.values.flatten)
       .filter(MergeSnapshotStore.isAbsoluteRef).toSeq
-    // owners: the source, plus — for a clone of a clone, whose refs
-    // point at the ORIGINAL table — any registered table whose
-    // location prefixes a borrowed ref
+    // dst's vacuum judges its own files by their relative references;
+    // an absolute one would leave them unprotected
+    require(!borrowedRefs.exists(_.startsWith(s"${dst.location}/")),
+      s"${srcMeta.qualified}@$srcVer borrows ${dst.qualified}'s own files")
+    // owners: the source, plus — for a source that is itself a clone,
+    // whose refs point at the ORIGINAL table — any registered table
+    // whose location prefixes a borrowed ref
     val owners = (catalog.listAll.filter(t =>
-        t.location != dstLocation &&
+        t.location != dst.location &&
           borrowedRefs.exists(_.startsWith(s"${t.location}/"))) ++
       Seq(srcMeta).filter(_ =>
         borrowedRefs.exists(_.startsWith(s"${srcMeta.location}/"))))
       .map(t => (t.db, t.name)).distinct
-    owners.foreach { case (d, t) => registerHold(d, t, dstLocation) }
-    // manifest next, catalog entry only on success: registering before
-    // the publish leaves — on a failed publish — a catalog entry whose
-    // reads die with the generic "no manifest versions" instead of a
-    // clone failure. A failure AFTER the publish but before register
-    // leaves only an unregistered-but-complete location, re-cloneable
-    // nowhere and re-registerable by a retry into the same dst names.
-    val v0 = srcVer + 1
-    def unwind(): Unit = {
-      try fs(new Path(dstLocation)).delete(manifestPath(dstLocation, v0), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-      owners.foreach { case (d, t) =>
-        try releaseHold(d, t, dstLocation)
+    val added = owners.filter { case (d, t) => registerHold(d, t, dst.location) }
+    var landed = false
+    // post-publish source check, ON DISK (the parse cache would hide an
+    // expiry)
+    def verify(v: Int): Unit = {
+      if (borrowedRefs.nonEmpty &&
+          !fs(new Path(srcMeta.location))
+            .exists(manifestPath(srcMeta.location, srcVer))) {
+        val mine = manifestPath(dst.location, v)
+        try fs(mine).delete(mine, false)
         catch { case scala.util.control.NonFatal(_) => () }
+        manifestCache.remove(mine.toString)
+        throw new java.util.ConcurrentModificationException(
+          s"${srcMeta.qualified}@$srcVer was vacuumed while the $op " +
+            "committed — the borrowed files' survival cannot be " +
+            s"guaranteed; re-run the $op against a retained version")
       }
+      landed = true
     }
-    if (!publishManifest(dstLocation, v0,
-        cloned.copy(op = s"clone(${srcMeta.qualified}@$srcVer)",
-          at = System.currentTimeMillis()))) {
-      owners.foreach { case (d, t) =>
-        try releaseHold(d, t, dstLocation)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      throw new java.util.ConcurrentModificationException(
-        s"$dstLocation took version $v0 while the clone committed — " +
-          "clone into a fresh location")
+    val dstHead = manifestVersions(dst.location).lastOption.getOrElse(-1)
+    try publish(dst, math.max(dstHead, srcVer), borrowed,
+        s"$op(${srcMeta.qualified}@$srcVer)", Nil, verify)(
+        (_, _) => borrowed)(onLoss)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        if (!landed) added.foreach { case (d, t) =>
+          try releaseHold(d, t, dst.location)
+          catch { case scala.util.control.NonFatal(_) => () }
+        }
+        throw e
     }
-    // post-publish source check, ON DISK (the parse cache would hide
-    // an expiry): a concurrent vacuum that read the borrower index
-    // before our hold landed can only have hurt us by expiring this
-    // manifest first — in which case the clone unwinds and refuses
-    if (borrowedRefs.nonEmpty &&
-        !fs(new Path(srcMeta.location))
-          .exists(manifestPath(srcMeta.location, srcVer))) {
-      unwind()
-      throw new java.util.ConcurrentModificationException(
-        s"${srcMeta.qualified}@$srcVer was vacuumed while the clone " +
-          "committed — the borrowed files' survival cannot be " +
-          "guaranteed; re-run the clone against a retained version")
-    }
-    catalog.register(dstMeta)
-    // a deep clone that fails mid-compact leaves a VALID shallow clone
-    // (v0 is committed); the caller can retry the sever with compact()
-    if (deep) compact(dstDb, dstTable,
-      targetFiles = math.max(1, m.buckets.size))
-    latestVersion(dstDb, dstTable)
   }
 
   /**
@@ -4841,13 +4914,14 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
   /** Index `borrowerLocation` as a shallow-clone borrower of
    * `db.table`'s files, so this table's vacuum checks that location's
    * retained manifests before reclaiming anything ([[MergeSnapshotStore.HoldsProp]]).
-   * [[cloneTable]] calls this itself; call it EXPLICITLY when the clone
-   * was created through a DIFFERENT catalog (the same table registered
-   * in two catalogs shares files but not properties — without the
-   * registration that borrower is invisible here and remains the
-   * documented sever liability). Idempotent. */
+   * [[promote]] and [[cloneTable]] call this themselves; call it
+   * EXPLICITLY when the clone was created through a DIFFERENT catalog
+   * (the same table registered in two catalogs shares files but not
+   * properties — without the registration that borrower is invisible
+   * here and remains the documented sever liability). Idempotent;
+   * true when the hold was not there before. */
   def registerHold(db: String, table: String,
-                   borrowerLocation: String): Unit = {
+                   borrowerLocation: String): Boolean = {
     require(borrowerLocation.trim.nonEmpty, "borrowerLocation is empty")
     // read-modify-write on the property: serialized on the catalog so
     // concurrent cloners of the same source cannot lose each other's
@@ -4855,10 +4929,12 @@ class MergeSnapshotStore(spark: SparkSession, val catalog: Catalog,
     catalog.synchronized {
       val live = catalog(db, table)
       val holds = holdsOf(live)
-      if (!holds.contains(borrowerLocation))
+      val adding = !holds.contains(borrowerLocation)
+      if (adding)
         catalog.register(live.copy(properties = live.properties +
           (MergeSnapshotStore.HoldsProp ->
             (holds :+ borrowerLocation).mkString(","))))
+      adding
     }
   }
 

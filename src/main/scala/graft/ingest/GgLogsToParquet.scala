@@ -78,10 +78,16 @@ object GgLogsToParquet {
    * keeps the Glue table definition in step with every landing write. */
   def run(spark: SparkSession, store: MergeSnapshotStore, rawPath: String,
           db: String, table: String, schema: Option[StructType] = None): Unit = {
-    val landed = ingest(readRaw(spark, rawPath, schema))
+    // jobs labelled `ingest: <db.table> <phase>`: the schema inference
+    // (none with an explicit schema), then the landing write
+    val landed = store.jobLabel(s"ingest: $db.$table infer") {
+      ingest(readRaw(spark, rawPath, schema))
+    }
     val meta = store.catalog(db, table)
     val fresh = holdsNoData(spark, meta.location)
-    store.appendPartitioned(db, table, landed)
+    store.jobLabel(s"ingest: $db.$table write") {
+      store.appendPartitioned(db, table, landed)
+    }
     store.catalog.register(meta.copy(schema = landedSchema(meta.schema, landed.schema, fresh)))
   }
 

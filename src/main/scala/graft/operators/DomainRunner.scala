@@ -24,9 +24,12 @@ import graft.model.DomainDef
 final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
   import spark.implicits._
 
-  /** CSV scan with header (reference src/apply_to_domains.py:181-197). */
+  /** CSV scan with header (reference src/apply_to_domains.py:181-197).
+   * The file's six string columns are declared, so Spark runs no job to
+   * read the header for the column names; the header line is skipped
+   * and the columns bind by position. */
   def loadDefs(path: String): Dataset[DomainDef] =
-    spark.read.option("header", "true").csv(path)
+    spark.read.option("header", "true").schema(DomainRunner.DefsSchema).csv(path)
       .select(
         col("Status").as("status"),
         col("Type").as("defType"),
@@ -75,7 +78,11 @@ final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
    * invoked at :279-281). */
   def run(db: String, defsPath: String, changedTables: Seq[String],
           processId: Long = System.currentTimeMillis()): Seq[String] = {
-    val active = activate(loadDefs(defsPath), changedTables).collect().toSeq // defs are tiny config rows
+    // defs are tiny config rows; the targets are not known until they
+    // are read, so the collect is labelled with the db
+    val active = store.jobLabel(s"domain: $db defs") {
+      activate(loadDefs(defsPath), changedTables).collect().toSeq
+    }
     active.map { d =>
       val out = runStatement(db, d, processId)
       store.overwrite(db, d.target, out, mergeSchema = true)
@@ -88,6 +95,11 @@ final class DomainRunner(spark: SparkSession, store: MergeSnapshotStore) {
 }
 
 object DomainRunner {
+  /** The definitions CSV's columns, in file order. */
+  private val DefsSchema: StructType = StructType(
+    Seq("Status", "Type", "Domain", "Dependancies", "Target", "Resolution")
+      .map(StructField(_, StringType)))
+
   /**
    * Catalog-registration type narrowing (reference `glue_datatypes` +
    * `schema_to_columns`, src/apply_to_domains.py:121-144): anything outside

@@ -8,18 +8,26 @@ import graft.catalog.MergeSnapshotStore
 /**
  * Stage 3 — structured -> curated promotion (reference
  * src/apply_to_curated.py). The reference transform is the identity
- * placeholder (`apply_changes`, :153-161); the hook point is kept so real
- * curation logic (PII masking, conforming) slots in per table.
+ * placeholder (`apply_changes`, :153-161): with no `transform` each
+ * curated table is promoted BY REFERENCE
+ * ([[graft.catalog.MergeSnapshotStore.promote]]) — one manifest that
+ * borrows the structured snapshot's files, no parquet written and no
+ * Spark job run. A `transform` (PII masking, conforming) is the hook
+ * point real curation logic slots into: its output overwrites the
+ * curated table with files of its own.
  */
 final class CuratedApplier(store: MergeSnapshotStore,
-                           transform: DataFrame => DataFrame = identity) {
+                           transform: Option[DataFrame => DataFrame] = None) {
   /** `onTableDone` fires after each curated write — the reference's
    * Kinesis-notify stub runs here too (`trigger_kinesis_event`,
    * src/apply_to_curated.py:143-150, invoked after the curated loop). */
   def run(db: String, tables: Seq[String], suffix: String = "_curated",
           onTableDone: String => Unit = _ => ()): Seq[String] =
     tables.map { t =>
-      store.overwrite(db, t + suffix, transform(store.read(db, t)))
+      transform match {
+        case None => store.promote(db, t, db, t + suffix)
+        case Some(f) => store.overwrite(db, t + suffix, f(store.read(db, t)))
+      }
       onTableDone(t + suffix)
       t + suffix
     }

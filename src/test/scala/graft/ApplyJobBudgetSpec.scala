@@ -266,6 +266,28 @@ class ApplyJobBudgetSpec extends AnyFunSuite with SparkFixture {
     new DomainRunner(spark, store).run(Db, defs, applied, processId = 1L)
   }
 
+  test("every job of a batch carries its layer's label; the domain reads its definitions in one job") {
+    val (store, dir) = mkStore()
+    fullBatch(store, dir, landBatch(store, dir, 1))
+    // batch 2's raw files, landed again under the recorder
+    landBatch(store, dir, 2)
+    store.catalog.register(TableMeta(Db, "raw_events", s"$dir/landing/b2-again",
+      partitionBy = GgLogsToParquet.PartitionBy))
+    val (_, jobs) = JobRecorder.during(spark) {
+      GgLogsToParquet.run(spark, store, s"$dir/raw/b2", Db, "raw_events")
+      fullBatch(store, dir, store.readFlat(Db, "raw_events"))
+    }
+    val descs = jobs.map(_.desc)
+    assert(descs.forall(_.nonEmpty), s"unlabelled jobs among: ${descs.mkString("; ")}")
+    assert(descs.filter(_.startsWith("ingest: ")).toSet ==
+      Set(s"ingest: $Db.raw_events infer", s"ingest: $Db.raw_events write"))
+    // the definitions CSV's columns are declared: no header job beside
+    // the collect
+    assert(descs.count(_ == s"domain: $Db defs") == 1, descs.mkString("; "))
+    // curated promotes by reference: no job of its own
+    assert(!descs.exists(_.contains("_curated")), descs.mkString("; "))
+  }
+
   private val chainTables =
     Seq("offenders", "bookings", "offenders_curated", "bookings_curated", "off_book")
 

@@ -187,6 +187,10 @@ class ConcurrentWritersSpec extends AnyFunSuite with SparkFixture {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     def files(t: String): Seq[String] = store.fileHealth(Db, t, "v").map(_.file)
     val mor = MergeSnapshotStore.MergeOnRead
+    // the promote site's source: the rows an overwrite ×10 would write
+    store.catalog.register(TableMeta(Db, "promoted", s"$root/promoted",
+      primaryKey = Seq("id")))
+    store.overwrite(Db, "promoted", base.withColumn("v", col("v") * 10))
 
     // one publish site: `call` is re-runnable (it reads what it needs
     // from the current snapshot), `effect` is what it does to the
@@ -223,6 +227,9 @@ class ConcurrentWritersSpec extends AnyFunSuite with SparkFixture {
         t => store.deleteWhere(Db, t, col("id") === mine, mor), _ - mine),
       Site("overwrite", "overwrite", "last-wins",
         t => store.overwrite(Db, t, base.withColumn("v", col("v") * 10)),
+        _ => (0L until 64L).map(k => k -> k * 10).toMap),
+      Site("promote", s"promote($Db.promoted@0)", "last-wins",
+        t => store.promote(Db, "promoted", Db, t),
         _ => (0L until 64L).map(k => k -> k * 10).toMap),
       Site("compact", "compact", "refuse", t => store.compact(Db, t, 1)),
       Site("clustered compaction", "compact-clustered", "refuse",

@@ -151,9 +151,35 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     assert(err.getMessage.contains("retention"))
   }
 
+  /** A store of its own holding `db.offenders`, 18 rows keyed by
+   * offender_id (the reference curated fixture's size), built here. */
+  private def structuredStore(): (MergeSnapshotStore, String) = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-curated").toString
+    val s = new MergeSnapshotStore(spark, new InMemoryCatalog, nBuckets = 4)
+    s.catalog.register(TableMeta("db", "offenders", s"$dir/offenders",
+      primaryKey = Seq("offender_id")))
+    s.overwrite("db", "offenders", (1 to 18)
+      .map(i => (i, s"first$i", s"last$i", i % 3 == 0))
+      .toDF("offender_id", "first_name", "last_name", "active"))
+    (s, dir)
+  }
+
+  private def parquetUnder(dir: String): Seq[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Nil
+    else {
+      val walk = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      } finally walk.close()
+    }
+  }
+
   test("curated promotion is the identity hook (reference stage 3)") {
-    bootstrap()
-    catalog.register(TableMeta("db", "offenders_curated", s"$tmp/offenders_curated"))
+    val (store, dir) = structuredStore()
+    store.catalog.register(TableMeta("db", "offenders_curated", s"$dir/offenders_curated"))
     // the notify stub fires once per curated table, after its write
     // (reference trigger_kinesis_event, src/apply_to_curated.py:143-150)
     val notified = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -163,20 +189,24 @@ class DomainAndStoreSpec extends AnyFunSuite with SparkFixture {
     assert(notified.toSeq == Seq("offenders_curated"))
     assert(store.read("db", "offenders_curated").count() ==
       store.read("db", "offenders").count())
+    // promoted by reference: the curated location holds manifests only
+    assert(parquetUnder(s"$dir/offenders_curated").isEmpty)
   }
 
   test("curated hook applies a real transform (masking) when supplied") {
-    bootstrap()
-    catalog.register(TableMeta("db", "offenders_masked", s"$tmp/offenders_masked"))
+    val (store, dir) = structuredStore()
+    store.catalog.register(TableMeta("db", "offenders_masked", s"$dir/offenders_masked"))
     val masking = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn("last_name", lit("***"))
-    val made = new CuratedApplier(store, masking).run("db", Seq("offenders"),
+    val made = new CuratedApplier(store, Some(masking)).run("db", Seq("offenders"),
       suffix = "_masked")
     assert(made == Seq("offenders_masked"))
     val out = store.read("db", "offenders_masked")
     assert(out.select("last_name").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("***"))
     assert(out.count() == store.read("db", "offenders").count())
+    // a transform's output is the curated table's own files
+    assert(parquetUnder(s"$dir/offenders_masked").nonEmpty)
   }
 
   test("query runner: projection + catalyst predicate string (glue_query CLI)") {
